@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gwv_spark.rules import RuleContext
+from gwv_spark.session import local_frame
 
 DEFAULT_BUCKETS = 8
 
@@ -153,7 +154,7 @@ def read_meta(spark: SparkSession, path: str) -> dict | None:
 
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
     (
-        spark.createDataFrame([(json.dumps(meta),)], "v string")
+        local_frame(spark, [(json.dumps(meta),)], "v string")
         .coalesce(1)
         .write.mode("overwrite")
         .text(f"{path}/{_META}")

@@ -1,5 +1,6 @@
-"""Engine: compile selected rules to one unioned violations plan, emit
-per-partition verdicts, and reproduce the reference's result-JSON shape.
+"""Engine: compile selected rules to violation plans (one union, or one
+job per rule), emit per-partition verdicts, and reproduce the
+reference's result-JSON shape.
 
 Reference lifecycle being replaced (validator.py:26-60): eager dict load →
 per-record loop over all validators → per-rule errcode grouping → JSON.
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 import json
 import time
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +36,7 @@ from gwv_spark.rules import (
     decode_detail,
     load_all_rules,
 )
+from gwv_spark.session import local_frame
 
 
 def make_context(
@@ -86,15 +89,24 @@ def make_context(
 
 
 def empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], VIOLATIONS_DDL)
+    return local_frame(spark, [], VIOLATIONS_DDL)
+
+
+def _registered(rule_ids: list[str] | None) -> list[str]:
+    """The selected ids (default: all), each with a registered rule.  An
+    unregistered id raises: a rule must never drop out of a run and
+    leave its verdicts reading "pass"."""
+    load_all_rules()
+    ids = list(rule_ids or ALL_RULE_IDS)
+    missing = [r for r in ids if r not in RULES]
+    if missing:
+        raise KeyError(f"no registered rule for ids {missing}")
+    return ids
 
 
 def run_rules(ctx: RuleContext, rule_ids: list[str] | None = None) -> DataFrame:
     """Union the violation plans of the selected rules (lazy)."""
-    load_all_rules()
-    ids = [r for r in (rule_ids or ALL_RULE_IDS) if r in RULES]
-    if not ids:
-        return empty_violations(ctx.spark)
+    ids = _registered(rule_ids)
     # tuple key: can never collide with a per-rule string key, and two
     # different orderings (different union output order) cache separately
     key = ("__union__", tuple(ids))
@@ -114,11 +126,11 @@ def run_suite(ctx: RuleContext, rule_ids: list[str] | None = None) -> None:
     violation plans behind a noop sink.
 
     One job = one driver submission; the DAG scheduler runs the
-    independent branch stages concurrently, so executor cores stay busy
-    without driver-side thread orchestration — the per-rule-job variant
-    (run_rules_concurrent) pays job-submission + planning latency 18
-    times per suite run, which is parallelism-independent work and was
-    the dominant term in the N→4N scaling measurement."""
+    independent branch stages concurrently.  Its final stage ships the
+    whole 18-branch task binary with every task, so on a 4-core host
+    the per-rule jobs of run_rules_concurrent finish the suite sooner;
+    the batch job writes that way, and this fused form stays for
+    measurement (perfbench's ``rules.suite_fused`` probe)."""
     run_rules(ctx, rule_ids).write.format("noop").mode("overwrite").save()
 
 
@@ -138,11 +150,17 @@ def run_rules_concurrent(
     than the union on local[32] at sf0.1.  On a cluster the same holds:
     the scheduler interleaves tasks of concurrent jobs over the same
     executors (FIFO pools).  ``sink(rule_id, df)`` receives each rule's plan
-    (default: noop write, full execution without driver collect)."""
+    (default: noop write, full execution without driver collect).
+
+    Each rule runs with a copy of the calling thread's Spark local
+    properties (job group, description, scheduler pool), so the
+    caller's ``cancelJobGroup`` and job attribution cover every rule
+    job."""
     from concurrent.futures import ThreadPoolExecutor
 
-    load_all_rules()
-    ids = [r for r in (rule_ids or ALL_RULE_IDS) if r in RULES]
+    from pyspark import inheritable_thread_target
+
+    ids = _registered(rule_ids)
 
     def _noop(rid: str, df: DataFrame) -> None:
         df.write.format("noop").mode("overwrite").save()
@@ -158,8 +176,12 @@ def run_rules_concurrent(
         sink(rid, plans[rid])
         return rid, round(time.monotonic() - t0, 3)
 
+    # wrapped per rule, on this thread: each wrap takes its own copy of
+    # the local properties (one shared copy would let concurrent queries
+    # overwrite each other's SQL execution ids)
+    tasks = [inheritable_thread_target(ctx.spark)(partial(_timed, rid)) for rid in ids]
     with ThreadPoolExecutor(workers) as ex:
-        return dict(ex.map(_timed, ids))
+        return dict(f.result() for f in [ex.submit(t) for t in tasks])
 
 
 def parquet_sink(base_dir: str | Path, bucket_group: int | None = None):
@@ -267,9 +289,7 @@ class Ledger:
         try:
             return self.spark.read.parquet(self.path)
         except Exception:
-            return self.spark.createDataFrame(
-                [], "rule_id STRING, partition_id INT"
-            )
+            return local_frame(self.spark, [], "rule_id STRING, partition_id INT")
 
     def mark(self, verdicts: DataFrame) -> None:
         verdicts.select("rule_id", "partition_id").write.mode("append").parquet(self.path)

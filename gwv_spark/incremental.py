@@ -65,6 +65,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gwv_spark.session import local_frame
+
 RI_RULES = ["delquote", "delvar"]
 
 RI_STATE_DDL = "rule_id STRING, doc_id STRING, key STRING, part_full STRING"
@@ -165,7 +167,8 @@ def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: list[str]
     """Append one completed-run row.  The LAST row (by wall time) names
     the snapshot the next append diffs against and the rules whose
     prior epochs are trustworthy."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(snapshot, float(time.time()), ",".join(sorted(rule_ids)))],
         "snapshot STRING, ts DOUBLE, rules STRING",
     ).coalesce(1).write.mode("append").parquet(f"{out}/runs")
@@ -245,8 +248,6 @@ def run(args, spark: SparkSession) -> None:
         raise SystemExit("--incremental validates the CURRENT snapshot; drop --as-of")
     if args.bucket_groups and args.bucket_groups > 1:
         raise SystemExit("--incremental already commits per append; drop --bucket-groups")
-    if args.exec_mode == "concurrent":
-        raise SystemExit("--incremental uses fused per-category actions; drop --exec-mode")
     if args.bucketed:
         raise SystemExit(
             "--incremental maintains RI by state fold; --bucketed layouts "
@@ -287,8 +288,8 @@ def run(args, spark: SparkSession) -> None:
                 "incremental and classic layouts cannot mix"
             )
     else:
-        spark.createDataFrame(
-            [(json.dumps({"bucket_groups": 1, "incremental": True}),)], "value STRING"
+        local_frame(
+            spark, [(json.dumps({"bucket_groups": 1, "incremental": True}),)], "value STRING"
         ).coalesce(1).write.mode("overwrite").text(layout_dir)
 
     local = [r for r in rule_ids if r in DOC_LOCAL_RULES]
@@ -383,7 +384,8 @@ def run(args, spark: SparkSession) -> None:
             .collect()
         }
         run_id = args.run_id or snapshot
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (
                     run_id, snapshot, rid, timings.get(rid), total_secs,
@@ -396,9 +398,7 @@ def run(args, spark: SparkSession) -> None:
             "n_violations BIGINT",
         ).write.mode("append").parquet(f"{out}/metrics")
         ledger.mark(
-            spark.createDataFrame(
-                [(rid, -1) for rid in computed], "rule_id STRING, partition_id INT"
-            )
+            local_frame(spark, [(rid, -1) for rid in computed], "rule_id STRING, partition_id INT")
         )
     # component timings (r4 verdict #5's decomposition, incremental
     # form): rule/fold work separated from the per-run commit machinery
@@ -408,7 +408,8 @@ def run(args, spark: SparkSession) -> None:
     # the delta work is the bill — recording both per run keeps the
     # two from masquerading as each other.
     if timings:
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(snapshot, k, v) for k, v in sorted(timings.items())],
             "snapshot STRING, component STRING, wall_s DOUBLE",
         ).coalesce(1).write.mode("append").parquet(f"{out}/component_timings")

@@ -4,9 +4,11 @@ gwv_spark/job.py --input <docs> --output <dir> [...]``.
 Batch lifecycle (north rule):
 1. read the documents table (parquet path or Iceberg table name);
 2. build the shared parsed context (cache unless --no-cache);
-3. run the selected rules as ONE fused action (union of all rule
-   plans), written hive-partitioned to
-   ``<output>/violations/rule_id=<id>/``;
+3. write each selected rule as its own Spark job, several in flight at
+   once (engine.run_rules_concurrent), each overwriting its own
+   ``<output>/violations/rule_id=<id>/`` directory — driver-side
+   planning of one rule overlaps executor work of the others, and
+   ``metrics.wall_s`` records each rule's write time;
 4. roll up per-partition pass/fail verdicts + metrics to
    ``<output>/verdicts/``;
 5. mark completed (rule, bucket) pairs in the resume ledger at
@@ -40,8 +42,11 @@ of its first run — don't mix modes in one output dir (Spark's partition
 discovery fails loudly on conflicting depths, never silently).
 
 The driver never collects violation rows; everything is executor-side
-writes.  Rule subset selection mirrors the reference CLI's ``-n``
-(gwv.py:33, validator.py:32-37).
+writes.  The small tables the driver builds itself (layout record,
+ledger marks, metrics rows) are JVM-held local relations
+(session.local_frame), so no Python worker starts for them.  Rule
+subset selection mirrors the reference CLI's ``-n`` (gwv.py:33,
+validator.py:32-37).
 """
 
 from __future__ import annotations
@@ -83,6 +88,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     from gwv_spark import engine
     from gwv_spark.rules import ALL_RULE_IDS
+    from gwv_spark.session import local_frame
 
     p = argparse.ArgumentParser(description="gwv_spark validation job")
     p.add_argument("--input", required=True, help="documents parquet path or table")
@@ -91,17 +97,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     p.add_argument("--attrs", default=None, help="doc_attrs parquet path")
     p.add_argument("--n-buckets", type=int, default=256)
     p.add_argument("--run-id", default=None, help="default: the input snapshot id")
-    p.add_argument(
-        "--exec-mode",
-        choices=["fused", "concurrent"],
-        default="fused",
-        help="fused: ONE action (18-rule union, dynamic partition "
-        "overwrite; the single-submission cluster shape).  concurrent: "
-        "one Spark job per rule, several in flight — overlaps driver-side "
-        "planning with executor work (measured ~4x faster when the "
-        "driver is the bottleneck); each rule overwrites its own "
-        "rule_id=<id> directory unconditionally.",
-    )
     p.add_argument(
         "--bucket-groups",
         type=int,
@@ -251,9 +246,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
                 f"got {groups} — mixed slice keys would duplicate violations"
             )
     else:
-        spark.createDataFrame([(groups,)], "bucket_groups INT").coalesce(1).write.json(
-            layout_dir
-        )
+        local_frame(spark, [(groups,)], "bucket_groups INT").coalesce(1).write.json(layout_dir)
     ledger = engine.Ledger(spark, f"{out}/ledger/snapshot={snapshot}")
 
     done_pairs: set[tuple[str, int]] = set()
@@ -303,29 +296,18 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         )
         bucketed.install(ctx, btables)
 
-    grouped_layout = groups > 1
     vio_dir = f"{out}/violations"
     rule_secs: dict[str, float] = {}
     t_run = time.monotonic()
 
     if scoped:
-        _clear_partitions(spark, vio_dir, [f"rule_id={r}" for r in scoped])
-        if args.exec_mode == "concurrent":
-            rule_secs = engine.run_rules_concurrent(
-                ctx,
-                scoped,
-                sink=engine.parquet_sink(
-                    vio_dir, bucket_group=-1 if grouped_layout else None
-                ),
-            )
-        else:
-            vio = engine.run_rules(ctx, scoped)
-            if grouped_layout:
-                vio.withColumn("bucket_group", F.lit(-1)).write.mode(
-                    "overwrite"
-                ).partitionBy("rule_id", "bucket_group").parquet(vio_dir)
-            else:
-                vio.write.mode("overwrite").partitionBy("rule_id").parquet(vio_dir)
+        # one job per rule, each overwriting exactly its own directory
+        # (so a rule that is now clean leaves no stale partition)
+        rule_secs = engine.run_rules_concurrent(
+            ctx,
+            scoped,
+            sink=engine.parquet_sink(vio_dir, bucket_group=-1 if groups > 1 else None),
+        )
 
     if group_todo:
         # slices are FILE groups, not hash-of-doc_id groups: a hash
@@ -372,9 +354,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         # mark AFTER the slice's write committed: a crash between write
         # and mark just recomputes the slice (idempotent, see docstring)
         ledger.mark(
-            spark.createDataFrame(
-                [(r, g) for r in rids_g], "rule_id STRING, partition_id INT"
-            )
+            local_frame(spark, [(r, g) for r in rids_g], "rule_id STRING, partition_id INT")
         )
         slice_rows.append((g, len(files_g), round(time.monotonic() - t_slice, 3)))
 
@@ -403,10 +383,11 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ).write.mode("overwrite").parquet(f"{out}/violations_sample")
     if recomputed:
         # run-metrics table (north rule: checkpoint + lineage + METRICS):
-        # one row per recomputed rule — wall seconds (per-rule under
-        # --exec-mode concurrent, total under fused) and the violation
-        # count read back from the committed output.  Appended, keyed by
-        # run_id + snapshot, so reruns/resumes accumulate an audit trail.
+        # one row per recomputed rule — wall seconds of the rule's own
+        # write (NULL for a rule written only in --bucket-groups slices)
+        # and the violation count read back from the committed output.
+        # Appended, keyed by run_id + snapshot, so reruns/resumes
+        # accumulate an audit trail.
         counts = {
             r["rule_id"]: r["n"]
             for r in violations.where(F.col("rule_id").isin(recomputed))
@@ -415,10 +396,10 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             .collect()
         }
         run_id = args.run_id or snapshot
-        # wall_s is NULL under fused mode (per-rule time is not
-        # separable from one action); the suite total goes in its own
-        # column so summing wall_s across rows never overcounts
-        metrics = spark.createDataFrame(
+        # the run total goes in its own column: rule writes overlap, so
+        # summing wall_s across rows overcounts the run
+        metrics = local_frame(
+            spark,
             [
                 (
                     run_id,
@@ -449,7 +430,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (run_id, snapshot, g, n_files, wall, int(slice_counts.get(g, 0)))
                 for (g, n_files, wall) in slice_rows
@@ -461,9 +443,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         # whole-corpus rules carry the -1 sentinel; slice marks were
         # already written as each slice committed
         ledger.mark(
-            spark.createDataFrame(
-                [(rid, -1) for rid in scoped], "rule_id STRING, partition_id INT"
-            )
+            local_frame(spark, [(rid, -1) for rid in scoped], "rule_id STRING, partition_id INT")
         )
     ctx.docs.unpersist()
     ctx.spans.unpersist()

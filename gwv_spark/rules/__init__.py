@@ -170,7 +170,9 @@ def entity_checked(ctx: RuleContext, df: DataFrame, out_col: str = "entity") -> 
 
 
 def load_all_rules() -> None:
-    """Import every rule module so the registry is populated."""
+    """Import every rule module so the registry is populated.  A module
+    that fails to import raises: a missing rule must fail the run, never
+    leave its verdicts reading "pass"."""
     import importlib
 
     for mod in [
@@ -178,7 +180,4 @@ def load_all_rules() -> None:
         "ucsalias", "mustrenew", "skew", "illegal", "width", "naming",
         "related", "ids", "dup", "corner", "j", "mj",
     ]:
-        try:
-            importlib.import_module(f"gwv_spark.rules.{mod}")
-        except ModuleNotFoundError:
-            pass  # not yet implemented
+        importlib.import_module(f"gwv_spark.rules.{mod}")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from gwv_spark.derive import RE_UCS, is_gokan_kanji_cp
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 from gwv_spark.rules.order import RE_REGIONS
+from gwv_spark.session import local_frame
 
 _RE_REGION_OPTHENKA = "^-(" + RE_REGIONS + r")([0-9]{2})?$"
 _REGION2COL = {
@@ -49,7 +50,7 @@ def _cjksrc_df(ctx: RuleContext):
     )
     if not rows:
         rows = [("",) + (None,) * 13]
-    return ctx.spark.createDataFrame(rows, ddl)
+    return local_frame(ctx.spark, rows, ddl)
 
 
 def _setup_dims(ctx: RuleContext):
@@ -77,9 +78,7 @@ def _setup_dims(ctx: RuleContext):
         for i, (use, no_uses) in enumerate(jv["no_use_part"].items())
         for no_use in no_uses
     ]
-    no_use_seeds = ctx.spark.createDataFrame(
-        no_use_rows, "part STRING, use STRING, idx INT"
-    )
+    no_use_seeds = local_frame(ctx.spark, no_use_rows, "part STRING, use STRING, idx INT")
     no_use_local = (
         _alias_closure(ctx, no_use_seeds, "part")
         .groupBy(F.col("part_m").alias("banned"))
@@ -96,7 +95,7 @@ def _setup_dims(ctx: RuleContext):
             F.col("doc_id").alias("part")
         )
     else:
-        na_seeds = ctx.spark.createDataFrame([], "part STRING")
+        na_seeds = local_frame(ctx.spark, [], "part STRING")
     no_apply_local = (
         _alias_closure(ctx, na_seeds, "part")
         .select(F.col("part_m").alias("na_part"))
@@ -107,10 +106,8 @@ def _setup_dims(ctx: RuleContext):
     # empty-string sentinel row would introduce a '' join key that a
     # malformed kage line's empty media_ref could match, fabricating a
     # violation the reference ('' not in config) never reports
-    no_use = ctx.spark.createDataFrame(
-        no_use_local, "banned STRING, use STRING"
-    )
-    no_apply = ctx.spark.createDataFrame(no_apply_local, "na_part STRING")
+    no_use = local_frame(ctx.spark, no_use_local, "banned STRING, use STRING")
+    no_apply = local_frame(ctx.spark, no_apply_local, "na_part STRING")
     ctx.dims[memo_key] = (no_use, no_apply)
     return no_use, no_apply
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from gwv_spark import derive
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.session import local_frame
 
 F_JMJ, F_KOSEKI, F_JUKI, F_NYUKAN, F_X0213, F_X0212, F_UCS = 0, 1, 2, 3, 4, 5, 6
 F_IVS, F_SVS, F_TOKI, F_DKW, F_SHINCHO, F_SDJT = 7, 8, 9, 10, 11, 12
@@ -98,8 +99,8 @@ def _mj_dfs(ctx: RuleContext):
                 k2i.append((field, key.lower(), idx))
                 i2g.append((idx, field, _key2gw(field, key)))
     spark = ctx.spark
-    key2idx = spark.createDataFrame(k2i or [(-1, "", -1)], "field INT, key STRING, idx INT")
-    idx2gw = spark.createDataFrame(i2g or [(-1, -1, "")], "idx INT, field INT, gw STRING")
+    key2idx = local_frame(spark, k2i or [(-1, "", -1)], "field INT, key STRING, idx INT")
+    idx2gw = local_frame(spark, i2g or [(-1, -1, "")], "idx INT, field INT, gw STRING")
     return key2idx, idx2gw
 
 

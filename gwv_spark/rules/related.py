@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from gwv_spark import derive
 from gwv_spark.derive import RE_UCS
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.session import local_frame
 
 
 def _cjksrc_compat_df(ctx: RuleContext):
@@ -32,7 +33,7 @@ def _cjksrc_compat_df(ctx: RuleContext):
         for ucs, cols in ctx.dims.get("cjksrc", {}).items()
         if cols[11] is not None
     ]
-    return ctx.spark.createDataFrame(rows or [("", "")], "ucs STRING, compat STRING")
+    return local_frame(ctx.spark, rows or [("", "")], "ucs STRING, compat STRING")
 
 
 @rule("related")

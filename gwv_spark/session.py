@@ -16,9 +16,21 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_driver_mem() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else half the host's physical RAM: in
+    local mode the driver JVM also runs every task, and a fixed large
+    heap would exceed small hosts."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{max(1024, mb // 2)}m"
 
 
 def get_spark(
@@ -44,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Corpus self-joins must NEVER be planned as static broadcasts —
         # at the north rule's 10^12-doc scale no corpus-derived side fits
@@ -63,3 +75,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A driver-side table (tuples in the column order of the ``ddl``
+    schema string) as a JVM-held ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans a ``LogicalRDD`` over a
+    Python RDD, so every action over the frame starts Python workers to
+    unpickle its rows.  An Arrow table built straight from the Spark
+    schema is handed to the JVM once: no Python worker ever reads it,
+    and the optimizer prunes it when empty.  No pandas on the way, so a
+    ``None`` stays NULL in every column type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 
 from gwv_spark import hll
 from gwv_spark.freq import mg_prune
+from gwv_spark.session import local_frame
 from gwv_spark.sketch import Digest
 
 SKETCH_SCHEMA = (
@@ -496,7 +497,8 @@ def update_store(
         # forever.  One marker row per new file makes the diff converge;
         # the fold filters them out (stats_from_store) and they carry no
         # counts.
-        markers = spark.createDataFrame(
+        markers = local_frame(
+            spark,
             [(f, "", 0, 0, None, None, None, None, None, None, None) for f in chunk],
             SKETCH_SCHEMA,
         )

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from gwv_spark import engine
 from gwv_spark.rules import load_all_rules
+from gwv_spark.session import local_frame
 
 # Documents-table shape (BASELINE.json input_hint; corpus.spark_generate).
 # ``related``/``ts`` are optional attributes — the stream only requires
@@ -234,7 +235,8 @@ def make_batch_processor(
                 )
                 n_docs = ctx.docs.count()  # cached — no recompute
                 n_vio = v.count()
-                metrics = spark.createDataFrame(
+                metrics = local_frame(
+                    spark,
                     [(run_id, int(epoch_id), n_docs, n_vio,
                       round(time.monotonic() - t0, 3))],
                     "run_id STRING, epoch_id BIGINT, n_docs BIGINT, "
@@ -704,9 +706,7 @@ def stream_ri_drain(
     # probes satisfied within their own batch) — an all-empty sink has no
     # parquet footer to infer from
     if not any(Path(f"{out}/updates").rglob("*.parquet")):
-        return spark.createDataFrame(
-            [], RI_UPDATE_SCHEMA + ", epoch_id INT"
-        )
+        return local_frame(spark, [], RI_UPDATE_SCHEMA + ", epoch_id INT")
     return spark.read.parquet(f"{out}/updates")
 
 
@@ -1021,9 +1021,7 @@ def stream_simhash_drain(
     )
     q.awaitTermination()
     if not any(Path(f"{out}/pairs").rglob("*.parquet")):
-        return spark.createDataFrame(
-            [], "doc_a BIGINT, doc_b BIGINT, hamming INT, epoch_id INT"
-        )
+        return local_frame(spark, [], "doc_a BIGINT, doc_b BIGINT, hamming INT, epoch_id INT")
     return spark.read.parquet(f"{out}/pairs")
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gwv_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -342,9 +344,9 @@ def _write_ivf_centroids(spark, centroids, path: str) -> None:
     import numpy as np
 
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(np.asarray(centroids))]
-    spark.createDataFrame(rows, "list_id int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/_centroids")
+    local_frame(spark, rows, "list_id int, centroid array<double>").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/_centroids")
 
 
 def load_ivf_centroids(spark, path: str):
