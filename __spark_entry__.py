@@ -51,8 +51,4 @@ def oracle_sql() -> dict[str, str]:
 
     mediaops.ensure_media(synth_dir_for(_ORACLE_SF_DIR), Q._n_media(_ORACLE_SF_DIR))
     textops.ensure_neardup_curve(synth_dir_for(_ORACLE_SF_DIR))
-    return {
-        name: spec.oracle_fn(_ORACLE_SF_DIR)
-        for name, spec in Q.REGISTRY.items()
-        if spec.oracle_fn is not None
-    }
+    return Q.oracle_sqls(_ORACLE_SF_DIR)

@@ -268,15 +268,14 @@ def compact(
     import math
     import re
 
-    # bucketed tables (bucketed.py) encode the bucket id in the file
+    # tables written with bucketBy encode the bucket id in the file
     # name (`..._00003.c000...`); rewriting them here would silently
     # break the bucket spec — and with it the zero-Exchange join plans
-    # that are the whole point of that layout.  Refuse loudly, and
-    # refuse BEFORE any swap: the scan below runs over every leaf up
-    # front so a mixed table (bucketed leaf after plain leaves) is left
-    # fully untouched rather than half-compacted with prior snapshot
-    # manifests pointing at deleted files.  Bucketed LAYOUTS have their
-    # own compactor (bucketed.compact_layout) that preserves the spec.
+    # that are the point of bucketing.  Refuse loudly, and refuse
+    # BEFORE any swap: the scan below runs over every leaf up front so
+    # a mixed table (bucketed leaf after plain leaves) is left fully
+    # untouched rather than half-compacted with prior snapshot
+    # manifests pointing at deleted files.
     bucket_marker = re.compile(r"_\d{5}\.c\d{3}")
     leaves = _leaf_dirs(ref)
     for leaf in leaves:
@@ -285,8 +284,8 @@ def compact(
                 raise ValueError(
                     f"compact: {leaf} holds bucketed data files (bucket-id "
                     f"suffix in name); compacting would break the bucket "
-                    f"spec — use bucketed.compact_layout for bucketed "
-                    f"layouts, or rebuild via bucketed.materialize"
+                    f"spec — rewrite it through its producer's bucketBy "
+                    f"write instead"
                 )
     n_before = n_after = n_leaves = 0
     import shutil

@@ -93,11 +93,11 @@ def empty_violations(spark: SparkSession) -> DataFrame:
 
 
 def _registered(rule_ids: list[str] | None) -> list[str]:
-    """The selected ids (default: all), each with a registered rule.  An
-    unregistered id raises: a rule must never drop out of a run and
-    leave its verdicts reading "pass"."""
+    """The selected ids (None: all; an empty list selects none), each
+    with a registered rule.  An unregistered id raises: a rule must
+    never drop out of a run and leave its verdicts reading "pass"."""
     load_all_rules()
-    ids = list(rule_ids or ALL_RULE_IDS)
+    ids = list(ALL_RULE_IDS if rule_ids is None else rule_ids)
     missing = [r for r in ids if r not in RULES]
     if missing:
         raise KeyError(f"no registered rule for ids {missing}")
@@ -105,8 +105,11 @@ def _registered(rule_ids: list[str] | None) -> list[str]:
 
 
 def run_rules(ctx: RuleContext, rule_ids: list[str] | None = None) -> DataFrame:
-    """Union the violation plans of the selected rules (lazy)."""
+    """Union the violation plans of the selected rules (lazy); no
+    selected rule gives an empty violations frame."""
     ids = _registered(rule_ids)
+    if not ids:
+        return empty_violations(ctx.spark)
     # tuple key: can never collide with a per-rule string key, and two
     # different orderings (different union output order) cache separately
     key = ("__union__", tuple(ids))

@@ -23,17 +23,20 @@ cannot have changed.  This module makes the append the unit of work:
 
 - **Referential rules** (delquote/delvar — pure existence checks,
   reference delquote.py:22-30 / delvar.py:30-44): maintained by a
-  RETRACTION FOLD over a persisted state table (the batch mirror of
-  streaming.stream_ri_monitor).  ``ri_state`` holds the outstanding
+  RETRACTION FOLD over a persisted state table — the one incremental RI
+  algorithm, also driven per microbatch by the streaming RI tier
+  (streaming.start_ri_stream).  ``ri_state`` holds the outstanding
   dangling-reference cores (rule_id, doc_id, key, part_full) — the
   violation row PLUS its join key, so no stored row ever needs
-  re-parsing.  On append:
+  re-parsing.  One step (:func:`ri_fold_step`) over the arrived docs:
 
-      kept     = state_prev  ANTI  broadcast(keys of appended docs)
-      step1    = probes(appended docs)  ANTI  broadcast(appended keys)
-      matched  = corpus_keys  SEMI  broadcast(step1 keys)
-      fresh    = step1  ANTI  broadcast(matched)
-      state    = kept ∪ fresh        (delquote deduped per probe contract)
+      retracts = state_prev  SEMI  broadcast(arrived keys)
+      kept     = state_prev  ANTI  broadcast(arrived keys)
+      step1    = probes(arrived docs)  ANTI  broadcast(arrived keys)
+      matched  = known_keys  SEMI  broadcast(step1 keys)
+      adds     = step1  ANTI  broadcast(matched)
+                 (delquote deduped against state_prev per probe contract)
+      state    = kept ∪ adds
 
   Append-only input means keys are never removed, so a kept row stays
   dangling without re-checking; the ONE corpus-scale scan (`matched`)
@@ -70,21 +73,38 @@ from gwv_spark.session import local_frame
 RI_RULES = ["delquote", "delvar"]
 
 RI_STATE_DDL = "rule_id STRING, doc_id STRING, key STRING, part_full STRING"
+RI_STATE_COLS = ["rule_id", "doc_id", "key", "part_full"]
 
 
 # ------------------------------------------------------------- RI cores
 
 
-def ri_probes(ctx) -> DataFrame:
-    """Doc-local RI probe rows WITH their join key: one row per
-    outstanding-candidate reference in ``ctx``'s documents.
+def ri_probes(docs: DataFrame) -> DataFrame:
+    """RI probe rows WITH their join key (RI_STATE_COLS) for the raw
+    documents ``docs`` (doc_id, spans): one row per outstanding-candidate
+    reference.
 
-    Both probes read only the document's own columns (quote spans /
-    the doc's own name), so evaluating them over a delta-only context
-    yields exactly the delta's probe rows."""
+    The rows come from the rules' own probes (delquote.quote_probe,
+    delvar.variant_probe), evaluated over a context holding only the
+    columns they read — doc_id + category, and the exploded part spans —
+    so no full context (derive.prepare) is built per step.  Both probes
+    read only the document's own columns, so evaluating them over some
+    documents yields exactly those documents' probe rows."""
+    from gwv_spark import derive, parse
+    from gwv_spark.rules import RuleContext
     from gwv_spark.rules.delquote import quote_probe
     from gwv_spark.rules.delvar import variant_probe
 
+    ctx = RuleContext(
+        spark=docs.sparkSession,
+        docs=docs.select("doc_id", derive.category(F.col("doc_id")).alias("category")),
+        spans=docs.select("doc_id", F.explode("spans").alias("s")).select(
+            "doc_id",
+            "s.kind",
+            "s.media_ref",
+            parse.part_name_full(F.col("s.text")).alias("part_full"),
+        ),
+    )
     dq = quote_probe(ctx).select(
         F.lit("delquote").alias("rule_id"),
         "doc_id",
@@ -100,46 +120,68 @@ def ri_probes(ctx) -> DataFrame:
     return dq.unionByName(dv)
 
 
-def ri_cores_full(ctx) -> DataFrame:
+def ri_cores_full(docs: DataFrame) -> DataFrame:
     """Initial state: every probe whose key is absent from the corpus —
     the same corpus-wide anti join the batch rules run (this is the
     ONE full-cost RI evaluation; every subsequent append folds)."""
-    catalog = ctx.docs.select(F.col("doc_id").alias("key"))
-    return ri_probes(ctx).join(catalog, "key", "left_anti")
+    catalog = docs.select(F.col("doc_id").alias("key"))
+    return ri_probes(docs).join(catalog, "key", "left_anti")
 
 
-def fold_ri_state(
-    state_prev: DataFrame, ctx_delta, corpus_keys: DataFrame
-) -> DataFrame:
-    """One append step of the retraction fold (module docstring).
+def ri_fold_step(
+    state_prev: DataFrame, docs_delta: DataFrame, known_keys: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One step of the retraction fold (module docstring) over the raw
+    documents ``docs_delta`` that arrived after ``state_prev``.
 
-    ``corpus_keys`` is the FULL post-append key set (doc_id column of
-    the current snapshot) — scanned once, map-side, against a
-    broadcast of the delta's unresolved probe keys."""
-    delta_keys = ctx_delta.docs.select(F.col("doc_id").alias("key")).distinct()
-    # retraction: an appended doc resolves every outstanding reference
+    ``known_keys`` (column ``key``) holds the doc_ids known before or
+    with the arrival — scanned once, map-side, against a broadcast of the
+    arrival's unresolved probe keys.  Returns ``(kept, adds, retracts)``:
+    the next state is ``kept ∪ adds``; ``retracts`` are the state rows
+    the arrival resolved."""
+    # broadcast build sides keep duplicate keys: a semi/anti join does
+    # not care, and a distinct would cost its own shuffle stage
+    delta_keys = F.broadcast(docs_delta.select(F.col("doc_id").alias("key")))
+    # retraction: an arrived doc resolves every outstanding reference
     # to its id
-    kept = state_prev.join(F.broadcast(delta_keys), "key", "left_anti")
-    probes = ri_probes(ctx_delta)
-    step1 = probes.join(F.broadcast(delta_keys), "key", "left_anti")
+    retracts = state_prev.join(delta_keys, "key", "left_semi")
+    kept = state_prev.join(delta_keys, "key", "left_anti")
+    # a key defined in the same arrival wins
+    step1 = ri_probes(docs_delta).join(delta_keys, "key", "left_anti")
     # the corpus-scale step: which of the (tiny) candidate keys exist?
     # semi join with the small side BROADCAST => one column-pruned
-    # map-side scan of corpus_keys, zero shuffle of the big side
-    cand_keys = step1.select("key").distinct()
-    matched = corpus_keys.join(F.broadcast(cand_keys), "key", "left_semi").distinct()
+    # map-side scan of known_keys, zero shuffle of the big side
+    cand_keys = step1.select("key")
+    matched = known_keys.join(F.broadcast(cand_keys), "key", "left_semi")
     fresh = step1.join(F.broadcast(matched), "key", "left_anti")
-    merged = kept.select(*state_prev.columns).unionByName(
-        fresh.select(*state_prev.columns)
-    )
     # quote_probe dedups (doc_id, part_full) corpus-wide; a doc row
-    # duplicated across epochs must not double its quote violation.
-    # delvar has no such dedup (one probe per doc ROW), matching the
-    # full rule.
-    dq = merged.where(F.col("rule_id") == "delquote").dropDuplicates(
-        ["doc_id", "part_full"]
+    # arriving again must not double its quote violation.  delvar has
+    # no such dedup (one probe per doc ROW), matching the full rule.
+    quoted = state_prev.where(F.col("rule_id") == "delquote").select(
+        "doc_id", "part_full"
     )
-    dv = merged.where(F.col("rule_id") == "delvar")
-    return dq.unionByName(dv)
+    dq = fresh.where(F.col("rule_id") == "delquote").join(
+        quoted, ["doc_id", "part_full"], "left_anti"
+    )
+    dv = fresh.where(F.col("rule_id") == "delvar")
+    adds = dq.select(*RI_STATE_COLS).unionByName(dv.select(*RI_STATE_COLS))
+    return kept.select(*RI_STATE_COLS), adds, retracts.select(*RI_STATE_COLS)
+
+
+def prune_ri_state(spark: SparkSession, state_dir: str, keep: set[str]) -> None:
+    """Delete every epoch under ``state_dir`` except the ones named in
+    ``keep`` (directory names: the epoch a fold step read and the one it
+    wrote).  Run only after the step committed, so a retried step still
+    finds the epoch it reads.  Hidden (``_``/``.``) entries are left
+    alone."""
+    fs, jvm = _fs(spark, state_dir)
+    root = jvm.org.apache.hadoop.fs.Path(state_dir)
+    if not fs.exists(root):
+        return
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory() and name not in keep and not name.startswith(("_", ".")):
+            fs.delete(st.getPath(), True)
 
 
 def shape_ri_state(state: DataFrame) -> DataFrame:
@@ -248,11 +290,6 @@ def run(args, spark: SparkSession) -> None:
         raise SystemExit("--incremental validates the CURRENT snapshot; drop --as-of")
     if args.bucket_groups and args.bucket_groups > 1:
         raise SystemExit("--incremental already commits per append; drop --bucket-groups")
-    if args.bucketed:
-        raise SystemExit(
-            "--incremental maintains RI by state fold; --bucketed layouts "
-            "are for the full-recompute path"
-        )
 
     rule_ids = args.rules or ALL_RULE_IDS
     unknown = [r for r in rule_ids if r not in ALL_RULE_IDS]
@@ -426,6 +463,10 @@ def run(args, spark: SparkSession) -> None:
     # data), so coverage there is the union.
     if need_record:
         record_run(spark, out, snapshot, sorted(covered_now))
+        # committed: the next append folds from this snapshot's state,
+        # so only it and the epoch this run read stay on disk
+        keep = {f"epoch={snapshot}"} | ({f"epoch={prev['snapshot']}"} if prev else set())
+        prune_ri_state(spark, f"{out}/ri_state", keep)
 
 
 def _write_epoch(vio: DataFrame, vio_dir: str, epoch: str) -> None:
@@ -457,7 +498,7 @@ def _initial_run(
     )
     if ri:
         t0 = time.monotonic()
-        ri_cores_full(ctx).write.mode("overwrite").parquet(
+        ri_cores_full(documents).write.mode("overwrite").parquet(
             f"{out}/ri_state/epoch={snapshot}"
         )
         state = spark.read.parquet(f"{out}/ri_state/epoch={snapshot}")
@@ -554,12 +595,12 @@ def _append_run(
 
     if delta_files and (local or ri):
         docs_delta = spark.read.schema(documents.schema).parquet(*delta_files)
-        ctx_delta = engine.make_context(
-            spark, docs_delta, attrs=attrs, cache=False,
-            ignore_error=args.ignore_error, resolve_entity=False,
-        )
         if local:
             t0 = time.monotonic()
+            ctx_delta = engine.make_context(
+                spark, docs_delta, attrs=attrs, cache=False,
+                ignore_error=args.ignore_error, resolve_entity=False,
+            )
             _clear_epoch(spark, vio_dir, local, snapshot)
             _write_epoch(engine.run_rules(ctx_delta, local), vio_dir, snapshot)
             timings["__local_delta__"] = round(time.monotonic() - t0, 3)
@@ -569,9 +610,10 @@ def _append_run(
                 f"{out}/ri_state/epoch={prev['snapshot']}"
             )
             corpus_keys = documents.select(F.col("doc_id").alias("key"))
-            fold_ri_state(state_prev, ctx_delta, corpus_keys).write.mode(
-                "overwrite"
-            ).parquet(f"{out}/ri_state/epoch={snapshot}")
+            kept, adds, _ = ri_fold_step(state_prev, docs_delta, corpus_keys)
+            kept.unionByName(adds).write.mode("overwrite").parquet(
+                f"{out}/ri_state/epoch={snapshot}"
+            )
             state = spark.read.parquet(f"{out}/ri_state/epoch={snapshot}")
             # the fold result is the COMPLETE set: it replaces every
             # prior epoch of the RI rules

@@ -128,25 +128,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "surface a human reads at 10^12 scale instead of the raw table)",
     )
     p.add_argument(
-        "--bucketed",
-        metavar="DIR",
-        default=None,
-        help="keep a bucketed co-partitioned layout at DIR (doc_id catalog "
-        "+ RI probe extracts as bucketed+sorted tables, built once per "
-        "corpus snapshot, stale layouts rebuild automatically) and run the "
-        "referential rules delquote/delvar over it with zero-Exchange "
-        "plans — the shuffle moves from every validation run to ingest",
-    )
-    p.add_argument(
-        "--bucketed-buckets",
-        type=int,
-        default=None,
-        metavar="B",
-        help="bucket count for --bucketed (default %s); at 10^12 keys "
-        "size B so one bucket file fits an executor's scan budget"
-        % "8",
-    )
-    p.add_argument(
         "--ignore-error",
         action="store_true",
         help="quarantine per-record UDF crashes as __error__ rows "
@@ -279,22 +260,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ignore_error=args.ignore_error,
         resolve_entity=bool(scoped),
     )
-
-    if args.bucketed and {"delquote", "delvar"} & set(scoped):
-        # the RI rules read the snapshot-pinned bucketed layout instead
-        # of shuffling the corpus: ensure() reuses a layout materialized
-        # from THIS snapshot or rebuilds (derived state — staleness is a
-        # rebuild, never a warning), install() substitutes the
-        # zero-Exchange plans through the rules' own shape projections
-        from gwv_spark import bucketed
-
-        btables = bucketed.ensure(
-            ctx,
-            args.bucketed.rstrip("/"),
-            snapshot,
-            n_buckets=args.bucketed_buckets or bucketed.DEFAULT_BUCKETS,
-        )
-        bucketed.install(ctx, btables)
 
     vio_dir = f"{out}/violations"
     rule_secs: dict[str, float] = {}

@@ -38,6 +38,25 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
+def oracle_sqls(sf_dir: str) -> dict[str, str]:
+    """Oracle SQL of every registered query that has one.  An oracle
+    computed from the vendored reference cannot be built without it:
+    that entry alone is left out, with a warning naming it."""
+    import warnings
+
+    from gwv_spark.ref_expected import ReferenceUnavailable
+
+    out = {}
+    for name, spec in REGISTRY.items():
+        if spec.oracle_fn is None:
+            continue
+        try:
+            out[name] = spec.oracle_fn(sf_dir)
+        except ReferenceUnavailable as e:
+            warnings.warn(f"no oracle for {name}: {e}", stacklevel=2)
+    return out
+
+
 def q(name: str, oracle: Callable[[str], str] | None = None):
     def deco(fn):
         REGISTRY[name] = QuerySpec(name, fn, oracle)

@@ -38,12 +38,17 @@ from gwv_spark.corpus import (
 REFERENCE_PATH = os.environ.get("GWV_REFERENCE_PATH", "/root/reference")
 
 
+class ReferenceUnavailable(RuntimeError):
+    """The vendored reference is not installed, so no expected table
+    computed from it can be built."""
+
+
 def _import_reference():
     """Import the read-only reference copy with network loaders patched
     (the same setup tests/conftest.py's reference_gwv fixture performs)."""
     ref = Path(REFERENCE_PATH)
     if not ref.exists():
-        raise RuntimeError(
+        raise ReferenceUnavailable(
             f"reference repo not found at {ref}; set GWV_REFERENCE_PATH"
         )
     if str(ref) not in sys.path:

@@ -23,7 +23,8 @@ from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
 def quote_probe(ctx: RuleContext) -> DataFrame:
     """The RI probe side: distinct (doc_id, part_full, part_base) quoted
-    part references.  Shared with the bucketed layout (bucketed.py)."""
+    part references.  Shared with the retraction fold
+    (incremental.ri_probes)."""
     return (
         ctx.spans.where(F.col("kind") == "part")
         .select(
@@ -46,8 +47,8 @@ def missing_quotes(ctx: RuleContext) -> DataFrame:
 
 def shape_missing(missing: DataFrame) -> DataFrame:
     """Project the RI core (doc_id, part_full) onto the violations
-    schema — shared by the shuffled rule and the bucketed layout
-    (bucketed.py), so the two paths cannot drift."""
+    schema — shared by the shuffled rule and the retraction fold
+    (incremental.shape_ri_state), so the two paths cannot drift."""
     return shape(
         missing,
         "delquote",

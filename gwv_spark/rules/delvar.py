@@ -33,7 +33,7 @@ def derived_base(name):  # Column -> Column
 
 def variant_probe(ctx: RuleContext) -> DataFrame:
     """The RI probe side: (doc_id, base) derivation-base candidates.
-    Shared with the bucketed layout (bucketed.py)."""
+    Shared with the retraction fold (incremental.ri_probes)."""
     docs = ctx.docs.where(~F.col("category").isin(_SKIP_CATS))
     return docs.select("doc_id", derived_base(F.col("doc_id")).alias("base")).where(
         F.col("base").isNotNull()
@@ -49,7 +49,8 @@ def missing_bases(ctx: RuleContext) -> DataFrame:
 
 def shape_missing(missing: DataFrame) -> DataFrame:
     """Project the RI core (doc_id, base) onto the violations schema —
-    shared by the shuffled rule and the bucketed layout (bucketed.py)."""
+    shared by the shuffled rule and the retraction fold
+    (incremental.shape_ri_state)."""
     return shape(missing, "delvar", F.lit("0"), F.array(tag_s(F.col("base"))))
 
 

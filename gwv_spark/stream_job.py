@@ -11,9 +11,8 @@ rules (gwv_spark.streaming.DOC_LOCAL_RULES) exactly once per file:
   trigger interval, until the process is stopped.
 
 ``--ri`` runs the INCREMENTAL RI monitor instead (streaming.
-stream_ri_monitor): delquote/delvar maintained as an add/retract
-change log under ``<output>/updates`` (``--ri-shards`` spreads hot
-probe keys).  Corpus-scoped rules requested in the default mode belong
+start_ri_stream): delquote/delvar maintained by the retraction fold as
+an add/retract change log under ``<output>/updates``.  Corpus-scoped rules requested in the default mode belong
 to the batch job (``gwv_spark/job.py --resume``); requesting one here
 fails fast with the same error the library API raises.
 """
@@ -51,8 +50,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     p.add_argument("--ri", action="store_true",
                    help="run the incremental RI monitor (delquote/delvar "
                         "add/retract change log) instead of doc-local validation")
-    p.add_argument("--ri-shards", type=int, default=1,
-                   help="state shards per probe key (hot-key spreading)")
     p.add_argument("--near-dup", action="store_true",
                    help="run the incremental near-dup monitor "
                         "(per-arrival SimHash vs the corpus-so-far; "
@@ -158,7 +155,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             spark,
             args.input,
             args.output,
-            n_shards=args.ri_shards,
             max_files_per_trigger=args.max_files_per_trigger,
             available_now=args.continuous is None,
             processing_time=args.continuous,

@@ -17,11 +17,12 @@ Two-tier architecture for a corpus that grows continuously:
   per-batch evaluation would be semantically wrong; they run through the
   resumable snapshot job (``gwv_spark.job --resume``), whose
   incremental-append lifecycle is tested in tests/test_job.py.
-- **Incremental RI tier** (:func:`stream_ri_monitor`) — the two
+- **Incremental RI tier** (:func:`start_ri_stream`) — the two
   referential rules that are pure existence checks (delquote, delvar)
-  ALSO have a low-latency streaming form: stateful incremental
-  maintenance with retractions, so dangling-reference violations appear
-  on arrival and disappear the moment the referenced document lands,
+  ALSO have a low-latency streaming form: each microbatch runs one step
+  of the batch tier's retraction fold (incremental.ri_fold_step) over a
+  persisted state table, so dangling-reference violations appear on
+  arrival and disappear the moment the referenced document lands,
   without rescanning the corpus.  The batch tier remains authoritative
   per snapshot; the RI tier is its constantly-current companion.
 - **Sketch tier** (:func:`stream_sketch_store`) — column-stats
@@ -59,7 +60,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gwv_spark import engine
+from gwv_spark import engine, incremental
 from gwv_spark.rules import load_all_rules
 from gwv_spark.session import local_frame
 
@@ -146,6 +147,8 @@ def validate_stream(
     change)."""
     load_all_rules()
     rids = list(rule_ids) if rule_ids is not None else list(DOC_LOCAL_RULES)
+    if not rids:
+        raise ValueError("rule_ids is empty: select at least one rule")
     if not allow_corpus_scoped:
         scoped = [r for r in rids if r not in DOC_LOCAL_RULES]
         if scoped:
@@ -423,243 +426,139 @@ RI_UPDATE_SCHEMA = (
 # (probe key ∈ doc_id catalog): delquote (reference delquote.py:22-30)
 # and delvar (delvar.py:30-44).  kosekitoki is referential but compares
 # entity VALUES, not existence, so it stays in the batch tier.
-INCREMENTAL_RI_RULES = ["delquote", "delvar"]
+INCREMENTAL_RI_RULES = incremental.RI_RULES
 
 
-def _ri_probe_rows(docs: DataFrame) -> DataFrame:
-    """Doc-locally computable probe rows for the incremental RI rules:
-    (rule_id, probe_key, doc_id, detail).
-
-    - delquote: one probe per part quote — key = base name before '@'
-      (the stored span.media_ref), detail = the full quoted name;
-    - delvar: one probe per variant-named doc outside the skip
-      categories — key = detail = the derived base (category is a pure
-      function of doc_id, derive.category, so the gate is doc-local).
-
-    Both extractors mirror the batch cores exactly
-    (rules.delquote.missing_quotes / rules.delvar.missing_bases);
-    tests/test_streaming.py asserts the equivalence per drop."""
-    from gwv_spark import derive, parse
-    from gwv_spark.rules import delvar as delvar_mod
-
-    quotes = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "part")
-        .select(
-            F.lit("delquote").alias("rule_id"),
-            F.col("s.media_ref").alias("probe_key"),
-            "doc_id",
-            parse.part_name_full(F.col("s.text")).alias("detail"),
-        )
-        .where(F.col("detail").isNotNull())
-    )
-    cat = derive.category(F.col("doc_id"))
-    base = delvar_mod.derived_base(F.col("doc_id"))
-    bases = (
-        docs.select("doc_id", cat.alias("category"), base.alias("base"))
-        .where(~F.col("category").isin(delvar_mod._SKIP_CATS))
-        .where(F.col("base").isNotNull())
-        .select(
-            F.lit("delvar").alias("rule_id"),
-            F.col("base").alias("probe_key"),
-            "doc_id",
-            F.col("base").alias("detail"),
-        )
-    )
-    return quotes.unionByName(bases)
+def _ls(spark: SparkSession, root: str) -> list[str]:
+    """Names of the directories under ``root`` (none if it is absent)."""
+    fs, jvm = incremental._fs(spark, root)
+    path = jvm.org.apache.hadoop.fs.Path(root)
+    if not fs.exists(path):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory()]
 
 
-def stream_ri_monitor(
-    spark: SparkSession,
-    input_path: str,
-    n_shards: int = 1,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Incremental referential-integrity maintenance over the document
-    stream: the streaming counterpart of the batch tier's anti-join RI
-    rules (delquote, delvar), WITH RETRACTIONS.
+def _epochs_below(spark: SparkSession, root: str, epoch: int) -> list[int]:
+    """The ``epoch_id=<n>`` directories under ``root`` with n < epoch."""
+    ids = [int(n.split("=", 1)[1]) for n in _ls(spark, root) if n.startswith("epoch_id=")]
+    return sorted(n for n in ids if n < epoch)
 
-    The batch tier's verdict for these rules can flip as other documents
-    arrive — a quote of a part that lands later stops being a violation.
-    Plain per-batch evaluation is therefore wrong (validate_stream
-    rejects these rules); this operator instead maintains the RI state
-    incrementally, emitting a change stream:
 
-    - ``op='add'``    — a probe (quote / derived base) whose key is not
-      (yet) a known doc_id: the violation appears;
-    - ``op='retract'`` — a previously-dangling probe whose key just
-      arrived as a document: the violation disappears.
-
-    ``ri_outstanding`` folds the change stream into the current
-    violation set, which equals the batch core over the corpus-so-far
-    after every drain (tested per drop in tests/test_streaming.py).
-
-    Shape: ``applyInPandasWithState`` keyed by ``(probe_key, shard)``
-    — one state entry serves BOTH rules (pending probes carry their
-    rule tag), because the dominant cost is the per-key Python
-    invocation and definitions vastly outnumber probes.  Per key the
-    state is a defined flag plus the pending (rule, doc_id, detail)
-    probes awaiting a definition — i.e. exactly the rows a later
-    retraction must re-emit, nothing more.  Definitions (each arriving
-    doc_id) replicate to each shard of their key; probes route by
-    ``hash(doc_id) % n_shards``.  The shard term exists for hot keys: a
-    part quoted by 20% of all documents (the north rule's skew case)
-    spreads its probe traffic over ``n_shards`` state partitions instead
-    of one straggler task, at the bounded cost of (batch defs ×
-    n_shards) replicated definition rows — batch-sized, never
-    corpus-sized.  Sharded and unsharded runs emit the identical change
-    stream (tested).
-
-    State size is O(defined keys + dangling probes) — the
-    streaming-materialized catalog, inherent to incremental RI (you must
-    remember what exists).  Per-entry payload is a bool + the pending
-    list; at cluster scale back it with the RocksDB state store
-    provider.  Retried epochs replay against the checkpoint-rolled-back
-    state version, so the epoch-keyed overwrite sink in
-    :func:`stream_ri_drain` keeps the pipeline exactly-once end to end
-    (same argument as validate_stream).
-
-    Returns the streaming change DataFrame (RI_UPDATE_SCHEMA); output
-    mode must be ``update``."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        StringType,
-        StructField,
-        StructType,
+def _change_rows(state_rows: DataFrame, op: str) -> DataFrame:
+    """RI state rows as change-log rows (RI_UPDATE_SCHEMA): the detail
+    is the quoted part name for delquote and the base for delvar (whose
+    part_full is NULL)."""
+    return state_rows.select(
+        "rule_id",
+        F.col("key").alias("probe_key"),
+        "doc_id",
+        F.coalesce("part_full", "key").alias("detail"),
+        F.lit(op).alias("op"),
     )
 
-    docs = read_document_stream(spark, input_path, max_files_per_trigger)
-    # state is keyed by (probe_key, shard) — NOT per rule: the dominant
-    # streaming cost is the per-key Python invocation of the state
-    # function, and definitions (every arriving doc) vastly outnumber
-    # probes, so folding both rules into one state entry (pending probes
-    # carry their rule tag) halves the keys the executors must call into
-    # Python for.
-    probes = _ri_probe_rows(docs).select(
-        "probe_key",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+
+def _logged_adds(spark: SparkSession, out: str, epoch: int) -> DataFrame:
+    """The adds epoch ``epoch`` wrote to the change log, back as state
+    rows (the inverse of :func:`_change_rows`)."""
+    if f"epoch_id={epoch}" not in _ls(spark, f"{out}/updates"):
+        return local_frame(spark, [], incremental.RI_STATE_DDL)
+    log = spark.read.parquet(f"{out}/updates/epoch_id={epoch}")
+    return log.where(F.col("op") == "add").select(
         "rule_id",
         "doc_id",
-        "detail",
-    )
-    defs = docs.select(F.col("doc_id").alias("probe_key")).select(
-        "probe_key",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(n_shards)])
-        ).alias("shard"),
-        F.lit(None).cast("string").alias("rule_id"),  # NULL = definition
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit(None).cast("string").alias("detail"),
-    )
-    rows = probes.unionByName(defs)
-
-    out_type = StructType(
-        [
-            StructField("rule_id", StringType()),
-            StructField("probe_key", StringType()),
-            StructField("doc_id", StringType()),
-            StructField("detail", StringType()),
-            StructField("op", StringType()),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("defined", BooleanType()),
-            StructField("pending", StringType()),  # json [[rule,doc,detail]]
-        ]
+        F.col("probe_key").alias("key"),
+        F.when(F.col("rule_id") == "delquote", F.col("detail")).alias("part_full"),
     )
 
-    def _update(key, pdf_iter, state):
-        import json as _json
 
-        probe_key = key[0]
-        if state.exists:
-            defined, pending_json = state.get
-            pending = {tuple(p) for p in _json.loads(pending_json)}
+def make_ri_batch_processor(spark: SparkSession, out: str):
+    """The foreachBatch body of :func:`start_ri_stream`: one step of the
+    retraction fold (incremental.ri_fold_step, the same step an
+    incremental append runs) per microbatch, over three epoch-keyed
+    tables under ``out``:
+
+    - ``updates/epoch_id=<e>/`` — the change log: ``op='add'`` for a
+      probe whose key is not (yet) a known doc_id (the violation
+      appears), ``op='retract'`` for an outstanding probe whose key
+      arrived in this batch (it disappears);
+    - ``ri_state/epoch_id=<e>/`` — the outstanding set after the batch
+      (incremental.RI_STATE_DDL): the prior state minus the retracted
+      rows plus the logged adds, read back so the fold runs once;
+    - ``ri_keys/epoch_id=<e>/`` — the batch's doc_ids, the catalog the
+      next batches' probes are checked against.
+
+    Batch e reads the newest state epoch below e and the key epochs
+    below e, and each write overwrites only epoch e, so calling the
+    function again with the same (batch, epoch_id) — Spark's retry of an
+    epoch that failed before its checkpoint commit — leaves every table
+    as one call would.  State epochs older than the one read are deleted
+    after the state write.  Nothing is cached: the batch is re-read per
+    write."""
+    out = str(out).rstrip("/")
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        e = int(epoch_id)
+        prior = _epochs_below(spark, f"{out}/ri_state", e)
+        if prior:
+            state_prev = spark.read.parquet(f"{out}/ri_state/epoch_id={prior[-1]}")
         else:
-            defined, pending = False, set()
-        batch_def = False
-        batch_probes: set[tuple[str, str, str]] = set()
-        for pdf in pdf_iter:
-            rid = pdf["rule_id"]
-            if rid.isna().any():
-                batch_def = True
-            q = pdf[rid.notna()]
-            if len(q):
-                batch_probes.update(zip(q["rule_id"], q["doc_id"], q["detail"]))
-        out = []
-        if defined or batch_def:
-            if not defined:
-                # the key just came into existence: every pending
-                # violation is retracted (a def in the same batch as a
-                # probe also wins — corpus membership is batch-atomic)
-                out += [
-                    (r, probe_key, d, det, "retract")
-                    for r, d, det in sorted(pending)
-                ]
-                pending = set()
-            defined = True
+            state_prev = local_frame(spark, [], incremental.RI_STATE_DDL)
+        if _epochs_below(spark, f"{out}/ri_keys", e):
+            known = spark.read.parquet(f"{out}/ri_keys").where(F.col("epoch_id") < e)
         else:
-            out += [
-                (r, probe_key, d, det, "add")
-                for r, d, det in sorted(batch_probes - pending)
-            ]
-            pending |= batch_probes
-        state.update((bool(defined), _json.dumps(sorted(pending))))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["rule_id", "probe_key", "doc_id", "detail", "op"]
-            )
+            known = local_frame(spark, [], "key STRING")
+        kept, adds, retracts = incremental.ri_fold_step(
+            state_prev, batch_df, known.select("key")
+        )
+        (
+            _change_rows(adds, "add")
+            .unionByName(_change_rows(retracts, "retract"))
+            .withColumn("epoch_id", F.lit(e))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch_id")
+            .parquet(f"{out}/updates")
+        )
+        kept.unionByName(_logged_adds(spark, out, e)).write.mode("overwrite").parquet(
+            f"{out}/ri_state/epoch_id={e}"
+        )
+        batch_df.select(F.col("doc_id").alias("key")).write.mode("overwrite").parquet(
+            f"{out}/ri_keys/epoch_id={e}"
+        )
+        keep = {f"epoch_id={e}"} | ({f"epoch_id={prior[-1]}"} if prior else set())
+        incremental.prune_ri_state(spark, f"{out}/ri_state", keep)
 
-    return rows.groupBy("probe_key", "shard").applyInPandasWithState(
-        _update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
-    )
+    return _process
 
 
 def start_ri_stream(
     spark: SparkSession,
     input_path: str,
     output_dir: str,
-    n_shards: int = 1,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     processing_time: str | None = None,
-    rocksdb_state: bool = False,
 ):
-    """Start the incremental RI change-log writer; returns the
-    StreamingQuery.  Change rows land under ``<output>/updates``
-    partitioned by epoch_id with dynamic overwrite (retried epochs are
-    idempotent — exactly-once end to end).
+    """Start the incremental RI monitor: the streaming counterpart of
+    the batch tier's anti-join RI rules (delquote, delvar), WITH
+    RETRACTIONS.  Returns the StreamingQuery.
 
-    ``rocksdb_state=True`` switches the state store to the RocksDB
-    provider — the deployment setting once the defined-key set outgrows
-    executor heaps (the default HDFS-backed provider holds all state in
-    memory).  The provider is a session-level conf read at query START,
-    so it applies to queries started after this call; the output is
-    identical either way (tested)."""
+    The batch verdict for these rules can flip as other documents
+    arrive — a quote of a part that lands later stops being a violation
+    — so plain per-batch evaluation is wrong (validate_stream rejects
+    these rules).  Instead each microbatch folds into a persisted state
+    table and emits the change log under ``<output>/updates``
+    (:func:`make_ri_batch_processor`); :func:`ri_outstanding` folds the
+    log into the current violation set, which equals the batch cores
+    over the corpus-so-far after every drain (tested per drop in
+    tests/test_streaming.py).  The checkpoint's file index maps each
+    landed file to one epoch, and the epoch-keyed writes make a retried
+    epoch idempotent — exactly-once end to end (same argument as
+    validate_stream)."""
     out = str(output_dir).rstrip("/")
-    if rocksdb_state:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    updates = stream_ri_monitor(spark, input_path, n_shards, max_files_per_trigger)
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(f"{out}/updates")
-        )
-
+    stream = read_document_stream(spark, input_path, max_files_per_trigger)
     writer = (
-        updates.writeStream.foreachBatch(_write)
-        .outputMode("update")
+        stream.writeStream.foreachBatch(make_ri_batch_processor(spark, out))
         .option("checkpointLocation", f"{out}/_checkpoint")
         .queryName("gwv-ri-stream")
     )
@@ -674,34 +573,17 @@ def stream_ri_drain(
     spark: SparkSession,
     input_path: str,
     output_dir: str,
-    n_shards: int = 1,
     max_files_per_trigger: int | None = None,
-    rocksdb_state: bool = False,
 ) -> DataFrame:
     """Drain the incremental RI monitor over the files currently present
     and return the accumulated change log (epoch_id + RI_UPDATE_SCHEMA)
-    as a batch DataFrame.  The checkpoint carries the (defined, pending)
-    state, so a later drain after new files continues incrementally —
-    only the new documents are scanned.  Keep ``rocksdb_state``
-    consistent across drains of one checkpoint (the state format is
-    provider-specific)."""
+    as a batch DataFrame.  The state table and the checkpoint carry the
+    fold, so a later drain after new files continues incrementally —
+    only the new documents are scanned."""
     out = str(output_dir).rstrip("/")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    q = start_ri_stream(
-        spark, input_path, output_dir, n_shards, max_files_per_trigger,
-        available_now=True, rocksdb_state=rocksdb_state,
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if rocksdb_state:
-            # drain-scoped: don't leak the provider into other queries'
-            # (provider-specific) checkpoints in this session
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+    start_ri_stream(
+        spark, input_path, output_dir, max_files_per_trigger, available_now=True
+    ).awaitTermination()
     # every epoch so far may legitimately have emitted nothing (e.g. all
     # probes satisfied within their own batch) — an all-empty sink has no
     # parquet footer to infer from
@@ -712,9 +594,9 @@ def stream_ri_drain(
 
 def ri_outstanding(updates: DataFrame) -> DataFrame:
     """Fold the RI change stream into the current violation set:
-    (rule_id, doc_id, detail) rows added and never retracted.  A probe
-    is added at most once and retracted at most once (state dedups), so
-    a left anti join is exact."""
+    (rule_id, doc_id, detail) rows added and never retracted.  A state
+    row is added once and retracted at most once, and a retraction
+    removes every copy of its row, so a left anti join is exact."""
     adds = updates.where(F.col("op") == "add").select(
         "rule_id", "doc_id", "detail"
     )
@@ -725,31 +607,20 @@ def ri_outstanding(updates: DataFrame) -> DataFrame:
 
 
 def ri_outstanding_violations(updates: DataFrame) -> DataFrame:
-    """The outstanding RI set projected onto the VIOLATIONS schema —
-    identical rows to the batch delquote/delvar rules over the same
-    corpus (tested per drop), so readers can union this tier's view
-    with the batch job's sink directly."""
-    from gwv_spark.rules import shape, tag_s
-
+    """The outstanding RI set projected onto the VIOLATIONS schema
+    through the rules' own shape projections (incremental.shape_ri_state)
+    — identical rows to the batch delquote/delvar rules over the same
+    corpus (tested per drop), so readers can union this tier's view with
+    the batch job's sink directly."""
     cur = ri_outstanding(updates)
-    dq = shape(
-        cur.where(F.col("rule_id") == "delquote").select(
-            "doc_id", F.col("detail").alias("part_full")
-        ),
-        "delquote",
-        F.lit("0"),
-        F.array(tag_s(F.col("part_full"))),
-        F.concat(F.col("doc_id"), F.lit("#"), F.col("part_full")),
+    return incremental.shape_ri_state(
+        cur.select(
+            "rule_id",
+            "doc_id",
+            F.col("detail").alias("key"),
+            F.col("detail").alias("part_full"),
+        )
     )
-    dv = shape(
-        cur.where(F.col("rule_id") == "delvar").select(
-            "doc_id", F.col("detail").alias("base")
-        ),
-        "delvar",
-        F.lit("0"),
-        F.array(tag_s(F.col("base"))),
-    )
-    return dq.unionByName(dv)
 
 
 # --------------------------------------------- incremental near-dup

@@ -76,6 +76,16 @@ def test_run_rules_rejects_unregistered_ids(spark, tmp_path):
         engine.run_rules_concurrent(ctx, ["nosuchrule", "numexp"])
 
 
+def test_empty_rule_list_selects_no_rules(spark, tmp_path):
+    """An empty list selects no rules; only None means all of them."""
+    assert engine._registered([]) == []
+    assert len(engine._registered(None)) == 18
+    data_dir = ensure_corpus(tmp_path / "corpus", 20)
+    ctx = engine.make_context(spark, spark.read.parquet(str(data_dir / "documents.parquet")))
+    assert engine.run_rules(ctx, []).count() == 0
+    assert engine.run_rules_concurrent(ctx, []) == {}
+
+
 def test_load_all_rules_raises_on_missing_module(monkeypatch):
     # a None entry in sys.modules makes the import raise ModuleNotFoundError
     monkeypatch.setitem(sys.modules, "gwv_spark.rules.numexp", None)

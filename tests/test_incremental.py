@@ -49,11 +49,13 @@ def classic_full(spark, tmp_path, corpus, tag):
 
 
 def test_incremental_chain_equals_full_recompute(spark, tmp_path):
-    """300-doc baseline + two appends (50, then 30 docs drawn from the
+    """300-doc baseline + three appends (50, then 30 docs drawn from the
     same id space, so cross-boundary references exist in both
-    directions).  After every step the incremental violations equal a
-    from-scratch classic run, and the delta epochs only hold doc-local
-    rows for appended docs."""
+    directions; then 10 that re-land the second append's tail —
+    duplicate doc rows are a legal corpus state).  After every step the
+    incremental violations equal a from-scratch classic run, at most two
+    RI state epochs remain (the one the fold read and the one it wrote),
+    and the delta epochs only hold doc-local rows for appended docs."""
     full = ensure_corpus(tmp_path / "gen", 380)
     table = pq.read_table(full / "documents.parquet")
     corpus = tmp_path / "corpus"
@@ -64,20 +66,20 @@ def test_incremental_chain_equals_full_recompute(spark, tmp_path):
     args = ["--input", str(corpus), "--output", str(out),
             "--rules", *RULES, "--n-buckets", "16", "--incremental"]
 
+    def state_epochs():
+        return [p for p in (out / "ri_state").iterdir() if p.is_dir()]
+
     job.main(args, spark=spark)
     assert vio_set(spark, out / "violations") == classic_full(
         spark, tmp_path, corpus, "s0"
     )
 
-    pq.write_table(table.slice(300, 50), corpus / "part-001.parquet")
-    job.main(args, spark=spark)
-    inc1 = vio_set(spark, out / "violations")
-    assert inc1 == classic_full(spark, tmp_path, corpus, "s1")
-
-    pq.write_table(table.slice(350, 30), corpus / "part-002.parquet")
-    job.main(args, spark=spark)
-    inc2 = vio_set(spark, out / "violations")
-    assert inc2 == classic_full(spark, tmp_path, corpus, "s2")
+    for k, (start, n) in enumerate([(300, 50), (350, 30), (370, 10)], 1):
+        pq.write_table(table.slice(start, n), corpus / f"part-{k:03d}.parquet")
+        job.main(args, spark=spark)
+        inc = vio_set(spark, out / "violations")
+        assert inc == classic_full(spark, tmp_path, corpus, f"s{k}")
+        assert len(state_epochs()) <= 2, state_epochs()
 
     # the pre-append corpus was never recomputed: every doc-local row
     # for an old doc lives in exactly ONE epoch (the baseline's)
@@ -101,7 +103,7 @@ def test_incremental_chain_equals_full_recompute(spark, tmp_path):
 
     # rerun on the unchanged snapshot: pure no-op, same rows
     job.main(args, spark=spark)
-    assert vio_set(spark, out / "violations") == inc2
+    assert vio_set(spark, out / "violations") == inc
 
 
 def test_ri_retraction_and_creation(spark, tmp_path):
@@ -296,3 +298,4 @@ def test_skipped_rule_chain_break_recomputes(spark, tmp_path):
     assert vio_set(spark, out / "violations") == vio_set(
         spark, ref2 / "violations"
     )
+

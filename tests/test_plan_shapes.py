@@ -240,25 +240,23 @@ def test_incremental_ri_fold_broadcasts_the_tiny_side(spark, docs_df):
     exist?) must be a broadcast semi join — the corpus key column scans
     map-side; an Exchange of the corpus side here would re-introduce
     the full-catalog shuffle the fold exists to avoid."""
-    from gwv_spark import engine, incremental
+    from gwv_spark import incremental
 
-    ctx_delta = engine.make_context(
-        spark, docs_df.limit(50), cache=False, resolve_entity=False
-    )
+    docs_delta = docs_df.limit(50)
     state_prev = spark.createDataFrame([], incremental.RI_STATE_DDL)
     corpus_keys = docs_df.select(F.col("doc_id").alias("key"))
-    folded = incremental.fold_ri_state(state_prev, ctx_delta, corpus_keys)
-    plan = _physical(folded)
+    kept, adds, _ = incremental.ri_fold_step(state_prev, docs_delta, corpus_keys)
+    plan = _physical(kept.unionByName(adds))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
     # the corpus-scale stage in isolation: corpus keys SEMI broadcast
-    # candidates, BEFORE the (candidate-sized) distinct — this exact
-    # sub-plan must be scan→BroadcastHashJoin with no shuffle at all.
-    # (The fold's remaining exchanges operate on state-/delta-sized
-    # frames: quote_probe's dedup and the matched distinct — bounded by
-    # outstanding violations + appended docs, never the corpus.)
-    cand = ctx_delta.docs.select(F.col("doc_id").alias("key")).limit(10)
+    # candidates — this exact sub-plan must be scan→BroadcastHashJoin
+    # with no shuffle at all.  (The fold's remaining exchanges operate
+    # on state-/delta-sized frames: quote_probe's dedup and the
+    # delquote dedup against the prior state — bounded by outstanding
+    # violations + appended docs, never the corpus.)
+    cand = docs_delta.select(F.col("doc_id").alias("key")).limit(10)
     semi = corpus_keys.join(F.broadcast(cand), "key", "left_semi")
     semi_plan = _physical(semi)
     assert "BroadcastHashJoin" in semi_plan and "LeftSemi" in semi_plan

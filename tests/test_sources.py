@@ -6,12 +6,15 @@ from __future__ import annotations
 
 import sys
 
-sys.path.insert(0, "/root/reference")
-
-from gwv.dump import Dump  # reference, read-only
+import pytest
 
 from gwv_spark import sources
 from gwv_spark.corpus import py_spans
+
+sys.path.insert(0, "/root/reference")
+
+# reference, read-only; skipped without it, like the reference_gwv fixture
+Dump = pytest.importorskip("gwv.dump", reason="reference repo not available").Dump
 
 CSV_BODY = (
     "1700000000.25\n"

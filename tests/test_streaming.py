@@ -174,6 +174,17 @@ def test_validate_stream_rejects_corpus_scoped_rules(spark, tmp_path):
         )
 
 
+def test_validate_stream_rejects_empty_rule_list(spark, tmp_path):
+    """rule_ids=[] selects nothing; it must not fall back to every
+    rule over a context built without the entity columns."""
+    from gwv_spark.streaming import validate_stream
+
+    with pytest.raises(ValueError, match="empty"):
+        validate_stream(
+            spark, str(tmp_path / "in"), str(tmp_path / "out"), rule_ids=[]
+        )
+
+
 def test_stream_drift_monitor_matches_batch_psi(spark, corpus_df, tmp_path):
     """The stateful running-PSI stream must converge to exactly the
     batch snapshot_psi over the full corpus: state accumulates across
@@ -322,6 +333,16 @@ def _write_gdata_drop(spark, path, rows):
     return df
 
 
+def _bag(df, drop=()):
+    """Rows as a sorted list (a multiset), columns sorted by name."""
+    cols = sorted(c for c in df.columns if c not in drop)
+    return sorted(tuple(map(str, r)) for r in df.select(*cols).collect())
+
+
+def _state_epochs(out):
+    return sorted(p.name for p in (out / "ri_state").iterdir() if p.is_dir())
+
+
 def _batch_ri_core(spark, docs):
     """Labeled union of the two batch RI cores over ``docs`` —
     the ground truth the incremental tier must reproduce."""
@@ -346,7 +367,9 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
     dangling variant base become violations on arrival and are RETRACTED
     the moment the referenced document lands; references that are never
     satisfied stay outstanding.  After each drain the folded view equals
-    the batch RI cores over the corpus-so-far."""
+    the batch RI cores over the corpus-so-far.  A hot key rides along:
+    60 documents quote the same missing part, which then lands (60
+    adds, then 60 retractions)."""
     from gwv_spark.streaming import ri_outstanding, stream_ri_drain
 
     landing = tmp_path / "landing"
@@ -354,11 +377,14 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
     out = str(tmp_path / "ri")
 
     # drop 1: u4e00 quotes u4e02@3 (lands in drop 2) and u9999 (never
-    # lands); u4e01-var-001 derives base u4e01 (lands in drop 2)
+    # lands); u4e01-var-001 derives base u4e01 (lands in drop 2); the
+    # hot quoters all quote u9998@1 (lands in drop 2)
+    hot = [(f"u5{i:03x}", "99:0:0:10:10:90:90:u9998@1") for i in range(60)]
+    hot_rows = {("u9998@1", doc_id, "delquote") for doc_id, _ in hot}
     drop1 = [
         ("u4e00", "99:0:0:10:10:90:90:u4e02@3$99:0:0:10:10:90:90:u9999"),
         ("u4e01-var-001", "1:0:0:10:10:90:90"),
-    ]
+    ] + hot
     d1 = _write_gdata_drop(spark, landing / "d1", drop1)
     updates = stream_ri_drain(spark, str(landing / "*"), out)
     # _rows sorts columns by name: (detail, doc_id, rule_id)
@@ -366,15 +392,16 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
         ("u4e02@3", "u4e00", "delquote"),
         ("u9999", "u4e00", "delquote"),
         ("u4e01", "u4e01-var-001", "delvar"),
-    }
+    } | hot_rows
     assert _rows(ri_outstanding(updates)) == expect1
     assert _rows(ri_outstanding(updates)) == _rows(_batch_ri_core(spark, d1))
 
-    # drop 2: u4e02 and u4e01 land (two retractions); u4e03 adds a fresh
-    # dangling quote of u9999
+    # drop 2: u4e02, u4e01 and the hot key u9998 land (62
+    # retractions); u4e03 adds a fresh dangling quote of u9999
     drop2 = [
         ("u4e02", "1:0:0:10:10:90:90"),
         ("u4e01", "1:0:0:10:10:90:90"),
+        ("u9998", "1:0:0:10:10:90:90"),
         ("u4e03", "99:0:0:10:10:90:90:u9999"),
     ]
     d2 = _write_gdata_drop(spark, landing / "d2", drop2)
@@ -386,7 +413,8 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
     assert rets == {
         ("delquote", "u4e00", "u4e02@3"),
         ("delvar", "u4e01-var-001", "u4e01"),
-    }
+    } | {(r, d, det) for det, d, r in hot_rows}
+    assert updates.where(F.col("op") == "retract").count() == 62
     expect2 = {
         ("u9999", "u4e00", "delquote"),
         ("u9999", "u4e03", "delquote"),
@@ -398,10 +426,11 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
 
 
 def test_stream_ri_matches_batch_per_drop_on_corpus(spark, corpus_df, tmp_path):
-    """On the generated corpus, landed in three drops: after every drain
+    """On the generated corpus, landed in four drops: after every drain
     the folded incremental view must equal the batch anti-join cores over
     the accumulated documents — the probe extractors cannot drift from
-    the batch rules."""
+    the batch rules — and at most two state epochs remain (the one the
+    last batch read and the one it wrote)."""
     from gwv_spark.streaming import ri_outstanding, stream_ri_drain
 
     landing = tmp_path / "landing"
@@ -409,7 +438,7 @@ def test_stream_ri_matches_batch_per_drop_on_corpus(spark, corpus_df, tmp_path):
     out = str(tmp_path / "ri")
     docs = corpus_df.select("doc_id", "related", "ts", "spans")
     drops = [
-        docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i) for i in range(3)
+        docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == i) for i in range(4)
     ]
     acc = None
     for i, drop in enumerate(drops):
@@ -421,6 +450,8 @@ def test_stream_ri_matches_batch_per_drop_on_corpus(spark, corpus_df, tmp_path):
         assert _rows(ri_outstanding(updates)) == _rows(
             _batch_ri_core(spark, acc)
         ), f"incremental RI diverged from batch after drop {i}"
+        assert len(_state_epochs(tmp_path / "ri")) <= 2
+    assert _state_epochs(tmp_path / "ri") == ["epoch_id=2", "epoch_id=3"]
     # the corpus actually exercises retraction (a quoted part landing
     # after its quoter) — otherwise the per-drop assertions above would
     # be vacuously add-only
@@ -438,43 +469,68 @@ def test_stream_ri_matches_batch_per_drop_on_corpus(spark, corpus_df, tmp_path):
     assert _rows(ri_outstanding_violations(updates)) == _rows(batch_v)
 
 
-def test_stream_ri_sharded_equals_unsharded(spark, tmp_path):
-    """n_shards spreads a hot probe key over independent state
-    partitions, and the RocksDB state-store provider is the setting for
-    state beyond executor heaps; the emitted change stream must be
-    identical under every configuration.  The hot key here: 60
-    documents all quoting the same missing part, which then lands (60
-    retractions through 4 shards)."""
-    from gwv_spark.streaming import stream_ri_drain
+def test_stream_ri_doc_landing_twice_matches_batch_multiplicity(spark, tmp_path):
+    """A doc_id that lands twice is two doc rows.  The stream keeps the
+    batch rules' multiplicity: delvar has one violation per doc row (2),
+    delquote one per (doc_id, quoted part) (1); the later arrival of
+    the base retracts both delvar rows."""
+    from gwv_spark.streaming import ri_outstanding, stream_ri_drain
 
-    hot = [
-        (f"u5{i:03x}", "99:0:0:10:10:90:90:u9998@1") for i in range(60)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    out = str(tmp_path / "ri")
+    twice = [
+        ("u4e00", "99:0:0:10:10:90:90:u9999"),
+        ("u4e01-var-001", "1:0:0:10:10:90:90"),
     ]
-    results = {}
-    configs = [(1, False), (4, False), (1, True)]  # (n_shards, rocksdb)
-    for shards, rocksdb in configs:
-        tag = f"{shards}{int(rocksdb)}"
-        landing = tmp_path / f"landing{tag}"
-        landing.mkdir()
-        out = str(tmp_path / f"ri{tag}")
-        _write_gdata_drop(spark, landing / "d1", hot)
-        stream_ri_drain(spark, str(landing / "*"), out, n_shards=shards,
-                        rocksdb_state=rocksdb)
-        _write_gdata_drop(
-            spark, landing / "d2", [("u9998", "1:0:0:10:10:90:90")]
-        )
-        updates = stream_ri_drain(spark, str(landing / "*"), out,
-                                  n_shards=shards, rocksdb_state=rocksdb)
-        results[(shards, rocksdb)] = _rows(updates, drop=("epoch_id",))
-        # the provider conf must not leak out of the drain
-        assert spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        ) is None or "RocksDB" not in spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass"
-        )
-    assert results[(1, False)] == results[(4, False)] == results[(1, True)]
-    n_rets = sum(1 for r in results[(4, False)] if "retract" in r)
-    assert n_rets == 60
+    d1 = _write_gdata_drop(spark, landing / "d1", twice)
+    stream_ri_drain(spark, str(landing / "*"), out)
+    d2 = _write_gdata_drop(spark, landing / "d2", twice)
+    updates = stream_ri_drain(spark, str(landing / "*"), out)
+    acc = d1.unionByName(d2)
+    assert _bag(ri_outstanding(updates)) == [
+        ("u4e01", "u4e01-var-001", "delvar"),
+        ("u4e01", "u4e01-var-001", "delvar"),
+        ("u9999", "u4e00", "delquote"),
+    ]
+    assert _bag(ri_outstanding(updates)) == _bag(_batch_ri_core(spark, acc))
+
+    d3 = _write_gdata_drop(spark, landing / "d3", [("u4e01", "1:0:0:10:10:90:90")])
+    updates = stream_ri_drain(spark, str(landing / "*"), out)
+    assert updates.where(F.col("op") == "retract").count() == 2
+    assert _bag(ri_outstanding(updates)) == _bag(
+        _batch_ri_core(spark, acc.unionByName(d3))
+    )
+
+
+def test_stream_ri_epoch_retry_is_idempotent(spark, corpus_df, tmp_path):
+    """The RI stream's foreachBatch body called twice with the same
+    (batch, epoch_id) — Spark's retry of an epoch that failed before
+    its checkpoint commit — leaves the change log, the state and the
+    key catalog exactly as one call does."""
+    from gwv_spark.streaming import make_ri_batch_processor
+
+    out = tmp_path / "ri"
+    docs = corpus_df.select("doc_id", "related", "ts", "spans")
+    part1 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
+    part2 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
+    process = make_ri_batch_processor(spark, str(out))
+
+    def sinks():
+        return {
+            "updates": _bag(spark.read.parquet(str(out / "updates"))),
+            "ri_keys": _bag(spark.read.parquet(str(out / "ri_keys"))),
+            "ri_state": _bag(spark.read.parquet(str(out / "ri_state" / "epoch_id=1"))),
+            "epochs": _state_epochs(out),
+        }
+
+    process(part1, 0)
+    process(part2, 1)
+    before = sinks()
+    assert before["updates"] and before["ri_state"]  # non-trivial corpus
+    assert any("retract" in r for r in before["updates"])
+    process(part2, 1)
+    assert sinks() == before
 
 
 def test_stream_job_cli_ri_mode(spark, tmp_path):

@@ -8,16 +8,15 @@ after every drop.  Two ways to satisfy it:
   corpus after each drop — per-drop cost is O(corpus) (the full scan +
   context build), regardless of how small the drop is.
 - **incremental** (stream_ri_drain): each drain scans only the new
-  drop's files; the checkpointed (defined, pending) state carries the
-  rest — per-drop cost is O(drop) plus a fixed streaming overhead.
+  drop's files; the fold's state table and key catalog carry the rest
+  — per-drop cost is O(drop) plus a fixed streaming overhead.
 
 Equality of the two answers is asserted every drop (the property
 tests/test_streaming.py proves at small scale).  The tool reports the
 measured per-doc coefficients and the corpus/drop ratio, which is what
-decides the winner: incremental costs ~c1 per NEW doc (the stateful
-Python path is heavier per doc than a scan), batch rerun costs ~c2 per
-CORPUS doc, so incremental wins once corpus/drop > c1/c2 (plus the
-fixed drain overhead amortized).  An earlier shape of this tool used
+decides the winner: incremental costs ~c1 per NEW doc, batch rerun
+costs ~c2 per CORPUS doc, so incremental wins once corpus/drop > c1/c2
+(plus the fixed drain overhead amortized).  An earlier shape of this tool used
 corpus-sized drops (ratio 2-5) and measured incremental LOSING 3x —
 kept on record in NOTES_r4 as the honest flip side: on-arrival RI is
 for small drops against big corpora, not for bulk backfills (use the
