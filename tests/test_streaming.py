@@ -425,6 +425,53 @@ def test_stream_ri_retraction_semantics(spark, tmp_path):
     )
 
 
+def test_stream_ri_sharded_equals_unsharded(spark, tmp_path):
+    """The emitted change stream must not depend on how the retraction
+    fold is partitioned: one shuffle partition, four, four with
+    broadcast joins off (the hot key's probes all shuffle into one
+    sort-merge partition), and the first drop split over four
+    microbatches.  The hot key: 60 documents all quoting the same
+    missing part, which then lands (60 retractions)."""
+    from gwv_spark.streaming import stream_ri_drain
+
+    hot = [(f"u5{i:03x}", "99:0:0:10:10:90:90:u9998@1") for i in range(60)]
+    # (shuffle partitions, broadcast threshold, files in drop 1)
+    configs = {
+        "p1": ("1", None, 1),
+        "p4": ("4", None, 1),
+        "p4smj": ("4", "-1", 1),
+        "p4split": ("4", None, 4),
+    }
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in confs}
+    results = {}
+    try:
+        for tag, (parts, threshold, n_files) in configs.items():
+            spark.conf.set(confs[0], parts)
+            spark.conf.set(confs[1], threshold or saved[confs[1]])
+            landing = tmp_path / f"landing_{tag}"
+            landing.mkdir()
+            out = str(tmp_path / f"ri_{tag}")
+            step = -(-len(hot) // n_files)
+            for i in range(n_files):
+                _write_gdata_drop(
+                    spark, landing / f"d1_{i}", hot[i * step:(i + 1) * step]
+                )
+            stream_ri_drain(spark, str(landing / "*"), out, max_files_per_trigger=1)
+            _write_gdata_drop(
+                spark, landing / "d2", [("u9998", "1:0:0:10:10:90:90")]
+            )
+            updates = stream_ri_drain(spark, str(landing / "*"), out)
+            results[tag] = _bag(updates, drop=("epoch_id",))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert all(r == results["p1"] for r in results.values())
+    n_adds = sum(1 for r in results["p4smj"] if "add" in r)
+    n_rets = sum(1 for r in results["p4smj"] if "retract" in r)
+    assert n_adds == 60 and n_rets == 60
+
+
 def test_stream_ri_matches_batch_per_drop_on_corpus(spark, corpus_df, tmp_path):
     """On the generated corpus, landed in four drops: after every drain
     the folded incremental view must equal the batch anti-join cores over
