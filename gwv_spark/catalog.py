@@ -12,15 +12,15 @@ contract:
 - ``snapshot_id(spark, ref)`` — Iceberg: the current snapshot id (the
   resume/lineage key, monotone per commit); parquet surrogate: a
   deterministic content fingerprint over (path, size, mtime) of the
-  data files — any rewrite changes it, so a resume ledger keyed by it
-  can never mix state across corpus versions;
+  data files — any rewrite changes it, so the metrics rows --resume
+  reads, keyed by it, can never mix state across corpus versions;
 - ``commit_snapshot`` / ``snapshots`` / ``load_snapshot`` — a manifest
   log under ``<table>/_snapshots`` (underscore-prefixed: invisible to
   Spark's file index) recording each snapshot id's exact data-file
   list, so any pinned snapshot can be re-read AS OF its commit even
   after later appends — Iceberg time travel on the parquet surrogate.
   Manifest files are named by the snapshot id, so committing the same
-  state twice is a no-op (idempotent, like the resume ledger).
+  state twice is a no-op (idempotent, like a --resume rerun).
 """
 
 from __future__ import annotations
@@ -60,7 +60,8 @@ def save(df: DataFrame, ref: str) -> None:
 
 
 def snapshot_id(spark: SparkSession, ref: str) -> str:
-    """The lineage key a run is pinned to (engine.Ledger, job.py)."""
+    """The lineage key a run is pinned to (job.py: its metrics rows and
+    --resume are keyed by it)."""
     if is_table_ref(ref) and has_iceberg(spark):
         row = spark.sql(
             f"SELECT snapshot_id FROM {ref}.snapshots "
@@ -70,7 +71,7 @@ def snapshot_id(spark: SparkSession, ref: str) -> str:
     if is_table_ref(ref):
         # No snapshot metadata: derive a content fingerprint from the
         # table's data files so two versions of the same table can never
-        # share a resume-ledger key (a constant 'table:<ref>' key would
+        # share a resume key (a constant 'table:<ref>' key would
         # let --resume mix state across corpus versions).
         try:
             files = sorted(spark.table(ref).inputFiles())
@@ -119,7 +120,7 @@ def _visible_parquet_files(ref: str) -> list[Path]:
     manifests and the content fingerprint MUST apply this rule — a
     crashed compaction's staged files would otherwise leak into
     manifests (double-counting the leaf on load_snapshot) and churn the
-    fingerprint that keys the resume ledger."""
+    fingerprint that keys the metrics rows --resume reads."""
     base = Path(ref)
     if not base.is_dir():
         return [base]
@@ -261,7 +262,7 @@ def compact(
 
     Compact OUTPUT tables (violations, metrics, sketch stores).
     Compacting an input corpus changes its content fingerprint, so a
-    resume ledger keyed on it will — correctly — recompute.  Prior
+    --resume keyed on it will — correctly — recompute.  Prior
     snapshot manifests referencing the replaced files fail fast on
     ``load_snapshot``, exactly like Iceberg time travel after a vacuum;
     a fresh snapshot is committed at the end."""

@@ -9,11 +9,11 @@ common subplan; narrow rules fuse into the same whole-stage codegen pass),
 wide rules (anti joins / global aggs) shuffle independently, and the
 verdict rollup is a single groupBy over bucketed doc_ids.
 
-Resumability (north rule): work is keyed by (rule_id, bucket) where
-bucket = pmod(xxhash64(doc_id), n_buckets).  A completed-partition ledger
-is written per run; a rerun anti-joins the ledger and only recomputes
-missing buckets.  On Iceberg this would key off the snapshot id; on plain
-parquet we key off the corpus fingerprint.
+Verdicts are keyed by (bucket, rule_id), bucket = pmod(xxhash64(doc_id),
+n_buckets).  Resumability lives in the job (gwv_spark.job): each run is
+pinned to the input's snapshot id (the corpus fingerprint on plain
+parquet), and a --resume rerun skips the rules that already have a
+metrics row at that snapshot.
 """
 
 from __future__ import annotations
@@ -187,22 +187,16 @@ def run_rules_concurrent(
         return dict(f.result() for f in [ex.submit(t) for t in tasks])
 
 
-def parquet_sink(base_dir: str | Path, bucket_group: int | None = None):
+def parquet_sink(base_dir: str | Path):
     """Per-rule partitioned violations sink (safe under concurrency:
-    each rule overwrites only its own rule_id=<id> subdirectory).
-
-    bucket_group, when given, nests each rule's output one hive level
-    deeper (``rule_id=<id>/bucket_group=<g>``) so the write is layout-
-    compatible with a job run under ``--bucket-groups`` (whole-corpus
-    rules use the ``-1`` sentinel there)."""
+    each rule overwrites only its own rule_id=<id> subdirectory)."""
 
     def write(rid: str, df: DataFrame) -> None:
-        # rule_id (and bucket_group) live in the directory name (hive-
-        # style partitions); partition discovery restores them on read
-        sub = Path(base_dir) / f"rule_id={rid}"
-        if bucket_group is not None:
-            sub = sub / f"bucket_group={bucket_group}"
-        df.drop("rule_id").write.mode("overwrite").parquet(str(sub))
+        # rule_id lives in the directory name (hive-style partition);
+        # partition discovery restores it on read
+        df.drop("rule_id").write.mode("overwrite").parquet(
+            str(Path(base_dir) / f"rule_id={rid}")
+        )
 
     return write
 
@@ -277,29 +271,3 @@ def write_result_json(result: dict, path: str | Path) -> None:
     """Byte-compatible with the reference sink (gwv.py:43-44)."""
     with open(path, "w") as f:
         json.dump(result, f, separators=(",", ":"), sort_keys=True)
-
-
-# ------------------------------------------------------------- resume
-
-class Ledger:
-    """Completed-(rule, bucket) ledger for checkpoint/resume."""
-
-    def __init__(self, spark: SparkSession, path: str | Path):
-        self.spark = spark
-        self.path = str(path)
-
-    def completed(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
-            return local_frame(self.spark, [], "rule_id STRING, partition_id INT")
-
-    def mark(self, verdicts: DataFrame) -> None:
-        verdicts.select("rule_id", "partition_id").write.mode("append").parquet(self.path)
-
-    def remaining_filter(self, violations: DataFrame, n_buckets: int = 256) -> DataFrame:
-        done = self.completed()
-        bucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
-        return violations.withColumn("partition_id", bucket).join(
-            done, ["rule_id", "partition_id"], "left_anti"
-        ).drop("partition_id")

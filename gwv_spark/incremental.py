@@ -5,9 +5,10 @@ At the north rule's 10^12-document design point a full validation pass
 is hours of executor time, and the steady state of a monitoring
 deployment is APPEND: each landing drop adds files to the corpus and
 mints a new snapshot.  Recomputing the whole corpus per append — what
-``--resume`` correctly does today, because a new snapshot starts a
-fresh ledger — wastes ~90% of that work on documents whose verdicts
-cannot have changed.  This module makes the append the unit of work:
+``--resume`` correctly does in the classic job, because a new snapshot
+has no metrics rows yet — wastes ~90% of that work on documents whose
+verdicts cannot have changed.  This module makes the append the unit of
+work:
 
 - **Document-local rules** (streaming.DOC_LOCAL_RULES — violations
   provably depend only on the document's own columns, the
@@ -19,7 +20,10 @@ cannot have changed.  This module makes the append the unit of work:
   delta discovered at that snapshot, their union is the full set, and
   dynamic partition overwrite of the current epoch makes a retried
   append idempotent — the same exactly-once argument as the streaming
-  sink (streaming.py epoch partitions).
+  sink (streaming.py epoch partitions).  An epoch whose snapshot the
+  runs log never committed (an append that died before its runs row)
+  is deleted before the next delta write, which covers its documents
+  again.
 
 - **Referential rules** (delquote/delvar — pure existence checks,
   reference delquote.py:22-30 / delvar.py:30-44): maintained by a
@@ -61,7 +65,6 @@ include resolve-by-append and new-dangling-by-append cases.
 
 from __future__ import annotations
 
-import json
 import time
 from pathlib import Path
 
@@ -74,6 +77,8 @@ RI_RULES = ["delquote", "delvar"]
 
 RI_STATE_DDL = "rule_id STRING, doc_id STRING, key STRING, part_full STRING"
 RI_STATE_COLS = ["rule_id", "doc_id", "key", "part_full"]
+
+RUNS_DDL = "snapshot STRING, ts DOUBLE, rules STRING"
 
 
 # ------------------------------------------------------------- RI cores
@@ -212,19 +217,26 @@ def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: list[str]
     local_frame(
         spark,
         [(snapshot, float(time.time()), ",".join(sorted(rule_ids)))],
-        "snapshot STRING, ts DOUBLE, rules STRING",
+        RUNS_DDL,
     ).coalesce(1).write.mode("append").parquet(f"{out}/runs")
 
 
 def last_run(spark: SparkSession, out: str) -> dict | None:
-    try:
-        rows = spark.read.parquet(f"{out}/runs").orderBy(F.col("ts").desc()).limit(1).collect()
-    except Exception:
-        return None
+    """The last runs row — its snapshot and rules — plus every snapshot
+    the log ever committed; None before the first run.  An unreadable
+    log raises (job.read_committed): read as empty, it would
+    re-baseline the whole output dir."""
+    from gwv_spark.job import read_committed
+
+    rows = read_committed(spark, f"{out}/runs", RUNS_DDL).collect()
     if not rows:
         return None
-    r = rows[0]
-    return {"snapshot": r["snapshot"], "rules": set(r["rules"].split(","))}
+    r = max(rows, key=lambda r: r["ts"])
+    return {
+        "snapshot": r["snapshot"],
+        "rules": set(r["rules"].split(",")),
+        "committed": {x["snapshot"] for x in rows},
+    }
 
 
 # ------------------------------------------------------------- fs helpers
@@ -236,17 +248,6 @@ def _fs(spark: SparkSession, base: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def _clear_rule_dirs(spark: SparkSession, vio_dir: str, rule_ids: list[str]) -> None:
-    """Delete every epoch of the given rules — used before writing a
-    COMPLETE set (RI fold / corpus-scoped recompute) under the current
-    epoch."""
-    fs, jvm = _fs(spark, vio_dir)
-    for rid in rule_ids:
-        p = jvm.org.apache.hadoop.fs.Path(f"{vio_dir}/rule_id={rid}")
-        if fs.exists(p):
-            fs.delete(p, True)
-
-
 def _epoch_value(snapshot: str) -> str:
     """Partition value for a snapshot epoch.  The 's' prefix keeps
     partition-column type inference on STRING: an all-digit hex
@@ -256,18 +257,25 @@ def _epoch_value(snapshot: str) -> str:
     return f"s{snapshot}"
 
 
-def _clear_epoch(spark: SparkSession, vio_dir: str, rule_ids: list[str], epoch: str) -> None:
-    """Delete exactly the current epoch of the given rules — the
-    truncate half of the delta write's truncate-and-load (a retried
-    append whose recompute finds ZERO violations must not keep the
-    stale partition, same argument as job._clear_partitions)."""
+def _clear_epochs(
+    spark: SparkSession, vio_dir: str, rule_ids: list[str], keep: set[str] = frozenset()
+) -> None:
+    """Delete every epoch of the given rules except those of the
+    snapshots in ``keep`` — by default all of them, before a COMPLETE
+    set (RI fold, corpus-scoped or full recompute) is written under the
+    current epoch."""
     fs, jvm = _fs(spark, vio_dir)
+    names = {f"epoch={_epoch_value(s)}" for s in keep}
     for rid in rule_ids:
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{vio_dir}/rule_id={rid}/epoch={_epoch_value(epoch)}"
-        )
-        if fs.exists(p):
+        p = jvm.org.apache.hadoop.fs.Path(f"{vio_dir}/rule_id={rid}")
+        if not fs.exists(p):
+            continue
+        if not keep:
             fs.delete(p, True)
+            continue
+        for st in fs.listStatus(p):
+            if st.getPath().getName() not in names:
+                fs.delete(st.getPath(), True)
 
 
 # ------------------------------------------------------------- lifecycle
@@ -282,20 +290,12 @@ def run(args, spark: SparkSession) -> None:
     Non-append changes (removed/rewritten files — e.g. a compaction)
     fail fast with instructions, never silently validate a diff that
     isn't one."""
-    from gwv_spark import catalog, engine
-    from gwv_spark.rules import ALL_RULE_IDS
+    from gwv_spark import catalog
+    from gwv_spark.job import begin_run, finish_run
     from gwv_spark.streaming import DOC_LOCAL_RULES
 
     if args.as_of:
         raise SystemExit("--incremental validates the CURRENT snapshot; drop --as-of")
-    if args.bucket_groups and args.bucket_groups > 1:
-        raise SystemExit("--incremental already commits per append; drop --bucket-groups")
-
-    rule_ids = args.rules or ALL_RULE_IDS
-    unknown = [r for r in rule_ids if r not in ALL_RULE_IDS]
-    if unknown:
-        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
-
     if catalog.is_table_ref(args.input):
         # manifest diffs and the append-only fingerprint guard ride the
         # parquet-surrogate snapshot manifests; on real Iceberg the same
@@ -310,31 +310,11 @@ def run(args, spark: SparkSession) -> None:
     snapshot = catalog.commit_snapshot(spark, args.input)
     documents = catalog.load_snapshot(spark, args.input, snapshot)
     attrs = spark.read.parquet(args.attrs) if args.attrs else None
-
-    # layout pin: an incremental dir must never be read/written by the
-    # classic modes (different partition depth + union semantics)
-    layout_dir = f"{out}/layout"
-    fs, jvm = _fs(spark, layout_dir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(layout_dir)):
-        rec = json.loads(
-            spark.read.text(layout_dir).collect()[0]["value"]
-        )
-        if not rec.get("incremental"):
-            raise SystemExit(
-                f"output dir {out} was written by a non-incremental run; "
-                "incremental and classic layouts cannot mix"
-            )
-    else:
-        local_frame(
-            spark, [(json.dumps({"bucket_groups": 1, "incremental": True}),)], "value STRING"
-        ).coalesce(1).write.mode("overwrite").text(layout_dir)
+    rule_ids, done = begin_run(spark, args, snapshot)
 
     local = [r for r in rule_ids if r in DOC_LOCAL_RULES]
     ri = [r for r in rule_ids if r in RI_RULES]
     scoped = [r for r in rule_ids if r not in local and r not in ri]
-
-    ledger = engine.Ledger(spark, f"{out}/ledger/snapshot={snapshot}")
-    done = {r["rule_id"] for r in ledger.completed().collect()} if args.resume else set()
 
     prev = last_run(spark, out)
     vio_dir = f"{out}/violations"
@@ -383,64 +363,22 @@ def run(args, spark: SparkSession) -> None:
         # triggers the full re-evaluation path above.
         dropped = sorted(prev["rules"] - set(rule_ids))
         if dropped:
-            _clear_rule_dirs(spark, vio_dir, dropped)
+            _clear_epochs(spark, vio_dir, dropped)
         covered_now, need_record = set(rule_ids), True
         evaluated = set(rule_ids)
 
-    total_secs = round(time.monotonic() - t_run, 3)
-
-    # ---- rollup (same surfaces as the classic job)
-    try:
-        violations = spark.read.parquet(vio_dir)
-    except Exception:
-        violations = engine.empty_violations(spark)
-    real = violations.where(F.col("errcode") != "__error__")
-    docs_prepared = documents.select("doc_id")
-    verdicts = engine.partition_verdicts(
-        docs_prepared, real, n_buckets=args.n_buckets, run_id=args.run_id or snapshot
-    )
-    verdicts.write.mode("overwrite").parquet(f"{out}/verdicts")
-    if args.sample:
-        from gwv_spark import triage
-
-        triage.sample_violations(real, k=args.sample).write.mode("overwrite").parquet(
-            f"{out}/violations_sample"
-        )
-
-    # metrics + ledger marks only for rules this run actually evaluated
-    # (initial/append: all requested; same-snapshot: the new rules) — a
-    # pure no-op rerun must not append duplicate metrics rows or
-    # re-mark the ledger for work it did not do
+    # metrics only for rules this run actually evaluated (initial/
+    # append: all requested; same-snapshot: the new rules) — a pure
+    # no-op rerun must not append metrics rows for work it did not do
     computed = [r for r in rule_ids if r not in done and r in evaluated]
-    if computed:
-        counts = {
-            r["rule_id"]: r["n"]
-            for r in real.where(F.col("rule_id").isin(computed))
-            .groupBy("rule_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        run_id = args.run_id or snapshot
-        local_frame(
-            spark,
-            [
-                (
-                    run_id, snapshot, rid, timings.get(rid), total_secs,
-                    timings.get(rid) is not None, int(counts.get(rid, 0)),
-                )
-                for rid in computed
-            ],
-            "run_id STRING, snapshot STRING, rule_id STRING, "
-            "wall_s DOUBLE, run_total_s DOUBLE, per_rule_timing BOOLEAN, "
-            "n_violations BIGINT",
-        ).write.mode("append").parquet(f"{out}/metrics")
-        ledger.mark(
-            local_frame(spark, [(rid, -1) for rid in computed], "rule_id STRING, partition_id INT")
-        )
+    finish_run(
+        spark, args, snapshot, documents.select("doc_id"), computed, {},
+        round(time.monotonic() - t_run, 3),
+    )
     # component timings (r4 verdict #5's decomposition, incremental
     # form): rule/fold work separated from the per-run commit machinery
     # (snapshot fingerprint + manifest, layout, verdicts rollup,
-    # metrics, ledger).  At test SF the machinery dominates an append's
+    # metrics).  At test SF the machinery dominates an append's
     # wall time; at the design point it is the amortized constant and
     # the delta work is the bill — recording both per run keeps the
     # two from masquerading as each other.
@@ -513,7 +451,7 @@ def _initial_run(
         # the same-snapshot branch), which may carry stale epochs from
         # before its chain broke — the full evaluation below is the
         # complete set
-        _clear_rule_dirs(spark, vio_dir, todo)
+        _clear_epochs(spark, vio_dir, todo)
         t0 = time.monotonic()
         _write_epoch(engine.run_rules(ctx, todo), vio_dir, snapshot)
         timings["__rules__"] = round(time.monotonic() - t0, 3)
@@ -575,7 +513,17 @@ def _append_run(
     #   (RI never run, or skipped across an append) -> initialize
     #   fresh from the full corpus.
     fresh_local = [r for r in local if r not in prev["rules"] and r not in done]
+    # An epoch of a snapshot the runs log never committed was written by
+    # an append that died before record_run; this append's delta covers
+    # its documents again, so it goes.  A rule a --resume skips keeps the
+    # current epoch (it wrote it before the crash); a rule recomputed
+    # here loses that too — the truncate half of truncate-and-load, as a
+    # recompute that finds ZERO violations overwrites no partition.
+    _clear_epochs(
+        spark, vio_dir, [r for r in local if r in done], prev["committed"] | {snapshot}
+    )
     local = [r for r in local if r in prev["rules"] and r not in done]
+    _clear_epochs(spark, vio_dir, local, prev["committed"])
     ri = [r for r in ri if r not in done]
     state_fs, state_jvm = _fs(spark, out)
     state_current = state_fs.exists(
@@ -601,7 +549,6 @@ def _append_run(
                 spark, docs_delta, attrs=attrs, cache=False,
                 ignore_error=args.ignore_error, resolve_entity=False,
             )
-            _clear_epoch(spark, vio_dir, local, snapshot)
             _write_epoch(engine.run_rules(ctx_delta, local), vio_dir, snapshot)
             timings["__local_delta__"] = round(time.monotonic() - t0, 3)
         if ri:
@@ -617,7 +564,7 @@ def _append_run(
             state = spark.read.parquet(f"{out}/ri_state/epoch={snapshot}")
             # the fold result is the COMPLETE set: it replaces every
             # prior epoch of the RI rules
-            _clear_rule_dirs(spark, vio_dir, ri)
+            _clear_epochs(spark, vio_dir, ri)
             _write_epoch(
                 shape_ri_state(state).where(F.col("rule_id").isin(ri)),
                 vio_dir,
@@ -636,7 +583,7 @@ def _append_run(
             spark, documents, attrs=attrs, cache=not args.no_cache,
             ignore_error=args.ignore_error, resolve_entity=True,
         )
-        _clear_rule_dirs(spark, vio_dir, scoped)
+        _clear_epochs(spark, vio_dir, scoped)
         _write_epoch(engine.run_rules(ctx, scoped), vio_dir, snapshot)
         timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
         if not args.no_cache:

@@ -2,51 +2,34 @@
 gwv_spark/job.py --input <docs> --output <dir> [...]``.
 
 Batch lifecycle (north rule):
-1. read the documents table (parquet path or Iceberg table name);
+1. read the documents table (parquet path or Iceberg table name), pinned
+   to its snapshot — or, with --as-of, to an earlier committed one;
 2. build the shared parsed context (cache unless --no-cache);
 3. write each selected rule as its own Spark job, several in flight at
    once (engine.run_rules_concurrent), each overwriting its own
    ``<output>/violations/rule_id=<id>/`` directory — driver-side
-   planning of one rule overlaps executor work of the others, and
-   ``metrics.wall_s`` records each rule's write time;
-4. roll up per-partition pass/fail verdicts + metrics to
-   ``<output>/verdicts/``;
-5. mark completed (rule, bucket) pairs in the resume ledger at
-   ``<output>/ledger/`` — a rerun with --resume skips buckets already
-   marked complete (per-partition lineage; on Iceberg the ledger is
-   keyed by snapshot id instead of the corpus fingerprint).
+   planning of one rule overlaps executor work of the others;
+4. roll up per-partition pass/fail verdicts to ``<output>/verdicts/``
+   and append one row per written rule to ``<output>/metrics/`` (its
+   write time and its violation count, keyed by run_id + snapshot).
 
-Per-partition lineage (``--bucket-groups G``, G > 1): the DOCUMENT-LOCAL
-rules (gwv_spark.streaming.DOC_LOCAL_RULES — violations provably depend
-only on the document's own columns) are evaluated in G independent
-corpus slices, each a round-robin group of the snapshot-pinned sorted
-input FILE list (file groups, not hash-of-doc_id groups: a hash
-predicate can't prune the scan, so hash slices would read the corpus G
-times over; file slices together scan it exactly once).  Each slice is
-one action whose committed output is immediately ledger-marked
-``(rule_id, g)``, so a crash loses at most one slice of work instead of
-the whole rule — at the 10^12-doc design point a full doc-local pass is
-hours of executor time and restart-from-zero is not acceptable.  A
-retried / resumed slice is idempotent for the same reason the streaming
-epochs are: rule plans are deterministic over the snapshot-pinned input
-and dynamic partition overwrite replaces exactly the
-``rule_id=<id>/bucket_group=<g>`` partitions the slice recomputes.
-Corpus-scoped rules (referential, alias-dereferencing) are NOT sliceable
-by construction — their violations read other documents — so they run
-full-corpus and are marked with the ``bucket_group = -1`` sentinel.
+The metrics row is the run's completion record: a rerun with --resume
+skips every rule that has a row at the pinned snapshot (on Iceberg the
+snapshot id, on plain parquet the corpus fingerprint), so state never
+mixes across corpus versions.
 
-Layout note: grouped mode hive-partitions violations by
-``(rule_id, bucket_group)``; the default mode keeps the flat
-``rule_id=<id>/`` layout.  One output directory is bound to the layout
-of its first run — don't mix modes in one output dir (Spark's partition
-discovery fails loudly on conflicting depths, never silently).
+``--incremental`` runs the append lifecycle of gwv_spark.incremental
+instead.  Both lifecycles share one prologue (:func:`begin_run`: rule
+ids, layout pin, resume set) and one commit tail (:func:`finish_run`:
+verdicts, sample, metrics).  An output directory is bound to the
+lifecycle of its first run by its ``layout`` record: the two partition
+violations differently, and mixing them would double-count.
 
 The driver never collects violation rows; everything is executor-side
 writes.  The small tables the driver builds itself (layout record,
-ledger marks, metrics rows) are JVM-held local relations
-(session.local_frame), so no Python worker starts for them.  Rule
-subset selection mirrors the reference CLI's ``-n`` (gwv.py:33,
-validator.py:32-37).
+metrics rows) are JVM-held local relations (session.local_frame), so no
+Python worker starts for them.  Rule subset selection mirrors the
+reference CLI's ``-n`` (gwv.py:33, validator.py:32-37).
 """
 
 from __future__ import annotations
@@ -60,35 +43,138 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+METRICS_DDL = (
+    "run_id STRING, snapshot STRING, rule_id STRING, "
+    "wall_s DOUBLE, run_total_s DOUBLE, per_rule_timing BOOLEAN, "
+    "n_violations BIGINT"
+)
 
-def _clear_partitions(spark, base: str, relpaths) -> None:
-    """Drop ``<base>/<rel>`` for every partition about to be recomputed.
 
-    Dynamic partition overwrite only replaces partitions that receive
-    rows, so a rule whose recomputation yields ZERO violations (the goal
-    state) would otherwise leave its stale partition from a previous run
-    in place — and the read-back would report violations that no longer
-    exist.  Explicitly deleting the recomputed partitions up front makes
-    the write's semantics truncate-and-load for exactly the recomputed
-    (rule, bucket-group) set while resumed partitions stay untouched.
-    Hadoop FS API, so it works on any storage backend spark can write
-    to."""
+def _committed(spark, path: str) -> bool:
+    """Whether a write ever committed a file under ``path``: one not
+    hidden (``_``/``.``) by its own name or a parent directory's, as
+    Spark's file index sees it.  A clean run's violations dir and a
+    first write that died hold none."""
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(base).getFileSystem(conf)
-    for rel in relpaths:
-        p = path_cls(f"{base}/{rel}")
-        if fs.exists(p):
-            fs.delete(p, True)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return False
+    root = len(fs.makeQualified(p).toString().rstrip("/"))
+    files = fs.listFiles(p, True)
+    while files.hasNext():
+        rel = files.next().getPath().toString()[root:]
+        if not any(part.startswith(("_", ".")) for part in rel.split("/") if part):
+            return True
+    return False
+
+
+def read_committed(spark, path: str, ddl: str):
+    """The parquet table at ``path``, or an empty ``ddl`` frame when
+    nothing was committed there (:func:`_committed`).  Any other read
+    error raises: an unreadable table must never read as empty — an
+    unreadable violations dir would roll up as "all pass", an unreadable
+    runs log would re-baseline the output dir."""
+    from gwv_spark.session import local_frame
+
+    if not _committed(spark, path):
+        return local_frame(spark, [], ddl)
+    return spark.read.parquet(path)
+
+
+def begin_run(spark, args, snapshot: str) -> tuple[list[str], set[str]]:
+    """The prologue both batch lifecycles share.  Returns the requested
+    rule ids and, under --resume, the ones already done at ``snapshot``
+    (they have a metrics row there).
+
+    Fails fast on an unknown rule id — a typo'd --rules entry must not
+    get a fabricated metrics row — and on an output dir whose layout
+    record names the other lifecycle; a fresh dir is pinned to this
+    one."""
+    from gwv_spark.rules import ALL_RULE_IDS
+    from gwv_spark.session import local_frame
+
+    rule_ids = args.rules or ALL_RULE_IDS
+    unknown = [r for r in rule_ids if r not in ALL_RULE_IDS]
+    if unknown:
+        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
+
+    out = args.output.rstrip("/")
+    layout = f"{out}/layout"
+    if _committed(spark, layout):
+        prior = bool(spark.read.json(layout).collect()[0].asDict().get("incremental"))
+        if prior != args.incremental:
+            raise SystemExit(
+                f"output dir {out} was written by "
+                f"{'an incremental' if prior else 'a non-incremental'} run; "
+                "incremental and classic layouts cannot mix (epoch-"
+                "partitioned violations would double-count) — use a fresh "
+                "output dir"
+            )
+    else:
+        local_frame(
+            spark, [(bool(args.incremental),)], "incremental BOOLEAN"
+        ).coalesce(1).write.mode("overwrite").json(layout)
+
+    if not args.resume:
+        return rule_ids, set()
+    metrics = read_committed(spark, f"{out}/metrics", METRICS_DDL)
+    done = metrics.where(F.col("snapshot") == snapshot).select("rule_id").distinct()
+    return rule_ids, {r["rule_id"] for r in done.collect()}
+
+
+def finish_run(
+    spark, args, snapshot: str, docs, computed: list[str],
+    rule_secs: dict[str, float], total_secs: float,
+) -> None:
+    """The commit tail both batch lifecycles share: per-partition
+    verdicts of ``docs`` against the committed violations, the --sample
+    triage table, then one metrics row per rule in ``computed`` — its
+    write time from ``rule_secs`` (NULL for a rule not timed alone), the
+    run total in its own column (rule writes overlap, so summing wall_s
+    across rows overcounts the run), and its violation count read back
+    from the committed output.  Metrics are appended last: a row marks
+    its rule done at ``snapshot`` for --resume."""
+    from gwv_spark import engine
+    from gwv_spark.rules import VIOLATIONS_DDL
+    from gwv_spark.session import local_frame
+
+    out = args.output.rstrip("/")
+    run_id = args.run_id or snapshot
+    # --ignore-error quarantine rows are audit data, not violations: the
+    # reference's --ignore-error (validator.py:46-55) records nothing for
+    # a crashed glyph, so counting them would flip bucket verdicts
+    real = read_committed(spark, f"{out}/violations", VIOLATIONS_DDL).where(
+        F.col("errcode") != "__error__"
+    )
+    engine.partition_verdicts(
+        docs, real, n_buckets=args.n_buckets, run_id=run_id
+    ).write.mode("overwrite").parquet(f"{out}/verdicts")
+    if args.sample:
+        from gwv_spark import triage
+
+        triage.sample_violations(real, k=args.sample).write.mode("overwrite").parquet(
+            f"{out}/violations_sample"
+        )
+    if not computed:
+        return
+    counts = {
+        r["rule_id"]: r["n"]
+        for r in real.where(F.col("rule_id").isin(computed))
+        .groupBy("rule_id")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    rows = [
+        (run_id, snapshot, rid, rule_secs.get(rid), total_secs, rid in rule_secs,
+         int(counts.get(rid, 0)))
+        for rid in computed
+    ]
+    local_frame(spark, rows, METRICS_DDL).write.mode("append").parquet(f"{out}/metrics")
 
 
 def main(argv: list[str] | None = None, spark=None) -> None:
     from pyspark.sql import SparkSession
-
-    from gwv_spark import engine
-    from gwv_spark.rules import ALL_RULE_IDS
-    from gwv_spark.session import local_frame
 
     p = argparse.ArgumentParser(description="gwv_spark validation job")
     p.add_argument("--input", required=True, help="documents parquet path or table")
@@ -98,24 +184,19 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     p.add_argument("--n-buckets", type=int, default=256)
     p.add_argument("--run-id", default=None, help="default: the input snapshot id")
     p.add_argument(
-        "--bucket-groups",
-        type=int,
-        default=1,
-        help="evaluate document-local rules in this many independent "
-        "corpus slices, ledger-marking each slice as it commits — a "
-        "crash/resume loses at most one slice of doc-local work instead "
-        "of a whole rule (see module docstring).  1 = whole-corpus "
-        "actions only (default).",
+        "--resume",
+        action="store_true",
+        help="skip rules with a metrics row at the input snapshot",
     )
-    p.add_argument("--resume", action="store_true", help="skip completed (rule,bucket)s")
     p.add_argument(
         "--as-of",
         default=None,
         metavar="SNAPSHOT",
         help="validate the input AS OF this committed snapshot id "
         "(catalog.load_snapshot): the run reads exactly that snapshot's "
-        "file manifest even after later appends, and is pinned/ledgered "
-        "under that snapshot — a historical run reproduces bit-identically.",
+        "file manifest even after later appends, and its metrics rows "
+        "are keyed by that snapshot — a historical run reproduces "
+        "bit-identically.",
     )
     p.add_argument("--no-cache", action="store_true")
     p.add_argument(
@@ -152,268 +233,65 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     if owns_session:
         spark = SparkSession.builder.appName("gwv_spark-validate").getOrCreate()
     # Resume correctness REQUIRES dynamic partition overwrite: with the
-    # default 'static' mode, mode('overwrite').partitionBy('rule_id')
-    # would delete the whole violations directory — including partitions
-    # of rules skipped by --resume — while the ledger still marks them
-    # complete.  Set it explicitly so an externally configured cluster
+    # default 'static' mode, an overwrite partitioned by rule_id would
+    # delete the whole violations directory — including partitions of
+    # rules skipped by --resume — while their metrics rows still mark
+    # them done.  Set it explicitly so an externally configured cluster
     # session can't silently lose resumed rules' violations.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        if args.incremental:
+            from gwv_spark import incremental
 
-    if args.incremental:
-        from gwv_spark import incremental
-
-        try:
             incremental.run(args, spark)
-        finally:
-            if owns_session:
-                spark.stop()
-        return
+        else:
+            run(args, spark)
+    finally:
+        if owns_session:
+            spark.stop()
 
-    from gwv_spark import catalog
+
+def run(args, spark) -> None:
+    """The classic lifecycle (module docstring), dispatched from main."""
+    from gwv_spark import catalog, engine
 
     if args.as_of:
-        # historical run: read exactly the named snapshot's manifest and
-        # pin the ledger to it — identical inputs, identical outputs
+        # historical run: read exactly the named snapshot's manifest —
+        # identical inputs, identical outputs
         documents = catalog.load_snapshot(spark, args.input, args.as_of)
         snapshot = args.as_of
     else:
         documents = catalog.load(spark, args.input)
-        # the run is pinned to the input's snapshot: the resume ledger
-        # lives under it, so state can never mix across corpus versions
-        # (Iceberg snapshot id, or a content fingerprint on plain
-        # parquet).  The pin also COMMITS a manifest of the snapshot's
-        # exact file list, so this run's input stays re-readable as-of
-        # (catalog.load_snapshot / --as-of) even after later appends.
+        # the pin also COMMITS a manifest of the snapshot's exact file
+        # list, so this run's input stays re-readable as-of
+        # (catalog.load_snapshot / --as-of) even after later appends
         snapshot = catalog.commit_snapshot(spark, args.input)
     attrs = spark.read.parquet(args.attrs) if args.attrs else None
+    rule_ids, done = begin_run(spark, args, snapshot)
+    todo = [r for r in rule_ids if r not in done]
 
-    rule_ids = args.rules or ALL_RULE_IDS
-    # fail fast on unknown rule ids: a typo'd --rules entry must not get
-    # a fabricated metrics row and a rule-complete ledger mark
-    unknown = [r for r in rule_ids if r not in ALL_RULE_IDS]
-    if unknown:
-        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
-
-    groups = max(1, args.bucket_groups)
-    if groups > 1:
-        from gwv_spark.streaming import DOC_LOCAL_RULES
-
-        local = [r for r in rule_ids if r in DOC_LOCAL_RULES]
-        scoped = [r for r in rule_ids if r not in local]
-    else:
-        local, scoped = [], list(rule_ids)
-
-    out = args.output.rstrip("/")
-    # an output dir is bound to the slice key of its first run: resuming
-    # with a different --bucket-groups would re-slice under a different
-    # modulus while old slices' partitions survive — duplicate
-    # violations.  Fail fast instead.
-    layout_dir = f"{out}/layout"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(layout_dir)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        row = spark.read.json(layout_dir).collect()[0]
-        if "incremental" in row.asDict() and row["incremental"]:
-            raise SystemExit(
-                f"output dir {out} holds an --incremental layout "
-                "(epoch-partitioned violations + RI state); classic runs "
-                "would double-count its epochs — use --incremental or a "
-                "fresh output dir"
-            )
-        prior = int(row["bucket_groups"])
-        if prior != groups:
-            raise SystemExit(
-                f"output dir {out} was written with --bucket-groups {prior}; "
-                f"got {groups} — mixed slice keys would duplicate violations"
-            )
-    else:
-        local_frame(spark, [(groups,)], "bucket_groups INT").coalesce(1).write.json(layout_dir)
-    ledger = engine.Ledger(spark, f"{out}/ledger/snapshot={snapshot}")
-
-    done_pairs: set[tuple[str, int]] = set()
-    if args.resume:
-        done_pairs = {
-            (r["rule_id"], r["partition_id"]) for r in ledger.completed().collect()
-        }
-        scoped = [r for r in scoped if (r, -1) not in done_pairs]
-    # per-slice work list: (rule, g) pairs not yet committed.  A rule
-    # carrying the -1 sentinel (completed whole-corpus) skips all slices.
-    group_todo = {
-        g: [
-            r
-            for r in local
-            if (r, g) not in done_pairs and (r, -1) not in done_pairs
-        ]
-        for g in range(groups)
-    }
-    group_todo = {g: rs for g, rs in group_todo.items() if rs}
-    recomputed = scoped + sorted({r for rs in group_todo.values() for r in rs})
-
-    # the full context (with the alias-dereference corpus self join) is
-    # only needed by the corpus-scoped rules; a doc-local-only run gets a
-    # light context purely for the verdict rollup's doc counts
+    # a run with every rule resumed builds a light context purely for
+    # the verdict rollup's doc counts
     ctx = engine.make_context(
         spark,
         documents,
         attrs=attrs,
-        cache=(not args.no_cache) and bool(scoped),
+        cache=(not args.no_cache) and bool(todo),
         ignore_error=args.ignore_error,
-        resolve_entity=bool(scoped),
+        resolve_entity=bool(todo),
     )
-
-    vio_dir = f"{out}/violations"
-    rule_secs: dict[str, float] = {}
     t_run = time.monotonic()
-
-    if scoped:
-        # one job per rule, each overwriting exactly its own directory
-        # (so a rule that is now clean leaves no stale partition)
-        rule_secs = engine.run_rules_concurrent(
-            ctx,
-            scoped,
-            sink=engine.parquet_sink(vio_dir, bucket_group=-1 if groups > 1 else None),
-        )
-
-    if group_todo:
-        # slices are FILE groups, not hash-of-doc_id groups: a hash
-        # predicate cannot prune the scan, so G hash slices would read
-        # the full corpus G times — a non-starter at the 10^12-doc
-        # design point.  Round-robin over the snapshot-pinned sorted
-        # file list gives disjoint slices that together scan the corpus
-        # exactly once, each slice reading only its own files.  The
-        # assignment is deterministic per snapshot (resume is pinned to
-        # it), so a retried slice recomputes exactly the same docs.
-        slice_files = sorted(documents.inputFiles())
-    slice_rows: list[tuple[int, int, float]] = []  # (slice, n_files, wall_s)
-    for g in sorted(group_todo):
-        rids_g = group_todo[g]
-        files_g = slice_files[g::groups]
-        t_slice = time.monotonic()
-        if files_g:
-            _clear_partitions(
-                spark, vio_dir, [f"rule_id={r}/bucket_group={g}" for r in rids_g]
-            )
-            docs_g = spark.read.schema(documents.schema).parquet(*files_g)
-            # doc-local rules never read entity columns (guarded by
-            # tests/test_streaming.py split-invariance), so the slice
-            # context skips the dereference join — each slice plan is
-            # shuffle-free
-            ctx_g = engine.make_context(
-                spark,
-                docs_g,
-                attrs=attrs,
-                cache=not args.no_cache,
-                ignore_error=args.ignore_error,
-                resolve_entity=False,
-            )
-            engine.run_rules(ctx_g, rids_g).withColumn(
-                "bucket_group", F.lit(g)
-            ).write.mode("overwrite").partitionBy("rule_id", "bucket_group").parquet(
-                vio_dir
-            )
-            if not args.no_cache:
-                ctx_g.docs.unpersist()
-                ctx_g.spans.unpersist()
-        # (an empty file group — more groups than files — has nothing to
-        # validate and is marked complete directly)
-        # mark AFTER the slice's write committed: a crash between write
-        # and mark just recomputes the slice (idempotent, see docstring)
-        ledger.mark(
-            local_frame(spark, [(r, g) for r in rids_g], "rule_id STRING, partition_id INT")
-        )
-        slice_rows.append((g, len(files_g), round(time.monotonic() - t_slice, 3)))
-
-    total_secs = round(time.monotonic() - t_run, 3)
-
-    try:
-        violations = spark.read.parquet(vio_dir)
-    except Exception:
-        # a fully clean corpus writes no partition at all — schema
-        # inference has nothing to read; the run is simply violation-free
-        violations = engine.empty_violations(spark)
-    # --ignore-error quarantine rows are audit data, not violations: the
-    # reference's --ignore-error (validator.py:46-55) records nothing for
-    # a crashed glyph, so counting them would flip bucket verdicts
-    verdicts = engine.partition_verdicts(
-        ctx.docs, violations.where(F.col("errcode") != "__error__"),
-        n_buckets=args.n_buckets,
-        run_id=args.run_id or snapshot,
+    # one job per rule, each overwriting exactly its own directory (so a
+    # rule that is now clean leaves no stale partition)
+    rule_secs = engine.run_rules_concurrent(
+        ctx, todo, sink=engine.parquet_sink(f"{args.output.rstrip('/')}/violations")
     )
-    verdicts.write.mode("overwrite").parquet(f"{out}/verdicts")
-    if args.sample:
-        from gwv_spark import triage
-
-        triage.sample_violations(
-            violations.where(F.col("errcode") != "__error__"), k=args.sample
-        ).write.mode("overwrite").parquet(f"{out}/violations_sample")
-    if recomputed:
-        # run-metrics table (north rule: checkpoint + lineage + METRICS):
-        # one row per recomputed rule — wall seconds of the rule's own
-        # write (NULL for a rule written only in --bucket-groups slices)
-        # and the violation count read back from the committed output.
-        # Appended, keyed by run_id + snapshot, so reruns/resumes
-        # accumulate an audit trail.
-        counts = {
-            r["rule_id"]: r["n"]
-            for r in violations.where(F.col("rule_id").isin(recomputed))
-            .groupBy("rule_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        run_id = args.run_id or snapshot
-        # the run total goes in its own column: rule writes overlap, so
-        # summing wall_s across rows overcounts the run
-        metrics = local_frame(
-            spark,
-            [
-                (
-                    run_id,
-                    snapshot,
-                    rid,
-                    rule_secs.get(rid),
-                    total_secs,
-                    rule_secs.get(rid) is not None,
-                    int(counts.get(rid, 0)),
-                )
-                for rid in recomputed
-            ],
-            "run_id STRING, snapshot STRING, rule_id STRING, "
-            "wall_s DOUBLE, run_total_s DOUBLE, per_rule_timing BOOLEAN, "
-            "n_violations BIGINT",
-        )
-        metrics.write.mode("append").parquet(f"{out}/metrics")
-    if slice_rows:
-        # per-slice metrics (north rule: per-PARTITION lineage + metrics):
-        # one row per committed slice — wall seconds of the slice's fused
-        # action, its file count, and the violation count read back from
-        # the committed slice partitions.  Appended like the rule metrics.
-        run_id = args.run_id or snapshot
-        slice_counts = {
-            r["bucket_group"]: r["n"]
-            for r in violations.where(F.col("bucket_group") >= 0)
-            .groupBy("bucket_group")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        local_frame(
-            spark,
-            [
-                (run_id, snapshot, g, n_files, wall, int(slice_counts.get(g, 0)))
-                for (g, n_files, wall) in slice_rows
-            ],
-            "run_id STRING, snapshot STRING, bucket_group INT, "
-            "n_files INT, wall_s DOUBLE, n_violations BIGINT",
-        ).write.mode("append").parquet(f"{out}/slice_metrics")
-    if scoped:
-        # whole-corpus rules carry the -1 sentinel; slice marks were
-        # already written as each slice committed
-        ledger.mark(
-            local_frame(spark, [(rid, -1) for rid in scoped], "rule_id STRING, partition_id INT")
-        )
+    finish_run(
+        spark, args, snapshot, ctx.docs, todo, rule_secs,
+        round(time.monotonic() - t_run, 3),
+    )
     ctx.docs.unpersist()
     ctx.spans.unpersist()
-    if owns_session:
-        spark.stop()
 
 
 if __name__ == "__main__":

@@ -42,9 +42,9 @@ def get_spark(
 ) -> SparkSession:
     """master overrides the default local[cpus] — e.g.
     'local-cluster[4,4,16384]' spawns 4 REAL executor JVMs with their own
-    heaps and netty shuffle, the shape used for the N-vs-4N-executor
-    scaling evidence (tools/scaling_bench.py).  cpus still sizes
-    shuffle_partitions when not given explicitly."""
+    heaps and netty shuffle, the shape of the N-vs-4N-executor scaling
+    records (BENCH_scaling_r3.json, BENCH_scaling_r4.json).  cpus still
+    sizes shuffle_partitions when not given explicitly."""
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

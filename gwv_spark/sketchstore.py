@@ -432,11 +432,10 @@ def update_store(
 
     Large backlogs (the 10^6-file bootstrap) are committed in chunks of
     ``files_per_batch``, each its own batch partition — a crash resumes
-    at the first unsketched chunk instead of redoing the whole scan, the
-    same slice-lineage shape as job.py --bucket-groups.  (The file-list
-    diff itself is driver-side: at 10^6 files that is ~100 MB of path
-    strings — acceptable for a manifest-scale structure, the same order
-    as an Iceberg manifest list.)"""
+    at the first unsketched chunk instead of redoing the whole scan.
+    (The file-list diff itself is driver-side: at 10^6 files that is
+    ~100 MB of path strings — acceptable for a manifest-scale structure,
+    the same order as an Iceberg manifest list.)"""
     current = sorted(
         _norm_file(f) for f in spark.read.parquet(input_path).inputFiles()
     )

@@ -1,7 +1,7 @@
 """Snapshot manifest log: time travel on the parquet surrogate.
 
 The north rule's input is an Iceberg table; the sandbox has no Iceberg
-jar, so catalog.py fingerprints file state for the resume ledger.  The
+jar, so catalog.py fingerprints file state to key runs and --resume.  The
 manifest log closes the remaining semantic gap: a committed snapshot's
 exact file list is recorded, so any pinned run's input can be re-read
 AS OF that snapshot after later appends — and the validation job
@@ -79,9 +79,9 @@ def test_job_pin_commits_a_manifest(spark, tmp_path):
     )
     recs = catalog.snapshots(docs)
     assert len(recs) == 1
-    # the manifest's snapshot id is the one the ledger was keyed by
-    ledger_dirs = list((__import__("pathlib").Path(out) / "ledger").glob("snapshot=*"))
-    assert ledger_dirs and ledger_dirs[0].name.split("=", 1)[1] == recs[0]["snapshot_id"]
+    # the manifest's snapshot id is the one the metrics rows are keyed by
+    metrics = spark.read.parquet(f"{out}/metrics").collect()
+    assert metrics and {r["snapshot"] for r in metrics} == {recs[0]["snapshot_id"]}
     # and the pinned input re-reads exactly
     assert catalog.load_snapshot(spark, docs, recs[0]["snapshot_id"]).count() == 200
 
@@ -122,8 +122,10 @@ def test_job_as_of_reproduces_historical_run(spark, tmp_path):
             .select("rule_id", "doc_id", "detail").collect())
     )
     assert v1 == v2 and v1
-    # the as-of run was ledgered under the historical snapshot
-    assert (__import__("pathlib").Path(out2) / "ledger" / f"snapshot={s1}").exists()
+    # the as-of run's metrics rows are keyed by the historical snapshot
+    metrics = spark.read.parquet(f"{out2}/metrics").collect()
+    assert sorted(r["rule_id"] for r in metrics) == ["numexp", "order"]
+    assert {r["snapshot"] for r in metrics} == {s1}
     # and a live run over the appended table sees a different snapshot
     out3 = str(tmp_path / "out3")
     jobmod.main(["--input", docs, "--output", out3] + argv, spark=spark)

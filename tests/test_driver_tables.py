@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-from gwv_spark import engine
+from gwv_spark import engine, job
 from gwv_spark.corpus import ensure_corpus
 from gwv_spark.rules import ALL_RULE_IDS, load_all_rules
 from gwv_spark.session import default_driver_mem, local_frame
@@ -58,7 +58,7 @@ def test_job_path_tables_have_no_python_rdd(spark, tmp_path):
     load_all_rules()
     frames = {rid: ctx.plan(rid) for rid in ALL_RULE_IDS}
     frames["empty_violations"] = engine.empty_violations(spark)
-    frames["ledger"] = engine.Ledger(spark, str(tmp_path / "absent")).completed()
+    frames["metrics"] = job.read_committed(spark, str(tmp_path / "absent"), job.METRICS_DDL)
     frames["j.cjksrc"] = j._cjksrc_df(ctx)
     frames["j.no_use"], frames["j.no_apply"] = j._setup_dims(ctx)
     frames["mj.key2idx"], frames["mj.idx2gw"] = mj._mj_dfs(ctx)

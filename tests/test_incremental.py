@@ -299,3 +299,79 @@ def test_skipped_rule_chain_break_recomputes(spark, tmp_path):
         spark, ref2 / "violations"
     )
 
+
+
+@pytest.mark.parametrize("rerun", ["resume_same_snapshot", "after_another_append"])
+def test_crashed_append_rerun_equals_classic(spark, tmp_path, monkeypatch, rerun):
+    """An append that dies after its writes but before its runs row
+    (record_run) leaves epochs of a snapshot the runs log never
+    committed.  The rerun — a --resume at the same snapshot, or a plain
+    run after another file landed — must count no document twice and
+    lose none: its violations equal a classic run's as multisets
+    (exceptAll both ways)."""
+    from gwv_spark import incremental
+
+    full = ensure_corpus(tmp_path / "gen", 360)
+    table = pq.read_table(full / "documents.parquet")
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(table.slice(0, 300), corpus / "part-000.parquet")
+    out = tmp_path / "inc"
+    args = ["--input", str(corpus), "--output", str(out),
+            "--rules", *RULES, "--n-buckets", "16", "--incremental"]
+    job.main(args, spark=spark)
+
+    def epochs():
+        return {p.name for p in out.glob("violations/rule_id=*/epoch=*")}
+
+    baseline = epochs()
+    pq.write_table(table.slice(300, 30), corpus / "part-001.parquet")
+
+    def crash(*a, **k):
+        raise RuntimeError("died before record_run")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "record_run", crash)
+        with pytest.raises(RuntimeError, match="record_run"):
+            job.main(args, spark=spark)
+    # the crashed append committed a delta epoch the runs log never saw
+    assert len(epochs() - baseline) == 1
+
+    if rerun == "resume_same_snapshot":
+        job.main(args + ["--resume"], spark=spark)
+        # the resume skipped every rule: one metrics row per rule at the
+        # crashed snapshot, written by the crashed run
+        metrics = spark.read.parquet(str(out / "metrics"))
+        assert metrics.groupBy("snapshot", "rule_id").count().where("count > 1").count() == 0
+    else:
+        pq.write_table(table.slice(330, 30), corpus / "part-002.parquet")
+        job.main(args, spark=spark)
+
+    classic = tmp_path / "classic"
+    job.main(["--input", str(corpus), "--output", str(classic),
+              "--rules", *RULES, "--n-buckets", "16"], spark=spark)
+    cols = ["rule_id", "errcode", "doc_id", "detail", "sortkey"]
+    got = spark.read.parquet(str(out / "violations")).select(*cols)
+    want = spark.read.parquet(str(classic / "violations")).select(*cols)
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_unreadable_runs_log_raises(spark, tmp_path):
+    """An unreadable runs log fails the run.  Read as "no prior run" it
+    would re-baseline the output dir, clearing and rewriting every
+    rule; the violations must be left as they were."""
+    full = ensure_corpus(tmp_path / "gen", 120)
+    out = tmp_path / "inc"
+    args = ["--input", str(full / "documents.parquet"), "--output", str(out),
+            "--rules", "numexp", "order", "--incremental"]
+    job.main(args, spark=spark)
+    (out / "runs" / "part-0.parquet").write_bytes(b"not a parquet file")
+
+    def tree():
+        return {str(p): p.stat().st_mtime_ns for p in (out / "violations").rglob("*")}
+
+    before = tree()
+    assert any(p.endswith(".parquet") for p in before)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        job.main(args, spark=spark)
+    assert tree() == before

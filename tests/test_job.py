@@ -1,5 +1,6 @@
-"""End-to-end job entrypoint: violations + verdicts + ledger on disk,
-and --resume skipping completed rules (north-rule lifecycle)."""
+"""End-to-end job entrypoint: violations + verdicts + metrics on disk,
+and --resume skipping the rules with a metrics row at the pinned
+snapshot (north-rule lifecycle)."""
 
 from __future__ import annotations
 
@@ -30,10 +31,6 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
     assert verdicts.where("pass = false").count() > 0
     assert verdicts.select("partition_id").distinct().count() <= 16
 
-    ledger = spark.read.parquet(str(out / "ledger"))
-    marked = {r["rule_id"] for r in ledger.where("partition_id = -1").collect()}
-    assert marked == {"numexp", "delquote", "order"}
-
     # run-metrics table: one row per recomputed rule, counts match the
     # committed violations, wall time recorded
     metrics = {r["rule_id"]: r for r in spark.read.parquet(str(out / "metrics")).collect()}
@@ -50,17 +47,23 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
         assert row["wall_s"] > 0 and row["per_rule_timing"]
         assert row["run_total_s"] >= row["wall_s"]
 
-    # resume: all three rules complete -> nothing re-marked, no new
-    # metrics rows appended
+    # resume: all three rules have a metrics row at this snapshot ->
+    # no rule rewritten, no new metrics rows appended
+    def vio_files():
+        return {
+            str(f): f.stat().st_mtime_ns
+            for f in (out / "violations").rglob("*.parquet")
+        }
+
+    before = vio_files()
     job.main(args + ["--resume"], spark=spark)
-    ledger2 = spark.read.parquet(str(out / "ledger"))
-    assert ledger2.where("partition_id = -1").count() == 3
+    assert vio_files() == before
     assert spark.read.parquet(str(out / "metrics")).count() == 3
 
 
 def test_job_rejects_unknown_rule_ids(spark, tmp_path):
     """A typo'd --rules entry must fail fast, not get a fabricated
-    metrics row and a rule-complete ledger mark."""
+    metrics row (which would also mark it done for --resume)."""
     import pytest
 
     data_dir = ensure_corpus(tmp_path / "corpus", 50)
@@ -116,8 +119,9 @@ def test_job_clean_rule_truncates_stale_partition(spark, tmp_path):
 
 
 def test_snapshot_fingerprint_pins_resume(spark, tmp_path):
-    """catalog.snapshot_id changes when the corpus changes, so a resume
-    ledger keyed by it cannot reuse state from an older corpus."""
+    """catalog.snapshot_id changes when the corpus changes, so the
+    metrics rows --resume reads, keyed by it, cannot reuse state from an
+    older corpus."""
     import time
 
     from gwv_spark import catalog
@@ -131,13 +135,12 @@ def test_snapshot_fingerprint_pins_resume(spark, tmp_path):
     docs.write.mode("overwrite").parquet(str(tmp_path / "c2"))
     # same rows, different files -> different snapshot
     assert catalog.snapshot_id(spark, str(tmp_path / "c2")) != s1
-    # job writes its ledger under the snapshot
+    # the job keys its metrics rows by the snapshot
     out = tmp_path / "out"
     job.main(["--input", ref, "--output", str(out), "--rules", "numexp"],
              spark=spark)
-    led = spark.read.parquet(str(out / "ledger"))
-    assert "snapshot" in led.columns
-    assert {r["snapshot"] for r in led.select("snapshot").collect()} == {s1}
+    metrics = spark.read.parquet(str(out / "metrics"))
+    assert {r["snapshot"] for r in metrics.select("snapshot").collect()} == {s1}
 
 
 def test_ignore_error_quarantine_wiring(spark, tmp_path):
@@ -181,39 +184,9 @@ def test_interrupted_run_resume_equals_full_run(spark, tmp_path):
     resumed = spark.read.parquet(str(out / "violations"))
     assert resumed.exceptAll(full).count() == 0
     assert full.exceptAll(resumed).count() == 0
-    ledger = spark.read.parquet(str(out / "ledger"))
-    marked = {r["rule_id"] for r in ledger.where("partition_id = -1").collect()}
-    assert marked == set(rules)
-
-
-def test_bucket_grain_remaining_filter(spark, tmp_path):
-    """Ledger.remaining_filter at bucket grain: with half the buckets
-    marked complete, only the other half's violations remain, and
-    written ∪ remaining == the full violation set."""
-    from pyspark.sql import functions as F
-
-    from gwv_spark import engine
-
-    data_dir = ensure_corpus(tmp_path / "corpus", 300)
-    docs = spark.read.parquet(str(data_dir / "documents.parquet"))
-    ctx = engine.make_context(spark, docs)
-    full = engine.run_rules(ctx, ["numexp"]).cache()
-    n_buckets = 16
-    bucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
-
-    ledger = engine.Ledger(spark, str(tmp_path / "ledger"))
-    done = spark.createDataFrame(
-        [("numexp", b) for b in range(n_buckets // 2)],
-        "rule_id STRING, partition_id INT",
-    )
-    ledger.mark(done)
-
-    remaining = ledger.remaining_filter(full, n_buckets=n_buckets)
-    assert remaining.where(bucket < n_buckets // 2).count() == 0
-    already = full.where(bucket < n_buckets // 2)
-    merged = already.unionByName(remaining)
-    assert merged.exceptAll(full).count() == 0
-    assert full.exceptAll(merged).count() == 0
+    # one metrics row per rule: the resume skipped the two done rules
+    metrics = [r["rule_id"] for r in spark.read.parquet(str(out / "metrics")).collect()]
+    assert sorted(metrics) == sorted(rules)
 
 
 def test_plan_cache_reuses_built_plans(spark, tmp_path):
@@ -256,9 +229,9 @@ def test_plan_cache_reuses_built_plans(spark, tmp_path):
 def test_incremental_append_new_snapshot_recomputes_and_reproduces(spark, tmp_path):
     """Iceberg-shaped incremental lifecycle on parquet (VERDICT r3 next
     #5): appending a data file mints a NEW snapshot fingerprint, so a
-    --resume run starts that snapshot's ledger EMPTY (everything
+    --resume run finds no metrics rows at that snapshot (everything
     recomputes over the appended corpus — no stale skip), while the
-    prior snapshot's ledger rows survive untouched and the violations
+    prior snapshot's metrics rows survive untouched and the violations
     for the original documents are reproduced row-identically."""
     import pyarrow.parquet as pq
 
@@ -295,19 +268,17 @@ def test_incremental_append_new_snapshot_recomputes_and_reproduces(spark, tmp_pa
 
     job.main(args + ["--resume"], spark=spark)
 
-    # both snapshots' ledgers exist; the new one recomputed ALL rules
-    # (its ledger started empty — resume could skip nothing)
-    ledger = spark.read.parquet(str(out / "ledger"))
-    assert set(ledger.select("snapshot").distinct().toPandas()["snapshot"]) == {
-        snap1, snap2,
-    }
-    marked2 = {
-        r["rule_id"]
-        for r in ledger.where(
-            (F.col("snapshot") == snap2) & (F.col("partition_id") == -1)
-        ).collect()
-    }
-    assert marked2 == {"numexp", "delquote", "order"}
+    # both snapshots have metrics rows; the new one recomputed ALL rules
+    # (it had no rows — resume could skip nothing)
+    def metrics_rules(snap):
+        return sorted(
+            r["rule_id"]
+            for r in spark.read.parquet(str(out / "metrics"))
+            .where(F.col("snapshot") == snap)
+            .collect()
+        )
+
+    assert metrics_rules(snap1) == metrics_rules(snap2) == ["delquote", "numexp", "order"]
 
     vio2 = vio_set(out / "violations")
     # prior violations reproduced exactly; anything new involves only
@@ -323,162 +294,7 @@ def test_incremental_append_new_snapshot_recomputes_and_reproduces(spark, tmp_pa
     # and a second --resume on the SAME snapshot is a pure skip
     job.main(args + ["--resume"], spark=spark)
     assert vio_set(out / "violations") == vio2
-
-
-def _multifile_corpus(spark, tmp_path, n_docs, n_files):
-    """The synthetic corpus as an n_files-part parquet directory (file-
-    group slicing needs multiple input files to have anything to slice)."""
-    data_dir = ensure_corpus(tmp_path / "corpus", n_docs)
-    docs = spark.read.parquet(str(data_dir / "documents.parquet"))
-    multi = tmp_path / "docs_multi"
-    docs.repartition(n_files).write.parquet(str(multi))
-    return str(multi)
-
-
-def test_bucket_groups_matches_ungrouped(spark, tmp_path):
-    """--bucket-groups G: doc-local rules evaluated in G independent
-    file-group slices must land on exactly the ungrouped run's
-    violations; corpus-scoped rules keep the whole-corpus path
-    (bucket_group = -1); the ledger carries one mark per committed
-    (rule, slice)."""
-    inp = _multifile_corpus(spark, tmp_path, 300, 8)
-    rules = ["numexp", "order", "delquote"]  # 2 doc-local + 1 corpus-scoped
-    common = ["--input", inp, "--rules", *rules, "--n-buckets", "16"]
-    job.main(common + ["--output", str(tmp_path / "flat")], spark=spark)
-    job.main(common + ["--output", str(tmp_path / "grp"), "--bucket-groups", "4"],
-             spark=spark)
-
-    flat = spark.read.parquet(str(tmp_path / "flat" / "violations"))
-    grp = spark.read.parquet(str(tmp_path / "grp" / "violations"))
-    assert "bucket_group" in grp.columns
-    g = grp.select(*flat.columns)
-    assert g.exceptAll(flat).count() == 0 and flat.exceptAll(g).count() == 0
-
-    # scoped rule: whole-corpus sentinel slice; local rules: disjoint
-    # file-group slices — every doc's violations land in exactly one
-    # slice, and the work is actually spread over several slices
-    assert {
-        r["bucket_group"]
-        for r in grp.where("rule_id = 'delquote'").select("bucket_group").collect()
-    } == {-1}
-    local_rows = grp.where("rule_id != 'delquote'")
-    per_doc = local_rows.groupBy("doc_id").agg(
-        F.countDistinct("bucket_group").alias("n_slices")
-    )
-    assert per_doc.where("n_slices > 1").count() == 0
-    assert local_rows.select("bucket_group").distinct().count() > 1
-
-    ledger = spark.read.parquet(str(tmp_path / "grp" / "ledger"))
-    marks = {(r["rule_id"], r["partition_id"]) for r in ledger.collect()}
-    assert marks == (
-        {("delquote", -1)}
-        | {("numexp", g) for g in range(4)}
-        | {("order", g) for g in range(4)}
-    )
-
-    # verdict rollup identical to the flat run's
-    vf = spark.read.parquet(str(tmp_path / "flat" / "verdicts")).drop("run_id")
-    vg = spark.read.parquet(str(tmp_path / "grp" / "verdicts")).drop("run_id")
-    assert vf.exceptAll(vg).count() == 0 and vg.exceptAll(vf).count() == 0
-
-    # per-slice metrics: one row per committed slice, wall time recorded,
-    # file counts partition the 8 input files, violation counts read back
-    # from the committed slice partitions
-    sm = {r["bucket_group"]: r
-          for r in spark.read.parquet(str(tmp_path / "grp" / "slice_metrics")).collect()}
-    assert set(sm) == {0, 1, 2, 3}
-    assert sum(r["n_files"] for r in sm.values()) == 8
-    assert all(r["wall_s"] > 0 for r in sm.values())
-    slice_counts = {
-        r["bucket_group"]: r["n"]
-        for r in local_rows.groupBy("bucket_group")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    for g_id, row in sm.items():
-        assert row["n_violations"] == slice_counts.get(g_id, 0)
-
-
-def test_bucket_groups_mid_rule_resume(spark, tmp_path):
-    """A grouped run that died after committing only some slices, resumed
-    with --resume, recomputes ONLY the missing slices (surviving slice
-    files untouched) and lands on the full violation set."""
-    import os
-
-    inp = _multifile_corpus(spark, tmp_path, 300, 8)
-    out = tmp_path / "out"
-    args = ["--input", inp, "--output", str(out), "--rules", "numexp",
-            "--n-buckets", "16", "--bucket-groups", "4"]
-    job.main(args, spark=spark)
-    full = spark.read.parquet(str(out / "violations")).drop("bucket_group")
-    n_full = full.count()
-    full.write.parquet(str(tmp_path / "expected"))
-
-    # simulate the crash: slices 2 and 3 never committed — drop their
-    # partitions AND their ledger marks (a zero-violation slice has no
-    # partition directory at all; that's fine)
-    import shutil
-
-    for g in (2, 3):
-        d = out / "violations" / "rule_id=numexp" / f"bucket_group={g}"
-        if d.exists():
-            shutil.rmtree(d)
-    ledger_dir = next((out / "ledger").iterdir())
-    kept = [
-        (r["rule_id"], r["partition_id"])
-        for r in spark.read.parquet(str(ledger_dir)).collect()
-        if r["partition_id"] in (0, 1)
-    ]
-    shutil.rmtree(ledger_dir)
-    spark.createDataFrame(kept, "rule_id STRING, partition_id INT").write.parquet(
-        str(ledger_dir)
-    )
-
-    # fingerprint the surviving slices' data files
-    def slice_files(g):
-        d = out / "violations" / "rule_id=numexp" / f"bucket_group={g}"
-        if not d.exists():
-            return {}
-        return {
-            f: os.path.getmtime(d / f) for f in os.listdir(d) if f.endswith(".parquet")
-        }
-
-    before = {g: slice_files(g) for g in (0, 1)}
-
-    job.main(args + ["--resume"], spark=spark)
-
-    resumed = spark.read.parquet(str(out / "violations")).drop("bucket_group")
-    expected = spark.read.parquet(str(tmp_path / "expected"))
-    assert resumed.count() == n_full
-    assert resumed.exceptAll(expected).count() == 0
-    assert expected.exceptAll(resumed).count() == 0
-    marks = {
-        (r["rule_id"], r["partition_id"])
-        for r in spark.read.parquet(str(ledger_dir)).collect()
-    }
-    assert marks == {("numexp", g) for g in range(4)}
-    # completed slices were NOT rewritten
-    for g in (0, 1):
-        assert slice_files(g) == before[g]
-
-
-def test_bucket_groups_modulus_is_pinned(spark, tmp_path):
-    """Re-running an output dir under a different --bucket-groups must
-    fail fast: a different slice keying over surviving partitions would
-    duplicate violations.  Also: a single-file input under G=4 runs fine
-    — the three empty file groups are marked complete directly."""
-    import pytest
-
-    data_dir = ensure_corpus(tmp_path / "corpus", 100)
-    inp = str(data_dir / "documents.parquet")  # ONE parquet file
-    out = str(tmp_path / "out")
-    job.main(["--input", inp, "--output", out, "--rules", "numexp",
-              "--bucket-groups", "4"], spark=spark)
-    ledger = spark.read.parquet(str(tmp_path / "out" / "ledger"))
-    assert {r["partition_id"] for r in ledger.collect()} == {0, 1, 2, 3}
-    with pytest.raises(SystemExit, match="bucket-groups"):
-        job.main(["--input", inp, "--output", out, "--rules", "numexp",
-                  "--bucket-groups", "2", "--resume"], spark=spark)
+    assert metrics_rules(snap2) == ["delquote", "numexp", "order"]
 
 
 def test_job_sample_writes_triage_table(spark, tmp_path):

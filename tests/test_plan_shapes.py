@@ -160,7 +160,7 @@ def test_delquote_skewed_hot_key_gets_aqe_skew_split(spark):
     250k docs, force the RI anti join to its 10^12-catalog shape (no
     broadcast), and assert AQE's final plan marks the join skew-split
     (SortMergeJoin(skew=true) LeftAnti).  Straggler measurements for the
-    same setup are recorded by tools/skew_bench.py -> BENCH_skew.json."""
+    same setup are recorded in BENCH_skew.json."""
     from gwv_spark import engine
     from gwv_spark.corpus import spark_generate
     from gwv_spark.rules import RULES, load_all_rules
