@@ -401,12 +401,12 @@ def top_values(stats: DataFrame, column: str) -> list[tuple[str, int]]:
 
 
 def store_files(spark: SparkSession, store_dir: str) -> set[str]:
-    """File paths already sketched into the store (empty set if the
-    store doesn't exist yet)."""
-    try:
-        got = spark.read.parquet(store_dir).select("file").distinct().collect()
-    except Exception:
-        return set()
+    """File paths already sketched into the store (empty set if nothing
+    was ever committed there).  An unreadable store raises: read as
+    empty it would re-sketch and append every file."""
+    from gwv_spark.job import read_committed
+
+    got = read_committed(spark, store_dir, "file STRING").select("file").distinct().collect()
     return {r["file"] for r in got}
 
 

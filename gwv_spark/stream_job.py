@@ -1,20 +1,28 @@
 """Streaming-tier cluster entrypoint: ``spark-submit --py-files
 gwv_spark.zip gwv_spark/stream_job.py --input <landing> --output <dir>``.
 
-Validates newly-landed document parquet files with the DOCUMENT-LOCAL
-rules (gwv_spark.streaming.DOC_LOCAL_RULES) exactly once per file:
+Every mode is one gwv_spark.streaming stream: a checkpointed file
+source (``<output>/_checkpoint``) whose microbatches fold into
+epoch-keyed tables under ``<output>`` (the store dir for ``--sketch``),
+each landed file exactly once.
 
 - default (no ``--continuous``): drain everything not yet processed and
   exit — the cron-style catch-up shape; re-running is incremental via
-  the checkpoint under ``<output>/_checkpoint``;
+  the checkpoint;
 - ``--continuous "30 seconds"``: keep running, one microbatch per
   trigger interval, until the process is stopped.
 
-``--ri`` runs the INCREMENTAL RI monitor instead (streaming.
-start_ri_stream): delquote/delvar maintained by the retraction fold as
-an add/retract change log under ``<output>/updates``.  Corpus-scoped rules requested in the default mode belong
-to the batch job (``gwv_spark/job.py --resume``); requesting one here
-fails fast with the same error the library API raises.
+The default mode validates with the DOCUMENT-LOCAL rules
+(gwv_spark.streaming.DOC_LOCAL_RULES); corpus-scoped rules belong to the
+batch job (``gwv_spark/job.py --resume``), and requesting one here fails
+fast with the same error the library API raises.  ``--ri`` runs the
+incremental RI monitor instead (streaming.start_ri_stream):
+delquote/delvar maintained by the retraction fold as an add/retract
+change log under ``<output>/updates``.  ``--near-dup`` drains the
+near-dup monitor (streaming.stream_simhash_drain: signatures under
+``<output>/sigs``, the pair log under ``<output>/pairs``) and writes the
+closure of the pair log to ``<output>/groups``.  ``--sketch STORE_DIR``
+keeps a column-stats sketch store current instead.
 """
 
 from __future__ import annotations
@@ -147,7 +155,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             schema,
             columns=args.sketch_columns,
             max_files_per_trigger=args.max_files_per_trigger,
-            available_now=args.continuous is None,
             processing_time=args.continuous,
         )
     elif args.ri:
@@ -156,7 +163,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             args.input,
             args.output,
             max_files_per_trigger=args.max_files_per_trigger,
-            available_now=args.continuous is None,
             processing_time=args.continuous,
         )
     else:
@@ -166,7 +172,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             args.output,
             rule_ids=args.rules,
             ignore_error=args.ignore_error,
-            available_now=args.continuous is None,
             processing_time=args.continuous,
             max_files_per_trigger=args.max_files_per_trigger,
             n_buckets=args.n_buckets,

@@ -1,36 +1,54 @@
-"""Structured Streaming tier: low-latency validation of newly-landed
-document files, plus watermarked streaming rollups.
+"""Structured Streaming tier: low-latency validation, drift and
+near-dup checks over document files as they land.
 
-Two-tier architecture for a corpus that grows continuously:
+Every stream here has one shape: a checkpointed file source whose
+``foreachBatch`` body (:func:`_start`) runs a BATCH function of the
+engine over the microbatch and over epoch-keyed parquet tables under
+the output dir.  The checkpoint's file index maps each landed file to
+exactly one epoch; each body reads only epochs ≤ its own and overwrites
+only its own epoch (:func:`_write_epoch`), so an epoch Spark retries
+after a partial write leaves every table as one run would — exactly
+once end to end.  No stream keeps Python state; the tiers and where
+each keeps its state:
 
-- **Stream tier (this module)** — the DOCUMENT-LOCAL rules: rules whose
-  verdict depends only on the document's own columns plus static config
-  dims (:data:`DOC_LOCAL_RULES`).  They run per microbatch through
-  ``foreachBatch`` over a checkpointed file source, so each landed file
-  is validated exactly once and violations stream out minutes after
-  arrival instead of at the next full-corpus run.  This tier carries the
-  geometry-heavy rules (corner, dup, illegal) — the bulk of per-doc CPU.
-- **Batch tier** — the CORPUS-SCOPED rules (referential checks such as
-  delquote/delvar, corpus-existence probes such as j/ucsalias, global
-  aggregations such as mustrenew, and width's ``-halfwidth`` existence
-  probe).  Their verdicts change when OTHER documents arrive, so
-  per-batch evaluation would be semantically wrong; they run through the
-  resumable snapshot job (``gwv_spark.job --resume``), whose
-  incremental-append lifecycle is tested in tests/test_job.py.
-- **Incremental RI tier** (:func:`start_ri_stream`) — the two
-  referential rules that are pure existence checks (delquote, delvar)
-  ALSO have a low-latency streaming form: each microbatch runs one step
-  of the batch tier's retraction fold (incremental.ri_fold_step) over a
-  persisted state table, so dangling-reference violations appear on
-  arrival and disappear the moment the referenced document lands,
-  without rescanning the corpus.  The batch tier remains authoritative
-  per snapshot; the RI tier is its constantly-current companion.
-- **Sketch tier** (:func:`stream_sketch_store`) — column-stats
-  maintenance on arrival: each epoch's files are sketched into the
-  mergeable HLL + t-digest store (gwv_spark.sketchstore), so full-table
-  stats stay current at the cost of the arrived files' scan; the
-  checkpoint's file index does the bookkeeping sketch_job's file diff
-  does in batch mode.
+- **Doc-local validation** (:func:`validate_stream`) — the
+  DOCUMENT-LOCAL rules (:data:`DOC_LOCAL_RULES`, verdicts that depend
+  only on the document's own columns plus static config dims) run per
+  microbatch, so violations stream out minutes after arrival instead of
+  at the next full-corpus run.  Stateless: ``violations/``,
+  ``verdicts/`` and ``metrics/`` hold one partition per epoch.  This
+  tier carries the geometry-heavy rules (corner, dup, illegal) — the
+  bulk of per-doc CPU.
+- **Incremental RI** (:func:`start_ri_stream`) — the two referential
+  rules that are pure existence checks (delquote, delvar): each
+  microbatch runs one step of the batch tier's retraction fold
+  (incremental.ri_fold_step).  State: the outstanding set in
+  ``ri_state/epoch_id=<e>`` (the newest two epochs kept) and the key
+  catalog in ``ri_keys/epoch_id=<e>``; the add/retract change log is
+  ``updates/``.
+- **Drift** (:func:`stream_drift_monitor_drain`) — running PSI against
+  a baseline snapshot through stats.corpus_snapshot → stats.snapshot_psi.
+  State: the per-epoch bucket counts in ``counts/epoch_id=<e>``; the
+  PSI log is ``updates/``.
+- **Near-dup** (:func:`stream_simhash_drain`) — each arrival checked
+  against the corpus-so-far through textops' SimHash signature and
+  block join.  State: the signatures in ``sigs/epoch_id=<e>``; the pair
+  log is ``pairs/``.
+- **Sketch** (:func:`stream_sketch_store`) — column-stats maintenance:
+  each epoch's files are sketched into the mergeable HLL + t-digest
+  store (gwv_spark.sketchstore), one ``batch_id=epoch-<n>`` partition
+  per epoch, so the checkpoint's file index does the bookkeeping
+  sketch_job's file diff does in batch mode.
+- **Hourly event rollup** (:func:`stream_events_hourly`) — the one
+  stream that is not a fold: Spark's own watermarked window
+  aggregation, whose state lives in the checkpoint's state store.
+
+The CORPUS-SCOPED rules (referential checks, corpus-existence probes
+such as j/ucsalias, global aggregations such as mustrenew, and width's
+``-halfwidth`` existence probe) change verdict when OTHER documents
+arrive, so per-batch evaluation would be semantically wrong; they run
+through the resumable snapshot job (``gwv_spark.job --resume``), which
+stays authoritative per snapshot.
 
 Doc-locality is a semantic property, not a guess:
 tests/test_streaming.py::test_doc_local_rules_are_split_invariant runs
@@ -40,7 +58,7 @@ listed rules produce identical violations to the whole-corpus run
 missing-part check, for example, flags parts whose definition sits in
 the other half).
 
-At 10^12-doc scale this is the shape you want: the stream tier is
+At 10^12-doc scale this is the shape you want: the doc-local tier is
 embarrassingly parallel (no shuffle at all — every doc-local rule plan
 is a narrow map over the microbatch, `.explain` shows one
 WholeStageCodegen + the two Arrow UDF stages), while the batch tier
@@ -55,12 +73,11 @@ incremental.
 from __future__ import annotations
 
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gwv_spark import engine, incremental
+from gwv_spark import engine, incremental, job, stats, textops
 from gwv_spark.rules import load_all_rules
 from gwv_spark.session import local_frame
 
@@ -90,19 +107,60 @@ CORPUS_SCOPED_RULES = [
 ]
 
 
-def read_document_stream(
+def _file_stream(
     spark: SparkSession,
+    schema,
     input_path: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a landing directory of document parquet
-    files.  The checkpoint's file index provides exactly-once per-file
+    """File-source stream over a landing directory of parquet files.
+    The checkpoint's file index provides exactly-once per-file
     processing; ``maxFilesPerTrigger`` bounds microbatch size so one
     giant backfill drop cannot produce an executor-OOM-sized batch."""
-    reader = spark.readStream.schema(DOCS_SCHEMA)
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(input_path)
+
+
+def _start(
+    stream: DataFrame,
+    body,
+    out: str,
+    processing_time: str | None = None,
+    name: str | None = None,
+    output_mode: str = "append",
+):
+    """Start ``body`` as the foreachBatch sink of ``stream``, checkpointed
+    under ``<out>/_checkpoint``.  With ``processing_time=None`` the query
+    drains everything not yet processed and stops (availableNow — the
+    cron-style catch-up); with an interval such as ``"30 seconds"`` it
+    runs one microbatch per interval until stopped."""
+    writer = (
+        stream.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", f"{out}/_checkpoint")
+    )
+    if name is not None:
+        writer = writer.queryName(name)
+    if processing_time is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=processing_time).start()
+
+
+def _write_epoch(df: DataFrame, root: str, *partition_by: str) -> None:
+    """Write ``df`` under ``root`` partitioned by ``partition_by``
+    (default ``epoch_id``) with DYNAMIC partition overwrite: only the
+    partitions present in ``df`` are replaced, so a retried epoch
+    overwrites its own rows instead of appending duplicates and every
+    other epoch stays untouched.  (An empty ``df`` writes nothing, so a
+    retry of an epoch with no rows changes nothing either.)"""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*(partition_by or ("epoch_id",)))
+        .parquet(root)
+    )
 
 
 def validate_stream(
@@ -111,7 +169,6 @@ def validate_stream(
     output_dir: str,
     rule_ids: list[str] | None = None,
     ignore_error: bool = False,
-    available_now: bool = True,
     processing_time: str | None = None,
     max_files_per_trigger: int | None = None,
     n_buckets: int = 256,
@@ -120,15 +177,10 @@ def validate_stream(
     """Start the streaming validation query; returns the StreamingQuery.
 
     Per microbatch (foreachBatch — the rule plans need the whole batch
-    for their groupBys and Arrow UDFs).  Every sink is partitioned by
-    ``epoch_id`` and written with DYNAMIC partition overwrite, which is
-    what makes the pipeline end-to-end exactly-once: the checkpoint's
-    file index guarantees each landed file maps to exactly one epoch,
-    and a retried epoch (batch failed after a partial write, before the
-    checkpoint committed) OVERWRITES its own epoch partitions instead of
-    appending duplicates — a plain ``append`` here would only be
-    at-least-once.  (Sound because the rule plans are deterministic over
-    the epoch's fixed file set, so a retry reproduces the same rows.)
+    for their groupBys and Arrow UDFs), each sink written through
+    :func:`_write_epoch` (exactly once; sound because the rule plans are
+    deterministic over the epoch's fixed file set, so a retry reproduces
+    the same rows):
 
     - violations → ``<output>/violations/epoch_id=<n>/rule_id=<id>/``
       (same schema as the batch job's sink plus the epoch — a reader
@@ -138,9 +190,9 @@ def validate_stream(
     - one metrics row per epoch → ``<output>/metrics/epoch_id=<n>/``
       (lineage: which epoch validated how many docs, how long it took).
 
-    ``available_now=True`` drains everything not yet processed and stops
-    — the incremental-batch shape (cron-style catch-up).  With
-    ``processing_time`` it runs continuously.  Corpus-scoped rules are
+    ``processing_time=None`` drains everything not yet processed and
+    stops — the incremental-batch shape (cron-style catch-up).  With an
+    interval it runs continuously.  Corpus-scoped rules are
     rejected unless ``allow_corpus_scoped=True`` (their per-batch result
     is relative to the batch, not the corpus — useful only for smoke
     tests, so the misuse is an explicit opt-in, not a silent semantics
@@ -172,17 +224,10 @@ def validate_stream(
         resolve_entity=not all_local,
     )
 
-    stream = read_document_stream(spark, input_path, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(_process_batch)
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .queryName("gwv-validate-stream")
+    return _start(
+        _file_stream(spark, DOCS_SCHEMA, input_path, max_files_per_trigger),
+        _process_batch, out, processing_time, name="gwv-validate-stream",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def make_batch_processor(
@@ -213,16 +258,7 @@ def make_batch_processor(
                 .persist()
             )
             try:
-                # mode=overwrite + dynamic partitionOverwriteMode: only
-                # the partitions present in THIS epoch's output are
-                # replaced — an epoch retry is idempotent, other epochs
-                # untouched (exactly-once; see the docstring).
-                (
-                    v.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id", "rule_id")
-                    .parquet(f"{out}/violations")
-                )
+                _write_epoch(v, f"{out}/violations", "epoch_id", "rule_id")
                 run_id = f"epoch={int(epoch_id)}"
                 verdicts = engine.partition_verdicts(
                     ctx.docs,
@@ -230,12 +266,7 @@ def make_batch_processor(
                     n_buckets=n_buckets,
                     run_id=run_id,
                 ).withColumn("epoch_id", F.lit(int(epoch_id)))
-                (
-                    verdicts.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(f"{out}/verdicts")
-                )
+                _write_epoch(verdicts, f"{out}/verdicts")
                 n_docs = ctx.docs.count()  # cached — no recompute
                 n_vio = v.count()
                 metrics = local_frame(
@@ -245,12 +276,7 @@ def make_batch_processor(
                     "run_id STRING, epoch_id BIGINT, n_docs BIGINT, "
                     "n_violations BIGINT, wall_s DOUBLE",
                 )
-                (
-                    metrics.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(f"{out}/metrics")
-                )
+                _write_epoch(metrics, f"{out}/metrics")
             finally:
                 v.unpersist()
         finally:
@@ -262,117 +288,74 @@ def make_batch_processor(
 
 def validate_stream_drain(spark: SparkSession, input_path: str,
                           output_dir: str, **kwargs) -> None:
-    """Run validate_stream with availableNow and block until drained."""
-    q = validate_stream(
-        spark, input_path, output_dir, available_now=True, **kwargs
-    )
-    q.awaitTermination()
+    """Run validate_stream as a drain and block until it is done."""
+    validate_stream(spark, input_path, output_dir, **kwargs).awaitTermination()
 
 
-# ----------------------------------------------------- stateful drift
-def stream_drift_monitor(
+# ------------------------------------------------------------- drift
+DRIFT_COUNTS_DDL = "metric STRING, bucket STRING, value DOUBLE, epoch_id INT"
+DRIFT_UPDATES_DDL = "metric STRING, n_seen BIGINT, psi DOUBLE, epoch_id INT"
+
+
+def make_drift_batch_processor(
     spark: SparkSession,
-    input_path: str,
+    out: str,
     baseline: dict[tuple[str, str], float],
     eps: float = 1e-4,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Custom stateful streaming operator: running distribution-drift
-    (PSI) of the growing corpus against a baseline snapshot, updated
-    every microbatch.
+):
+    """The foreachBatch body of :func:`stream_drift_monitor_drain`: the
+    batch pair stats.corpus_snapshot → stats.snapshot_psi, run as a fold
+    over two epoch-keyed tables under ``out``:
 
-    Matches the batch pair stats.corpus_snapshot → stats.snapshot_psi
-    over the histogram metrics (span_len_hist: docs per span count;
-    kind_freq: spans per kind) — same buckets, same ε-smoothed
-    natural-log PSI — but holds the corpus-so-far histogram as STREAM
-    STATE instead of rescanning, so each update costs one pass over the
-    new docs only.
+    - ``counts/epoch_id=<e>/`` — the microbatch's histogram rows
+      (corpus_snapshot's span_len_hist and kind_freq: docs per span
+      count, spans per kind);
+    - ``updates/epoch_id=<e>/`` — (metric, n_seen, psi) for every metric
+      the microbatch has rows of: snapshot_psi of the summed counts of
+      epochs ≤ e against ``baseline``, and n_seen the summed count.
 
-    Scale shape: the stateful operator's STATE is bucket-grain (a
-    histogram dict per metric), independent of stream length.  Its
-    per-batch INPUT is doc-grain but two-narrow-string columns, reduced
-    to bucket counts inside the Arrow batch loop (pandas value_counts)
-    — with only two metric keys the reduce parallelism is 2, so at
-    cluster scale you bound microbatch size with maxFilesPerTrigger, or
-    salt the key into (metric, shard) and fold the shard histograms in a
-    tiny downstream batch step.  ``baseline`` is a plain dict keyed by
-    (metric, bucket) — dimension-sized (it is a histogram), closed over
-    into the executors.
-
-    Returns the streaming DataFrame of updates
-    (metric, n_seen, psi) — one row per metric per microbatch;
-    outputMode must be ``update`` (or foreachBatch append of the
-    deltas)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    The state is bucket-grain (one row per (metric, bucket) per epoch),
+    independent of the number of documents.  ``baseline`` is a
+    (metric, bucket) → count dict."""
+    out = str(out).rstrip("/")
+    base = local_frame(
+        spark,
+        [(m, b, float(n)) for (m, b), n in sorted(baseline.items())],
+        "metric STRING, bucket STRING, value DOUBLE",
     )
 
-    docs = read_document_stream(spark, input_path, max_files_per_trigger)
-    span_len = docs.select(
-        F.lit("span_len_hist").alias("metric"),
-        F.size("spans").cast("string").alias("bucket"),
-    )
-    kind = docs.select(
-        F.lit("kind_freq").alias("metric"),
-        F.explode(F.col("spans.kind")).alias("bucket"),
-    )
-    rows = span_len.unionByName(kind)
-
-    out_type = StructType(
-        [
-            StructField("metric", StringType()),
-            StructField("n_seen", LongType()),
-            StructField("psi", DoubleType()),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("buckets", StringType()),  # json {"bucket": n}
-            StructField("n_seen", LongType()),
-        ]
-    )
-    base_by_metric: dict[str, dict[str, float]] = {}
-    for (m, b), n in baseline.items():
-        base_by_metric.setdefault(m, {})[b] = float(n)
-
-    def _update(key, pdf_iter, state):
-        import json as _json
-
-        metric = key[0]
-        if state.exists:
-            hist_json, n_seen = state.get
-            hist = _json.loads(hist_json)
-        else:
-            hist, n_seen = {}, 0
-        for pdf in pdf_iter:
-            vc = pdf["bucket"].value_counts()
-            n_seen += int(vc.sum())
-            for b, n in vc.items():
-                hist[b] = hist.get(b, 0) + int(n)
-        state.update((_json.dumps(hist), n_seen))
-        base = base_by_metric.get(metric, {})
-        tot_cur = float(sum(hist.values())) or 1.0
-        tot_base = float(sum(base.values())) or 1.0
-        psi = 0.0
-        import math
-
-        for b in set(hist) | set(base):
-            p = hist.get(b, 0) / tot_cur + eps
-            q = base.get(b, 0.0) / tot_base + eps
-            psi += (p - q) * math.log(p / q)
-        yield pd.DataFrame(
-            [{"metric": metric, "n_seen": n_seen, "psi": round(psi, 6)}]
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        e = int(epoch_id)
+        docs = batch_df.select(F.size("spans").alias("n_spans"), "spans")
+        spans = docs.select(F.explode("spans").alias("s")).select("s.*")
+        snap = stats.corpus_snapshot(docs, spans).where(
+            F.col("metric").isin("span_len_hist", "kind_freq")
+        )
+        _write_epoch(snap.withColumn("epoch_id", F.lit(e)), f"{out}/counts")
+        counts = job.read_committed(spark, f"{out}/counts", DRIFT_COUNTS_DDL).where(
+            F.col("epoch_id") <= e
+        )
+        seen = (
+            counts.groupBy("metric")
+            .agg(F.sum("value").cast("long").alias("n_seen"), F.max("epoch_id").alias("last"))
+            .where(F.col("last") == e)
+        )
+        # only the batch's metrics: a baseline metric the corpus has no
+        # rows of would divide by a zero total
+        m = seen.select("metric")
+        cur = (
+            counts.join(m, "metric", "left_semi")
+            .groupBy("metric", "bucket")
+            .agg(F.sum("value").alias("value"))
+        )
+        _write_epoch(
+            stats.snapshot_psi(cur, base.join(m, "metric", "left_semi"), eps)
+            .join(seen, "metric")
+            .select("metric", "n_seen", "psi", F.lit(e).alias("epoch_id")),
+            f"{out}/updates",
         )
 
-    return rows.groupBy("metric").applyInPandasWithState(
-        _update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
-    )
+    return _process
 
 
 def stream_drift_monitor_drain(
@@ -383,37 +366,19 @@ def stream_drift_monitor_drain(
     eps: float = 1e-4,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain the drift monitor over the files currently present and
-    return the per-epoch update log (epoch_id, metric, n_seen, psi) as a
-    batch DataFrame.  The checkpoint carries the histogram state, so a
-    later drain after new files continues from the accumulated
-    distribution — the streaming analogue of gwv_corpus_drift_psi."""
+    """Running distribution drift (PSI) of the growing corpus against a
+    baseline snapshot: drain the files currently present and return the
+    per-epoch update log (metric, n_seen, psi, epoch_id) as a batch
+    DataFrame — the streaming analogue of gwv_corpus_drift_psi.  Each
+    epoch costs one pass over its new documents plus a read of the
+    bucket-grain counts table (:func:`make_drift_batch_processor`)."""
     out = str(output_dir).rstrip("/")
-    updates = stream_drift_monitor(
-        spark, input_path, baseline, eps, max_files_per_trigger
-    )
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch-keyed dynamic overwrite: retried epochs replace their own
-        # partition instead of appending duplicates (same exactly-once
-        # argument as validate_stream)
-        (
-            batch_df.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(f"{out}/updates")
-        )
-
-    q = (
-        updates.writeStream.foreachBatch(_write)
-        .outputMode("update")
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{out}/updates")
+    _start(
+        _file_stream(spark, DOCS_SCHEMA, input_path, max_files_per_trigger),
+        make_drift_batch_processor(spark, out, baseline, eps),
+        out,
+    ).awaitTermination()
+    return job.read_committed(spark, f"{out}/updates", DRIFT_UPDATES_DDL)
 
 
 # ------------------------------------------------- incremental RI tier
@@ -429,18 +394,15 @@ RI_UPDATE_SCHEMA = (
 INCREMENTAL_RI_RULES = incremental.RI_RULES
 
 
-def _ls(spark: SparkSession, root: str) -> list[str]:
-    """Names of the directories under ``root`` (none if it is absent)."""
+def _epochs_below(spark: SparkSession, root: str, epoch: int) -> list[int]:
+    """The ``epoch_id=<n>`` directories under ``root`` with n < epoch
+    (none if ``root`` is absent)."""
     fs, jvm = incremental._fs(spark, root)
     path = jvm.org.apache.hadoop.fs.Path(root)
     if not fs.exists(path):
         return []
-    return [st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory()]
-
-
-def _epochs_below(spark: SparkSession, root: str, epoch: int) -> list[int]:
-    """The ``epoch_id=<n>`` directories under ``root`` with n < epoch."""
-    ids = [int(n.split("=", 1)[1]) for n in _ls(spark, root) if n.startswith("epoch_id=")]
+    names = [st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory()]
+    ids = [int(n.split("=", 1)[1]) for n in names if n.startswith("epoch_id=")]
     return sorted(n for n in ids if n < epoch)
 
 
@@ -460,9 +422,7 @@ def _change_rows(state_rows: DataFrame, op: str) -> DataFrame:
 def _logged_adds(spark: SparkSession, out: str, epoch: int) -> DataFrame:
     """The adds epoch ``epoch`` wrote to the change log, back as state
     rows (the inverse of :func:`_change_rows`)."""
-    if f"epoch_id={epoch}" not in _ls(spark, f"{out}/updates"):
-        return local_frame(spark, [], incremental.RI_STATE_DDL)
-    log = spark.read.parquet(f"{out}/updates/epoch_id={epoch}")
+    log = job.read_committed(spark, f"{out}/updates/epoch_id={epoch}", RI_UPDATE_SCHEMA)
     return log.where(F.col("op") == "add").select(
         "rule_id",
         "doc_id",
@@ -488,12 +448,8 @@ def make_ri_batch_processor(spark: SparkSession, out: str):
       next batches' probes are checked against.
 
     Batch e reads the newest state epoch below e and the key epochs
-    below e, and each write overwrites only epoch e, so calling the
-    function again with the same (batch, epoch_id) — Spark's retry of an
-    epoch that failed before its checkpoint commit — leaves every table
-    as one call would.  State epochs older than the one read are deleted
-    after the state write.  Nothing is cached: the batch is re-read per
-    write."""
+    below e; state epochs older than the one read are deleted after the
+    state write.  Nothing is cached: the batch is re-read per write."""
     out = str(out).rstrip("/")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -503,21 +459,15 @@ def make_ri_batch_processor(spark: SparkSession, out: str):
             state_prev = spark.read.parquet(f"{out}/ri_state/epoch_id={prior[-1]}")
         else:
             state_prev = local_frame(spark, [], incremental.RI_STATE_DDL)
-        if _epochs_below(spark, f"{out}/ri_keys", e):
-            known = spark.read.parquet(f"{out}/ri_keys").where(F.col("epoch_id") < e)
-        else:
-            known = local_frame(spark, [], "key STRING")
+        known = job.read_committed(spark, f"{out}/ri_keys", "key STRING, epoch_id INT")
         kept, adds, retracts = incremental.ri_fold_step(
-            state_prev, batch_df, known.select("key")
+            state_prev, batch_df, known.where(F.col("epoch_id") < e).select("key")
         )
-        (
+        _write_epoch(
             _change_rows(adds, "add")
             .unionByName(_change_rows(retracts, "retract"))
-            .withColumn("epoch_id", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(f"{out}/updates")
+            .withColumn("epoch_id", F.lit(e)),
+            f"{out}/updates",
         )
         kept.unionByName(_logged_adds(spark, out, e)).write.mode("overwrite").parquet(
             f"{out}/ri_state/epoch_id={e}"
@@ -536,7 +486,6 @@ def start_ri_stream(
     input_path: str,
     output_dir: str,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
     processing_time: str | None = None,
 ):
     """Start the incremental RI monitor: the streaming counterpart of
@@ -556,17 +505,11 @@ def start_ri_stream(
     epoch idempotent — exactly-once end to end (same argument as
     validate_stream)."""
     out = str(output_dir).rstrip("/")
-    stream = read_document_stream(spark, input_path, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(make_ri_batch_processor(spark, out))
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .queryName("gwv-ri-stream")
+    return _start(
+        _file_stream(spark, DOCS_SCHEMA, input_path, max_files_per_trigger),
+        make_ri_batch_processor(spark, out), out, processing_time,
+        name="gwv-ri-stream",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def stream_ri_drain(
@@ -581,15 +524,11 @@ def stream_ri_drain(
     fold, so a later drain after new files continues incrementally —
     only the new documents are scanned."""
     out = str(output_dir).rstrip("/")
-    start_ri_stream(
-        spark, input_path, output_dir, max_files_per_trigger, available_now=True
-    ).awaitTermination()
+    start_ri_stream(spark, input_path, out, max_files_per_trigger).awaitTermination()
     # every epoch so far may legitimately have emitted nothing (e.g. all
-    # probes satisfied within their own batch) — an all-empty sink has no
+    # probes satisfied within their own batch): an all-empty sink has no
     # parquet footer to infer from
-    if not any(Path(f"{out}/updates").rglob("*.parquet")):
-        return local_frame(spark, [], RI_UPDATE_SCHEMA + ", epoch_id INT")
-    return spark.read.parquet(f"{out}/updates")
+    return job.read_committed(spark, f"{out}/updates", RI_UPDATE_SCHEMA + ", epoch_id INT")
 
 
 def ri_outstanding(updates: DataFrame) -> DataFrame:
@@ -625,238 +564,45 @@ def ri_outstanding_violations(updates: DataFrame) -> DataFrame:
 
 # --------------------------------------------- incremental near-dup
 TEXT_DOCS_SCHEMA = "doc_id BIGINT, text STRING"
+SIGS_DDL = "doc_id BIGINT, simhash BIGINT, epoch_id INT"
+PAIRS_DDL = "doc_a BIGINT, doc_b BIGINT, hamming INT, epoch_id INT"
 
 
-def _simhash64_py(text: str | None) -> int:
-    """Python mirror of textops.simhash64 (the Catalyst implementation)
-    for the per-row streaming path: whitespace tokens, md5 first 8 bytes
-    big-endian as two 32-bit halves (bits 32-63 from the first half),
-    ±1 votes per bit, ties and token-less docs hash to 0.  Exact
-    equality with the batch expression is asserted in
-    tests/test_streaming.py — the two cannot drift silently."""
-    import hashlib
-    import re
+def make_simhash_batch_processor(spark: SparkSession, out: str, max_hamming: int = 3):
+    """The foreachBatch body of :func:`stream_simhash_drain`: the batch
+    textops.simhash_near_pairs, run as a fold over two epoch-keyed
+    tables under ``out``:
 
-    if not text:
-        return 0
-    toks = [t for t in re.split(r"\s+", text.strip()) if t != ""]
-    votes = [0] * 64
-    for t in toks:
-        h = hashlib.md5(t.encode("utf-8")).hexdigest()
-        hi, lo = int(h[:8], 16), int(h[8:16], 16)
-        for i in range(32):
-            votes[i] += 1 if (lo >> i) & 1 else -1
-            votes[32 + i] += 1 if (hi >> i) & 1 else -1
-    val = 0
-    for i in range(63):
-        if votes[i] > 0:
-            val += 1 << i
-    if votes[63] > 0:
-        val -= 1 << 63
-    return val
+    - ``sigs/epoch_id=<e>/`` — (doc_id, simhash) of the microbatch's
+      documents that have a token (textops.nonblank_simhash64); the
+      signature is the state, no text is kept;
+    - ``pairs/epoch_id=<e>/`` — (doc_a < doc_b, hamming) for every pair
+      within ``max_hamming`` that has a member in batch e and the other
+      in batch e or an earlier one: the batch's signature blocks
+      (textops.simhash_blocks) joined against the blocks of every epoch
+      ≤ e by textops.simhash_block_pairs, as the batch form does.
 
+    A pair is logged once, at the epoch of its later member.  Each batch
+    reads every earlier signature (corpus × (k+1) block rows)."""
+    out = str(out).rstrip("/")
 
-_SIMHASH_CHUNK_TOKENS = 1 << 18  # token-axis chunk bound (tests shrink it)
-
-
-def _simhash64_batch(texts) -> "object":
-    """Vectorized SimHash over a pandas Series of texts — the streaming
-    hot path (round-4 verdict item: the per-element ``.map`` inside the
-    pandas UDF was the one per-row Python loop left in the tree).
-
-    Exactly the batch Catalyst semantics (textops.simhash64, asserted
-    bit-identical in tests/test_streaming.py): whitespace tokens, first
-    8 md5 bytes big-endian as the 64-bit token hash, ±1 votes per bit,
-    ties/token-less → 0.  Per token the only Python-level work is one C
-    hashlib call; the 64-bit vote matrix, per-doc segment sums, and
-    sign-bit packing are whole-array numpy ops
-    (``np.frombuffer('>u8')`` → bit unpack → ``add.reduceat`` →
-    shift-sum → int64 view), so cost scales with tokens, not
-    tokens × 64 Python iterations."""
-    import hashlib
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    out = np.zeros(len(texts), dtype=np.int64)
-    digests = []
-    starts = []  # first token index of each non-empty doc
-    rows = []  # its row position in `texts`
-    n_tok = 0
-    ws = re.compile(r"\s+")
-    md5 = hashlib.md5
-    for pos, text in enumerate(texts):
-        if not text:
-            continue
-        toks = [t for t in ws.split(text.strip()) if t != ""]
-        if not toks:
-            continue
-        starts.append(n_tok)
-        rows.append(pos)
-        n_tok += len(toks)
-        for t in toks:
-            digests.append(md5(t.encode("utf-8")).digest()[:8])
-    if not digests:
-        return pd.Series(out, index=texts.index)
-    h = np.frombuffer(b"".join(digests), dtype=">u8").astype(np.uint64)
-    shifts = np.arange(64, dtype=np.uint64)
-    starts_a = np.asarray(starts, dtype=np.intp)
-    rows_a = np.asarray(rows, dtype=np.intp)
-    # Chunk the token axis (on doc boundaries) so the bit-unpacked
-    # temporaries stay bounded: the signs matrix is tokens x 64 int32,
-    # ~64 MB per 256k tokens — without chunking a long-document Arrow
-    # batch (10k docs x 1k tokens) would materialize multi-GB
-    # temporaries in one shot (review finding r5).  Per-chunk cost is
-    # whole-array numpy exactly as before; only the peak changes.
-    CHUNK_TOKENS = _SIMHASH_CHUNK_TOKENS
-    doc_ends = np.append(starts_a[1:], n_tok)
-    votes_parts = []
-    d0 = 0
-    while d0 < len(starts_a):
-        d1 = d0
-        t_begin = starts_a[d0]
-        while d1 < len(starts_a) and doc_ends[d1] - t_begin <= CHUNK_TOKENS:
-            d1 += 1
-        d1 = max(d1, d0 + 1)  # a single doc longer than the chunk still processes
-        t_end = doc_ends[d1 - 1]
-        signs = (
-            (
-                (h[t_begin:t_end, None] >> shifts[None, :]) & np.uint64(1)
-            ).astype(np.int32)
-            * 2
-            - 1
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        e = int(epoch_id)
+        _write_epoch(
+            textops.nonblank_simhash64(batch_df).withColumn("epoch_id", F.lit(e)),
+            f"{out}/sigs",
         )
-        votes_parts.append(
-            np.add.reduceat(signs, starts_a[d0:d1] - t_begin, axis=0)
+        sigs = job.read_committed(spark, f"{out}/sigs", SIGS_DDL)
+        pairs = textops.simhash_block_pairs(
+            textops.simhash_blocks(sigs.where(F.col("epoch_id") == e), max_hamming),
+            textops.simhash_blocks(sigs.where(F.col("epoch_id") <= e), max_hamming),
+            max_hamming,
+            # a pair inside the batch once; one with an earlier doc always
+            (F.col("a") < F.col("b")) | ((F.col("epoch_id") < e) & (F.col("a") != F.col("b"))),
         )
-        d0 = d1
-    votes = np.concatenate(votes_parts, axis=0)
-    packed = (
-        ((votes > 0).astype(np.uint64) << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-    )
-    out[rows_a] = packed.view(np.int64)
-    return pd.Series(out, index=texts.index)
+        _write_epoch(pairs.withColumn("epoch_id", F.lit(e)), f"{out}/pairs")
 
-
-def stream_simhash_monitor(
-    spark: SparkSession,
-    input_path: str,
-    max_hamming: int = 3,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Incremental near-duplicate detection over a text-document stream
-    (TEXT_DOCS_SCHEMA): each arriving document is checked against the
-    corpus-so-far, emitting (doc_a, doc_b, hamming) the moment the
-    second member of a near-dup pair lands — the streaming counterpart
-    of textops.simhash_near_pairs, for ingestion pipelines that must
-    reject near-dups on arrival instead of at the next full-corpus
-    dedup pass.
-
-    Shape: vectorized SimHash (Arrow-batched pandas UDF whose body is
-    whole-array numpy — _simhash64_batch, exact mirror of the batch
-    Catalyst expression; the Catalyst form itself is a groupBy
-    aggregation + join, which would stack a second stateful operator
-    under this stream) → block-permutation explode (any
-    pair within Hamming k shares one of k+1 exact 16-bit blocks) →
-    ``applyInPandasWithState`` keyed by (block_id, block_val) whose
-    state is the bucket's (doc_id, simhash) list.  A new doc compares
-    against its bucket's stored signatures plus the batch's own — a
-    64-bit XOR popcount each, so verification cost is per-candidate,
-    never per-corpus.  State size is corpus × (k+1) entries of ~16
-    bytes (the signature IS the state — no text retained); at cluster
-    scale use the RocksDB provider.  A pathological bucket (thousands
-    of mutually-near docs) makes its task's compare loop quadratic —
-    the same degenerate case the batch self-join has; bound it upstream
-    with exact-dup removal if the corpus has mass-duplicated text.
-
-    The change log may repeat a pair discovered through several blocks;
-    ``simhash_pairs_view`` dedups.  Output mode must be ``update``."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    # no type hints: the module's postponed annotations (PEP 563) turn
-    # them into strings the UDF eval-type inference can't resolve;
-    # hint-less pandas_udf defaults to the scalar Series->Series type
-    @F.pandas_udf("long")
-    def simhash_udf(texts):
-        return _simhash64_batch(texts)
-
-    docs = spark.readStream.schema(TEXT_DOCS_SCHEMA)
-    if max_files_per_trigger is not None:
-        docs = docs.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # token-less docs carry no content evidence and all share the empty
-    # signature — exclude them from pairing, mirroring the batch
-    # simhash_near_pairs (a blank-doc flood would otherwise pair
-    # quadratically AND poison every bucket's state)
-    sig = (
-        docs.parquet(input_path)
-        .where(F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
-        .select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
-    )
-    n_blocks = max_hamming + 1
-    width = 64 // n_blocks
-    blocks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block_id"),
-                        F.shiftrightunsigned(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("block_val"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.block_id", "b.block_val")
-
-    out_type = StructType(
-        [
-            StructField("doc_a", LongType()),
-            StructField("doc_b", LongType()),
-            StructField("hamming", IntegerType()),
-        ]
-    )
-    state_type = StructType(
-        [StructField("members", StringType())]  # json [[doc_id, simhash]]
-    )
-    mask = (1 << 64) - 1
-
-    def _update(key, pdf_iter, state):
-        import json as _json
-
-        stored = _json.loads(state.get[0]) if state.exists else []
-        new = set()
-        for pdf in pdf_iter:
-            new.update(zip(pdf["doc_id"].tolist(), pdf["simhash"].tolist()))
-        new = sorted(new)
-        out = []
-        for i, (d1, s1) in enumerate(new):
-            for d2, s2 in stored + new[i + 1:]:
-                if d1 == d2:
-                    continue
-                h = ((s1 ^ s2) & mask).bit_count()
-                if h <= max_hamming:
-                    a, b = (d1, d2) if d1 < d2 else (d2, d1)
-                    out.append((a, b, h))
-        state.update((_json.dumps(stored + new),))
-        if out:
-            yield pd.DataFrame(out, columns=["doc_a", "doc_b", "hamming"])
-
-    return blocks.groupBy("block_id", "block_val").applyInPandasWithState(
-        _update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
-    )
+    return _process
 
 
 def stream_simhash_drain(
@@ -866,41 +612,26 @@ def stream_simhash_drain(
     max_hamming: int = 3,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain the near-dup monitor over the files currently present and
-    return the accumulated pair log (epoch_id, doc_a, doc_b, hamming) as
-    a batch DataFrame.  Same exactly-once sink shape as the RI tier."""
+    """Incremental near-duplicate detection over a text-document stream
+    (TEXT_DOCS_SCHEMA): drain the files currently present and return the
+    accumulated pair log (doc_a, doc_b, hamming, epoch_id) as a batch
+    DataFrame.  Each arriving document is checked against the
+    corpus-so-far (:func:`make_simhash_batch_processor`), so a pair is
+    logged at the drain where its second member lands — for ingestion
+    pipelines that reject near-dups on arrival instead of at the next
+    full-corpus dedup pass."""
     out = str(output_dir).rstrip("/")
-    pairs = stream_simhash_monitor(
-        spark, input_path, max_hamming, max_files_per_trigger
-    )
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(f"{out}/pairs")
-        )
-
-    q = (
-        pairs.writeStream.foreachBatch(_write)
-        .outputMode("update")
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not any(Path(f"{out}/pairs").rglob("*.parquet")):
-        return local_frame(spark, [], "doc_a BIGINT, doc_b BIGINT, hamming INT, epoch_id INT")
-    return spark.read.parquet(f"{out}/pairs")
+    _start(
+        _file_stream(spark, TEXT_DOCS_SCHEMA, input_path, max_files_per_trigger),
+        make_simhash_batch_processor(spark, out, max_hamming),
+        out,
+    ).awaitTermination()
+    return job.read_committed(spark, f"{out}/pairs", PAIRS_DDL)
 
 
 def simhash_pairs_view(pair_log: DataFrame) -> DataFrame:
-    """Distinct near-dup pairs from the change log (a pair can be
-    discovered through several shared blocks and therefore logged more
-    than once — same reason the batch implementation dropDuplicates
-    after its block join)."""
+    """Distinct near-dup pairs from the pair log (a pair is logged again
+    when one of its doc_ids lands again)."""
     return pair_log.select("doc_a", "doc_b", "hamming").dropDuplicates(
         ["doc_a", "doc_b"]
     )
@@ -928,7 +659,7 @@ def stream_events_hourly(
 
     Returns the streaming DataFrame; the caller picks sink + output mode
     (``append`` emits each window once, on finalization)."""
-    ev = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_path)
+    ev = _file_stream(spark, EVENTS_SCHEMA, input_path)
     return (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
@@ -963,19 +694,14 @@ def stream_events_hourly_drain(
     foreachBatch overwrite (idempotent: the last epoch's state is the
     full rollup)."""
     out = str(output_dir).rstrip("/")
-    rollup = stream_events_hourly(spark, input_path, watermark)
 
     def _write(batch_df: DataFrame, _epoch: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out}/rollup")
 
-    q = (
-        rollup.writeStream.foreachBatch(_write)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _start(
+        stream_events_hourly(spark, input_path, watermark), _write, out,
+        output_mode="complete",
+    ).awaitTermination()
     return spark.read.parquet(f"{out}/rollup")
 
 
@@ -990,15 +716,9 @@ def make_sketch_batch_processor(
 ):
     """foreachBatch body for on-arrival column-stats maintenance: sketch
     the epoch's files (one mergeable HLL+t-digest row per file+column,
-    gwv_spark.sketchstore) and append them to the store under
-    ``batch_id = epoch-<n>`` with dynamic partition overwrite — a
-    retried epoch overwrites its own partition, the same exactly-once
-    argument as the validation sinks (the epoch's file set is
-    checkpoint-fixed and the sketch rows are deterministic over it).
-
-    Extracted from the stream wiring so the retry property is testable
-    directly (tests/test_sketchstore.py re-invokes it with the same
-    epoch and asserts the store unchanged)."""
+    gwv_spark.sketchstore) into the store's ``batch_id=epoch-<n>``
+    partition through :func:`_write_epoch` (the epoch's file set is
+    checkpoint-fixed and the sketch rows are deterministic over it)."""
     from gwv_spark import sketchstore
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1008,12 +728,9 @@ def make_sketch_batch_processor(
             ),
             delta,
         )
-        (
-            sk.withColumn("batch_id", F.lit(f"epoch-{int(epoch_id)}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
+        _write_epoch(
+            sk.withColumn("batch_id", F.lit(f"epoch-{int(epoch_id)}")),
+            store_dir, "batch_id",
         )
 
     return _process
@@ -1028,7 +745,6 @@ def stream_sketch_store(
     p: int = 14,
     delta: float = 500.0,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
     processing_time: str | None = None,
 ):
     """Keep the column-stats sketch store current as files land: the
@@ -1036,22 +752,11 @@ def stream_sketch_store(
     stream lets the checkpoint's file index do that bookkeeping).  Full
     current stats at any moment = ``sketchstore.stats_from_store`` over
     the store — a fold of KB-sized rows, no data scan."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_sketch_batch_processor(store_dir, columns, p, delta)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", f"{store_dir}/_checkpoint")
+    return _start(
+        _file_stream(spark, schema, input_path, max_files_per_trigger),
+        make_sketch_batch_processor(store_dir, columns, p, delta),
+        str(store_dir).rstrip("/"), processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_sketch_drain(
@@ -1067,8 +772,7 @@ def stream_sketch_drain(
     full-table stats."""
     from gwv_spark import sketchstore
 
-    q = stream_sketch_store(
+    stream_sketch_store(
         spark, input_path, store_dir, schema, columns, p=p, delta=delta
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     return sketchstore.stats_from_store(spark, store_dir, delta=delta)

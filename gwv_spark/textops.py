@@ -364,6 +364,61 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
+def nonblank_simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """:func:`simhash64` of the documents that have a token.  Token-less
+    documents (null/empty/whitespace text) all hash to the same empty
+    signature, which carries no content evidence, so near-dup pairing
+    leaves them out (see :func:`simhash_near_pairs`)."""
+    nonblank = df.where(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "")
+    return simhash64(nonblank, text_col, id_col)
+
+
+def simhash_blocks(sig: DataFrame, max_hamming: int) -> DataFrame:
+    """One row per (signature row, block): the 64-bit ``simhash`` split
+    into ``max_hamming + 1`` blocks of ``64 // (max_hamming + 1)`` bits,
+    as (block_id, block_val) beside every column of ``sig``.  Any two
+    signatures within Hamming distance k share one exact block, so an
+    equi-join on (block_id, block_val) finds every candidate pair."""
+    n_blocks = max_hamming + 1
+    width = 64 // n_blocks
+    block = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("block_id"),
+                    F.shiftrightunsigned(F.col("simhash"), i * width)
+                    .bitwiseAND(F.lit((1 << width) - 1))
+                    .alias("block_val"),
+                )
+                for i in range(n_blocks)
+            ]
+        )
+    )
+    return sig.select("*", block.alias("b")).select(*sig.columns, "b.block_id", "b.block_val")
+
+
+def simhash_block_pairs(
+    a_blocks: DataFrame, b_blocks: DataFrame, max_hamming: int, keep: Column
+) -> DataFrame:
+    """Near-dup pairs (doc_a < doc_b, hamming), each once, from the
+    equi-join of two :func:`simhash_blocks` frames on (block_id,
+    block_val): the candidates that satisfy ``keep`` — over the left
+    doc id ``a``, the right doc id ``b`` and the other columns of
+    ``b_blocks`` — verified within ``max_hamming`` by one XOR popcount."""
+    a = a_blocks.select(
+        F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"), "block_id", "block_val"
+    )
+    b = b_blocks.withColumnRenamed("doc_id", "b").withColumnRenamed("simhash", "sh_b")
+    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return (
+        a.join(b, ["block_id", "block_val"])
+        .where(keep & (ham <= max_hamming))
+        .select(F.least("a", "b").alias("doc_a"), F.greatest("a", "b").alias("doc_b"),
+                ham.alias("hamming"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
 def simhash_near_pairs(
     df: DataFrame,
     max_hamming: int = 3,
@@ -376,12 +431,11 @@ def simhash_near_pairs(
     any pair within distance k shares at least one exact block, so the
     candidate join is an equi-join on (block_id, block_value).
 
-    Token-less documents (null/empty/whitespace text) are excluded from
-    pairing: they all hash to the same empty signature, which carries
-    no content evidence — including them would (a) declare every pair
-    of blank docs a near-dup and (b) blow the block join up to ~N²/2
-    candidate rows over the blank population.  Exact-dedup of blanks
-    belongs to exact_dup_groups, where identical text IS the claim.
+    Token-less documents are excluded (:func:`nonblank_simhash64`):
+    including them would declare every pair of blank docs a near-dup
+    and blow the block join up to ~N²/2 candidate rows over the blank
+    population.  Exact-dedup of blanks belongs to exact_dup_groups,
+    where identical text IS the claim.
 
     ``max_bucket`` is the boilerplate safety valve (the jaccard
     ``max_df`` stop-shingle cap's analogue, textops.py jaccard_pairs):
@@ -392,29 +446,7 @@ def simhash_near_pairs(
     reachable through its other k blocks unless those are equally
     degenerate.  None (default) preserves exact block-permutation
     semantics — the shipped oracle checks that form."""
-    nonblank = df.where(
-        F.trim(F.coalesce(F.col(text_col), F.lit(""))) != ""
-    )
-    sh = simhash64(nonblank, text_col, id_col)
-    n_blocks = max_hamming + 1
-    width = 64 // n_blocks
-    blocks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block_id"),
-                        F.shiftrightunsigned(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("block_val"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.block_id", "b.block_val")
+    blocks = simhash_blocks(nonblank_simhash64(df, text_col, id_col), max_hamming)
     if max_bucket is not None:
         sizes = blocks.groupBy("block_id", "block_val").agg(
             F.count(F.lit(1)).alias("_bn")
@@ -423,20 +455,7 @@ def simhash_near_pairs(
             blocks.join(F.broadcast(sizes.where(F.col("_bn") > max_bucket)),
                         ["block_id", "block_val"], "left_anti")
         )
-    a = blocks.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "block_id", "block_val"
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "block_id", "block_val"
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["block_id", "block_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .where(F.col("hamming") <= max_hamming)
-    )
+    return simhash_block_pairs(blocks, blocks, max_hamming, F.col("a") < F.col("b"))
 
 
 # ------------------------------------------- recall-vs-radius curve
@@ -463,12 +482,41 @@ def _nd_curve_docs(n_per_level: int) -> list[tuple]:
     return rows
 
 
+def _simhash64_py(text: str | None) -> int:
+    """Python mirror of :func:`simhash64` for the driver-side expected
+    table of :func:`ensure_neardup_curve`: whitespace tokens, md5 first
+    8 bytes big-endian as two 32-bit halves (bits 32-63 from the first
+    half), ±1 votes per bit, ties and token-less docs hash to 0.  Exact
+    equality with the Catalyst expression is asserted in
+    tests/test_streaming.py, so the two cannot drift silently."""
+    import hashlib
+    import re
+
+    if not text:
+        return 0
+    toks = [t for t in re.split(r"\s+", text.strip()) if t != ""]
+    votes = [0] * 64
+    for t in toks:
+        h = hashlib.md5(t.encode("utf-8")).hexdigest()
+        hi, lo = int(h[:8], 16), int(h[8:16], 16)
+        for i in range(32):
+            votes[i] += 1 if (lo >> i) & 1 else -1
+            votes[32 + i] += 1 if (hi >> i) & 1 else -1
+    val = 0
+    for i in range(63):
+        if votes[i] > 0:
+            val += 1 << i
+    if votes[63] > 0:
+        val -= 1 << 63
+    return val
+
+
 def ensure_neardup_curve(out_dir, n_per_level: int = 20, overwrite: bool = False):
     """Write nd_curve_docs.parquet (the planted gradient corpus) and
     nd_curve_expected.parquet — the recall-vs-radius operating curve
     computed DRIVER-SIDE from the Python SimHash mirror
-    (streaming._simhash64_py, independently asserted bit-identical to
-    the Catalyst expression): for each (max_hamming, n_edits) cell, the
+    (:func:`_simhash64_py`, asserted bit-identical to the Catalyst
+    expression): for each (max_hamming, n_edits) cell, the
     fraction of planted pairs within that Hamming radius.  Block
     permutation is lossless AT the radius (every pair with hamming ≤ k
     shares one of the k+1 exact blocks), so this expected table is the
@@ -485,8 +533,6 @@ def ensure_neardup_curve(out_dir, n_per_level: int = 20, overwrite: bool = False
     exp_path = out / "nd_curve_expected.parquet"
     if not overwrite and docs_path.exists() and exp_path.exists():
         return out
-    from gwv_spark.streaming import _simhash64_py
-
     rows = _nd_curve_docs(n_per_level)
     out.mkdir(parents=True, exist_ok=True)
     pq.write_table(

@@ -38,14 +38,33 @@ def test_ks_no_global_single_partition_sort(spark):
     assert plan.count("Exchange SinglePartition") <= 2
 
 
-def test_simhash_is_python_free(spark):
-    """SimHash must stay JVM-side (round 1 ran a per-row Python loop)."""
-    from gwv_spark import textops
+def test_simhash_is_python_free(spark, tmp_path, monkeypatch):
+    """SimHash must stay JVM-side (round 1 ran a per-row Python loop),
+    and so must the per-batch plans of the drift and near-dup stream
+    folds (they replaced Python state operators).  The fold bodies run
+    with the epoch write captured instead of executed, so each plan is
+    built but no job runs."""
+    from gwv_spark import streaming, textops
 
     df = spark.createDataFrame([("d1", "hello world")], "doc_id STRING, text STRING")
-    plan = _physical(textops.simhash64(df))
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
+    plans = [_physical(textops.simhash64(df))]
+    written = []
+    monkeypatch.setattr(streaming, "_write_epoch", lambda d, *a: written.append(d))
+    docs = spark.createDataFrame(
+        [("u4e00", None, 0.0, [("stroke", "1:0:0:10:10:90:90", None, 0)])],
+        streaming.DOCS_SCHEMA,
+    )
+    streaming.make_drift_batch_processor(
+        spark, str(tmp_path / "drift"), {("kind_freq", "stroke"): 1.0}
+    )(docs, 0)
+    texts = spark.createDataFrame([(1, "hello world")], "doc_id BIGINT, text STRING")
+    streaming.make_simhash_batch_processor(spark, str(tmp_path / "nd"))(texts, 0)
+    assert len(written) == 4  # counts + updates, sigs + pairs
+    plans += [_physical(d) for d in written]
+    for plan in plans:
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                       "FlatMapGroupsInPandasWithState"):
+            assert marker not in plan
 
 
 def test_no_cartesian_product_anywhere(spark):

@@ -253,6 +253,28 @@ def test_store_retry_is_idempotent(spark, table, tmp_path):
     assert inc["key"]["distinct_est"] == full["key"]["distinct_est"]
 
 
+def test_unreadable_store_raises(spark, table, tmp_path):
+    """An unreadable store fails the update.  Read as "nothing
+    sketched" it would re-sketch every file and append a second copy of
+    its rows; the store's files must be left as they were."""
+    import pathlib
+
+    data = str(tmp_path / "d")
+    store = pathlib.Path(tmp_path / "s")
+    table.write.parquet(data)
+    sketchstore.update_store(spark, data, str(store), ["key"])
+    garbage = next(store.glob("batch_id=*")) / "part-00000-garbage.parquet"
+    garbage.write_bytes(b"not a parquet file")
+
+    def tree():
+        return {str(p): p.stat().st_mtime_ns for p in store.rglob("*")}
+
+    before = tree()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        sketchstore.update_store(spark, data, str(store), ["key"])
+    assert tree() == before
+
+
 def test_stream_sketch_store_two_drops_and_retry(spark, table, tmp_path):
     """Streaming maintenance: land the table in two drops, drain after
     each — folded stats equal the one-shot sketch over everything

@@ -8,7 +8,11 @@
 2. validate_stream end-to-end: exactly-once per file (checkpoint), the
    streamed violations equal the batch engine's over the same docs, and
    appending a new file + re-draining processes ONLY the new docs.
-3. The watermarked streaming hourly rollup equals the batch rollup.
+3. The epoch-table folds (RI, drift, near-dup) equal their batch
+   functions over the corpus-so-far after every drain, and each fold
+   body is retry-idempotent: called twice with one (batch, epoch_id) it
+   leaves every table as one call does.
+4. The watermarked streaming hourly rollup equals the batch rollup.
 """
 
 from __future__ import annotations
@@ -133,7 +137,7 @@ def test_epoch_retry_is_idempotent(spark, corpus_df, tmp_path):
     process(part1, 0)
     process(part2, 1)
     before = {
-        sink: _rows(spark.read.parquet(str(out / sink)), drop=("wall_s",))
+        sink: _bag(spark.read.parquet(str(out / sink)), drop=("wall_s",))
         for sink in ("violations", "verdicts", "metrics")
     }
     assert before["violations"]  # non-trivial corpus
@@ -141,7 +145,7 @@ def test_epoch_retry_is_idempotent(spark, corpus_df, tmp_path):
     # the retry: epoch 1 re-delivered verbatim
     process(part2, 1)
     for sink in ("violations", "verdicts", "metrics"):
-        after = _rows(spark.read.parquet(str(out / sink)), drop=("wall_s",))
+        after = _bag(spark.read.parquet(str(out / sink)), drop=("wall_s",))
         assert after == before[sink], f"{sink} changed on epoch retry"
 
 
@@ -186,10 +190,10 @@ def test_validate_stream_rejects_empty_rule_list(spark, tmp_path):
 
 
 def test_stream_drift_monitor_matches_batch_psi(spark, corpus_df, tmp_path):
-    """The stateful running-PSI stream must converge to exactly the
-    batch snapshot_psi over the full corpus: state accumulates across
-    microbatches (maxFilesPerTrigger=1 forces one epoch per file), and a
-    second drain continues from checkpointed state."""
+    """The running-PSI fold must converge to exactly the batch
+    snapshot_psi over the full corpus: the counts table accumulates
+    across microbatches (maxFilesPerTrigger=1 forces one epoch per
+    file)."""
     from pyspark.sql.window import Window
 
     from gwv_spark import derive, stats
@@ -668,7 +672,7 @@ def test_three_tier_deployment_covers_full_suite(spark, corpus_df, tmp_path):
 
 
 def test_stream_simhash_near_dup_matches_batch(spark, tmp_path):
-    """Incremental near-dup detection: (1) the per-row Python SimHash
+    """Incremental near-dup detection: (1) the Python SimHash mirror
     must equal the batch Catalyst expression bit-for-bit (they cannot
     drift silently); (2) after landing the corpus in two drops, the
     deduped pair log equals the batch simhash_near_pairs over the full
@@ -677,12 +681,8 @@ def test_stream_simhash_near_dup_matches_batch(spark, tmp_path):
     import os
 
     from gwv_spark import textops
-    from gwv_spark.streaming import (
-        _simhash64_batch,
-        _simhash64_py,
-        simhash_pairs_view,
-        stream_simhash_drain,
-    )
+    from gwv_spark.streaming import simhash_pairs_view, stream_simhash_drain
+    from gwv_spark.textops import _simhash64_py
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
     path = f"{sf_dir}/documents.parquet"
@@ -694,31 +694,6 @@ def test_stream_simhash_near_dup_matches_batch(spark, tmp_path):
     local = df.collect()
     for r in local:
         assert _simhash64_py(r["text"]) == cat[r["doc_id"]], r["doc_id"]
-    # the vectorized streaming batch (r5: no per-element Python map)
-    # must ALSO be bit-identical — including blank/empty/None edge rows
-    import pandas as pd
-
-    texts = pd.Series([r["text"] for r in local] + ["", None, "   "])
-    vec = _simhash64_batch(texts)
-    for j, r in enumerate(local):
-        assert int(vec.iloc[j]) == cat[r["doc_id"]], r["doc_id"]
-    assert list(vec.iloc[-3:]) == [0, 0, 0]
-    # chunked token-axis path (r5 memory bound): force tiny chunks so
-    # doc groups split mid-series — including a single doc longer than
-    # the chunk — and assert bit-identity is unchanged
-    from gwv_spark import streaming as _st
-
-    saved = _st._SIMHASH_CHUNK_TOKENS
-    try:
-        _st._SIMHASH_CHUNK_TOKENS = 7
-        long_doc = " ".join(f"tok{i}" for i in range(50))
-        texts2 = pd.Series([r["text"] for r in local] + [long_doc])
-        vec2 = _simhash64_batch(texts2)
-        for j, r in enumerate(local):
-            assert int(vec2.iloc[j]) == cat[r["doc_id"]], r["doc_id"]
-        assert int(vec2.iloc[-1]) == _simhash64_py(long_doc)
-    finally:
-        _st._SIMHASH_CHUNK_TOKENS = saved
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -737,6 +712,123 @@ def test_stream_simhash_near_dup_matches_batch(spark, tmp_path):
         (F.col("epoch_id") >= 1) & (F.col("doc_a") % 2 != F.col("doc_b") % 2)
     )
     assert cross_late.count() > 0, "no cross-drop pair discovered on arrival"
+
+
+def _tables(spark, out):
+    """Every table under a fold's output dir (hidden ``_``/``.``
+    entries such as the checkpoint aside) as row multisets."""
+    return {
+        p.name: _bag(spark.read.parquet(str(p)))
+        for p in sorted(out.iterdir())
+        if not p.name.startswith(("_", "."))
+    }
+
+
+def test_stream_drift_epoch_retry_is_idempotent(spark, corpus_df, tmp_path):
+    """The drift fold body called twice with the same (batch, epoch_id)
+    — Spark's retry of an epoch that failed before its checkpoint
+    commit — leaves the counts and the PSI log exactly as one call
+    does."""
+    from gwv_spark.streaming import make_drift_batch_processor
+
+    out = tmp_path / "drift"
+    docs = corpus_df.select("doc_id", "related", "ts", "spans")
+    part1 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
+    part2 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
+    baseline = {("span_len_hist", "3"): 10.0, ("kind_freq", "stroke"): 20.0}
+    process = make_drift_batch_processor(spark, str(out), baseline)
+
+    process(part1, 0)
+    process(part2, 1)
+    before = _tables(spark, out)
+    assert set(before) == {"counts", "updates"}
+    assert len(before["updates"]) == 4  # two metrics x two epochs
+    process(part2, 1)
+    assert _tables(spark, out) == before
+
+
+_ND_BASE = "a long shared passage that makes these documents near dups " * 6
+_ND_ROWS = [
+    (1, _ND_BASE),
+    (2, _ND_BASE.replace("long", "lengthy")),
+    (3, "something else entirely about query engines " * 8),
+    (4, _ND_BASE.replace("shared", "common")),
+    (5, "   "),
+    (6, _ND_BASE.replace("passage", "excerpt")),
+]
+
+
+def test_stream_simhash_epoch_retry_is_idempotent(spark, tmp_path):
+    """The near-dup fold body called twice with the same (batch,
+    epoch_id) leaves the signatures and the pair log exactly as one call
+    does; the second batch's pairs include ones with a member of the
+    first."""
+    from gwv_spark.streaming import make_simhash_batch_processor
+
+    out = tmp_path / "nd"
+    df = spark.createDataFrame(_ND_ROWS, "doc_id BIGINT, text STRING")
+    process = make_simhash_batch_processor(spark, str(out), max_hamming=6)
+
+    process(df.where(F.col("doc_id") <= 3), 0)
+    process(df.where(F.col("doc_id") > 3), 1)
+    before = _tables(spark, out)
+    assert set(before) == {"sigs", "pairs"}
+    assert len(before["sigs"]) == 5  # the blank doc has no signature
+    late = [r for r in before["pairs"] if r[1] == "4"]  # (doc_a, doc_b, epoch_id, hamming)
+    assert any(r[0] in ("1", "2") for r in late), before["pairs"]
+    process(df.where(F.col("doc_id") > 3), 1)
+    assert _tables(spark, out) == before
+
+
+def test_drains_read_a_uri_output_dir(spark, tmp_path):
+    """A drain into an output dir given as a URI (``file://...``)
+    returns the same change log as one into the plain path: the log is
+    read through the Hadoop file system, not a local-path glob that
+    finds nothing under a URI and reports every violation resolved."""
+    from gwv_spark.streaming import stream_ri_drain, stream_simhash_drain
+
+    ri_land = tmp_path / "ri_land"
+    ri_land.mkdir()
+    _write_gdata_drop(spark, ri_land / "d1", [("u4e00", "99:0:0:10:10:90:90:u9999")])
+    nd_land = tmp_path / "nd_land"
+    nd_land.mkdir()
+    spark.createDataFrame(_ND_ROWS, "doc_id BIGINT, text STRING").coalesce(1).write.parquet(
+        str(nd_land / "d1")
+    )
+    for drain, land, kwargs in (
+        (stream_ri_drain, ri_land, {}),
+        (stream_simhash_drain, nd_land, {"max_hamming": 6}),
+    ):
+        plain = drain(spark, str(land / "*"), str(tmp_path / f"{land.name}_out"), **kwargs)
+        uri = drain(spark, str(land / "*"), f"file://{tmp_path}/{land.name}_uri", **kwargs)
+        assert _bag(plain), drain.__name__
+        assert _bag(uri) == _bag(plain), drain.__name__
+
+
+def test_processing_time_trigger_keeps_running(spark, tmp_path):
+    """``processing_time`` is the only trigger option: a query started
+    with an interval keeps running after it has processed everything
+    available, instead of draining and stopping."""
+    from gwv_spark.streaming import validate_stream
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    out = tmp_path / "out"
+    _write_gdata_drop(spark, landing / "d1", [("u4e00", "1:0:0:10:10:90:90")])
+    q = validate_stream(
+        spark, str(landing / "*"), str(out), rule_ids=["numexp"],
+        processing_time="1 second",
+    )
+    try:
+        q.processAllAvailable()
+        # a drain would stop right after its last batch; this one is
+        # still running 5 s later
+        assert not q.awaitTermination(5)
+        assert q.isActive
+    finally:
+        q.stop()
+    metrics = spark.read.parquet(str(out / "metrics"))
+    assert metrics.agg(F.sum("n_docs")).first()[0] == 1
 
 
 def test_stream_events_hourly_matches_batch(spark, tmp_path):
