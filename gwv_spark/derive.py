@@ -41,19 +41,11 @@ GOKAN_RANGES = [(0xF900, 0xFA6D), (0xFA70, 0xFAD9), (0x2F800, 0x2FA1D)]
 
 RE_IDS = r"^(?:u2ff[0-9a-f]|u31ef)-.+$"
 RE_UCS = r"^u([0-9a-f]{4,6})(?:-.+)?$"
-RE_UCS_EXACT = r"^u([0-9a-f]{4,6})$"
 RE_CDP = r"^(cdp[on]?)-([0-9a-f]{4})(?:-.+)?$"
 RE_KOSEKI = r"^koseki-([0-9]{6})$"
 RE_TOKI = r"^toki-([0-9]{8})$"
 RE_EXT = r"^irg(2015|2017|2021)-([0-9]{5})$"
 RE_BSH = r"^unstable-bsh-([0-9a-f]{4})$"
-
-
-def ucs_codepoint(name: Column) -> Column:
-    """Codepoint of an exact ``uXXXX[XX]`` name, else NULL
-    (get_ucs_codepoint, helper.py:64-71)."""
-    hexpart = F.regexp_extract(name, RE_UCS_EXACT, 1)
-    return F.when(hexpart != "", F.conv(hexpart, 16, 10).cast("long"))
 
 
 def _in_ranges(cp: Column, ranges: list[tuple[int, int]]) -> Column:

@@ -18,7 +18,6 @@ metrics row at that snapshot.
 
 from __future__ import annotations
 
-import json
 import time
 from functools import partial
 from pathlib import Path
@@ -249,7 +248,7 @@ def result_json(
     collected rows in driver memory.  The at-scale sink is the job path
     (job.py: executor-side partitioned parquet write); do not reach for
     this with a corpus-sized violations set."""
-    ids = rule_ids or ALL_RULE_IDS
+    ids = ALL_RULE_IDS if rule_ids is None else rule_ids
     out: dict = {
         rid: {
             "timestamp": timestamp,
@@ -265,9 +264,3 @@ def result_json(
         params = [decode_detail(d) for d in (r["detail"] or [])]
         res.setdefault(r["errcode"], []).append([r["doc_id"], *params])
     return out
-
-
-def write_result_json(result: dict, path: str | Path) -> None:
-    """Byte-compatible with the reference sink (gwv.py:43-44)."""
-    with open(path, "w") as f:
-        json.dump(result, f, separators=(",", ":"), sort_keys=True)

@@ -66,7 +66,6 @@ include resolve-by-append and new-dangling-by-append cases.
 from __future__ import annotations
 
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -430,7 +429,7 @@ def _initial_run(
     scoped = [r for r in scoped if r not in done]
     ctx = engine.make_context(
         spark, documents, attrs=attrs,
-        cache=(not args.no_cache) and bool(scoped),
+        cache=bool(scoped),
         ignore_error=args.ignore_error,
         resolve_entity=bool(scoped),
     )
@@ -455,7 +454,7 @@ def _initial_run(
         t0 = time.monotonic()
         _write_epoch(engine.run_rules(ctx, todo), vio_dir, snapshot)
         timings["__rules__"] = round(time.monotonic() - t0, 3)
-    if not args.no_cache and bool(scoped):
+    if scoped:
         ctx.docs.unpersist()
         ctx.spans.unpersist()
 
@@ -580,12 +579,11 @@ def _append_run(
         # read every document), complete set under the current epoch
         t0 = time.monotonic()
         ctx = engine.make_context(
-            spark, documents, attrs=attrs, cache=not args.no_cache,
+            spark, documents, attrs=attrs, cache=True,
             ignore_error=args.ignore_error, resolve_entity=True,
         )
         _clear_epochs(spark, vio_dir, scoped)
         _write_epoch(engine.run_rules(ctx, scoped), vio_dir, snapshot)
         timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
-        if not args.no_cache:
-            ctx.docs.unpersist()
-            ctx.spans.unpersist()
+        ctx.docs.unpersist()
+        ctx.spans.unpersist()

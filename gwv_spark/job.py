@@ -4,7 +4,8 @@ gwv_spark/job.py --input <docs> --output <dir> [...]``.
 Batch lifecycle (north rule):
 1. read the documents table (parquet path or Iceberg table name), pinned
    to its snapshot — or, with --as-of, to an earlier committed one;
-2. build the shared parsed context (cache unless --no-cache);
+2. build the shared parsed context, cached while any rule is left to
+   write;
 3. write each selected rule as its own Spark job, several in flight at
    once (engine.run_rules_concurrent), each overwriting its own
    ``<output>/violations/rule_id=<id>/`` directory — driver-side
@@ -82,22 +83,33 @@ def read_committed(spark, path: str, ddl: str):
     return spark.read.parquet(path)
 
 
+def check_rules(rules: list[str] | None) -> None:
+    """Fail fast, before any write, on a --rules list that is empty or
+    names an unknown rule id: a typo'd entry must not get a fabricated
+    metrics row, and ``--rules`` with no ids must not silently mean all
+    18.  ``None`` (no --rules at all) is the only spelling of "all"."""
+    from gwv_spark.rules import ALL_RULE_IDS
+
+    if rules is None:
+        return
+    if not rules:
+        raise SystemExit("--rules given with no rule ids (omit it to run all)")
+    unknown = [r for r in rules if r not in ALL_RULE_IDS]
+    if unknown:
+        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
+
+
 def begin_run(spark, args, snapshot: str) -> tuple[list[str], set[str]]:
     """The prologue both batch lifecycles share.  Returns the requested
-    rule ids and, under --resume, the ones already done at ``snapshot``
-    (they have a metrics row there).
+    rule ids (checked by :func:`check_rules`) and, under --resume, the
+    ones already done at ``snapshot`` (they have a metrics row there).
 
-    Fails fast on an unknown rule id — a typo'd --rules entry must not
-    get a fabricated metrics row — and on an output dir whose layout
-    record names the other lifecycle; a fresh dir is pinned to this
-    one."""
+    Fails fast on an output dir whose layout record names the other
+    lifecycle; a fresh dir is pinned to this one."""
     from gwv_spark.rules import ALL_RULE_IDS
     from gwv_spark.session import local_frame
 
-    rule_ids = args.rules or ALL_RULE_IDS
-    unknown = [r for r in rule_ids if r not in ALL_RULE_IDS]
-    if unknown:
-        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
+    rule_ids = ALL_RULE_IDS if args.rules is None else args.rules
 
     out = args.output.rstrip("/")
     layout = f"{out}/layout"
@@ -198,7 +210,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "are keyed by that snapshot — a historical run reproduces "
         "bit-identically.",
     )
-    p.add_argument("--no-cache", action="store_true")
     p.add_argument(
         "--sample",
         type=int,
@@ -226,6 +237,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "changes fail fast (gwv_spark.incremental).",
     )
     args = p.parse_args(argv)
+    check_rules(args.rules)
 
     # On a cluster the session comes fully configured from spark-submit
     # --conf; only job-agnostic settings are set here.
@@ -276,7 +288,7 @@ def run(args, spark) -> None:
         spark,
         documents,
         attrs=attrs,
-        cache=(not args.no_cache) and bool(todo),
+        cache=bool(todo),
         ignore_error=args.ignore_error,
         resolve_entity=bool(todo),
     )

@@ -1442,9 +1442,16 @@ def gwv_corner_q(spark, sf_dir):
     return v.select("doc_id", "errcode", params.alias("params"))
 
 
-@q(
-    "gwv_corpus_profile",
-    lambda sf: f"""
+def _profile_oracle(sf: str) -> str:
+    """DuckDB mirror of derive.prepare's category column: the kanji
+    ranges come from derive's own constants, as in _mj_oracle."""
+    from gwv_spark.derive import GOKAN_RANGES, TOGO_IN_COMPAT, TOGO_RANGES
+
+    def between(ranges):
+        return " OR ".join(f"(cp BETWEEN {lo} AND {hi})" for lo, hi in ranges)
+
+    compat = ",".join(str(x) for x in TOGO_IN_COMPAT)
+    return f"""
     WITH docs AS (SELECT * FROM {synth_docs_sql(sf)}),
     cat AS (
       SELECT doc_id, spans,
@@ -1452,9 +1459,9 @@ def gwv_corner_q(spark, sf_dir):
              WHEN regexp_matches(doc_id, '^(u2ff[0-9a-f]|u31ef)-.+$') THEN 'ids'
              WHEN regexp_matches(doc_id, '^u([0-9a-f]{{4,6}})(-.+)?$') THEN (
                CASE WHEN (
-                 {{TOGO}}
-                 OR cp IN ({{COMPAT}})
-                 OR (({{GOKAN}}) AND cp NOT IN ({{COMPAT}}))
+                 {between(TOGO_RANGES)}
+                 OR cp IN ({compat})
+                 OR (({between(GOKAN_RANGES)}) AND cp NOT IN ({compat}))
                ) THEN 'ucs-kanji' ELSE 'ucs-hikanji' END
              )
              WHEN regexp_matches(doc_id, '^(cdp[on]?)-([0-9a-f]{{4}})(-.+)?$') THEN 'cdp'
@@ -1475,21 +1482,10 @@ def gwv_corner_q(spark, sf_dir):
            SUM(len(spans))::BIGINT AS n_spans
     FROM cat
     GROUP BY category
-    """.replace("{TOGO}", " OR ".join(
-        f"(cp BETWEEN {lo} AND {hi})"
-        for lo, hi in [
-            (0x3400, 0x4DBF), (0x4E00, 0x9FFF), (0x20000, 0x2A6DF),
-            (0x2A700, 0x2B73F), (0x2B740, 0x2B81D), (0x2B820, 0x2CEAD),
-            (0x2CEB0, 0x2EBE0), (0x2EBF0, 0x2EE5D), (0x30000, 0x3134A),
-            (0x31350, 0x323AF), (0x323B0, 0x33479),
-        ]
-    )).replace("{COMPAT}", ",".join(str(x) for x in [0xFA0E, 0xFA0F, 0xFA11, 0xFA13, 0xFA14, 0xFA1F, 0xFA21, 0xFA23, 0xFA24, 0xFA27, 0xFA28, 0xFA29])).replace(
-        "{GOKAN}", " OR ".join(
-            f"(cp BETWEEN {lo} AND {hi})"
-            for lo, hi in [(0xF900, 0xFA6D), (0xFA70, 0xFAD9), (0x2F800, 0x2FA1D)]
-        )
-    ),
-)
+    """
+
+
+@q("gwv_corpus_profile", _profile_oracle)
 def gwv_corpus_profile(spark, sf_dir):
     from gwv_spark import derive
 

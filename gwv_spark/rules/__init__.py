@@ -84,10 +84,6 @@ def tag_s(c: Column) -> Column:
     return F.concat(F.lit("S"), c)
 
 
-def tag_i(c: Column) -> Column:
-    return F.concat(F.lit("I"), c.cast("string"))
-
-
 def tag_f(c: Column) -> Column:
     return F.concat(F.lit("F"), c.cast("double").cast("string"))
 
@@ -137,36 +133,6 @@ def decode_detail(elem: str):
         off, _, text = rest.partition(":")
         return [int(off), text]
     raise ValueError(f"unknown detail tag in {elem!r}")
-
-
-def entity_raw(ctx: RuleContext, df: DataFrame, name_col: str, out_col: str) -> DataFrame:
-    """dump.get_entity_name semantics (dump.py:59-61): the alias target
-    *string* (even if dangling) or the name itself; NULL if name_col is
-    not a doc.  Adds out_col and out_col+'_exists'."""
-    targets = ctx.docs.select(
-        F.col("doc_id").alias(name_col),
-        F.coalesce(F.col("entity_ref"), F.col("doc_id")).alias(out_col),
-    )
-    return df.join(targets, name_col, "left").withColumn(
-        out_col + "_exists", F.col(out_col).isNotNull()
-    )
-
-
-def entity_checked(ctx: RuleContext, df: DataFrame, out_col: str = "entity") -> DataFrame:
-    """ValidatorContext.entity semantics (validatorctx.py:32-37): the
-    alias target if it exists in the corpus, else the doc itself.  df must
-    carry doc_id/is_alias/entity_ref."""
-    existing = ctx.docs.select(F.col("doc_id").alias("__tgt"))
-    return (
-        df.join(existing, df["entity_ref"] == existing["__tgt"], "left")
-        .withColumn(
-            out_col,
-            F.when(F.col("__tgt").isNotNull(), F.col("entity_ref")).otherwise(
-                F.col("doc_id")
-            ),
-        )
-        .drop("__tgt")
-    )
 
 
 def load_all_rules() -> None:

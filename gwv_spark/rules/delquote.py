@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gwv_spark import parse
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gwv_spark import parse
 from gwv_spark.rules import RuleContext, rule, shape, tag_f, tag_line
 
 _PI = 3.141592653589793

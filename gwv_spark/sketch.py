@@ -253,83 +253,3 @@ def tdigest_quantiles(
         )
 
     return mid.repartition(1).mapInPandas(final, QUANTILE_SCHEMA)
-
-
-# ---------------------------------------------------------- grouped variant
-
-
-def tdigest_quantiles_by_group(
-    df: DataFrame,
-    key: str,
-    col: str,
-    quantiles: Sequence[float],
-    delta: float = 500.0,
-    max_keys_in_memory: int = 10_000,
-) -> DataFrame:
-    """Per-group quantile sketch: (key, q, value, n) rows.
-
-    The naive per-group quantile (``groupBy(key).applyInPandas`` over
-    raw rows) materializes each WHOLE group in one task — a scale-killer
-    when a group holds 10^9 rows.  This does it in two levels instead:
-
-      stage 1  mapInPandas builds one digest per key per partition
-               (memory O(keys_in_partition * delta); if a partition
-               sees more than ``max_keys_in_memory`` distinct keys the
-               dict is flushed early — extra digest rows, same result);
-      stage 2  groupBy(key).applyInPandas merges that key's partial
-               digests (<= n_partitions small rows per key, never raw
-               rows) and emits the quantiles.
-
-    The stage-2 shuffle moves digest rows: for K keys over P partitions
-    that is <= K*P kilobyte-rows regardless of data size, and a hot key
-    costs its merger task <= P digests, not its row count — group skew
-    cannot create a straggler."""
-    import pandas as pd
-
-    qs = [float(q) for q in quantiles]
-    grouped_schema = f"k string, {DIGEST_SCHEMA}"
-
-    def partials(batches: Iterable) -> Iterator:
-        digests: dict[str, Digest] = {}
-
-        def drain():
-            rows = []
-            for k, d in digests.items():
-                row = d.to_row()
-                if row is not None:
-                    rows.append({"k": k, **row})
-            digests.clear()
-            if rows:
-                yield pd.DataFrame(rows)
-
-        for pdf in batches:
-            v = pdf["v"].to_numpy(dtype="float64", na_value=np.nan)
-            keys = pdf["k"].astype("string")
-            for k, idx in keys.groupby(keys, sort=False).indices.items():
-                d = digests.get(k)
-                if d is None:
-                    d = digests[k] = Digest(delta)
-                d.add_values(v[idx])
-            if len(digests) > max_keys_in_memory:
-                yield from drain()
-        yield from drain()
-
-    src = df.select(
-        F.col(key).cast("string").alias("k"), F.col(col).cast("double").alias("v")
-    )
-    parts = src.mapInPandas(partials, grouped_schema)
-
-    out_schema = f"{key} string, q double, value double, n bigint"
-
-    def merge_group(pdf) -> "pd.DataFrame":
-        d = Digest(delta)
-        for means, weights, vmin, vmax, n in zip(
-            pdf["means"], pdf["weights"], pdf["vmin"], pdf["vmax"], pdf["n"]
-        ):
-            d.add_digest(np.asarray(means), np.asarray(weights), vmin, vmax, n)
-        vals = d.quantiles(qs)
-        return pd.DataFrame(
-            {key: pdf["k"].iloc[0], "q": qs, "value": vals, "n": int(d.n)}
-        )
-
-    return parts.groupBy("k").applyInPandas(merge_group, out_schema)

@@ -7,8 +7,9 @@ stats per append is a full scan of everything ever written; this module
 instead maintains a STORE of per-file sketch rows:
 
   - one row per (file, column): exact n / n_null / vmin / vmax, an HLL
-    register array (hll.py), and a t-digest centroid list (sketch.py) —
-    each a few KB regardless of file size;
+    register array (hll.py), a t-digest centroid list (sketch.py) and a
+    Misra-Gries heavy-hitter summary (:func:`mg_prune`) — each a few KB
+    regardless of file size;
   - ``update_store`` diffs the table's current file list against the
     store and sketches ONLY the new files (the Iceberg-manifest shape:
     appended snapshots add data files, existing files are immutable);
@@ -40,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gwv_spark import hll
-from gwv_spark.freq import mg_prune
 from gwv_spark.session import local_frame
 from gwv_spark.sketch import Digest
 
@@ -60,6 +60,16 @@ STATS_SCHEMA = (
 )
 
 _QS = (0.25, 0.50, 0.75)
+
+
+def mg_prune(acc, keep: int):
+    """Misra-Gries prune to ≤ keep counters: subtract the (keep+1)-th
+    largest weight from everything, drop non-positive.  Vectorized."""
+    if len(acc) <= keep:
+        return acc
+    delta = acc.nlargest(keep + 1).iloc[-1]
+    acc = acc - delta
+    return acc[acc > 0]
 
 
 def _norm_file(path: str) -> str:
@@ -114,7 +124,8 @@ def column_sketches(
     numpy/pandas op (hll.accumulate / Digest.add_values / value_counts).
 
     Heavy hitters: a Misra-Gries summary of ``mg_k`` counters per
-    (file, column) (freq.py's mergeable formulation).  Keys are
+    (file, column), merged as in Agarwal et al., "Mergeable
+    Summaries" (PODS 2012): sum the counters, prune once.  Keys are
     truncated to MG_VALUE_WIDTH chars JVM-side to bound the Arrow
     transfer — dominant-value reporting is a categorical question, and
     the truncation is applied identically everywhere so truncated keys

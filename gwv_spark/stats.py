@@ -161,21 +161,6 @@ def histogram(df: DataFrame, value: Column, bucket_width: float, group: Column |
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
-def psi(current: DataFrame, baseline: DataFrame, eps: float = 1e-6) -> DataFrame:
-    """Population Stability Index between two bucket histograms
-    (columns: bucket, n).  PSI = Σ (p-q)·ln(p/q) with ε-smoothing."""
-    c = current.select("bucket", F.col("n").alias("n_cur"))
-    b = baseline.select("bucket", F.col("n").alias("n_base"))
-    joined = c.join(b, "bucket", "full_outer").fillna(0, ["n_cur", "n_base"])
-    tot = joined.agg(
-        F.sum("n_cur").alias("tot_cur"), F.sum("n_base").alias("tot_base")
-    )
-    j = joined.crossJoin(F.broadcast(tot))
-    p = F.col("n_cur") / F.col("tot_cur") + eps
-    q = F.col("n_base") / F.col("tot_base") + eps
-    return j.agg(F.sum((p - q) * F.log(p / q)).alias("psi"))
-
-
 def psi_by_group(df: DataFrame, value: Column, group: Column, baseline_group: str, bucket_width: float, eps: float = 1e-4) -> DataFrame:
     """PSI of each group's value distribution vs a designated baseline
     group — the oracle-checkable drift query (deterministic buckets,

@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import sys
 from pathlib import Path
+from urllib.parse import urlsplit
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -84,6 +85,16 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     if args.compact_after is not None and args.continuous is not None:
         p.error("--compact-after is a drain-mode maintenance action; a "
                 "continuous stream would race its own epoch writes")
+    compact_base = None
+    if args.compact_after is not None:
+        # catalog.compact rewrites local directories: a file: URI is
+        # turned into its path, any other scheme is refused up front
+        # rather than silently left uncompacted
+        target = args.sketch or args.output
+        url = urlsplit(target)
+        if url.scheme not in ("", "file"):
+            p.error(f"--compact-after needs a local output dir, got {target}")
+        compact_base = Path(url.path if url.scheme else target)
     if args.ri and args.rules is not None:
         p.error("--ri runs the fixed delquote/delvar pair; --rules applies "
                 "only to doc-local validation")
@@ -100,12 +111,11 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         spark = SparkSession.builder.appName("gwv_spark-stream").getOrCreate()
 
     def _maybe_compact() -> None:
-        if args.compact_after is None:
+        if compact_base is None:
             return
         from gwv_spark import catalog
 
-        base = Path(args.sketch) if args.sketch else Path(args.output)
-        for sub in sorted(base.iterdir()) if base.is_dir() else []:
+        for sub in sorted(compact_base.iterdir()) if compact_base.is_dir() else []:
             # sinks only: checkpoints/underscore state stay untouched
             if sub.is_dir() and not sub.name.startswith(("_", ".")):
                 res = catalog.compact(

@@ -39,9 +39,6 @@ each keeps its state:
   store (gwv_spark.sketchstore), one ``batch_id=epoch-<n>`` partition
   per epoch, so the checkpoint's file index does the bookkeeping
   sketch_job's file diff does in batch mode.
-- **Hourly event rollup** (:func:`stream_events_hourly`) — the one
-  stream that is not a fold: Spark's own watermarked window
-  aggregation, whose state lives in the checkpoint's state store.
 
 The CORPUS-SCOPED rules (referential checks, corpus-existence probes
 such as j/ucsalias, global aggregations such as mustrenew, and width's
@@ -129,7 +126,6 @@ def _start(
     out: str,
     processing_time: str | None = None,
     name: str | None = None,
-    output_mode: str = "append",
 ):
     """Start ``body`` as the foreachBatch sink of ``stream``, checkpointed
     under ``<out>/_checkpoint``.  With ``processing_time=None`` the query
@@ -138,7 +134,6 @@ def _start(
     runs one microbatch per interval until stopped."""
     writer = (
         stream.writeStream.foreachBatch(body)
-        .outputMode(output_mode)
         .option("checkpointLocation", f"{out}/_checkpoint")
     )
     if name is not None:
@@ -172,7 +167,6 @@ def validate_stream(
     processing_time: str | None = None,
     max_files_per_trigger: int | None = None,
     n_buckets: int = 256,
-    allow_corpus_scoped: bool = False,
 ):
     """Start the streaming validation query; returns the StreamingQuery.
 
@@ -192,36 +186,21 @@ def validate_stream(
 
     ``processing_time=None`` drains everything not yet processed and
     stops — the incremental-batch shape (cron-style catch-up).  With an
-    interval it runs continuously.  Corpus-scoped rules are
-    rejected unless ``allow_corpus_scoped=True`` (their per-batch result
-    is relative to the batch, not the corpus — useful only for smoke
-    tests, so the misuse is an explicit opt-in, not a silent semantics
-    change)."""
+    interval it runs continuously.  Corpus-scoped rules are rejected:
+    their per-batch result is relative to the batch, not the corpus."""
     load_all_rules()
     rids = list(rule_ids) if rule_ids is not None else list(DOC_LOCAL_RULES)
     if not rids:
         raise ValueError("rule_ids is empty: select at least one rule")
-    if not allow_corpus_scoped:
-        scoped = [r for r in rids if r not in DOC_LOCAL_RULES]
-        if scoped:
-            raise ValueError(
-                f"corpus-scoped rules {scoped} are exact only over the whole "
-                "corpus — run them through gwv_spark.job --resume, or pass "
-                "allow_corpus_scoped=True if per-batch semantics are intended"
-            )
+    scoped = [r for r in rids if r not in DOC_LOCAL_RULES]
+    if scoped:
+        raise ValueError(
+            f"corpus-scoped rules {scoped} are exact only over the whole "
+            "corpus — run them through gwv_spark.job --resume"
+        )
     out = str(output_dir).rstrip("/")
-
-    # doc-local rules never read the entity columns, so the microbatch
-    # context skips the alias-dereference self join — the validation
-    # plans are then shuffle-free narrow maps over the landed files
-    # (only the verdict rollup still aggregates, by bucket).  With the
-    # corpus-scoped opt-in the join is kept.
-    all_local = all(r in DOC_LOCAL_RULES for r in rids)
     _process_batch = make_batch_processor(
-        spark, out, rids,
-        ignore_error=ignore_error,
-        n_buckets=n_buckets,
-        resolve_entity=not all_local,
+        spark, out, rids, ignore_error=ignore_error, n_buckets=n_buckets,
     )
 
     return _start(
@@ -236,20 +215,24 @@ def make_batch_processor(
     rids: list[str],
     ignore_error: bool = False,
     n_buckets: int = 256,
-    resolve_entity: bool = True,
 ):
     """The foreachBatch body of :func:`validate_stream`, exposed so the
     epoch-retry idempotency property is directly testable: calling the
     returned function twice with the SAME (batch, epoch_id) — what Spark
     does when an epoch fails after a partial sink write and is retried
     from the checkpoint — must leave the sinks exactly as one call
-    would."""
+    would.
+
+    Doc-local rules never read the entity columns, so the microbatch
+    context skips the alias-dereference self join: the validation plans
+    are shuffle-free narrow maps over the landed files (only the verdict
+    rollup still aggregates, by bucket)."""
 
     def _process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.monotonic()
         ctx = engine.make_context(
             spark, batch_df, cache=True, ignore_error=ignore_error,
-            resolve_entity=resolve_entity,
+            resolve_entity=False,
         )
         try:
             v = (
@@ -635,74 +618,6 @@ def simhash_pairs_view(pair_log: DataFrame) -> DataFrame:
     return pair_log.select("doc_a", "doc_b", "hamming").dropDuplicates(
         ["doc_a", "doc_b"]
     )
-
-
-# ---------------------------------------------------------------- events
-EVENTS_SCHEMA = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
-
-
-def stream_events_hourly(
-    spark: SparkSession,
-    input_path: str,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked streaming version of the batch events_hourly_rollup
-    (queries.py events_hourly): tumbling 1-hour event-time windows,
-    counts + sums per event_type.  The watermark bounds state: windows
-    older than max(event time) - watermark are finalized and evicted, so
-    state size is O(active windows × event types), independent of stream
-    length — late events inside the watermark still merge into their
-    window; beyond it they are dropped (the documented tradeoff).
-
-    Returns the streaming DataFrame; the caller picks sink + output mode
-    (``append`` emits each window once, on finalization)."""
-    ev = _file_stream(spark, EVENTS_SCHEMA, input_path)
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_events_hourly_drain(
-    spark: SparkSession,
-    input_path: str,
-    output_dir: str,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Drain the hourly rollup over all files currently in
-    ``input_path`` (availableNow) into ``<output>/rollup`` parquet and
-    return the result as a batch DataFrame.
-
-    Output mode ``append`` only emits windows the watermark has closed;
-    with a finite drain the trailing windows would be lost, so the drain
-    runs in ``complete`` mode into a memory-table-free parquet sink via
-    foreachBatch overwrite (idempotent: the last epoch's state is the
-    full rollup)."""
-    out = str(output_dir).rstrip("/")
-
-    def _write(batch_df: DataFrame, _epoch: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/rollup")
-
-    _start(
-        stream_events_hourly(spark, input_path, watermark), _write, out,
-        output_mode="complete",
-    ).awaitTermination()
-    return spark.read.parquet(f"{out}/rollup")
 
 
 # ------------------------------------------------------ sketch-store tier

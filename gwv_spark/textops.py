@@ -13,7 +13,7 @@ pair aggregation shuffled on (doc_a, doc_b).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
@@ -80,12 +80,6 @@ def token_quality_stats(
         + F.round(F.least(F.col("stopword_ratio") * 3, F.lit(0.3)), 6)
     )
     return ts.withColumn("quality", F.round(score, 6))
-
-
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic heuristic quality score in [0,1] (see
-    token_quality_stats)."""
-    return token_quality_stats(df, text_col, id_col).select("doc_id", "quality")
 
 
 def langid(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -127,89 +127,3 @@ def sample_violations(
         sampled["detail"],
         sampled["sortkey"],
     )
-
-
-def triage_summary(violations: DataFrame, k: int = 5) -> DataFrame:
-    """One row per (rule_id, errcode): total + K example doc_ids inline.
-
-    The collected form an alert body wants; still bounded at
-    #rules x #codes rows."""
-    s = sample_violations(violations, k=k, with_counts=True)
-    return s.groupBy("rule_id", "errcode", "n_total").agg(
-        F.sort_array(
-            F.collect_list(F.struct("sample_rank", "doc_id"))
-        ).alias("ranked"),
-    ).select(
-        "rule_id",
-        "errcode",
-        "n_total",
-        F.col("ranked.doc_id").alias("example_doc_ids"),
-    )
-
-
-# ---------------------------------------------------- generic sampler
-
-
-def sample_per_key(
-    df: DataFrame,
-    key_cols: list[str] | tuple[str, ...],
-    k: int = 10,
-    with_counts: bool = True,
-) -> DataFrame:
-    """K deterministic representative rows per key over ANY DataFrame —
-    the violations triage shape generalized into a corpus operator
-    (K example documents per language, per source, per dedup
-    component, ...).
-
-    priority = ``xxhash64`` over every column stringified with a NULL
-    sentinel (xxhash64 SKIPS raw NULL inputs, which would make distinct
-    rows tie and the winner partition-dependent — the same guard
-    ``_with_priority`` applies), so the sample is uniform-ish, RNG-free,
-    and invariant to input partitioning and row order; rows that tie on
-    priority have identical stringified content, so any winner carries
-    the same values.  Same two-level plan as ``sample_violations``:
-    zero-shuffle per-task top-K, then one window over ≤ P·keys·K
-    survivors — a hot key costs what a cold key costs.
-
-    NULL keys are first-class: a null language/source group is sampled
-    like any other (null-safe grouping and count join).  Unlike
-    ``sample_violations`` (whose key space is bounded at #rules×#codes),
-    the key cardinality here is arbitrary, so the count join is left to
-    AQE rather than forced broadcast.
-
-    Output: the input columns + ``sample_rank`` (1..k) +
-    ``n_total`` per key when ``with_counts``."""
-    keys = list(key_cols)
-    src = df.withColumn(
-        "priority",
-        F.xxhash64(
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                for c in df.columns
-            ]
-        ),
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for batch in batches:
-            if carry is not None:
-                batch = pd.concat([carry, batch], ignore_index=True)
-            batch = batch.sort_values(["priority"], kind="mergesort")
-            carry = batch.groupby(keys, sort=False, dropna=False).head(k)
-        if carry is not None and len(carry):
-            yield carry
-
-    survivors = src.mapInPandas(gen, schema=src.schema)
-    w = Window.partitionBy(*keys).orderBy("priority")
-    sampled = (
-        survivors.withColumn("sample_rank", F.row_number().over(w))
-        .where(F.col("sample_rank") <= k)
-        .drop("priority")
-    )
-    if not with_counts:
-        return sampled
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_total"))
-    cond = [sampled[c].eqNullSafe(counts[c]) for c in keys]
-    joined = sampled.join(counts, cond, "inner")
-    return joined.select(*[sampled[c] for c in sampled.columns], counts["n_total"])

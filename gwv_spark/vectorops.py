@@ -3,20 +3,17 @@
 Baseline: brute-force cosine top-k against a small probe set — the probe
 side is broadcast, the scan side stays partitioned, scoring is a native
 ``aggregate``/``zip_with`` fold in double precision (no Python).
-Scale paths: sign-LSH bucketing (random-hyperplane sketch) restricts
+Scale path: sign-LSH bucketing (random-hyperplane sketch) restricts
 the search to matching buckets — hyperplanes derived from md5 so the
-result is deterministic and oracle-reproducible — and an IVF index
-(spherical-k-means coarse quantizer trained on a bounded sample, one
-inverted-list id per vector, probes search nprobe lists) whose recall
-is measured against the brute-force ranking in tests/test_ivf.py.
+result is deterministic and oracle-reproducible.  The same buckets,
+OR-amplified over several plane families, drive the embedding
+near-duplicate join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from gwv_spark.session import local_frame
 
 
 def _dot(a, b):
@@ -156,269 +153,6 @@ def lsh_cosine_topk(
         "probe_vec",
     )
     joined = v.join(F.broadcast(p), "lsh_bucket").select(
-        "probe_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(
-            _dot(F.col(vec_col), F.col("probe_vec"))
-            / (_norm(F.col(vec_col)) * _norm(F.col("probe_vec"))),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "vec_id", "cosine", "rank")
-    )
-
-
-def ivf_train_centroids(
-    vectors: DataFrame,
-    dim: int,
-    n_lists: int = 64,
-    max_train: int = 262_144,
-    iters: int = 10,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Train the IVF coarse quantizer: spherical k-means on a BOUNDED
-    deterministic sample (the standard IVF design — FAISS trains its
-    quantizer on a sample too; at 10^12 vectors the sample stays
-    ~max_train rows, so the driver collect is size-capped by
-    construction, not by luck).  Returns an (n_lists, dim) float64
-    numpy array of L2-normalized centroids.
-
-    Determinism: the sample is the first ``max_train`` rows by id and
-    the k-means++-style seeding uses a fixed rng, so the same corpus
-    always yields the same centroids (oracle-reproducible)."""
-    import numpy as np
-
-    sample = (
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id")
-        .limit(max_train)
-        .toPandas()
-    )
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
-    if x.shape[0] < n_lists:
-        raise ValueError(f"need >= {n_lists} training vectors, got {x.shape[0]}")
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    # k-means++ seeding on the unit sphere (distance = 1 - cosine)
-    cent = [x[rng.integers(x.shape[0])]]
-    for _ in range(n_lists - 1):
-        d = 1.0 - np.max(np.stack([x @ c for c in cent]), axis=0)
-        d = np.clip(d, 1e-12, None)
-        cent.append(x[rng.choice(x.shape[0], p=d / d.sum())])
-    c = np.stack(cent)
-    for _ in range(iters):
-        assign = np.argmax(x @ c.T, axis=1)
-        for j in range(n_lists):
-            members = x[assign == j]
-            if members.shape[0]:
-                c[j] = members.mean(axis=0)
-        c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    return c
-
-
-def _ivf_assign_udf(centroids, top: int):
-    """Pandas UDF: per batch, one (B, dim) @ (dim, n_lists) matmul then
-    argmax/argsort — the whole assignment is two BLAS calls per Arrow
-    batch, no per-row Python."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    c_t = centroids.T.copy()
-
-    # NB: hint-less UDFs — PEP-563 string annotations (this module's
-    # `from __future__ import annotations`) break pandas_udf eval-type
-    # inference (same pitfall as streaming.py's SimHash UDF)
-    if top == 1:
-
-        def assign(v):
-            if len(v) == 0:
-                return pd.Series([], dtype="int32")
-            x = np.stack(v.to_numpy()).astype(np.float64, copy=False)
-            return pd.Series(np.argmax(x @ c_t, axis=1).astype("int32"))
-
-        return pandas_udf(assign, "int")
-
-    def assign_top(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        x = np.stack(v.to_numpy()).astype(np.float64, copy=False)
-        order = np.argsort(-(x @ c_t), axis=1)[:, :top].astype("int32")
-        return pd.Series(list(order))
-
-    return pandas_udf(assign_top, "array<int>")
-
-
-def ivf_assign(
-    vectors: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    out_col: str = "ivf_list",
-) -> DataFrame:
-    """Attach each vector's inverted-list id (nearest centroid by
-    cosine).  At 10^12 vectors this column is the partitioning/bucketing
-    key of the stored index: a probe reads nprobe list partitions, never
-    the table."""
-    return vectors.withColumn(out_col, _ivf_assign_udf(centroids, 1)(F.col(vec_col)))
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    probes: DataFrame,
-    centroids,
-    k: int = 10,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """IVF approximate top-k: each probe searches only its ``nprobe``
-    nearest inverted lists, exact cosine ranks within them.
-
-    Plan shape: vectors get ONE list id (pandas-UDF matmul), probes
-    explode to nprobe list ids, the candidate set is a broadcast
-    equi-join on the list id — the scan side never shuffles and the
-    fraction of the table scored is ~nprobe/n_lists.  Recall is
-    measured, not assumed: tests/test_ivf.py asserts >= 0.9 vs the
-    brute-force ranking on the shipped embeddings."""
-    v = ivf_assign(vectors, centroids, vec_col)
-    p = probes.select(
-        F.col(probe_id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    ).withColumn("lists", _ivf_assign_udf(centroids, nprobe)(F.col("probe_vec")))
-    p = p.select("probe_id", "probe_vec", F.explode("lists").alias("ivf_list"))
-    joined = v.join(F.broadcast(p), "ivf_list").select(
-        "probe_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(
-            _dot(F.col(vec_col), F.col("probe_vec"))
-            / (_norm(F.col(vec_col)) * _norm(F.col("probe_vec"))),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "vec_id", "cosine", "rank")
-    )
-
-
-def write_ivf_index(
-    vectors: DataFrame,
-    centroids,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: the vector table written partitioned
-    by inverted-list id.  This is what makes IVF the SCALE path — a
-    probe's nprobe lists become parquet partition directories, so the
-    scan reads nprobe/n_lists of the table via partition pruning
-    (asserted on the plan in tests/test_ivf.py), not via a post-scan
-    filter.
-
-    partitionOverwriteMode is forced to ``static`` here: the session
-    default is dynamic (session.py), under which a retrain that maps a
-    list id to zero vectors would silently KEEP the old quantizer's
-    files for that list — stale mis-routed vectors coexisting with the
-    new ``_centroids``.  A rebuild must truncate the whole index, which
-    is also the contract load_ivf_centroids's recovery story assumes."""
-    ivf_assign(vectors, centroids, vec_col).write.partitionBy(
-        "ivf_list"
-    ).mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
-    _write_ivf_centroids(vectors.sparkSession, centroids, path)
-
-
-def _write_ivf_centroids(spark, centroids, path: str) -> None:
-    """Persist the quantizer beside its index (under ``_centroids``,
-    underscore-invisible to the index scan).  The centroids ARE the
-    index's identity: probing or appending with a retrained quantizer
-    would silently mis-route vectors, so a fresh session must load
-    these rather than retrain."""
-    import numpy as np
-
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(np.asarray(centroids))]
-    local_frame(spark, rows, "list_id int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/_centroids")
-
-
-def load_ivf_centroids(spark, path: str):
-    """The stored index's quantizer as the (n_lists, dim) numpy array
-    every probe/append API takes.
-
-    A missing quantizer means an interrupted ``write_ivf_index`` (the
-    static overwrite truncates the whole path — data AND old quantizer —
-    before either is rewritten, so a crash mid-rebuild leaves neither
-    trustworthy).  The only sound recovery is re-running the rebuild;
-    fail with that instruction rather than a bare path error."""
-    import numpy as np
-
-    try:
-        rows = spark.read.parquet(f"{path}/_centroids").orderBy("list_id").collect()
-    except Exception as e:
-        raise ValueError(
-            f"IVF index at {path!r} has no quantizer ({e.__class__.__name__}) "
-            f"- likely an interrupted write_ivf_index; the data files are "
-            f"equally untrustworthy after a partial static overwrite, so "
-            f"re-run write_ivf_index to rebuild"
-        ) from e
-    return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids=None,
-    vec_col: str = "embedding",
-) -> None:
-    """Fold newly-arrived vectors into a stored IVF index WITHOUT
-    rebuilding: assign against the index's own persisted quantizer and
-    append into the list partitions.  The per-append cost is the new
-    vectors' assignment + write — never a rebuild of the table — and
-    probe-side partition pruning is unaffected (appended files land
-    inside their list directories).  The IVF trade-off is the standard
-    one: list sizes drift as the corpus distribution does; retrain +
-    write_ivf_index when recall degrades."""
-    spark = new_vectors.sparkSession
-    if centroids is None:
-        centroids = load_ivf_centroids(spark, path)
-    ivf_assign(new_vectors, centroids, vec_col).write.partitionBy(
-        "ivf_list"
-    ).mode("append").parquet(path)
-
-
-def indexed_ivf_topk(
-    spark,
-    index_path: str,
-    probes: DataFrame,
-    centroids,
-    k: int = 10,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """Top-k against a stored IVF index with STATIC partition pruning:
-    the probes' nprobe list ids are computed up front (probes are small
-    by contract — the same boundedness cosine_topk's broadcast relies
-    on), deduped, and pushed into the scan as an IN partition filter;
-    only those list directories are read."""
-    import numpy as np
-
-    p = probes.select(
-        F.col(probe_id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    ).withColumn("lists", _ivf_assign_udf(centroids, nprobe)(F.col("probe_vec")))
-    p = p.select("probe_id", "probe_vec", F.explode("lists").alias("ivf_list"))
-    wanted = sorted({int(r["ivf_list"]) for r in p.select("ivf_list").distinct().collect()})
-    index = spark.read.parquet(index_path).where(F.col("ivf_list").isin(wanted))
-    joined = index.join(F.broadcast(p), "ivf_list").select(
         "probe_id",
         F.col(id_col).alias("vec_id"),
         F.round(

@@ -76,6 +76,33 @@ def test_job_rejects_unknown_rule_ids(spark, tmp_path):
         )
 
 
+def test_job_rejects_empty_rules_before_any_write(spark, tmp_path):
+    """``--rules`` with no ids is a mistake, not "all 18 rules": both
+    lifecycles refuse it before the snapshot manifest or any output is
+    written.  result_json likewise reads only None as "all"."""
+    import pytest
+
+    from gwv_spark import engine
+    from gwv_spark.rules import ALL_RULE_IDS
+
+    data_dir = ensure_corpus(tmp_path / "corpus", 20)
+
+    def tree():
+        return sorted(str(p) for p in tmp_path.rglob("*"))
+
+    before = tree()
+    for extra in ([], ["--incremental"]):
+        with pytest.raises(SystemExit, match="no rule ids"):
+            job.main(
+                ["--input", str(data_dir / "documents.parquet"),
+                 "--output", str(tmp_path / "out"), "--rules", *extra],
+                spark=spark,
+            )
+    assert tree() == before
+    assert engine.result_json([], rule_ids=[]) == {}
+    assert list(engine.result_json([])) == ALL_RULE_IDS
+
+
 def test_job_concurrent_mode_matches_fused(spark, tmp_path):
     """The job's per-rule writes (one Spark job per rule, several in
     flight, each overwriting its own rule_id=<id> directory) must read

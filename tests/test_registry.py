@@ -7,7 +7,9 @@ correctness window — VERDICT r2 item 1).  These tests pin:
 - the registry never exceeds the driver's 50-entry window;
 - every oracle-bearing query got a row in the newest CORRECTNESS file
   (so a future registry edit can't silently un-check a query);
-- every oracle SQL string is well-formed DuckDB (parses + plans).
+- every oracle SQL string is well-formed DuckDB (parses + plans);
+- the corpus-profile oracle, built from derive's kanji constants, is
+  byte-identical to the literal SQL it replaced.
 
 Without the vendored reference the corner oracle (an expected table the
 reference computes) cannot be built: the corner test skips and the
@@ -56,6 +58,23 @@ def test_every_oracle_query_in_latest_correctness_record():
     stale_ok = registered - recorded
     hard_missing = [n for n in missing if n not in stale_ok]
     assert not hard_missing, f"driver never checked: {hard_missing}"
+
+
+def test_corpus_profile_oracle_is_byte_identical():
+    """gwv_corpus_profile's oracle builds its kanji ranges from
+    derive.TOGO_RANGES / GOKAN_RANGES / TOGO_IN_COMPAT; the SQL text must
+    stay byte-identical to the literal copy it replaced (sha256 of that
+    text with the docs path factored out)."""
+    import hashlib
+
+    from gwv_spark import queries as Q
+
+    sf = "/data/sf0.01"
+    sql = Q.REGISTRY["gwv_corpus_profile"].oracle_fn(sf)
+    sql = sql.replace(Q.synth_docs_sql(sf), "DOCS")
+    assert hashlib.sha256(sql.encode()).hexdigest() == (
+        "1a47bc02cdfc67b65246bf914b5c09cfb25c8daff861e81d1ab5230625bc78a5"
+    )
 
 
 def test_corner_expected_table_matches_engine(spark):

@@ -103,39 +103,3 @@ def test_tdigest_plan_shuffles_digests_not_rows(spark):
     below_stage1 = plan[plan.rfind("MapInPandas"):]
     assert "Exchange" not in below_stage1
     assert "Sort" not in below_stage1
-
-
-def test_spark_grouped_tdigest_accuracy(spark):
-    rng = np.random.default_rng(3)
-    groups = {"a": rng.lognormal(3.0, 1.0, 40_000),
-              "b": rng.normal(100.0, 15.0, 60_000),
-              "c": rng.exponential(50.0, 20_000)}
-    rows = [(k, float(v)) for k, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "k string, v double").repartition(16)
-    qs = [0.1, 0.5, 0.9]
-    out = sketch.tdigest_quantiles_by_group(df, "k", "v", qs, delta=300.0)
-    got = {(r["k"], r["q"]): r for r in out.collect()}
-    assert len(got) == 9
-    for k, data in groups.items():
-        est = np.array([got[(k, q)]["value"] for q in qs])
-        errs = _rank_errors(data, qs, est)
-        assert errs.max() <= 0.01, (k, errs)
-        assert got[(k, 0.5)]["n"] == len(data)
-
-
-def test_spark_grouped_tdigest_early_flush_path(spark):
-    """max_keys_in_memory below the distinct-key count forces the
-    stage-1 dict drain mid-partition — more digest rows, same answer."""
-    rng = np.random.default_rng(4)
-    rows = [(f"k{i % 5}", float(v)) for i, v in enumerate(rng.normal(0, 1, 30_000))]
-    df = spark.createDataFrame(rows, "k string, v double").repartition(8)
-    out = sketch.tdigest_quantiles_by_group(
-        df, "k", "v", [0.5], delta=300.0, max_keys_in_memory=2
-    ).collect()
-    assert len(out) == 5
-    per_key = {r["k"]: r for r in out}
-    data = {k: np.array([v for kk, v in rows if kk == k]) for k in per_key}
-    for k, r in per_key.items():
-        assert r["n"] == len(data[k])
-        errs = _rank_errors(data[k], [0.5], np.array([r["value"]]))
-        assert errs.max() <= 0.01

@@ -12,7 +12,6 @@
    functions over the corpus-so-far after every drain, and each fold
    body is retry-idempotent: called twice with one (batch, epoch_id) it
    leaves every table as one call does.
-4. The watermarked streaming hourly rollup equals the batch rollup.
 """
 
 from __future__ import annotations
@@ -131,9 +130,7 @@ def test_epoch_retry_is_idempotent(spark, corpus_df, tmp_path):
     part1 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
     part2 = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
 
-    process = make_batch_processor(
-        spark, str(out), list(DOC_LOCAL_RULES), resolve_entity=False
-    )
+    process = make_batch_processor(spark, str(out), list(DOC_LOCAL_RULES))
     process(part1, 0)
     process(part2, 1)
     before = {
@@ -831,28 +828,6 @@ def test_processing_time_trigger_keeps_running(spark, tmp_path):
     assert metrics.agg(F.sum("n_docs")).first()[0] == 1
 
 
-def test_stream_events_hourly_matches_batch(spark, tmp_path):
-    import os
-
-    from gwv_spark import queries as Q
-    from gwv_spark.streaming import stream_events_hourly_drain
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    events_path = f"{sf_dir}/events.parquet"
-    if not os.path.exists(events_path):
-        pytest.skip("testdata not available")
-
-    # the file stream source requires a DIRECTORY of files
-    landing = tmp_path / "events"
-    landing.mkdir()
-    os.symlink(events_path, landing / "events-000.parquet")
-    streamed = stream_events_hourly_drain(
-        spark, str(landing), str(tmp_path / "roll")
-    )
-    batch = Q.REGISTRY["events_hourly_rollup"].spark_fn(spark, sf_dir)
-    assert _rows(streamed) == _rows(batch)
-
-
 def test_stream_job_compact_after_drain(spark, corpus_df, tmp_path):
     """--compact-after: two drops produce per-epoch small files in every
     sink; the post-drain maintenance bin-packs them per partition leaf
@@ -897,3 +872,46 @@ def test_stream_job_compact_after_drain(spark, corpus_df, tmp_path):
             argv + ["--compact-after", "1024", "--continuous", "1 second"],
             spark=spark,
         )
+
+
+def test_stream_job_compact_after_uri_output(spark, corpus_df, tmp_path):
+    """--compact-after on an output dir given as a ``file://`` URI
+    compacts exactly as on the plain path (it used to list nothing and
+    compact nothing); any other scheme is refused before the stream
+    starts."""
+    from gwv_spark import stream_job
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    docs = corpus_df.select("doc_id", "related", "ts", "spans").limit(200)
+    # three files: three scan tasks, so each sink leaf gets several
+    # small files for the compaction to merge
+    docs.repartition(3).write.parquet(str(landing / "d1"))
+    argv = ["--input", str(landing / "*"), "--rules", "numexp", "order"]
+
+    def file_counts(out):
+        return {
+            sub.name: len(list(sub.rglob("*.parquet")))
+            for sub in out.iterdir()
+            if not sub.name.startswith(("_", "."))
+        }
+
+    counts = {}
+    for name, spell, extra in (
+        ("raw", str, []),
+        ("plain", str, ["--compact-after", str(1 << 30)]),
+        ("uri", lambda p: p.as_uri(), ["--compact-after", str(1 << 30)]),
+    ):
+        out = tmp_path / name
+        stream_job.main(argv + ["--output", spell(out), *extra], spark=spark)
+        counts[name] = file_counts(out)
+    assert counts["plain"] != counts["raw"]  # compaction did happen
+    assert counts["uri"] == counts["plain"]
+
+    with pytest.raises(SystemExit):
+        stream_job.main(
+            argv + ["--output", "hdfs://namenode:8020/gwv/out",
+                    "--compact-after", "1024"],
+            spark=spark,
+        )
+    assert not spark.streams.active

@@ -118,103 +118,6 @@ def test_stage1_is_shuffle_free(spark, violations):
     assert not any("Exchange" in ln for ln in below), "\n".join(below)
 
 
-def test_summary_shape(spark, violations):
-    s = triage.triage_summary(violations, k=3).toPandas()
-    assert set(s.columns) == {"rule_id", "errcode", "n_total", "example_doc_ids"}
-    assert (s["example_doc_ids"].map(len) <= 3).all()
-    assert (s["example_doc_ids"].map(len) >= 1).all()
-    # one row per (rule, errcode), totals match the violations table
-    v = violations.groupBy("rule_id", "errcode").count().toPandas()
-    assert len(s) == len(v)
-
-
-# ---------------------------------------------------- generic sampler
-
-
-def test_sample_per_key_deterministic_and_bounded(spark):
-    """The generic corpus sampler: partitioning-invariant content,
-    exactly min(k, group size) rows per key, counts exact."""
-    from gwv_spark import triage
-
-    df = spark.range(5000).select(
-        (F.col("id") % 7).cast("string").alias("lang"),
-        F.concat(F.lit("doc"), F.col("id").cast("string")).alias("doc_id"),
-    )
-    a = sorted(
-        (r["lang"], r["sample_rank"], r["doc_id"], r["n_total"])
-        for r in triage.sample_per_key(df.repartition(1), ["lang"], k=5).collect()
-    )
-    b = sorted(
-        (r["lang"], r["sample_rank"], r["doc_id"], r["n_total"])
-        for r in triage.sample_per_key(df.repartition(23), ["lang"], k=5).collect()
-    )
-    assert a == b
-    per_key = {}
-    for lang, rank, _, n_total in a:
-        per_key.setdefault(lang, []).append(rank)
-        assert n_total in (714, 715)
-    assert set(per_key) == {str(i) for i in range(7)}
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_key.values())
-
-    # a key smaller than k degrades to "all of it, fully ranked"
-    small = spark.createDataFrame(
-        [("x", "a"), ("x", "b"), ("y", "c")], "g string, v string"
-    )
-    got = sorted(
-        (r["g"], r["sample_rank"])
-        for r in triage.sample_per_key(small, ["g"], k=10).collect()
-    )
-    assert got == [("x", 1), ("x", 2), ("y", 1)]
-
-
-def test_sample_per_key_no_exchange_below_stage1(spark):
-    from gwv_spark import triage
-
-    df = spark.range(2000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        F.col("id").cast("string").alias("v"),
-    )
-    plan = (
-        triage.sample_per_key(df, ["g"], k=3, with_counts=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    pos = plan.rfind("MapInPandas")
-    assert pos != -1
-    assert "Exchange" not in plan[pos:], plan
-
-
-def test_sample_per_key_null_keys_and_null_cells(spark):
-    """Review regressions: (a) a NULL key is a real group and must be
-    sampled + counted, not dropped by pandas groupby / an equi-join;
-    (b) NULL cells must not make distinct rows hash-tie (xxhash64 skips
-    raw NULLs), which would make the winner partition-dependent."""
-    from gwv_spark import triage
-
-    df = spark.createDataFrame(
-        [("en", "a", None), ("en", None, "b"), (None, "c", "x"),
-         (None, "d", None), (None, None, "e")],
-        "lang string, u string, v string",
-    )
-    def rows_of(parts):
-        return sorted(
-            (
-                (r["lang"] or "", r["sample_rank"], r["u"] or "", r["v"] or "",
-                 r["n_total"], r["lang"] is None)
-            )
-            for r in triage.sample_per_key(
-                df.repartition(parts), ["lang"], k=10
-            ).collect()
-        )
-
-    a = rows_of(1)
-    b = rows_of(5)
-    assert a == b
-    null_rows = [r for r in a if r[5]]
-    assert len(null_rows) == 3 and all(r[4] == 3 for r in null_rows)
-    en_rows = [r for r in a if r[0] == "en"]
-    assert len(en_rows) == 2 and all(r[4] == 2 for r in en_rows)
-
-
 def test_sample_violations_null_errcode_sampled_and_counted(spark):
     """Review regression: a NULL errcode group was counted by stage-2
     but dropped by stage-1's pandas groupby — counted yet unsampled."""
