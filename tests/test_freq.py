@@ -1,10 +1,17 @@
-"""Misra-Gries frequent-items sketch (gwv_spark/freq.py).
+"""Misra-Gries frequent items: the sketch store's heavy-hitter tier.
+
+The one Misra-Gries implementation is the per-column summary the sketch
+store keeps (``sketchstore.column_sketches`` stage 1, folded by
+``sketchstore.merged_column_stats``); ``test_sketchstore.py`` covers it
+through the store's write/fold lifecycle, this module holds the summary
+itself to the guarantees of Agarwal et al., "Mergeable Summaries"
+(PODS 2012).
 
 Correctness model: exact value counts computed driver-side over the
 same data are the reference; the sketch must satisfy its certified
-bounds — count_lo ≤ true ≤ count_lo + error_bound for every reported
-item, error_bound ≤ n/(k+1), and every item with true count above the
-bound present in the merged summary — under every partitioning (the
+bounds — weight ≤ true ≤ weight + top_error_bound for every reported
+item, top_error_bound ≤ n/(k+1), and every item with true count above
+the bound present in the merged summary — under every partitioning (the
 weights may vary with partitioning; the guarantees may not).
 """
 
@@ -16,7 +23,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from gwv_spark import freq
+from gwv_spark import sketchstore
 
 
 def zipf_values(n=20000, n_items=400, seed=7):
@@ -24,6 +31,14 @@ def zipf_values(n=20000, n_items=400, seed=7):
     items = [f"item{i:04d}" for i in range(n_items)]
     weights = [1.0 / (i + 1) for i in range(n_items)]
     return rng.choices(items, weights=weights, k=n)
+
+
+def heavy_hitters(df, col, k):
+    """(ordered [(item, weight)], error bound, non-null n) of one column."""
+    sk = sketchstore.column_sketches(df, [col], mg_k=k)
+    (r,) = sketchstore.merged_column_stats(sk, mg_k=k).collect()
+    items = list(zip(r["top_items"], r["top_weights"]))
+    return items, r["top_error_bound"], r["n"] - r["n_null"]
 
 
 @pytest.fixture(scope="module")
@@ -37,20 +52,16 @@ def zipf(spark):
 def test_bounds_hold_under_any_partitioning(spark, zipf, parts):
     df, truth = zipf
     k = 50
-    summary = freq.merged_summary(
-        freq.partition_sketches(df.repartition(parts), "val", k), k
-    )
-    rows = summary.collect()
+    items, eb, n_val = heavy_hitters(df.repartition(parts), "val", k)
     n = sum(truth.values())
-    assert rows, "summary must not be empty"
-    eb = rows[0]["error_bound"]
+    assert items, "summary must not be empty"
+    assert n_val == n
     assert 0 <= eb <= n / (k + 1)
-    for r in rows:
-        true = truth[r["item"]]
-        assert r["count_lo"] <= true <= r["count_hi"], (r["item"], r["count_lo"], true)
-        assert r["n_total"] == n
+    for item, w in items:
+        true = truth[item]
+        assert w <= true <= w + eb, (item, w, true)
     # completeness: every item heavier than the bound is in the summary
-    reported = {r["item"] for r in rows}
+    reported = {item for item, _ in items}
     for item, c in truth.items():
         if c > eb:
             assert item in reported, (item, c, eb)
@@ -58,13 +69,12 @@ def test_bounds_hold_under_any_partitioning(spark, zipf, parts):
 
 def test_exact_when_distinct_fits(spark):
     """No prune ever fires when distinct values ≤ k: the sketch IS the
-    exact count table, error_bound == 0."""
+    exact count table, error bound == 0."""
     vals = [f"v{i % 10}" for i in range(1000)]
     df = spark.createDataFrame([(v,) for v in vals], "val string").repartition(5)
-    rows = freq.frequent_items(df, "val", k=16).collect()
-    truth = Counter(vals)
-    assert {r["item"]: r["count_lo"] for r in rows} == dict(truth)
-    assert all(r["error_bound"] == 0 for r in rows)
+    items, eb, _ = heavy_hitters(df, "val", 16)
+    assert dict(items) == dict(Counter(vals))
+    assert eb == 0
 
 
 def test_planted_heavy_hitter_rank_one(spark):
@@ -73,177 +83,58 @@ def test_planted_heavy_hitter_rank_one(spark):
     rng = random.Random(13)
     vals = ["HOT" if rng.random() < 0.2 else f"cold{rng.randrange(5000)}" for _ in range(30000)]
     df = spark.createDataFrame([(v,) for v in vals], "val string").repartition(8)
-    rows = freq.frequent_items(df, "val", k=50, top=5).collect()
-    assert rows[0]["item"] == "HOT"
+    items, eb, _ = heavy_hitters(df, "val", 50)
+    assert items[0][0] == "HOT"
     truth = Counter(vals)
-    assert rows[0]["count_lo"] <= truth["HOT"] <= rows[0]["count_hi"]
-    assert rows[0]["count_lo"] > rows[1]["count_hi"]
+    assert items[0][1] <= truth["HOT"] <= items[0][1] + eb
+    assert items[0][1] > items[1][1] + eb
 
 
 def test_nulls_excluded(spark):
     df = spark.createDataFrame(
         [("a",), (None,), ("a",), (None,), ("b",)], "val string"
     )
-    rows = freq.frequent_items(df, "val", k=8).collect()
-    assert {r["item"]: r["count_lo"] for r in rows} == {"a": 2, "b": 1}
-    assert rows[0]["n_total"] == 3  # nulls are not part of n
+    items, eb, n_val = heavy_hitters(df, "val", 8)
+    assert dict(items) == {"a": 2, "b": 1}
+    assert n_val == 3  # nulls are not part of n
+    assert eb == 0
 
 
 def test_non_string_column_casts(spark):
     df = spark.range(0, 1000).select((F.col("id") % 7).alias("m"))
-    rows = freq.frequent_items(df, "m", k=16).collect()
-    assert {r["item"] for r in rows} == {str(i) for i in range(7)}
-    assert all(r["count_lo"] in (142, 143) for r in rows)
+    items, _, _ = heavy_hitters(df, "m", 16)
+    assert {item for item, _ in items} == {str(i) for i in range(7)}
+    assert all(w in (142, 143) for _, w in items)
 
 
 def test_stage1_no_shuffle(spark, zipf):
     df, _ = zipf
     plan = (
-        freq.partition_sketches(df, "val", 32)
+        sketchstore.column_sketches(df, ["val"], mg_k=32)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan
 
 
 def test_stage1_emits_bounded_rows(spark):
-    """Each task emits at most k item rows + 1 sentinel even over a
-    high-cardinality column (the working-set prune fires)."""
+    """Each task emits one sketch row per column, carrying its exact row
+    count and at most k counters even over a high-cardinality column
+    (the working-set prune fires)."""
     df = spark.range(0, 50000).select(
         F.concat(F.lit("u"), (F.col("id") % 9000).cast("string")).alias("val")
     ).repartition(3)
     k = 20
-    sk = freq.partition_sketches(df, "val", k)
+    sk = sketchstore.column_sketches(df, ["val"], mg_k=k)
     per_task = (
         sk.groupBy(F.spark_partition_id().alias("pid"))
         .agg(
-            F.sum(F.col("item").isNotNull().cast("int")).alias("items"),
-            F.sum(F.col("item").isNull().cast("int")).alias("sentinels"),
+            F.max(F.size("mg_items")).alias("items"),
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("n").alias("n"),
         )
         .collect()
     )
+    assert sum(r["n"] for r in per_task) == 50000
     for r in per_task:
         assert r["items"] <= k
-        assert r["sentinels"] == 1
-
-
-@pytest.mark.parametrize("flush_cap", [10_000, 1])
-def test_by_group_bounds_and_planted_hitters(spark, flush_cap):
-    """Per-group sandwich + per-group planted dominants, with the
-    early-flush path (flush_cap=1) producing extra partial rows but the
-    same guarantees."""
-    rng = random.Random(99)
-    rows = []
-    for g, hot, share in (("en", "wiki", 0.3), ("de", "news", 0.25), ("fr", "blog", 0.4)):
-        for _ in range(8000):
-            v = hot if rng.random() < share else f"cold{rng.randrange(2000)}"
-            rows.append((g, v))
-    df = spark.createDataFrame(rows, "lang string, source string").repartition(7)
-    truth = {}
-    for g, v in rows:
-        truth[(g, v)] = truth.get((g, v), 0) + 1
-    out = freq.frequent_items_by_group(
-        df, "lang", "source", k=40, max_keys_in_memory=flush_cap
-    ).collect()
-    by_group = {}
-    for r in out:
-        by_group.setdefault(r["lang"], []).append(r)
-    assert set(by_group) == {"en", "de", "fr"}
-    for g, hot in (("en", "wiki"), ("de", "news"), ("fr", "blog")):
-        rs = sorted(by_group[g], key=lambda r: r["rank"])
-        assert rs[0]["item"] == hot
-        for r in rs:
-            true = truth[(g, r["item"])]
-            assert r["count_lo"] <= true <= r["count_hi"], (g, r["item"])
-            assert r["n_group"] == 8000
-            assert 0 <= r["error_bound"] <= 8000 / 41
-
-
-def test_by_group_exact_low_cardinality(spark):
-    df = spark.range(6000).select(
-        (F.col("id") % 2).cast("string").alias("g"),
-        (F.col("id") % 3).cast("string").alias("v"),
-    ).repartition(5)
-    out = freq.frequent_items_by_group(df, "g", "v", k=16).collect()
-    assert all(r["error_bound"] == 0.0 for r in out)
-    got = {(r["g"], r["item"]): r["count_lo"] for r in out}
-    assert got == {(str(g), str(v)): 1000 for g in range(2) for v in range(3)}
-
-
-def test_by_group_stage2_moves_summaries_not_rows(spark):
-    """The only Exchange input is the stage-1 MapInPandas output —
-    group skew cannot send raw rows to a merger task."""
-    df = spark.range(20_000).select(
-        F.lit("hot").alias("g"), (F.col("id") % 50).cast("string").alias("v")
-    )
-    plan = (
-        freq.frequent_items_by_group(df, "g", "v", k=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    import re as _re
-
-    ex = plan.find("Exchange")
-    assert ex != -1
-    below_exchange = plan[ex:]
-    assert "MapInPandas" in below_exchange, plan
-
-
-def test_by_group_null_key_is_a_real_group(spark):
-    """Review regression: the NULL group key (e.g. language undetected)
-    must be summarized, not dropped by pandas groupby's dropna."""
-    df = spark.createDataFrame(
-        [(None, "x"), (None, "x"), (None, "y"), ("g", "z")],
-        "k string, v string",
-    )
-    out = freq.frequent_items_by_group(df, "k", "v", k=8).collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r["k"], {})[r["item"]] = r["count_lo"]
-    assert by_key.get(None) == {"x": 2, "y": 1}
-    assert by_key.get("g") == {"z": 1}
-    assert all(r["n_group"] == (3 if r["k"] is None else 1) for r in out)
-
-
-def test_by_group_near_uniform_group_emits_sentinel(spark):
-    """Review regression: a group whose MG summary prunes to empty
-    (near-uniform counts) must still appear — item=NULL, rank=0, with
-    its n_group and bound — not vanish."""
-    rows = [("u", f"unique{i}") for i in range(300)] + [("g", "dom")] * 50
-    df = spark.createDataFrame(rows, "k string, v string").repartition(4)
-    out = freq.frequent_items_by_group(df, "k", "v", k=8).collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r["k"], []).append(r)
-    assert "g" in by_key and by_key["g"][0]["item"] == "dom"
-    assert "u" in by_key, "near-uniform group must not vanish"
-    u = by_key["u"]
-    if u[0]["item"] is None:  # fully pruned → sentinel contract
-        assert u[0]["rank"] == 0 and u[0]["n_group"] == 300
-        assert u[0]["error_bound"] > 0
-    else:  # partial survival is fine too — bounds must hold
-        assert all(r["count_lo"] <= 1 for r in u)
-
-
-def test_merge_k_is_stamped_and_validated(spark, zipf):
-    """ADVICE r4 regression: a merge-side k larger than the stage-1
-    prune k would certify a bound the prunes never guaranteed.  The
-    prune k is now stamped on every sketch row; omitting k at merge
-    uses the stamp, and an oversized explicit k raises instead of
-    silently producing an invalid sandwich."""
-    df, truth = zipf
-    k = 50
-    sk = freq.partition_sketches(df.repartition(4), "val", k)
-    # default: k read from the stamp — identical bound to explicit k
-    auto = {r["item"]: r for r in freq.merged_summary(sk).collect()}
-    expl = {r["item"]: r for r in freq.merged_summary(sk, k).collect()}
-    assert auto.keys() == expl.keys()
-    any_item = next(iter(auto))
-    assert auto[any_item]["error_bound"] == expl[any_item]["error_bound"]
-    # merge-side k above the prune k: loud failure
-    with pytest.raises(ValueError, match="exceeds the smallest"):
-        freq.merged_summary(sk, k + 1).collect()
-    # smaller merge-side k is sound (larger bound) and allowed
-    smaller = freq.merged_summary(sk, k - 10).collect()
-    n = sum(truth.values())
-    for r in smaller:
-        assert r["count_lo"] <= truth[r["item"]] <= r["count_hi"]
-        assert r["error_bound"] <= n / (k - 10 + 1)
+        assert r["rows"] == 1
