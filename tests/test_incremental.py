@@ -12,6 +12,8 @@ Non-append input changes must fail fast, never silently fold.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -23,19 +25,21 @@ RULES = ["numexp", "order", "skew", "delquote", "delvar", "mustrenew", "ucsalias
 
 
 def vio_set(spark, path):
+    """The violation rows under ``path`` as a multiset (a Counter), so
+    a double-counted row is a difference — the exceptAll identity."""
     try:
         df = spark.read.parquet(str(path))
     except Exception:
         # a violation-free run writes no partition at all — the empty
         # set IS the result (mirrors job.py's read-back fallback)
-        return set()
-    return {
+        return Counter()
+    return Counter(
         (r["rule_id"], r["errcode"], r["doc_id"],
          tuple(r["detail"] or []), r["sortkey"])
         for r in df.select(
             "rule_id", "errcode", "doc_id", "detail", "sortkey"
         ).collect()
-    }
+    )
 
 
 def classic_full(spark, tmp_path, corpus, tag):
@@ -225,7 +229,9 @@ def test_uncovered_rule_gets_full_evaluation(spark, tmp_path):
     pq.write_table(table.slice(240, 60), corpus / "part-001.parquet")
     job.main(["--input", str(corpus), "--output", str(out),
               "--rules", "order", "--incremental"], spark=spark)
-    got = {r for r in vio_set(spark, out / "violations") if r[0] == "order"}
+    got = Counter(
+        {r: n for r, n in vio_set(spark, out / "violations").items() if r[0] == "order"}
+    )
     ref_out = tmp_path / "classic"
     job.main(["--input", str(corpus), "--output", str(ref_out),
               "--rules", "order"], spark=spark)
@@ -375,3 +381,4 @@ def test_unreadable_runs_log_raises(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet"):
         job.main(args, spark=spark)
     assert tree() == before
+
