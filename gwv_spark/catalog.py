@@ -14,11 +14,12 @@ contract:
   deterministic content fingerprint over (path, size, mtime) of the
   data files — any rewrite changes it, so the metrics rows --resume
   reads, keyed by it, can never mix state across corpus versions;
-- ``commit_snapshot`` / ``snapshots`` / ``load_snapshot`` — a manifest
-  log under ``<table>/_snapshots`` (underscore-prefixed: invisible to
-  Spark's file index) recording each snapshot id's exact data-file
-  list, so any pinned snapshot can be re-read AS OF its commit even
-  after later appends — Iceberg time travel on the parquet surrogate.
+- ``commit_snapshot`` / ``snapshots`` / ``manifest_files`` /
+  ``load_snapshot`` — a manifest log under ``<table>/_snapshots``
+  (underscore-prefixed: invisible to Spark's file index) recording each
+  snapshot id's exact data-file list, so any pinned snapshot can be
+  re-read AS OF its commit even after later appends — Iceberg time
+  travel on the parquet surrogate.
   Manifest files are named by the snapshot id, so committing the same
   state twice is a no-op (idempotent, like a --resume rerun).
 """
@@ -183,23 +184,30 @@ def snapshots(ref: str) -> list[dict]:
     return sorted(recs, key=lambda r: r["committed_at"])
 
 
+def manifest_files(ref: str, sid: str) -> list[str]:
+    """The data files (plain paths) committed snapshot ``sid`` of a
+    parquet table recorded; ValueError naming the known snapshots if it
+    has no manifest."""
+    path = _manifest_dir(ref) / f"{sid}.json"
+    if not path.exists():
+        known = [r["snapshot_id"] for r in snapshots(ref)]
+        raise ValueError(f"no snapshot manifest {sid!r} for {ref!r}; known: {known}")
+    return json.loads(path.read_text())["files"]
+
+
 def load_snapshot(spark: SparkSession, ref: str, sid: str) -> DataFrame:
     """Read a parquet table AS OF a committed snapshot: exactly the
     manifest's file list, regardless of files appended since.  Fails
     fast if a manifest file has been deleted (the same contract as
     Iceberg time travel after a vacuum)."""
-    path = _manifest_dir(ref) / f"{sid}.json"
-    if not path.exists():
-        known = [r["snapshot_id"] for r in snapshots(ref)]
-        raise ValueError(f"no snapshot manifest {sid!r} for {ref!r}; known: {known}")
-    rec = json.loads(path.read_text())
-    missing = [f for f in rec["files"] if not Path(f).exists()]
+    files = manifest_files(ref, sid)
+    missing = [f for f in files if not Path(f).exists()]
     if missing:
         raise ValueError(
             f"snapshot {sid} references {len(missing)} deleted data file(s), "
             f"e.g. {missing[0]}"
         )
-    return spark.read.parquet(*rec["files"])
+    return spark.read.parquet(*files)
 
 
 def _leaf_dirs(ref: str) -> list[Path]:

@@ -8,31 +8,51 @@ mints a new snapshot.  Recomputing the whole corpus per append — what
 ``--resume`` correctly does in the classic job, because a new snapshot
 has no metrics rows yet — wastes ~90% of that work on documents whose
 verdicts cannot have changed.  This module makes the append the unit of
-work:
+work.
 
-- **Document-local rules** (streaming.DOC_LOCAL_RULES — violations
-  provably depend only on the document's own columns, the
-  split-invariance property tested in tests/test_streaming.py):
-  validate ONLY the appended files (snapshot-manifest diff,
-  catalog.commit_snapshot/snapshots) and keep prior epochs' violations
-  in place.  Violations are hive-partitioned by
-  ``rule_id=<r>/epoch=<snapshot>``: each epoch's partition holds the
-  delta discovered at that snapshot, their union is the full set, and
-  dynamic partition overwrite of the current epoch makes a retried
-  append idempotent — the same exactly-once argument as the streaming
-  sink (streaming.py epoch partitions).  An epoch whose snapshot the
-  runs log never committed (an append that died before its runs row)
-  is deleted before the next delta write, which covers its documents
-  again.
+Violations are hive-partitioned by ``rule_id=<r>/epoch=<snapshot>``;
+the union of a rule's epochs is its full set.  Every run builds ONE
+plan: a step per requested rule that ``--resume`` has not already done,
+decided from the last runs row ("prev"; "covered" = in prev's rule set;
+"changed" = no prev, or a new snapshot):
 
-- **Referential rules** (delquote/delvar — pure existence checks,
-  reference delquote.py:22-30 / delvar.py:30-44): maintained by a
-  RETRACTION FOLD over a persisted state table — the one incremental RI
-  algorithm, also driven per microbatch by the streaming RI tier
-  (streaming.start_ri_stream).  ``ri_state`` holds the outstanding
-  dangling-reference cores (rule_id, doc_id, key, part_full) — the
-  violation row PLUS its join key, so no stored row ever needs
-  re-parsing.  One step (:func:`ri_fold_step`) over the arrived docs:
+=====================  ======================  =========================
+rule class             covered, not changed    changed
+=====================  ======================  =========================
+doc-local              skip                    **delta** if covered,
+(DOC_LOCAL_RULES)                              else **full**
+RI (delquote, delvar)  skip                    **fold** if
+                                               ``ri_state/epoch=<prev>``
+                                               exists, else **full**
+other corpus-scoped    skip                    **full**
+=====================  ======================  =========================
+
+A rule neither covered nor changed gets **full**.
+
+- **delta** — document-local rules (violations provably depend only on
+  the document's own columns, the split-invariance property tested in
+  tests/test_streaming.py) validate ONLY the appended files (the
+  snapshot-manifest diff, catalog.manifest_files) and keep prior epochs
+  in place.  Dynamic partition overwrite of the current epoch makes a
+  retried append idempotent — the same exactly-once argument as the
+  streaming sink.  An epoch whose snapshot the runs log never committed
+  (an append that died before its runs row) is deleted first; this
+  delta covers its documents again.
+- **full** — the rules share one context over the whole corpus (the
+  entity join only when a non-RI corpus-scoped rule is among them);
+  every epoch of theirs is cleared and the complete set written under
+  the current epoch.
+- **RI** — delquote/delvar (pure existence checks, reference
+  delquote.py:22-30 / delvar.py:30-44) always write the shaped state at
+  the current snapshot; only its source differs.  Full: the corpus-wide
+  anti join (:func:`ri_cores_full`).  Fold: one step of the RETRACTION
+  FOLD over the state the previous snapshot persisted — the one
+  incremental RI algorithm, also driven per microbatch by the streaming
+  RI tier (streaming.start_ri_stream).  ``ri_state`` holds the
+  outstanding dangling-reference cores (rule_id, doc_id, key,
+  part_full) — the violation row PLUS its join key, so no stored row
+  ever needs re-parsing.  One step (:func:`ri_fold_step`) over the
+  arrived docs:
 
       retracts = state_prev  SEMI  broadcast(arrived keys)
       kept     = state_prev  ANTI  broadcast(arrived keys)
@@ -45,22 +65,20 @@ work:
   Append-only input means keys are never removed, so a kept row stays
   dangling without re-checking; the ONE corpus-scale scan (`matched`)
   is a column-pruned map-side pass over doc_id with a broadcast-tiny
-  build side — no corpus shuffle anywhere in the fold, versus the full
-  run's corpus-wide anti join.  The fold's violations replace the RI
-  rules' whole partition set (their current epoch holds the COMPLETE
-  set), and the shaped rows go through the rules' own
-  ``shape_missing`` projections so the two paths cannot drift.
+  build side — no corpus shuffle anywhere in the fold.  The state is
+  written, read back, and shaped through the rules' own
+  ``shape_missing`` projections (the two paths cannot drift) into the
+  rules' only epoch.
 
-- **Remaining corpus-scoped rules** (alias dereference, corpus
-  existence probes, global aggregations — j, ucsalias, mustrenew, …):
-  recomputed over the full corpus, complete set under the current
-  epoch.  Their verdicts genuinely depend on every document; they are
-  also the cheap minority of the suite (the geometry-heavy rules are
-  all document-local).
+Coverage: an append records exactly the requested rules and clears the
+epochs of the ones it dropped; a same-snapshot run records prev ∪
+requested, and only when a requested rule was outside prev.
 
 Row-identity with a from-scratch run is asserted both ways
-(tests/test_incremental.py exceptAll) across multi-append chains that
-include resolve-by-append and new-dangling-by-append cases.
+(tests/test_incremental.py, as multisets) across multi-append chains
+that include resolve-by-append and new-dangling-by-append cases, and
+after a crash at every write of an append
+(tests/test_incremental_crash.py).
 """
 
 from __future__ import annotations
@@ -280,18 +298,53 @@ def _clear_epochs(
 # ------------------------------------------------------------- lifecycle
 
 
-def run(args, spark: SparkSession) -> None:
-    """The --incremental lifecycle (dispatched from job.main).
-
-    First run on an output dir = the full-cost baseline (every rule
-    over the whole corpus, RI state initialized); every later run
-    validates the manifest diff as described in the module docstring.
-    Non-append changes (removed/rewritten files — e.g. a compaction)
-    fail fast with instructions, never silently validate a diff that
-    isn't one."""
+def _appended_files(ref: str, prev_sid: str, sid: str) -> list[str]:
+    """The files snapshot ``sid`` holds beyond snapshot ``prev_sid``:
+    the diff of their two manifests (both plain paths).  Anything but a
+    pure append fails fast with instructions, never silently validates
+    a diff that isn't one."""
     from gwv_spark import catalog
+
+    try:
+        prev_files = set(catalog.manifest_files(ref, prev_sid))
+    except ValueError:
+        raise SystemExit(
+            f"prior run snapshot {prev_sid} has no manifest under "
+            f"{ref}; run a fresh full validation (new output dir)"
+        )
+    new_files = set(catalog.manifest_files(ref, sid))
+    removed = prev_files - new_files
+    if removed:
+        raise SystemExit(
+            f"{len(removed)} file(s) from the prior snapshot are gone "
+            f"(e.g. {sorted(removed)[0]}) — not an append; incremental "
+            "folds are only sound over append-only input.  Run a full "
+            "validation (fresh output dir or classic job)."
+        )
+    # same names is not enough: an in-place rewrite (compaction, manual
+    # fix-up) keeps the path but changes content.  Hash the prior
+    # manifest's files AS THEY EXIST NOW — equality with the prior
+    # snapshot id proves the pre-append corpus is untouched.
+    if catalog.fingerprint_files(prev_files) != prev_sid:
+        raise SystemExit(
+            "prior snapshot's files were modified in place (fingerprint "
+            "mismatch) — not an append; run a full validation"
+        )
+    # never empty: the snapshots differ and nothing was removed or
+    # rewritten, so new files landed
+    return sorted(new_files - prev_files)
+
+
+def run(args, spark: SparkSession) -> None:
+    """The --incremental lifecycle (dispatched from job.main): one step
+    per requested rule that --resume has not already done, decided by
+    the module docstring's table — skip, delta (doc-local rules over the
+    appended files), fold (RI state of the previous snapshot plus the
+    appended files) or full (the whole corpus).  The first run on an
+    output dir is the all-full baseline."""
+    from gwv_spark import catalog, engine
     from gwv_spark.job import begin_run, finish_run
-    from gwv_spark.streaming import DOC_LOCAL_RULES
+    from gwv_spark.streaming import DOC_LOCAL_RULES, _write_epoch
 
     if args.as_of:
         raise SystemExit("--incremental validates the CURRENT snapshot; drop --as-of")
@@ -311,76 +364,111 @@ def run(args, spark: SparkSession) -> None:
     attrs = spark.read.parquet(args.attrs) if args.attrs else None
     rule_ids, done = begin_run(spark, args, snapshot)
 
-    local = [r for r in rule_ids if r in DOC_LOCAL_RULES]
-    ri = [r for r in rule_ids if r in RI_RULES]
-    scoped = [r for r in rule_ids if r not in local and r not in ri]
-
     prev = last_run(spark, out)
+    covered = prev["rules"] if prev else set()
+    changed = prev is None or prev["snapshot"] != snapshot
     vio_dir = f"{out}/violations"
     t_run = time.monotonic()
     timings: dict[str, float] = {}
+    fs, jvm = _fs(spark, out)
+    # the state carries BOTH RI rules' cores whatever subset ran, so the
+    # fold is sound iff the previous snapshot's state epoch exists
+    ri_current = prev is not None and fs.exists(
+        jvm.org.apache.hadoop.fs.Path(f"{out}/ri_state/epoch={prev['snapshot']}")
+    )
 
-    if prev is None:
-        _initial_run(
-            spark, args, out, snapshot, documents, attrs,
-            local, ri, scoped, done, vio_dir, timings,
-        )
-        covered_now, need_record = set(rule_ids), True
-        evaluated = set(rule_ids)
-    elif prev["snapshot"] == snapshot:
-        # nothing appended since the last run: idempotent no-op for
-        # rules the prior chain computed.  A rule NEW to the chain was
-        # never evaluated — silently marking it complete would
-        # fabricate a clean verdict — so the new rules (and only they)
-        # get a full evaluation at this snapshot, the same machinery as
-        # an initial run restricted to them.
-        unc = [r for r in rule_ids if r not in prev["rules"]]
-        if unc:
-            _initial_run(
-                spark, args, out, snapshot, documents, attrs,
-                [r for r in unc if r in local],
-                [r for r in unc if r in ri],
-                [r for r in unc if r in scoped],
-                done, vio_dir, timings,
-            )
-        covered_now = prev["rules"] | set(rule_ids)
-        need_record = bool(unc)
-        evaluated = set(unc)
-    else:
-        _append_run(
-            spark, args, out, snapshot, prev, documents, attrs,
-            local, ri, scoped, done, vio_dir, timings,
-        )
-        # rules in the prior coverage NOT requested this run missed
-        # this append — they drop out of coverage (their chain breaks),
-        # and their on-disk epochs are now append-UNAWARE: presenting
-        # them through the verdicts rollup as current state would be
-        # WRONG (a resolved dangling ref still shown as a violation),
-        # not merely old.  The surface contract is "the output dir
-        # holds maintained results"; a dropped rule's results are
-        # removed with its coverage — re-requesting the rule later
-        # triggers the full re-evaluation path above.
-        dropped = sorted(prev["rules"] - set(rule_ids))
-        if dropped:
-            _clear_epochs(spark, vio_dir, dropped)
-        covered_now, need_record = set(rule_ids), True
-        evaluated = set(rule_ids)
+    def step(rid: str) -> str | None:
+        if not changed:
+            return None if rid in covered else "full"
+        if rid in DOC_LOCAL_RULES and rid in covered:
+            return "delta"
+        if rid in RI_RULES and ri_current:
+            return "fold"
+        return "full"
 
-    # metrics only for rules this run actually evaluated (initial/
-    # append: all requested; same-snapshot: the new rules) — a pure
-    # no-op rerun must not append metrics rows for work it did not do
-    computed = [r for r in rule_ids if r not in done and r in evaluated]
+    plan = {r: s for r in rule_ids if r not in done and (s := step(r))}
+    local_delta = [r for r in plan if plan[r] == "delta"]
+    ri = [r for r in plan if r in RI_RULES]
+    full = [r for r in plan if plan[r] == "full" and r not in RI_RULES]
+
+    def write(vio: DataFrame) -> None:
+        _write_epoch(
+            vio.withColumn("epoch", F.lit(_epoch_value(snapshot))), vio_dir, "rule_id", "epoch"
+        )
+
+    if prev is not None and changed:
+        delta_files = _appended_files(args.input, prev["snapshot"], snapshot)
+        docs_delta = spark.read.schema(documents.schema).parquet(*delta_files)
+        # An epoch of a snapshot the runs log never committed was written
+        # by an append that died before record_run; this append's delta
+        # covers its documents again, so it goes.  A doc-local rule a
+        # --resume skips keeps the current epoch (it wrote it before the
+        # crash); a delta rule loses that too — the truncate half of
+        # truncate-and-load, as a delta that finds ZERO violations
+        # overwrites no partition.
+        _clear_epochs(
+            spark, vio_dir, [r for r in rule_ids if r in done and r in DOC_LOCAL_RULES],
+            prev["committed"] | {snapshot},
+        )
+        _clear_epochs(spark, vio_dir, local_delta, prev["committed"])
+        # rules in the prior coverage NOT requested this run miss this
+        # append: their chain breaks, and their epochs are append-UNAWARE
+        # (a resolved dangling ref would still show through the verdicts
+        # rollup) — removed with their coverage.  Re-requested later,
+        # such a rule is uncovered and gets a full evaluation.
+        _clear_epochs(spark, vio_dir, sorted(prev["rules"] - set(rule_ids)))
+
+    if local_delta:
+        t0 = time.monotonic()
+        ctx = engine.make_context(
+            spark, docs_delta, attrs=attrs, cache=False,
+            ignore_error=args.ignore_error, resolve_entity=False,
+        )
+        write(engine.run_rules(ctx, local_delta))
+        timings["__local_delta__"] = round(time.monotonic() - t0, 3)
+    if ri:
+        # one path for both sources (the RI rules of one run always share
+        # a step): write the state at this snapshot, read it back, and
+        # replace every epoch of the rules with its shape
+        t0 = time.monotonic()
+        source = plan[ri[0]]
+        if source == "fold":
+            state_prev = spark.read.parquet(f"{out}/ri_state/epoch={prev['snapshot']}")
+            corpus_keys = documents.select(F.col("doc_id").alias("key"))
+            kept, adds, _ = ri_fold_step(state_prev, docs_delta, corpus_keys)
+            state = kept.unionByName(adds)
+        else:
+            state = ri_cores_full(documents)
+        state_dir = f"{out}/ri_state/epoch={snapshot}"
+        state.write.mode("overwrite").parquet(state_dir)
+        _clear_epochs(spark, vio_dir, ri)
+        write(shape_ri_state(spark.read.parquet(state_dir)).where(F.col("rule_id").isin(ri)))
+        timings[f"__ri_{source}__"] = round(time.monotonic() - t0, 3)
+    if full:
+        t0 = time.monotonic()
+        scoped = any(r not in DOC_LOCAL_RULES for r in full)
+        ctx = engine.make_context(
+            spark, documents, attrs=attrs, cache=scoped,
+            ignore_error=args.ignore_error, resolve_entity=scoped,
+        )
+        _clear_epochs(spark, vio_dir, full)
+        write(engine.run_rules(ctx, full))
+        timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
+        ctx.docs.unpersist()
+        ctx.spans.unpersist()
+
+    # metrics only for rules this run evaluated: a pure no-op rerun must
+    # not append metrics rows for work it did not do
     finish_run(
-        spark, args, snapshot, documents.select("doc_id"), computed, {},
+        spark, args, snapshot, documents.select("doc_id"), list(plan), {},
         round(time.monotonic() - t_run, 3),
     )
-    # component timings (r4 verdict #5's decomposition, incremental
-    # form): rule/fold work separated from the per-run commit machinery
-    # (snapshot fingerprint + manifest, layout, verdicts rollup,
-    # metrics).  At test SF the machinery dominates an append's
-    # wall time; at the design point it is the amortized constant and
-    # the delta work is the bill — recording both per run keeps the
-    # two from masquerading as each other.
+    # component timings: rule/fold work separated from the per-run
+    # commit machinery (snapshot fingerprint + manifest, layout,
+    # verdicts rollup, metrics).  At test SF the machinery dominates an
+    # append's wall time; at the design point it is the amortized
+    # constant and the delta work is the bill — recording both per run
+    # keeps the two from masquerading as each other.
     if timings:
         local_frame(
             spark,
@@ -391,199 +479,14 @@ def run(args, spark: SparkSession) -> None:
     # the runs row is the LAST write: its presence certifies every
     # surface above committed for this snapshot, so a crash anywhere
     # earlier makes the next run redo this snapshot idempotently.
-    # Coverage after an APPEND is exactly this run's rule set, never a
-    # union with prior runs: a doc-local rule left out of one append
-    # misses that append's delta forever after, so continuity only
-    # holds for rules processed by EVERY run in the chain (a dropped
-    # rule re-entering the chain is detected and fully re-evaluated).
-    # On a SAME-SNAPSHOT run the prior rules stay current (no new
-    # data), so coverage there is the union.
-    if need_record:
-        record_run(spark, out, snapshot, sorted(covered_now))
+    # Coverage after a CHANGED snapshot is exactly this run's rule set:
+    # a doc-local rule left out of one append misses that append's delta
+    # forever after.  On the same snapshot the prior rules stay current
+    # (no new data), so coverage there is the union, recorded only when
+    # it grew.
+    if changed or not covered.issuperset(rule_ids):
+        record_run(spark, out, snapshot, sorted(set(rule_ids) | (set() if changed else covered)))
         # committed: the next append folds from this snapshot's state,
         # so only it and the epoch this run read stay on disk
         keep = {f"epoch={snapshot}"} | ({f"epoch={prev['snapshot']}"} if prev else set())
         prune_ri_state(spark, f"{out}/ri_state", keep)
-
-
-def _write_epoch(vio: DataFrame, vio_dir: str, epoch: str) -> None:
-    """Dynamic-partition-overwrite the violations into
-    rule_id=<r>/epoch=<sid> partitions (retry-idempotent)."""
-    vio.withColumn("epoch", F.lit(_epoch_value(epoch))).write.mode(
-        "overwrite"
-    ).partitionBy("rule_id", "epoch").parquet(vio_dir)
-
-
-def _initial_run(
-    spark, args, out, snapshot, documents, attrs,
-    local, ri, scoped, done, vio_dir, timings,
-) -> None:
-    """Full-corpus baseline: all rules, RI state initialized.  One
-    fused action for local+scoped; the RI anti join runs ONCE (writing
-    the state), and the rules' violations are shaped from the
-    state read-back, never recomputed."""
-    from gwv_spark import engine
-
-    local = [r for r in local if r not in done]
-    ri = [r for r in ri if r not in done]
-    scoped = [r for r in scoped if r not in done]
-    ctx = engine.make_context(
-        spark, documents, attrs=attrs,
-        cache=bool(scoped),
-        ignore_error=args.ignore_error,
-        resolve_entity=bool(scoped),
-    )
-    if ri:
-        t0 = time.monotonic()
-        ri_cores_full(documents).write.mode("overwrite").parquet(
-            f"{out}/ri_state/epoch={snapshot}"
-        )
-        state = spark.read.parquet(f"{out}/ri_state/epoch={snapshot}")
-        shaped = shape_ri_state(state)
-        for rid in ri:
-            ctx.plan_cache[rid] = shaped.where(F.col("rule_id") == rid)
-        timings["__ri_state__"] = round(time.monotonic() - t0, 3)
-    todo = local + scoped + ri
-    if todo:
-        # ALL epochs cleared, not just the current one: this path also
-        # serves a rule RE-ENTERING the chain (called from _append_run /
-        # the same-snapshot branch), which may carry stale epochs from
-        # before its chain broke — the full evaluation below is the
-        # complete set
-        _clear_epochs(spark, vio_dir, todo)
-        t0 = time.monotonic()
-        _write_epoch(engine.run_rules(ctx, todo), vio_dir, snapshot)
-        timings["__rules__"] = round(time.monotonic() - t0, 3)
-    if scoped:
-        ctx.docs.unpersist()
-        ctx.spans.unpersist()
-
-
-def _append_run(
-    spark, args, out, snapshot, prev, documents, attrs,
-    local, ri, scoped, done, vio_dir, timings,
-) -> None:
-    from gwv_spark import catalog, engine
-
-    # manifest diff — the unit of incremental work
-    prev_files = None
-    for rec in catalog.snapshots(args.input):
-        if rec["snapshot_id"] == prev["snapshot"]:
-            prev_files = set(rec["files"])
-    if prev_files is None:
-        raise SystemExit(
-            f"prior run snapshot {prev['snapshot']} has no manifest under "
-            f"{args.input}; run a fresh full validation (new output dir)"
-        )
-    new_files = set(documents.inputFiles())
-    # inputFiles returns URIs (file:///...); manifests store plain paths
-    norm = lambda f: f[7:] if f.startswith("file://") else f  # noqa: E731
-    new_files = {norm(f) for f in new_files}
-    prev_files = {norm(f) for f in prev_files}
-    removed = prev_files - new_files
-    if removed:
-        raise SystemExit(
-            f"{len(removed)} file(s) from the prior snapshot are gone "
-            f"(e.g. {sorted(removed)[0]}) — not an append; incremental "
-            "folds are only sound over append-only input.  Run a full "
-            "validation (fresh output dir or classic job)."
-        )
-    # same names is not enough: an in-place rewrite (compaction, manual
-    # fix-up) keeps the path but changes content.  Hash the prior
-    # manifest's files AS THEY EXIST NOW — equality with the prior
-    # snapshot id proves the pre-append corpus is untouched.
-    if catalog.fingerprint_files(prev_files) != prev["snapshot"]:
-        raise SystemExit(
-            "prior snapshot's files were modified in place (fingerprint "
-            "mismatch) — not an append; run a full validation"
-        )
-    delta_files = sorted(new_files - prev_files)
-
-    # Chain continuity decides the cheap path per rule; a rule OUTSIDE
-    # the chain gets a full re-evaluation instead of a refusal:
-    # - doc-local: delta-union is only complete when every run in the
-    #   chain processed the rule (prev["rules"] is exactly the last
-    #   run's set) — a rule new to or re-entering the chain recomputes
-    #   over the full corpus, complete set under the current epoch.
-    # - RI: the state table always carries BOTH rules' cores (the fold
-    #   evaluates both probes regardless of the requested subset), so
-    #   currency is a property of the state itself: the fold is sound
-    #   iff a state epoch exists for the PREVIOUS snapshot.  Absent
-    #   (RI never run, or skipped across an append) -> initialize
-    #   fresh from the full corpus.
-    fresh_local = [r for r in local if r not in prev["rules"] and r not in done]
-    # An epoch of a snapshot the runs log never committed was written by
-    # an append that died before record_run; this append's delta covers
-    # its documents again, so it goes.  A rule a --resume skips keeps the
-    # current epoch (it wrote it before the crash); a rule recomputed
-    # here loses that too — the truncate half of truncate-and-load, as a
-    # recompute that finds ZERO violations overwrites no partition.
-    _clear_epochs(
-        spark, vio_dir, [r for r in local if r in done], prev["committed"] | {snapshot}
-    )
-    local = [r for r in local if r in prev["rules"] and r not in done]
-    _clear_epochs(spark, vio_dir, local, prev["committed"])
-    ri = [r for r in ri if r not in done]
-    state_fs, state_jvm = _fs(spark, out)
-    state_current = state_fs.exists(
-        state_jvm.org.apache.hadoop.fs.Path(
-            f"{out}/ri_state/epoch={prev['snapshot']}"
-        )
-    )
-    ri_fold, ri_init = (ri, []) if state_current else ([], ri)
-    scoped = [r for r in scoped if r not in done]
-
-    if fresh_local or ri_init:
-        _initial_run(
-            spark, args, out, snapshot, documents, attrs,
-            fresh_local, ri_init, [], done, vio_dir, timings,
-        )
-    ri = ri_fold
-
-    if delta_files and (local or ri):
-        docs_delta = spark.read.schema(documents.schema).parquet(*delta_files)
-        if local:
-            t0 = time.monotonic()
-            ctx_delta = engine.make_context(
-                spark, docs_delta, attrs=attrs, cache=False,
-                ignore_error=args.ignore_error, resolve_entity=False,
-            )
-            _write_epoch(engine.run_rules(ctx_delta, local), vio_dir, snapshot)
-            timings["__local_delta__"] = round(time.monotonic() - t0, 3)
-        if ri:
-            t0 = time.monotonic()
-            state_prev = spark.read.parquet(
-                f"{out}/ri_state/epoch={prev['snapshot']}"
-            )
-            corpus_keys = documents.select(F.col("doc_id").alias("key"))
-            kept, adds, _ = ri_fold_step(state_prev, docs_delta, corpus_keys)
-            kept.unionByName(adds).write.mode("overwrite").parquet(
-                f"{out}/ri_state/epoch={snapshot}"
-            )
-            state = spark.read.parquet(f"{out}/ri_state/epoch={snapshot}")
-            # the fold result is the COMPLETE set: it replaces every
-            # prior epoch of the RI rules
-            _clear_epochs(spark, vio_dir, ri)
-            _write_epoch(
-                shape_ri_state(state).where(F.col("rule_id").isin(ri)),
-                vio_dir,
-                snapshot,
-            )
-            timings["__ri_fold__"] = round(time.monotonic() - t0, 3)
-    # (delta_files is never empty here: the same-snapshot case is
-    # handled by the caller, removals/rewrites fail fast above, so a
-    # differing fingerprint implies new files)
-
-    if scoped:
-        # corpus-scoped non-RI rules: full recompute (their verdicts
-        # read every document), complete set under the current epoch
-        t0 = time.monotonic()
-        ctx = engine.make_context(
-            spark, documents, attrs=attrs, cache=True,
-            ignore_error=args.ignore_error, resolve_entity=True,
-        )
-        _clear_epochs(spark, vio_dir, scoped)
-        _write_epoch(engine.run_rules(ctx, scoped), vio_dir, snapshot)
-        timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
-        ctx.docs.unpersist()
-        ctx.spans.unpersist()

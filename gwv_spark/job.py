@@ -20,7 +20,12 @@ snapshot id, on plain parquet the corpus fingerprint), so state never
 mixes across corpus versions.
 
 ``--incremental`` runs the append lifecycle of gwv_spark.incremental
-instead.  Both lifecycles share one prologue (:func:`begin_run`: rule
+instead: one plan with a step per requested rule — skip a rule the last
+run covered at this snapshot, validate only the appended files
+(doc-local rules), fold the persisted RI state (delquote/delvar), or
+evaluate the whole corpus (every other rule, and any rule the last run
+did not cover).  The first run on an output dir is the all-full
+baseline.  Both lifecycles share one prologue (:func:`begin_run`: rule
 ids, layout pin, resume set) and one commit tail (:func:`finish_run`:
 verdicts, sample, metrics).  An output directory is bound to the
 lifecycle of its first run by its ``layout`` record: the two partition
@@ -232,9 +237,10 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "on this output dir: document-local rules run over the "
         "manifest diff (violations epoch-partitioned, union = full "
         "set), delquote/delvar fold via the persisted RI state table "
-        "(retractions included), remaining corpus-scoped rules "
-        "recompute.  First run = full baseline.  Non-append input "
-        "changes fail fast (gwv_spark.incremental).",
+        "(retractions included), remaining corpus-scoped rules and "
+        "rules the previous run did not cover recompute.  First run = "
+        "full baseline.  Non-append input changes fail fast "
+        "(gwv_spark.incremental).",
     )
     args = p.parse_args(argv)
     check_rules(args.rules)

@@ -382,3 +382,24 @@ def test_unreadable_runs_log_raises(spark, tmp_path):
         job.main(args, spark=spark)
     assert tree() == before
 
+
+def test_append_to_corpus_path_needing_percent_encoding(spark, tmp_path):
+    """A corpus whose path holds a space: Spark lists its files as
+    percent-encoded URIs (``sp%20ace``), the manifests hold plain paths.
+    The append must be read as one (it used to be refused as "not an
+    append") and equal a classic run."""
+    full = ensure_corpus(tmp_path / "gen", 100)
+    table = pq.read_table(full / "documents.parquet")
+    corpus = tmp_path / "sp ace" / "corpus"
+    corpus.mkdir(parents=True)
+    pq.write_table(table.slice(0, 80), corpus / "part 000.parquet")
+    out = tmp_path / "inc"
+    args = ["--input", str(corpus), "--output", str(out),
+            "--rules", "numexp", "delquote", "ucsalias", "--incremental"]
+    job.main(args, spark=spark)
+    pq.write_table(table.slice(80, 20), corpus / "part 001.parquet")
+    job.main(args, spark=spark)
+    ref_out = tmp_path / "classic"
+    job.main(["--input", str(corpus), "--output", str(ref_out),
+              "--rules", "numexp", "delquote", "ucsalias"], spark=spark)
+    assert vio_set(spark, out / "violations") == vio_set(spark, ref_out / "violations")
