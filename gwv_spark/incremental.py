@@ -71,8 +71,9 @@ A rule neither covered nor changed gets **full**.
   rules' only epoch.
 
 Coverage: an append records exactly the requested rules and clears the
-epochs of the ones it dropped; a same-snapshot run records prev ∪
-requested, and only when a requested rule was outside prev.
+epochs of the ones it dropped (after recording prev's coverage without
+them); a same-snapshot run records prev ∪ requested, and only when a
+requested rule was outside prev.
 
 Row-identity with a from-scratch run is asserted both ways
 (tests/test_incremental.py, as multisets) across multi-append chains
@@ -228,9 +229,9 @@ def shape_ri_state(state: DataFrame) -> DataFrame:
 
 
 def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: list[str]) -> None:
-    """Append one completed-run row.  The LAST row (by wall time) names
-    the snapshot the next append diffs against and the rules whose
-    prior epochs are trustworthy."""
+    """Append one runs row: ``snapshot`` committed for ``rule_ids``.
+    The LAST row (by wall time) names the snapshot the next append
+    diffs against and the rules whose prior epochs are trustworthy."""
     local_frame(
         spark,
         [(snapshot, float(time.time()), ",".join(sorted(rule_ids)))],
@@ -251,7 +252,7 @@ def last_run(spark: SparkSession, out: str) -> dict | None:
     r = max(rows, key=lambda r: r["ts"])
     return {
         "snapshot": r["snapshot"],
-        "rules": set(r["rules"].split(",")),
+        "rules": set(filter(None, r["rules"].split(","))),
         "committed": {x["snapshot"] for x in rows},
     }
 
@@ -311,7 +312,7 @@ def _appended_files(ref: str, prev_sid: str, sid: str) -> list[str]:
         raise SystemExit(
             f"prior run snapshot {prev_sid} has no manifest under "
             f"{ref}; run a fresh full validation (new output dir)"
-        )
+        ) from None
     new_files = set(catalog.manifest_files(ref, sid))
     removed = prev_files - new_files
     if removed:
@@ -415,8 +416,14 @@ def run(args, spark: SparkSession) -> None:
         # append: their chain breaks, and their epochs are append-UNAWARE
         # (a resolved dangling ref would still show through the verdicts
         # rollup) — removed with their coverage.  Re-requested later,
-        # such a rule is uncovered and gets a full evaluation.
-        _clear_epochs(spark, vio_dir, sorted(prev["rules"] - set(rule_ids)))
+        # such a rule is uncovered and gets a full evaluation.  The
+        # narrowed coverage is recorded first: a run that died after the
+        # delete would otherwise leave the prior row claiming the rule,
+        # and a rerun requesting it would run only the delta.
+        dropped = sorted(prev["rules"] - set(rule_ids))
+        if dropped:
+            record_run(spark, out, prev["snapshot"], sorted(covered - set(dropped)))
+            _clear_epochs(spark, vio_dir, dropped)
 
     if local_delta:
         t0 = time.monotonic()
