@@ -228,7 +228,7 @@ def shape_ri_state(state: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- runs log
 
 
-def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: list[str]) -> None:
+def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: set[str]) -> None:
     """Append one runs row: ``snapshot`` committed for ``rule_ids``.
     The LAST row (by wall time) names the snapshot the next append
     diffs against and the rules whose prior epochs are trustworthy."""
@@ -420,10 +420,10 @@ def run(args, spark: SparkSession) -> None:
         # narrowed coverage is recorded first: a run that died after the
         # delete would otherwise leave the prior row claiming the rule,
         # and a rerun requesting it would run only the delta.
-        dropped = sorted(prev["rules"] - set(rule_ids))
+        dropped = covered - set(rule_ids)
         if dropped:
-            record_run(spark, out, prev["snapshot"], sorted(covered - set(dropped)))
-            _clear_epochs(spark, vio_dir, dropped)
+            record_run(spark, out, prev["snapshot"], covered - dropped)
+            _clear_epochs(spark, vio_dir, sorted(dropped))
 
     if local_delta:
         t0 = time.monotonic()
@@ -492,7 +492,7 @@ def run(args, spark: SparkSession) -> None:
     # (no new data), so coverage there is the union, recorded only when
     # it grew.
     if changed or not covered.issuperset(rule_ids):
-        record_run(spark, out, snapshot, sorted(set(rule_ids) | (set() if changed else covered)))
+        record_run(spark, out, snapshot, set(rule_ids) if changed else covered | set(rule_ids))
         # committed: the next append folds from this snapshot's state,
         # so only it and the epoch this run read stay on disk
         keep = {f"epoch={snapshot}"} | ({f"epoch={prev['snapshot']}"} if prev else set())
