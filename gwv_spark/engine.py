@@ -1,13 +1,14 @@
-"""Engine: compile selected rules to violation plans (one union, or one
-job per rule), emit per-partition verdicts, and reproduce the
+"""Engine: compile selected rules to violation plans, write them one
+job per rule, emit per-partition verdicts, and reproduce the
 reference's result-JSON shape.
 
 Reference lifecycle being replaced (validator.py:26-60): eager dict load →
 per-record loop over all validators → per-rule errcode grouping → JSON.
-Here: one prepared scan shared by all rule plans (Catalyst caches the
-common subplan; narrow rules fuse into the same whole-stage codegen pass),
-wide rules (anti joins / global aggs) shuffle independently, and the
-verdict rollup is a single groupBy over bucketed doc_ids.
+Here: one prepared scan shared by all rule plans; every lifecycle (the
+classic and incremental jobs, the doc-local stream) writes through one
+executor, :func:`run_rules_concurrent` into :func:`parquet_sink`, so
+the per-rule grouping is a directory per rule.  The verdict rollup is a
+single groupBy over bucketed doc_ids.
 
 Verdicts are keyed by (bucket, rule_id), bucket = pmod(xxhash64(doc_id),
 n_buckets).  Resumability lives in the job (gwv_spark.job): each run is
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import time
 from functools import partial
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,18 +94,25 @@ def empty_violations(spark: SparkSession) -> DataFrame:
 def _registered(rule_ids: list[str] | None) -> list[str]:
     """The selected ids (None: all; an empty list selects none), each
     with a registered rule.  An unregistered id raises: a rule must
-    never drop out of a run and leave its verdicts reading "pass"."""
+    never drop out of a run and leave its verdicts reading "pass".  A
+    repeated id raises too: the union would count its rows twice, and
+    two concurrent writes of one rule would both commit."""
     load_all_rules()
     ids = list(ALL_RULE_IDS if rule_ids is None else rule_ids)
     missing = [r for r in ids if r not in RULES]
     if missing:
         raise KeyError(f"no registered rule for ids {missing}")
+    repeated = sorted({r for r in ids if ids.count(r) > 1})
+    if repeated:
+        raise ValueError(f"rule ids repeated: {repeated}")
     return ids
 
 
 def run_rules(ctx: RuleContext, rule_ids: list[str] | None = None) -> DataFrame:
     """Union the violation plans of the selected rules (lazy); no
-    selected rule gives an empty violations frame."""
+    selected rule gives an empty violations frame.  The driver
+    contract's result and :func:`run_suite`'s plan; no lifecycle
+    writes through it."""
     ids = _registered(rule_ids)
     if not ids:
         return empty_violations(ctx.spark)
@@ -131,7 +138,7 @@ def run_suite(ctx: RuleContext, rule_ids: list[str] | None = None) -> None:
     independent branch stages concurrently.  Its final stage ships the
     whole 18-branch task binary with every task, so on a 4-core host
     the per-rule jobs of run_rules_concurrent finish the suite sooner;
-    the batch job writes that way, and this fused form stays for
+    every lifecycle writes that way, and this fused form stays only for
     measurement (perfbench's ``rules.suite_fused`` probe)."""
     run_rules(ctx, rule_ids).write.format("noop").mode("overwrite").save()
 
@@ -142,8 +149,9 @@ def run_rules_concurrent(
     workers: int = 12,
     sink=None,
 ) -> dict[str, float]:
-    """Force every rule's violation plan as its own Spark job, several in
-    flight at once.
+    """The suite executor: force every rule's violation plan as its own
+    Spark job, several in flight at once, and return each rule's wall
+    time.  Every lifecycle writes its violations through it.
 
     A single unioned action serializes the driver-side work of all 18
     branches (codegen, task serialization, stage submission) behind one
@@ -186,16 +194,17 @@ def run_rules_concurrent(
         return dict(f.result() for f in [ex.submit(t) for t in tasks])
 
 
-def parquet_sink(base_dir: str | Path):
-    """Per-rule partitioned violations sink (safe under concurrency:
-    each rule overwrites only its own rule_id=<id> subdirectory)."""
+def parquet_sink(base_dir: str, sub: str | None = None):
+    """The violations sink of every lifecycle: rule ``rid`` overwrites
+    exactly ``<base_dir>/rule_id=<rid>`` (or its ``sub`` directory, the
+    incremental ``epoch=s<snapshot>``), so concurrent rule jobs never
+    share an overwrite root and a now-clean rule leaves no stale rows."""
 
     def write(rid: str, df: DataFrame) -> None:
         # rule_id lives in the directory name (hive-style partition);
         # partition discovery restores it on read
-        df.drop("rule_id").write.mode("overwrite").parquet(
-            str(Path(base_dir) / f"rule_id={rid}")
-        )
+        path = f"{base_dir.rstrip('/')}/rule_id={rid}"
+        df.drop("rule_id").write.mode("overwrite").parquet(f"{path}/{sub}" if sub else path)
 
     return write
 

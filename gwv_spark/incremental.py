@@ -10,10 +10,12 @@ has no metrics rows yet — wastes ~90% of that work on documents whose
 verdicts cannot have changed.  This module makes the append the unit of
 work.
 
-Violations are hive-partitioned by ``rule_id=<r>/epoch=<snapshot>``;
-the union of a rule's epochs is its full set.  Every run builds ONE
-plan: a step per requested rule that ``--resume`` has not already done,
-decided from the last runs row ("prev"; "covered" = in prev's rule set;
+Violations are hive-partitioned by ``rule_id=<r>/epoch=s<snapshot>``;
+the union of a rule's epochs is its full set.  Every step writes each
+rule through the classic job's executor (engine.run_rules_concurrent
+into engine.parquet_sink).  Every run builds ONE plan: a step per
+requested rule that ``--resume`` has not already done, decided from the
+head runs row ("prev", highest ``seq``; "covered" = in prev's rule set;
 "changed" = no prev, or a new snapshot):
 
 =====================  ======================  =========================
@@ -33,11 +35,11 @@ A rule neither covered nor changed gets **full**.
   the document's own columns, the split-invariance property tested in
   tests/test_streaming.py) validate ONLY the appended files (the
   snapshot-manifest diff, catalog.manifest_files) and keep prior epochs
-  in place.  Dynamic partition overwrite of the current epoch makes a
-  retried append idempotent — the same exactly-once argument as the
-  streaming sink.  An epoch whose snapshot the runs log never committed
-  (an append that died before its runs row) is deleted first; this
-  delta covers its documents again.
+  in place.  Overwriting the current epoch makes a retried append
+  idempotent — the same exactly-once argument as the streaming sink.
+  An epoch whose snapshot the runs log never committed (an append that
+  died before its runs row) is deleted first; this delta covers its
+  documents again.
 - **full** — the rules share one context over the whole corpus (the
   entity join only when a non-RI corpus-scoped rule is among them);
   every epoch of theirs is cleared and the complete set written under
@@ -96,7 +98,7 @@ RI_RULES = ["delquote", "delvar"]
 RI_STATE_DDL = "rule_id STRING, doc_id STRING, key STRING, part_full STRING"
 RI_STATE_COLS = ["rule_id", "doc_id", "key", "part_full"]
 
-RUNS_DDL = "snapshot STRING, ts DOUBLE, rules STRING"
+RUNS_DDL = "snapshot STRING, ts DOUBLE, rules STRING, seq BIGINT"
 
 
 # ------------------------------------------------------------- RI cores
@@ -191,19 +193,18 @@ def ri_fold_step(
     return kept.select(*RI_STATE_COLS), adds, retracts.select(*RI_STATE_COLS)
 
 
-def prune_ri_state(spark: SparkSession, state_dir: str, keep: set[str]) -> None:
-    """Delete every epoch under ``state_dir`` except the ones named in
-    ``keep`` (directory names: the epoch a fold step read and the one it
-    wrote).  Run only after the step committed, so a retried step still
-    finds the epoch it reads.  Hidden (``_``/``.``) entries are left
-    alone."""
-    fs, jvm = _fs(spark, state_dir)
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    if not fs.exists(root):
+def prune_dirs(spark: SparkSession, root: str, keep: set[str]) -> None:
+    """Delete every entry under ``root`` except the ones named in
+    ``keep`` and hidden (``_``/``.``) ones.  An RI state keeps the epoch
+    a fold step read and the one it wrote, pruned only after the step
+    committed, so a retried step still finds the epoch it reads."""
+    fs, jvm = _fs(spark, root)
+    path = jvm.org.apache.hadoop.fs.Path(root)
+    if not fs.exists(path):
         return
-    for st in fs.listStatus(root):
+    for st in fs.listStatus(path):
         name = st.getPath().getName()
-        if st.isDirectory() and name not in keep and not name.startswith(("_", ".")):
+        if name not in keep and not name.startswith(("_", ".")):
             fs.delete(st.getPath(), True)
 
 
@@ -228,32 +229,43 @@ def shape_ri_state(state: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- runs log
 
 
-def record_run(spark: SparkSession, out: str, snapshot: str, rule_ids: set[str]) -> None:
-    """Append one runs row: ``snapshot`` committed for ``rule_ids``.
-    The LAST row (by wall time) names the snapshot the next append
-    diffs against and the rules whose prior epochs are trustworthy."""
+def record_run(
+    spark: SparkSession, out: str, snapshot: str, rule_ids: set[str], seq: int
+) -> None:
+    """Append one runs row: ``snapshot`` committed for ``rule_ids``, at
+    ``seq``, one above the head it follows.  The head (:func:`last_run`)
+    names the snapshot the next append diffs against and the rules
+    whose prior epochs are trustworthy."""
     local_frame(
         spark,
-        [(snapshot, float(time.time()), ",".join(sorted(rule_ids)))],
+        [(snapshot, float(time.time()), ",".join(sorted(rule_ids)), seq)],
         RUNS_DDL,
     ).coalesce(1).write.mode("append").parquet(f"{out}/runs")
 
 
 def last_run(spark: SparkSession, out: str) -> dict | None:
-    """The last runs row — its snapshot and rules — plus every snapshot
+    """The head runs row (highest ``seq``; wall-clock ``ts`` can step
+    back or tie) — its snapshot, rules and seq — plus every snapshot
     the log ever committed; None before the first run.  An unreadable
-    log raises (job.read_committed): read as empty, it would
-    re-baseline the whole output dir."""
+    log raises (job.read_committed): read as empty, it would re-baseline
+    the whole output dir.  So do a log without seq and a forked one."""
     from gwv_spark.job import read_committed
 
-    rows = read_committed(spark, f"{out}/runs", RUNS_DDL).collect()
+    runs = read_committed(spark, f"{out}/runs", RUNS_DDL)
+    rows = runs.collect()
     if not rows:
         return None
-    r = max(rows, key=lambda r: r["ts"])
+    if "seq" not in runs.columns or any(r["seq"] is None for r in rows):
+        raise SystemExit(f"runs log {out}/runs lacks seq: re-baseline into a fresh output dir")
+    top = max(r["seq"] for r in rows)
+    heads = [r for r in rows if r["seq"] == top]
+    if len(heads) > 1:
+        raise SystemExit(f"runs log {out}/runs forks at seq {top}: re-baseline into a fresh dir")
     return {
-        "snapshot": r["snapshot"],
-        "rules": set(filter(None, r["rules"].split(","))),
+        "snapshot": heads[0]["snapshot"],
+        "rules": set(filter(None, heads[0]["rules"].split(","))),
         "committed": {x["snapshot"] for x in rows},
+        "seq": top,
     }
 
 
@@ -282,18 +294,9 @@ def _clear_epochs(
     snapshots in ``keep`` — by default all of them, before a COMPLETE
     set (RI fold, corpus-scoped or full recompute) is written under the
     current epoch."""
-    fs, jvm = _fs(spark, vio_dir)
     names = {f"epoch={_epoch_value(s)}" for s in keep}
     for rid in rule_ids:
-        p = jvm.org.apache.hadoop.fs.Path(f"{vio_dir}/rule_id={rid}")
-        if not fs.exists(p):
-            continue
-        if not keep:
-            fs.delete(p, True)
-            continue
-        for st in fs.listStatus(p):
-            if st.getPath().getName() not in names:
-                fs.delete(st.getPath(), True)
+        prune_dirs(spark, f"{vio_dir}/rule_id={rid}", names)
 
 
 # ------------------------------------------------------------- lifecycle
@@ -345,7 +348,8 @@ def run(args, spark: SparkSession) -> None:
     output dir is the all-full baseline."""
     from gwv_spark import catalog, engine
     from gwv_spark.job import begin_run, finish_run
-    from gwv_spark.streaming import DOC_LOCAL_RULES, _write_epoch
+    from gwv_spark.rules import RuleContext
+    from gwv_spark.streaming import DOC_LOCAL_RULES
 
     if args.as_of:
         raise SystemExit("--incremental validates the CURRENT snapshot; drop --as-of")
@@ -366,11 +370,13 @@ def run(args, spark: SparkSession) -> None:
     rule_ids, done = begin_run(spark, args, snapshot)
 
     prev = last_run(spark, out)
+    seq = prev["seq"] if prev else 0
     covered = prev["rules"] if prev else set()
     changed = prev is None or prev["snapshot"] != snapshot
     vio_dir = f"{out}/violations"
     t_run = time.monotonic()
     timings: dict[str, float] = {}
+    rule_secs: dict[str, float] = {}
     fs, jvm = _fs(spark, out)
     # the state carries BOTH RI rules' cores whatever subset ran, so the
     # fold is sound iff the previous snapshot's state epoch exists
@@ -392,10 +398,18 @@ def run(args, spark: SparkSession) -> None:
     ri = [r for r in plan if r in RI_RULES]
     full = [r for r in plan if plan[r] == "full" and r not in RI_RULES]
 
-    def write(vio: DataFrame) -> None:
-        _write_epoch(
-            vio.withColumn("epoch", F.lit(_epoch_value(snapshot))), vio_dir, "rule_id", "epoch"
+    # every step writes each rule through the suite executor into that
+    # rule's epoch of this snapshot
+    sink = engine.parquet_sink(vio_dir, f"epoch={_epoch_value(snapshot)}")
+
+    def evaluate(docs: DataFrame, rids: list[str], resolve_entity: bool) -> None:
+        ctx = engine.make_context(
+            spark, docs, attrs=attrs, cache=True,
+            ignore_error=args.ignore_error, resolve_entity=resolve_entity,
         )
+        rule_secs.update(engine.run_rules_concurrent(ctx, rids, sink=sink))
+        ctx.docs.unpersist()
+        ctx.spans.unpersist()
 
     if prev is not None and changed:
         delta_files = _appended_files(args.input, prev["snapshot"], snapshot)
@@ -404,9 +418,7 @@ def run(args, spark: SparkSession) -> None:
         # by an append that died before record_run; this append's delta
         # covers its documents again, so it goes.  A doc-local rule a
         # --resume skips keeps the current epoch (it wrote it before the
-        # crash); a delta rule loses that too — the truncate half of
-        # truncate-and-load, as a delta that finds ZERO violations
-        # overwrites no partition.
+        # crash); a delta rule rewrites it.
         _clear_epochs(
             spark, vio_dir, [r for r in rule_ids if r in done and r in DOC_LOCAL_RULES],
             prev["committed"] | {snapshot},
@@ -422,21 +434,20 @@ def run(args, spark: SparkSession) -> None:
         # and a rerun requesting it would run only the delta.
         dropped = covered - set(rule_ids)
         if dropped:
-            record_run(spark, out, prev["snapshot"], covered - dropped)
+            seq += 1
+            record_run(spark, out, prev["snapshot"], covered - dropped, seq)
             _clear_epochs(spark, vio_dir, sorted(dropped))
 
     if local_delta:
         t0 = time.monotonic()
-        ctx = engine.make_context(
-            spark, docs_delta, attrs=attrs, cache=False,
-            ignore_error=args.ignore_error, resolve_entity=False,
-        )
-        write(engine.run_rules(ctx, local_delta))
+        evaluate(docs_delta, local_delta, resolve_entity=False)
         timings["__local_delta__"] = round(time.monotonic() - t0, 3)
     if ri:
         # one path for both sources (the RI rules of one run always share
         # a step): write the state at this snapshot, read it back, and
-        # replace every epoch of the rules with its shape
+        # replace every epoch of the rules with its shape — each rule's
+        # shaped rows stand in as its plan, so they go through the same
+        # executor and sink as every other rule
         t0 = time.monotonic()
         source = plan[ri[0]]
         if source == "fold":
@@ -449,25 +460,23 @@ def run(args, spark: SparkSession) -> None:
         state_dir = f"{out}/ri_state/epoch={snapshot}"
         state.write.mode("overwrite").parquet(state_dir)
         _clear_epochs(spark, vio_dir, ri)
-        write(shape_ri_state(spark.read.parquet(state_dir)).where(F.col("rule_id").isin(ri)))
+        shaped = shape_ri_state(spark.read.parquet(state_dir))
+        plans = {r: shaped.where(F.col("rule_id") == r) for r in ri}
+        rule_secs.update(engine.run_rules_concurrent(
+            RuleContext(spark, docs=None, spans=None, plan_cache=plans), ri, sink=sink
+        ))
         timings[f"__ri_{source}__"] = round(time.monotonic() - t0, 3)
     if full:
         t0 = time.monotonic()
-        scoped = any(r not in DOC_LOCAL_RULES for r in full)
-        ctx = engine.make_context(
-            spark, documents, attrs=attrs, cache=scoped,
-            ignore_error=args.ignore_error, resolve_entity=scoped,
-        )
         _clear_epochs(spark, vio_dir, full)
-        write(engine.run_rules(ctx, full))
+        # the entity join only when a non-RI corpus-scoped rule needs it
+        evaluate(documents, full, resolve_entity=any(r not in DOC_LOCAL_RULES for r in full))
         timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
-        ctx.docs.unpersist()
-        ctx.spans.unpersist()
 
     # metrics only for rules this run evaluated: a pure no-op rerun must
     # not append metrics rows for work it did not do
     finish_run(
-        spark, args, snapshot, documents.select("doc_id"), list(plan), {},
+        spark, args, snapshot, documents.select("doc_id"), list(plan), rule_secs,
         round(time.monotonic() - t_run, 3),
     )
     # component timings: rule/fold work separated from the per-run
@@ -492,8 +501,10 @@ def run(args, spark: SparkSession) -> None:
     # (no new data), so coverage there is the union, recorded only when
     # it grew.
     if changed or not covered.issuperset(rule_ids):
-        record_run(spark, out, snapshot, set(rule_ids) if changed else covered | set(rule_ids))
+        record_run(
+            spark, out, snapshot, set(rule_ids) if changed else covered | set(rule_ids), seq + 1
+        )
         # committed: the next append folds from this snapshot's state,
         # so only it and the epoch this run read stay on disk
         keep = {f"epoch={snapshot}"} | ({f"epoch={prev['snapshot']}"} if prev else set())
-        prune_ri_state(spark, f"{out}/ri_state", keep)
+        prune_dirs(spark, f"{out}/ri_state", keep)

@@ -7,7 +7,8 @@ Batch lifecycle (north rule):
 2. build the shared parsed context, cached while any rule is left to
    write;
 3. write each selected rule as its own Spark job, several in flight at
-   once (engine.run_rules_concurrent), each overwriting its own
+   once (engine.run_rules_concurrent into engine.parquet_sink, the one
+   executor of every lifecycle), each overwriting its own
    ``<output>/violations/rule_id=<id>/`` directory — driver-side
    planning of one rule overlaps executor work of the others;
 4. roll up per-partition pass/fail verdicts to ``<output>/verdicts/``
@@ -25,11 +26,12 @@ run covered at this snapshot, validate only the appended files
 (doc-local rules), fold the persisted RI state (delquote/delvar), or
 evaluate the whole corpus (every other rule, and any rule the last run
 did not cover).  The first run on an output dir is the all-full
-baseline.  Both lifecycles share one prologue (:func:`begin_run`: rule
-ids, layout pin, resume set) and one commit tail (:func:`finish_run`:
-verdicts, sample, metrics).  An output directory is bound to the
-lifecycle of its first run by its ``layout`` record: the two partition
-violations differently, and mixing them would double-count.
+baseline.  Both lifecycles share the suite executor, one prologue
+(:func:`begin_run`: rule ids, layout pin, resume set) and one commit
+tail (:func:`finish_run`: verdicts, sample, metrics).  An output
+directory is bound to the lifecycle of its first run by its ``layout``
+record: the two partition violations differently, and mixing them would
+double-count.
 
 The driver never collects violation rows; everything is executor-side
 writes.  The small tables the driver builds itself (layout record,
@@ -90,18 +92,21 @@ def read_committed(spark, path: str, ddl: str):
 
 def check_rules(rules: list[str] | None) -> None:
     """Fail fast, before any write, on a --rules list that is empty or
-    names an unknown rule id: a typo'd entry must not get a fabricated
-    metrics row, and ``--rules`` with no ids must not silently mean all
-    18.  ``None`` (no --rules at all) is the only spelling of "all"."""
-    from gwv_spark.rules import ALL_RULE_IDS
+    that engine._registered refuses (an unknown or repeated id): a
+    typo'd entry must not get a fabricated metrics row, a repeated one
+    must not write its rule twice, and ``--rules`` with no ids must not
+    silently mean all 18.  ``None`` (no --rules at all) is the only
+    spelling of "all"."""
+    from gwv_spark import engine
 
     if rules is None:
         return
     if not rules:
         raise SystemExit("--rules given with no rule ids (omit it to run all)")
-    unknown = [r for r in rules if r not in ALL_RULE_IDS]
-    if unknown:
-        raise SystemExit(f"unknown rule ids: {unknown} (known: {ALL_RULE_IDS})")
+    try:
+        engine._registered(rules)
+    except (KeyError, ValueError) as e:
+        raise SystemExit(f"--rules: {e.args[0]}") from None
 
 
 def begin_run(spark, args, snapshot: str) -> tuple[list[str], set[str]]:
@@ -245,18 +250,10 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     args = p.parse_args(argv)
     check_rules(args.rules)
 
-    # On a cluster the session comes fully configured from spark-submit
-    # --conf; only job-agnostic settings are set here.
+    # on a cluster the session comes fully configured from spark-submit
     owns_session = spark is None
     if owns_session:
         spark = SparkSession.builder.appName("gwv_spark-validate").getOrCreate()
-    # Resume correctness REQUIRES dynamic partition overwrite: with the
-    # default 'static' mode, an overwrite partitioned by rule_id would
-    # delete the whole violations directory — including partitions of
-    # rules skipped by --resume — while their metrics rows still mark
-    # them done.  Set it explicitly so an externally configured cluster
-    # session can't silently lose resumed rules' violations.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         if args.incremental:
             from gwv_spark import incremental

@@ -1075,31 +1075,33 @@ def _rule_ctx(spark, sf_dir):
     return engine.make_context(spark, synth_docs(spark, sf_dir), attrs=attrs)
 
 
+def _rule_plan(spark, sf_dir, rule_id):
+    """One rule's violations plan over the sf_dir corpus."""
+    from gwv_spark.rules import load_all_rules
+
+    load_all_rules()
+    return _rule_ctx(spark, sf_dir).plan(rule_id)
+
+
 def _untag(col):
     return F.expr(f"substring({col}, 2)")
 
 
 @q("gwv_delvar_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).delvar_sql(synth_docs_sql(sf)))
 def gwv_delvar_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["delvar"])
+    v = _rule_plan(spark, sf_dir, "delvar")
     return v.select("doc_id", _untag("detail[0]").alias("base"))
 
 
 @q("gwv_order_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).order_sql(synth_docs_sql(sf)))
 def gwv_order_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["order"])
+    v = _rule_plan(spark, sf_dir, "order")
     return v.select("doc_id", "errcode", _untag("detail[0]").alias("part_name"))
 
 
 @q("gwv_kosekitoki_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).kosekitoki_sql(synth_docs_sql(sf)))
 def gwv_kosekitoki_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["kosekitoki"])
+    v = _rule_plan(spark, sf_dir, "kosekitoki")
     params = F.nullif(
         F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|"),
         F.lit(""),
@@ -1109,9 +1111,7 @@ def gwv_kosekitoki_q(spark, sf_dir):
 
 @q("gwv_ucsalias_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).ucsalias_sql(synth_docs_sql(sf)))
 def gwv_ucsalias_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["ucsalias"])
+    v = _rule_plan(spark, sf_dir, "ucsalias")
     return v.select(
         "doc_id",
         "errcode",
@@ -1121,18 +1121,14 @@ def gwv_ucsalias_q(spark, sf_dir):
 
 @q("gwv_donotuse_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).donotuse_sql(synth_docs_sql(sf)))
 def gwv_donotuse_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["donotuse"])
+    v = _rule_plan(spark, sf_dir, "donotuse")
     parts = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select("doc_id", parts.alias("parts"))
 
 
 @q("gwv_mustrenew_violations", lambda sf: __import__("gwv_spark.gwv_sql", fromlist=["x"]).mustrenew_sql(synth_docs_sql(sf)))
 def gwv_mustrenew_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["mustrenew"])
+    v = _rule_plan(spark, sf_dir, "mustrenew")
     quoters = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select(F.col("doc_id").alias("part_name"), "errcode", quoters.alias("quoters"))
 
@@ -1162,9 +1158,7 @@ def _related_oracle(sf: str) -> str:
 
 @q("gwv_related_violations", _related_oracle)
 def gwv_related_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["related"])
+    v = _rule_plan(spark, sf_dir, "related")
     params = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select("doc_id", "errcode", params.alias("params"))
 
@@ -1176,9 +1170,7 @@ def gwv_related_q(spark, sf_dir):
     ),
 )
 def gwv_ids_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["ids"])
+    v = _rule_plan(spark, sf_dir, "ids")
     return v.select("doc_id", "errcode", F.col("sortkey").alias("detail_key"))
 
 
@@ -1195,9 +1187,7 @@ def _naming_oracle(sf: str) -> str:
 
 @q("gwv_naming_violations", _naming_oracle)
 def gwv_naming_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["naming"])
+    v = _rule_plan(spark, sf_dir, "naming")
     params = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select("doc_id", "errcode", params.alias("params"))
 
@@ -1228,9 +1218,7 @@ def _j_oracle(sf: str) -> str:
 
 @q("gwv_j_violations", _j_oracle)
 def gwv_j_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["j"])
+    v = _rule_plan(spark, sf_dir, "j")
     params = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select("doc_id", "errcode", params.alias("params"))
 
@@ -1288,9 +1276,7 @@ def _mj_oracle(sf: str) -> str:
 
 @q("gwv_mj_violations", _mj_oracle)
 def gwv_mj_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["mj"])
+    v = _rule_plan(spark, sf_dir, "mj")
     return v.select("doc_id", "errcode")
 
 
@@ -1304,9 +1290,7 @@ def _width_oracle(sf: str) -> str:
 
 @q("gwv_width_violations", _width_oracle)
 def gwv_width_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["width"])
+    v = _rule_plan(spark, sf_dir, "width")
     return v.select("doc_id", "errcode")
 
 
@@ -1317,9 +1301,7 @@ def gwv_width_q(spark, sf_dir):
     ),
 )
 def gwv_illegal_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["illegal"])
+    v = _rule_plan(spark, sf_dir, "illegal")
     return v.select("doc_id", "errcode", F.col("sortkey").alias("detail_key"))
 
 
@@ -1396,9 +1378,7 @@ def gwv_dup_q(spark, sf_dir):
     99 parts, 9 position marks) with full params and the reference's
     single-error precedence, hash-checked against an independent
     relational oracle (gwv_sql.dup_sql)."""
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["dup"])
+    v = _rule_plan(spark, sf_dir, "dup")
     params = F.array_join(
         F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|"
     )
@@ -1435,9 +1415,7 @@ def gwv_corner_boxhits_q(spark, sf_dir):
     ).corner_expected_sql(sf),
 )
 def gwv_corner_q(spark, sf_dir):
-    from gwv_spark import engine
-
-    v = engine.run_rules(_rule_ctx(spark, sf_dir), ["corner"])
+    v = _rule_plan(spark, sf_dir, "corner")
     params = F.array_join(F.transform(F.col("detail"), lambda x: F.substring(x, 2, 1 << 30)), "|")
     return v.select("doc_id", "errcode", params.alias("params"))
 

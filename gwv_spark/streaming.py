@@ -6,19 +6,19 @@ Every stream here has one shape: a checkpointed file source whose
 engine over the microbatch and over epoch-keyed parquet tables under
 the output dir.  The checkpoint's file index maps each landed file to
 exactly one epoch; each body reads only epochs ≤ its own and overwrites
-only its own epoch (:func:`_write_epoch`), so an epoch Spark retries
-after a partial write leaves every table as one run would — exactly
-once end to end.  No stream keeps Python state; the tiers and where
-each keeps its state:
+only its own epoch (:func:`_write_epoch`; violations per rule through
+engine.parquet_sink), so an epoch Spark retries after a partial write
+leaves every table as one run would — exactly once end to end.  No
+stream keeps Python state; the tiers and where each keeps its state:
 
 - **Doc-local validation** (:func:`validate_stream`) — the
   DOCUMENT-LOCAL rules (:data:`DOC_LOCAL_RULES`, verdicts that depend
   only on the document's own columns plus static config dims) run per
-  microbatch, so violations stream out minutes after arrival instead of
-  at the next full-corpus run.  Stateless: ``violations/``,
-  ``verdicts/`` and ``metrics/`` hold one partition per epoch.  This
-  tier carries the geometry-heavy rules (corner, dup, illegal) — the
-  bulk of per-doc CPU.
+  microbatch through the batch job's suite executor, so violations
+  stream out minutes after arrival instead of at the next full-corpus
+  run.  Stateless: ``violations/``, ``verdicts/`` and ``metrics/`` hold
+  one partition per epoch.  This tier carries the geometry-heavy rules
+  (corner, dup, illegal) — the bulk of per-doc CPU.
 - **Incremental RI** (:func:`start_ri_stream`) — the two referential
   rules that are pure existence checks (delquote, delvar): each
   microbatch runs one step of the batch tier's retraction fold
@@ -75,7 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gwv_spark import engine, incremental, job, stats, textops
-from gwv_spark.rules import load_all_rules
+from gwv_spark.rules import VIOLATIONS_DDL
 from gwv_spark.session import local_frame
 
 # Documents-table shape (BASELINE.json input_hint; corpus.spark_generate).
@@ -143,17 +143,17 @@ def _start(
     return writer.trigger(processingTime=processing_time).start()
 
 
-def _write_epoch(df: DataFrame, root: str, *partition_by: str) -> None:
-    """Write ``df`` under ``root`` partitioned by ``partition_by``
-    (default ``epoch_id``) with DYNAMIC partition overwrite: only the
-    partitions present in ``df`` are replaced, so a retried epoch
-    overwrites its own rows instead of appending duplicates and every
-    other epoch stays untouched.  (An empty ``df`` writes nothing, so a
-    retry of an epoch with no rows changes nothing either.)"""
+def _write_epoch(df: DataFrame, root: str, partition_by: str = "epoch_id") -> None:
+    """Write ``df`` under ``root`` partitioned by ``partition_by`` with
+    DYNAMIC partition overwrite: only the partitions present in ``df``
+    are replaced, so a retried epoch overwrites its own rows instead of
+    appending duplicates and every other epoch stays untouched.  (An
+    empty ``df`` writes nothing, so a retry of an epoch with no rows
+    changes nothing either.)"""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*(partition_by or ("epoch_id",)))
+        .partitionBy(partition_by)
         .parquet(root)
     )
 
@@ -171,14 +171,16 @@ def validate_stream(
     """Start the streaming validation query; returns the StreamingQuery.
 
     Per microbatch (foreachBatch — the rule plans need the whole batch
-    for their groupBys and Arrow UDFs), each sink written through
-    :func:`_write_epoch` (exactly once; sound because the rule plans are
+    for their groupBys and Arrow UDFs), each sink overwrites only the
+    epoch's own rows (exactly once; sound because the rule plans are
     deterministic over the epoch's fixed file set, so a retry reproduces
     the same rows):
 
-    - violations → ``<output>/violations/epoch_id=<n>/rule_id=<id>/``
-      (same schema as the batch job's sink plus the epoch — a reader
-      unions both tiers' directories);
+    - violations → ``<output>/violations/epoch_id=<n>/rule_id=<id>/``,
+      one job per rule through the batch job's executor and sink
+      (engine.run_rules_concurrent, engine.parquet_sink) — same schema
+      as the batch job's sink plus the epoch, so a reader unions both
+      tiers' directories;
     - per-(bucket, rule) verdicts for the batch's docs →
       ``<output>/verdicts/epoch_id=<n>/`` (run_id = ``epoch=<n>``);
     - one metrics row per epoch → ``<output>/metrics/epoch_id=<n>/``
@@ -187,9 +189,9 @@ def validate_stream(
     ``processing_time=None`` drains everything not yet processed and
     stops — the incremental-batch shape (cron-style catch-up).  With an
     interval it runs continuously.  Corpus-scoped rules are rejected:
-    their per-batch result is relative to the batch, not the corpus."""
-    load_all_rules()
-    rids = list(rule_ids) if rule_ids is not None else list(DOC_LOCAL_RULES)
+    their per-batch result is relative to the batch, not the corpus; so
+    are unknown and repeated ids (engine._registered)."""
+    rids = engine._registered(DOC_LOCAL_RULES if rule_ids is None else rule_ids)
     if not rids:
         raise ValueError("rule_ids is empty: select at least one rule")
     scoped = [r for r in rids if r not in DOC_LOCAL_RULES]
@@ -226,42 +228,37 @@ def make_batch_processor(
     Doc-local rules never read the entity columns, so the microbatch
     context skips the alias-dereference self join: the validation plans
     are shuffle-free narrow maps over the landed files (only the verdict
-    rollup still aggregates, by bucket)."""
+    rollup still aggregates, by bucket).  Each rule overwrites its own
+    directory of the epoch; the verdicts and counts read the epoch back
+    once."""
 
     def _process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.monotonic()
+        e = int(epoch_id)
         ctx = engine.make_context(
             spark, batch_df, cache=True, ignore_error=ignore_error,
             resolve_entity=False,
         )
         try:
-            v = (
-                engine.run_rules(ctx, rids)
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .persist()
+            vio_dir = f"{out}/violations/epoch_id={e}"
+            engine.run_rules_concurrent(ctx, rids, sink=engine.parquet_sink(vio_dir))
+            v = job.read_committed(spark, vio_dir, VIOLATIONS_DDL)
+            run_id = f"epoch={e}"
+            verdicts = engine.partition_verdicts(
+                ctx.docs,
+                v.where(F.col("errcode") != "__error__"),
+                n_buckets=n_buckets,
+                run_id=run_id,
+            ).withColumn("epoch_id", F.lit(e))
+            _write_epoch(verdicts, f"{out}/verdicts")
+            n_docs = ctx.docs.count()  # cached — no recompute
+            metrics = local_frame(
+                spark,
+                [(run_id, e, n_docs, v.count(), round(time.monotonic() - t0, 3))],
+                "run_id STRING, epoch_id BIGINT, n_docs BIGINT, "
+                "n_violations BIGINT, wall_s DOUBLE",
             )
-            try:
-                _write_epoch(v, f"{out}/violations", "epoch_id", "rule_id")
-                run_id = f"epoch={int(epoch_id)}"
-                verdicts = engine.partition_verdicts(
-                    ctx.docs,
-                    v.where(F.col("errcode") != "__error__"),
-                    n_buckets=n_buckets,
-                    run_id=run_id,
-                ).withColumn("epoch_id", F.lit(int(epoch_id)))
-                _write_epoch(verdicts, f"{out}/verdicts")
-                n_docs = ctx.docs.count()  # cached — no recompute
-                n_vio = v.count()
-                metrics = local_frame(
-                    spark,
-                    [(run_id, int(epoch_id), n_docs, n_vio,
-                      round(time.monotonic() - t0, 3))],
-                    "run_id STRING, epoch_id BIGINT, n_docs BIGINT, "
-                    "n_violations BIGINT, wall_s DOUBLE",
-                )
-                _write_epoch(metrics, f"{out}/metrics")
-            finally:
-                v.unpersist()
+            _write_epoch(metrics, f"{out}/metrics")
         finally:
             ctx.docs.unpersist()
             ctx.spans.unpersist()
@@ -459,7 +456,7 @@ def make_ri_batch_processor(spark: SparkSession, out: str):
             f"{out}/ri_keys/epoch_id={e}"
         )
         keep = {f"epoch_id={e}"} | ({f"epoch_id={prior[-1]}"} if prior else set())
-        incremental.prune_ri_state(spark, f"{out}/ri_state", keep)
+        incremental.prune_dirs(spark, f"{out}/ri_state", keep)
 
     return _process
 

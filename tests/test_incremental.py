@@ -438,3 +438,40 @@ def test_crash_after_dropping_a_rule_then_rerun_with_it(spark, tmp_path, monkeyp
     expected = vio_set(spark, ref_out / "violations")
     assert any(r[0] == "order" for r in expected), "fixture must produce order violations"
     assert vio_set(spark, out / "violations") == expected
+
+
+def test_runs_log_head_is_the_highest_seq(spark, tmp_path):
+    """The runs log's head is its row of highest seq, whatever the wall
+    clock said: a clock that stepped back, or two rows in one tick, must
+    not make an older snapshot the diff base.  A tied top seq (two runs
+    forked the log) and a log written without seq fail instead of
+    guessing."""
+    from gwv_spark import incremental
+    from gwv_spark.session import local_frame
+
+    def log(name, rows, ddl=incremental.RUNS_DDL):
+        out = tmp_path / name
+        local_frame(spark, rows, ddl).write.parquet(str(out / "runs"))
+        return str(out)
+
+    # seq 3 stepped back in time; seq 4 shares seq 3's tick
+    head = incremental.last_run(spark, log("clock", [
+        ("a", 100.0, "numexp", 1), ("b", 200.0, "numexp", 2),
+        ("c", 150.0, "numexp,order", 3), ("d", 150.0, "order", 4),
+    ]))
+    assert (head["snapshot"], head["seq"], head["rules"]) == ("d", 4, {"order"})
+    assert head["committed"] == {"a", "b", "c", "d"}
+    # the latest ts is an older row
+    head = incremental.last_run(spark, log("behind", [
+        ("a", 300.0, "numexp", 2), ("b", 900.0, "numexp", 1),
+    ]))
+    assert head["snapshot"] == "a"
+
+    with pytest.raises(SystemExit, match="forks at seq 2"):
+        incremental.last_run(spark, log("fork", [
+            ("a", 1.0, "numexp", 1), ("b", 2.0, "numexp", 2), ("c", 3.0, "numexp", 2),
+        ]))
+    with pytest.raises(SystemExit, match="lacks seq.*re-baseline"):
+        incremental.last_run(spark, log(
+            "unsequenced", [("a", 1.0, "numexp")], "snapshot STRING, ts DOUBLE, rules STRING"
+        ))

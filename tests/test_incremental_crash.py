@@ -2,19 +2,20 @@
 incremental.py).
 
 One append over a covered chain makes a fixed set of parquet writes
-under its output dir: the doc-local epoch, the RI state, the RI epoch,
-the corpus-scoped epoch, verdicts, metrics, component_timings and the
-runs row.  Each case copies one baseline output dir, kills the append
-right after its k-th write (``DataFrameWriter.parquet`` wrapped to raise
-once the write returns), then reruns with ``--resume`` at the same
-snapshot: the violations must equal a classic run's as a multiset
-(exceptAll both ways).  The count of writes is asserted, so a write
-added to the append cannot go uncovered.
+under its output dir: one violations epoch per rule (each its own job
+through the suite executor), the RI state, verdicts, metrics,
+component_timings and the runs row.  Each case copies one baseline
+output dir, kills the append right after its k-th write
+(``DataFrameWriter.parquet`` wrapped to raise once the write returns),
+then reruns with ``--resume`` at the same snapshot: the violations must
+equal a classic run's as a multiset (exceptAll both ways).  The count of
+writes is asserted, so a write added to the append cannot go uncovered.
 """
 
 from __future__ import annotations
 
 import shutil
+import threading
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -26,13 +27,16 @@ from gwv_spark.corpus import ensure_corpus
 
 # one rule per class: doc-local, RI (both), corpus-scoped
 RULES = ["numexp", "delquote", "delvar", "ucsalias"]
+# two doc-local rules: the append's delta step writes them concurrently
+DOC_LOCAL_PAIR = ["numexp", "order"]
 
 # the top-level output table of each write one append makes
 APPEND_WRITES = sorted([
-    "violations",  # doc-local delta epoch
+    "violations",  # numexp's delta epoch
     "ri_state",
-    "violations",  # RI epoch
-    "violations",  # corpus-scoped epoch
+    "violations",  # delquote's epoch
+    "violations",  # delvar's epoch
+    "violations",  # ucsalias's full epoch
     "verdicts",
     "metrics",
     "component_timings",
@@ -44,8 +48,8 @@ class Crash(RuntimeError):
     pass
 
 
-def _args(corpus, out, *extra):
-    return ["--input", str(corpus), "--output", str(out), "--rules", *RULES,
+def _args(corpus, out, *extra, rules=RULES):
+    return ["--input", str(corpus), "--output", str(out), "--rules", *rules,
             "--n-buckets", "4", "--incremental", *extra]
 
 
@@ -57,45 +61,52 @@ def _bag(spark, path):
     )
 
 
-@pytest.fixture(scope="module")
-def chain(spark, tmp_path_factory):
+def _chain(spark, root, rules):
     """A corpus of a 120-doc baseline file plus one 30-doc append file,
-    an incremental output dir holding the baseline run only, and the
-    classic run's violations over the whole corpus."""
-    root = tmp_path_factory.mktemp("incremental_crash")
+    an incremental output dir holding the baseline run of ``rules``
+    only, and the classic run's violations over the whole corpus."""
     table = pq.read_table(ensure_corpus(root / "gen", 150) / "documents.parquet")
     corpus = root / "corpus"
     corpus.mkdir()
     pq.write_table(table.slice(0, 120), corpus / "part-000.parquet")
     baseline = root / "baseline"
-    job.main(_args(corpus, baseline), spark=spark)
+    job.main(_args(corpus, baseline, rules=rules), spark=spark)
     pq.write_table(table.slice(120, 30), corpus / "part-001.parquet")
     classic = root / "classic"
-    job.main(["--input", str(corpus), "--output", str(classic), "--rules", *RULES,
+    job.main(["--input", str(corpus), "--output", str(classic), "--rules", *rules,
               "--n-buckets", "4"], spark=spark)
     want = _bag(spark, classic / "violations")
-    assert {r[0] for r in want} == set(RULES), "fixture must produce every rule's rows"
+    assert {r[0] for r in want} == set(rules), "fixture must produce every rule's rows"
     return corpus, baseline, want
 
 
-def _append(spark, monkeypatch, corpus, out, crash_at=None):
+@pytest.fixture(scope="module")
+def chain(spark, tmp_path_factory):
+    return _chain(spark, tmp_path_factory.mktemp("incremental_crash"), RULES)
+
+
+def _append(spark, monkeypatch, corpus, out, crash_at=None, rules=RULES):
     """Run one append on ``out``, raising :class:`Crash` right after its
     ``crash_at``-th write under ``out``.  Returns the tables written, in
-    order."""
+    order.  Rule writes run on several threads at once, so each write
+    takes its number under a lock."""
     real = DataFrameWriter.parquet
     prefix = f"{out}/"
     written = []
+    lock = threading.Lock()
 
     def parquet(self, path, *a, **kw):
         real(self, path, *a, **kw)
         if str(path).startswith(prefix):
-            written.append(str(path)[len(prefix):].split("/")[0])
-            if len(written) == crash_at:
+            with lock:
+                written.append(str(path)[len(prefix):].split("/")[0])
+                k = len(written)
+            if k == crash_at:
                 raise Crash(f"after write {crash_at}: {path}")
 
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", parquet)
-        job.main(_args(corpus, out), spark=spark)
+        job.main(_args(corpus, out, rules=rules), spark=spark)
     return written
 
 
@@ -109,6 +120,22 @@ def test_append_write_count(spark, monkeypatch, chain, tmp_path):
     assert sorted(written) == APPEND_WRITES, written
     assert _bag(spark, out / "violations") == want
 
+    # every step's metrics rows carry the executor's per-rule write
+    # time, as the classic run's do; the step totals keep their names
+    runs = spark.read.parquet(str(out / "runs"))
+    assert sorted(r["seq"] for r in runs.collect()) == [1, 2]
+    snapshot = runs.where("seq = 2").collect()[0]["snapshot"]
+    metrics = spark.read.parquet(str(out / "metrics")).where(f"snapshot = '{snapshot}'")
+    rows = {r["rule_id"]: r for r in metrics.collect()}
+    assert set(rows) == set(RULES)
+    for row in rows.values():
+        assert row["wall_s"] > 0 and row["per_rule_timing"]
+        assert row["run_total_s"] >= row["wall_s"]
+    timings = spark.read.parquet(str(out / "component_timings"))
+    assert {r["component"] for r in timings.where(f"snapshot = '{snapshot}'").collect()} == {
+        "__local_delta__", "__ri_fold__", "__scoped_full__"
+    }
+
 
 @pytest.mark.parametrize("k", range(1, len(APPEND_WRITES) + 1))
 def test_crash_after_write_k_then_resume(spark, monkeypatch, chain, tmp_path, k):
@@ -118,4 +145,21 @@ def test_crash_after_write_k_then_resume(spark, monkeypatch, chain, tmp_path, k)
     with pytest.raises(Crash):
         _append(spark, monkeypatch, corpus, out, crash_at=k)
     job.main(_args(corpus, out, "--resume"), spark=spark)
+    assert _bag(spark, out / "violations") == want
+
+
+def test_crash_in_concurrent_doc_local_step_then_resume(
+    spark, monkeypatch, tmp_path_factory, tmp_path
+):
+    """The delta step writes two doc-local rules as concurrent jobs.  A
+    write raising in one of them fails the job, and the --resume rerun
+    equals the classic run."""
+    corpus, baseline, want = _chain(
+        spark, tmp_path_factory.mktemp("incremental_crash_pair"), DOC_LOCAL_PAIR
+    )
+    out = tmp_path / "out"
+    shutil.copytree(baseline, out)
+    with pytest.raises(Crash, match="violations/rule_id="):
+        _append(spark, monkeypatch, corpus, out, crash_at=1, rules=DOC_LOCAL_PAIR)
+    job.main(_args(corpus, out, "--resume", rules=DOC_LOCAL_PAIR), spark=spark)
     assert _bag(spark, out / "violations") == want

@@ -103,6 +103,45 @@ def test_job_rejects_empty_rules_before_any_write(spark, tmp_path):
     assert list(engine.result_json([])) == ALL_RULE_IDS
 
 
+def test_repeated_rule_id_is_refused_before_any_write(spark, tmp_path):
+    """A rule id named twice used to write its rule twice: two
+    concurrent overwrites of ``rule_id=numexp`` both committed (22 rows
+    where one naming gives 11), and the union held every row twice.  The
+    job (both lifecycles), the stream and both engine entry points
+    refuse it before any write."""
+    import pytest
+
+    from gwv_spark import engine
+    from gwv_spark.streaming import validate_stream
+
+    data_dir = ensure_corpus(tmp_path / "corpus", 20)
+    inp = str(data_dir / "documents.parquet")
+
+    def tree():
+        return sorted(str(p) for p in tmp_path.rglob("*"))
+
+    before = tree()
+    for extra in ([], ["--incremental"]):
+        with pytest.raises(SystemExit, match="repeated.*numexp"):
+            job.main(["--input", inp, "--output", str(tmp_path / "out"),
+                      "--rules", "numexp", "order", "numexp", *extra], spark=spark)
+    with pytest.raises(ValueError, match="repeated.*numexp"):
+        validate_stream(spark, str(data_dir), str(tmp_path / "stream"),
+                        rule_ids=["numexp", "numexp"])
+    assert tree() == before
+    assert not spark.streams.active
+
+    ctx = engine.make_context(spark, spark.read.parquet(inp))
+    with pytest.raises(ValueError, match="repeated.*numexp"):
+        engine.run_rules(ctx, ["numexp", "numexp"])
+    written = []
+    with pytest.raises(ValueError, match="repeated.*numexp"):
+        engine.run_rules_concurrent(
+            ctx, ["numexp", "numexp"], sink=lambda rid, df: written.append(rid)
+        )
+    assert written == []
+
+
 def test_job_concurrent_mode_matches_fused(spark, tmp_path):
     """The job's per-rule writes (one Spark job per rule, several in
     flight, each overwriting its own rule_id=<id> directory) must read

@@ -137,3 +137,20 @@ def test_allowlist_is_tight():
     live = set(ALLOWED) & _reached(nodes, root_nodes, root_names)
     assert not live, f"reachable from a root, drop from ALLOWED: {sorted(live)}"
     assert all(why and "\n" not in why for why in ALLOWED.values())
+
+
+def test_only_run_suite_uses_the_fused_union():
+    """No lifecycle writes violations through the fused union
+    ``engine.run_rules``: every write goes per rule through
+    ``engine.run_rules_concurrent``.  Inside ``gwv_spark/`` only
+    ``engine.run_suite`` (the fused measurement probe) references it;
+    the driver contract and the tests use it from outside."""
+    nodes, _, _ = _graph()
+    users = sorted(key for key, names in nodes.items() if "run_rules" in names)
+    top = sorted(
+        str(path.relative_to(PKG))
+        for path in PKG.rglob("*.py")
+        for stmt in ast.parse(path.read_text()).body
+        if not isinstance(stmt, FUNCS) and "run_rules" in _names(stmt)
+    )
+    assert users == ["engine.run_suite"] and not top, (users, top)
