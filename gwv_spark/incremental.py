@@ -91,6 +91,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gwv_spark import fs
 from gwv_spark.session import local_frame
 
 RI_RULES = ["delquote", "delvar"]
@@ -193,19 +194,14 @@ def ri_fold_step(
     return kept.select(*RI_STATE_COLS), adds, retracts.select(*RI_STATE_COLS)
 
 
-def prune_dirs(spark: SparkSession, root: str, keep: set[str]) -> None:
-    """Delete every entry under ``root`` except the ones named in
-    ``keep`` and hidden (``_``/``.``) ones.  An RI state keeps the epoch
-    a fold step read and the one it wrote, pruned only after the step
-    committed, so a retried step still finds the epoch it reads."""
-    fs, jvm = _fs(spark, root)
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    if not fs.exists(path):
-        return
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name not in keep and not name.startswith(("_", ".")):
-            fs.delete(st.getPath(), True)
+def prune_dirs(root: str, keep: set[str]) -> None:
+    """Delete every visible entry under ``root`` except the ones named
+    in ``keep``.  An RI state keeps the epoch a fold step read and the
+    one it wrote, pruned only after the step committed, so a retried
+    step still finds the epoch it reads."""
+    for c in fs.children(root):
+        if c.name not in keep:
+            fs.delete(c.path)
 
 
 def shape_ri_state(state: DataFrame) -> DataFrame:
@@ -269,13 +265,7 @@ def last_run(spark: SparkSession, out: str) -> dict | None:
     }
 
 
-# ------------------------------------------------------------- fs helpers
-
-
-def _fs(spark: SparkSession, base: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(base)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+# ------------------------------------------------------------- lifecycle
 
 
 def _epoch_value(snapshot: str) -> str:
@@ -287,26 +277,21 @@ def _epoch_value(snapshot: str) -> str:
     return f"s{snapshot}"
 
 
-def _clear_epochs(
-    spark: SparkSession, vio_dir: str, rule_ids: list[str], keep: set[str] = frozenset()
-) -> None:
+def _clear_epochs(vio_dir: str, rule_ids: list[str], keep: set[str] = frozenset()) -> None:
     """Delete every epoch of the given rules except those of the
     snapshots in ``keep`` — by default all of them, before a COMPLETE
     set (RI fold, corpus-scoped or full recompute) is written under the
     current epoch."""
     names = {f"epoch={_epoch_value(s)}" for s in keep}
     for rid in rule_ids:
-        prune_dirs(spark, f"{vio_dir}/rule_id={rid}", names)
-
-
-# ------------------------------------------------------------- lifecycle
+        prune_dirs(f"{vio_dir}/rule_id={rid}", names)
 
 
 def _appended_files(ref: str, prev_sid: str, sid: str) -> list[str]:
     """The files snapshot ``sid`` holds beyond snapshot ``prev_sid``:
-    the diff of their two manifests (both plain paths).  Anything but a
-    pure append fails fast with instructions, never silently validates
-    a diff that isn't one."""
+    the diff of their two manifests (both qualified paths).  Anything
+    but a pure append fails fast with instructions, never silently
+    validates a diff that isn't one."""
     from gwv_spark import catalog
 
     try:
@@ -377,12 +362,9 @@ def run(args, spark: SparkSession) -> None:
     t_run = time.monotonic()
     timings: dict[str, float] = {}
     rule_secs: dict[str, float] = {}
-    fs, jvm = _fs(spark, out)
     # the state carries BOTH RI rules' cores whatever subset ran, so the
     # fold is sound iff the previous snapshot's state epoch exists
-    ri_current = prev is not None and fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{out}/ri_state/epoch={prev['snapshot']}")
-    )
+    ri_current = prev is not None and fs.exists(f"{out}/ri_state/epoch={prev['snapshot']}")
 
     def step(rid: str) -> str | None:
         if not changed:
@@ -420,10 +402,10 @@ def run(args, spark: SparkSession) -> None:
         # --resume skips keeps the current epoch (it wrote it before the
         # crash); a delta rule rewrites it.
         _clear_epochs(
-            spark, vio_dir, [r for r in rule_ids if r in done and r in DOC_LOCAL_RULES],
+            vio_dir, [r for r in rule_ids if r in done and r in DOC_LOCAL_RULES],
             prev["committed"] | {snapshot},
         )
-        _clear_epochs(spark, vio_dir, local_delta, prev["committed"])
+        _clear_epochs(vio_dir, local_delta, prev["committed"])
         # rules in the prior coverage NOT requested this run miss this
         # append: their chain breaks, and their epochs are append-UNAWARE
         # (a resolved dangling ref would still show through the verdicts
@@ -436,7 +418,7 @@ def run(args, spark: SparkSession) -> None:
         if dropped:
             seq += 1
             record_run(spark, out, prev["snapshot"], covered - dropped, seq)
-            _clear_epochs(spark, vio_dir, sorted(dropped))
+            _clear_epochs(vio_dir, sorted(dropped))
 
     if local_delta:
         t0 = time.monotonic()
@@ -459,7 +441,7 @@ def run(args, spark: SparkSession) -> None:
             state = ri_cores_full(documents)
         state_dir = f"{out}/ri_state/epoch={snapshot}"
         state.write.mode("overwrite").parquet(state_dir)
-        _clear_epochs(spark, vio_dir, ri)
+        _clear_epochs(vio_dir, ri)
         shaped = shape_ri_state(spark.read.parquet(state_dir))
         plans = {r: shaped.where(F.col("rule_id") == r) for r in ri}
         rule_secs.update(engine.run_rules_concurrent(
@@ -468,7 +450,7 @@ def run(args, spark: SparkSession) -> None:
         timings[f"__ri_{source}__"] = round(time.monotonic() - t0, 3)
     if full:
         t0 = time.monotonic()
-        _clear_epochs(spark, vio_dir, full)
+        _clear_epochs(vio_dir, full)
         # the entity join only when a non-RI corpus-scoped rule needs it
         evaluate(documents, full, resolve_entity=any(r not in DOC_LOCAL_RULES for r in full))
         timings["__scoped_full__"] = round(time.monotonic() - t0, 3)
@@ -507,4 +489,4 @@ def run(args, spark: SparkSession) -> None:
         # committed: the next append folds from this snapshot's state,
         # so only it and the epoch this run read stay on disk
         keep = {f"epoch={snapshot}"} | ({f"epoch={prev['snapshot']}"} if prev else set())
-        prune_dirs(spark, f"{out}/ri_state", keep)
+        prune_dirs(f"{out}/ri_state", keep)

@@ -58,34 +58,16 @@ METRICS_DDL = (
 )
 
 
-def _committed(spark, path: str) -> bool:
-    """Whether a write ever committed a file under ``path``: one not
-    hidden (``_``/``.``) by its own name or a parent directory's, as
-    Spark's file index sees it.  A clean run's violations dir and a
-    first write that died hold none."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return False
-    root = len(fs.makeQualified(p).toString().rstrip("/"))
-    files = fs.listFiles(p, True)
-    while files.hasNext():
-        rel = files.next().getPath().toString()[root:]
-        if not any(part.startswith(("_", ".")) for part in rel.split("/") if part):
-            return True
-    return False
-
-
 def read_committed(spark, path: str, ddl: str):
-    """The parquet table at ``path``, or an empty ``ddl`` frame when
-    nothing was committed there (:func:`_committed`).  Any other read
-    error raises: an unreadable table must never read as empty — an
-    unreadable violations dir would roll up as "all pass", an unreadable
-    runs log would re-baseline the output dir."""
+    """The parquet table at ``path``, or an empty ``ddl`` frame when no
+    write ever committed a visible file there.  Any other read error
+    raises: an unreadable table must never read as empty — an unreadable
+    violations dir would roll up as "all pass", an unreadable runs log
+    would re-baseline the output dir."""
+    from gwv_spark import fs
     from gwv_spark.session import local_frame
 
-    if not _committed(spark, path):
+    if not any(fs.files(path)):
         return local_frame(spark, [], ddl)
     return spark.read.parquet(path)
 
@@ -116,6 +98,7 @@ def begin_run(spark, args, snapshot: str) -> tuple[list[str], set[str]]:
 
     Fails fast on an output dir whose layout record names the other
     lifecycle; a fresh dir is pinned to this one."""
+    from gwv_spark import fs
     from gwv_spark.rules import ALL_RULE_IDS
     from gwv_spark.session import local_frame
 
@@ -123,7 +106,7 @@ def begin_run(spark, args, snapshot: str) -> tuple[list[str], set[str]]:
 
     out = args.output.rstrip("/")
     layout = f"{out}/layout"
-    if _committed(spark, layout):
+    if any(fs.files(layout)):
         prior = bool(spark.read.json(layout).collect()[0].asDict().get("incremental"))
         if prior != args.incremental:
             raise SystemExit(

@@ -30,7 +30,6 @@ from __future__ import annotations
 import argparse
 import sys
 from pathlib import Path
-from urllib.parse import urlsplit
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -87,14 +86,15 @@ def main(argv: list[str] | None = None, spark=None) -> None:
                 "continuous stream would race its own epoch writes")
     compact_base = None
     if args.compact_after is not None:
-        # catalog.compact rewrites local directories: a file: URI is
-        # turned into its path, any other scheme is refused up front
-        # rather than silently left uncompacted
-        target = args.sketch or args.output
-        url = urlsplit(target)
-        if url.scheme not in ("", "file"):
-            p.error(f"--compact-after needs a local output dir, got {target}")
-        compact_base = Path(url.path if url.scheme else target)
+        from urllib.parse import urlsplit
+
+        # catalog.compact's swap is a rename dance, checked here on the
+        # local file system only (either spelling); on an object store a
+        # rename is a copy.  Any other scheme is refused up front rather
+        # than compacted unchecked.
+        compact_base = args.sketch or args.output
+        if urlsplit(compact_base).scheme not in ("", "file"):
+            p.error(f"--compact-after needs a local output dir, got {compact_base}")
     if args.ri and args.rules is not None:
         p.error("--ri runs the fixed delquote/delvar pair; --rules applies "
                 "only to doc-local validation")
@@ -111,20 +111,13 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         spark = SparkSession.builder.appName("gwv_spark-stream").getOrCreate()
 
     def _maybe_compact() -> None:
-        if compact_base is None:
-            return
-        from gwv_spark import catalog
+        from gwv_spark import catalog, fs
 
-        for sub in sorted(compact_base.iterdir()) if compact_base.is_dir() else []:
-            # sinks only: checkpoints/underscore state stay untouched
-            if sub.is_dir() and not sub.name.startswith(("_", ".")):
-                res = catalog.compact(
-                    spark, str(sub), target_file_bytes=args.compact_after
-                )
-                print(
-                    f"compact {sub.name}: {res['files_before']} -> "
-                    f"{res['files_after']} files"
-                )
+        # sinks only: hidden checkpoints and state stay untouched
+        for sub in fs.children(compact_base) if compact_base else []:
+            if sub.is_dir:
+                res = catalog.compact(spark, sub.path, target_file_bytes=args.compact_after)
+                print(f"compact {sub.name}: {res['files_before']} -> {res['files_after']} files")
 
     if args.near_dup:
         from pyspark.sql import functions as F

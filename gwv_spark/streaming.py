@@ -74,7 +74,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gwv_spark import engine, incremental, job, stats, textops
+from gwv_spark import engine, fs, incremental, job, stats, textops
 from gwv_spark.rules import VIOLATIONS_DDL
 from gwv_spark.session import local_frame
 
@@ -374,14 +374,10 @@ RI_UPDATE_SCHEMA = (
 INCREMENTAL_RI_RULES = incremental.RI_RULES
 
 
-def _epochs_below(spark: SparkSession, root: str, epoch: int) -> list[int]:
+def _epochs_below(root: str, epoch: int) -> list[int]:
     """The ``epoch_id=<n>`` directories under ``root`` with n < epoch
     (none if ``root`` is absent)."""
-    fs, jvm = incremental._fs(spark, root)
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    if not fs.exists(path):
-        return []
-    names = [st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory()]
+    names = [c.name for c in fs.children(root) if c.is_dir]
     ids = [int(n.split("=", 1)[1]) for n in names if n.startswith("epoch_id=")]
     return sorted(n for n in ids if n < epoch)
 
@@ -434,7 +430,7 @@ def make_ri_batch_processor(spark: SparkSession, out: str):
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        prior = _epochs_below(spark, f"{out}/ri_state", e)
+        prior = _epochs_below(f"{out}/ri_state", e)
         if prior:
             state_prev = spark.read.parquet(f"{out}/ri_state/epoch_id={prior[-1]}")
         else:
@@ -456,7 +452,7 @@ def make_ri_batch_processor(spark: SparkSession, out: str):
             f"{out}/ri_keys/epoch_id={e}"
         )
         keep = {f"epoch_id={e}"} | ({f"epoch_id={prior[-1]}"} if prior else set())
-        incremental.prune_dirs(spark, f"{out}/ri_state", keep)
+        incremental.prune_dirs(f"{out}/ri_state", keep)
 
     return _process
 

@@ -10,10 +10,36 @@ snapshot reproducible."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
-from gwv_spark import catalog
+from gwv_spark import catalog, fs
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _leaf_dirs(ref):
+    """Directories holding visible data files directly, listed locally."""
+    base = Path(ref)
+    return sorted({
+        f.parent for f in base.rglob("*.parquet")
+        if not any(part.startswith(("_", ".")) for part in f.relative_to(base).parts)
+    })
+
+
+def _torn_write(monkeypatch):
+    """Make fs's next file write die half-way: half the bytes land."""
+    real = fs._write
+
+    def torn(path, data):
+        real(path, data[: len(data) // 2])
+        raise Crash(f"died writing {path}")
+
+    monkeypatch.setattr(fs, "_write", torn)
 
 
 @pytest.fixture()
@@ -62,6 +88,34 @@ def test_single_file_table_manifest(spark, tmp_path):
     sid = catalog.commit_snapshot(spark, f)
     assert catalog.load_snapshot(spark, f, sid).count() == 10
     assert [r["snapshot_id"] for r in catalog.snapshots(f)] == [sid]
+
+
+def test_plain_and_uri_spellings_pin_one_snapshot(spark, tmp_path):
+    """A table's snapshot id does not depend on how its path is spelled:
+    the plain path and its ``file://`` URI give one id and one manifest
+    (the URI spelling used to fail to fingerprint at all)."""
+    d = str(tmp_path / "sp ace" / "tbl")
+    spark.range(50).repartition(2).write.parquet(d)
+    uri = "file://" + d
+    assert catalog.snapshot_id(spark, uri) == catalog.snapshot_id(spark, d)
+    sid = catalog.commit_snapshot(spark, d)
+    assert catalog.commit_snapshot(spark, uri) == sid
+    assert [r["snapshot_id"] for r in catalog.snapshots(uri)] == [sid]
+    assert catalog.load_snapshot(spark, uri, sid).count() == 50
+
+
+def test_torn_manifest_write_is_rewritten(spark, versioned_table, monkeypatch):
+    """A commit that dies half-way through writing its manifest leaves
+    no torn ``<sid>.json`` behind: the next commit writes it whole, and
+    the snapshot loads (a torn one would fail every later read)."""
+    d = versioned_table
+    with monkeypatch.context() as m:
+        _torn_write(m)
+        with pytest.raises(Crash):
+            catalog.commit_snapshot(spark, d)
+    assert catalog.snapshots(d) == []
+    sid = catalog.commit_snapshot(spark, d)
+    assert catalog.load_snapshot(spark, d, sid).count() == 100
 
 
 def test_job_pin_commits_a_manifest(spark, tmp_path):
@@ -132,6 +186,22 @@ def test_job_as_of_reproduces_historical_run(spark, tmp_path):
     ids = [r["snapshot_id"] for r in catalog.snapshots(docs)]
     assert len(ids) == 2 and ids[0] == s1
 
+    # the same runs with the input spelled as a file:// URI: one more
+    # historical run equal to the first, and a live run that pins the
+    # snapshot the plain spelling committed (no third manifest)
+    uri = "file://" + docs
+    out4 = str(tmp_path / "out4")
+    jobmod.main(["--input", uri, "--output", out4, "--as-of", s1] + argv, spark=spark)
+    v4 = sorted(
+        map(tuple, spark.read.parquet(f"{out4}/violations")
+            .select("rule_id", "doc_id", "detail").collect())
+    )
+    assert v4 == v1
+    out5 = str(tmp_path / "out5")
+    jobmod.main(["--input", uri, "--output", out5] + argv, spark=spark)
+    assert [r["snapshot_id"] for r in catalog.snapshots(docs)] == ids
+    assert {r["snapshot"] for r in spark.read.parquet(f"{out5}/metrics").collect()} == {ids[1]}
+
 
 # ----------------------------------------------------------- compaction
 
@@ -150,7 +220,7 @@ def test_compact_partitioned_table(spark, tmp_path):
     )
     df.repartition(10).write.partitionBy("rule_id").parquet(ref)
     before = sorted((r["rule_id"], r["n"]) for r in spark.read.parquet(ref).collect())
-    files0 = len([p for p in catalog._leaf_dirs(ref) for p in p.glob("*.parquet")])
+    files0 = len([p for p in _leaf_dirs(ref) for p in p.glob("*.parquet")])
     assert files0 > 6
 
     res = catalog.compact(spark, ref, target_file_bytes=1 << 30)
@@ -193,7 +263,7 @@ def test_compact_resumes_interrupted_swap(spark, tmp_path):
 
     ref = str(tmp_path / "t")
     spark.range(500).repartition(4).write.parquet(ref)
-    leaf = catalog._leaf_dirs(ref)[0]
+    leaf = _leaf_dirs(ref)[0]
     files = sorted(p for p in leaf.glob("*.parquet"))
     # stage a rewrite by hand, journal it, and "crash" after deleting
     # only ONE old file
@@ -208,6 +278,24 @@ def test_compact_resumes_interrupted_swap(spark, tmp_path):
     assert spark.read.parquet(ref).count() == 500
     assert not tmp.exists()
     assert res["files_after"] == 1
+
+
+def test_torn_compaction_journal_is_redone(spark, tmp_path, monkeypatch):
+    """A compaction that dies half-way through writing its swap journal
+    leaves no torn ``_PLAN.json``: the originals are intact, and a rerun
+    stages again and finishes the swap (a torn journal would fail every
+    rerun)."""
+    ref = str(tmp_path / "t")
+    spark.range(500).repartition(4).write.parquet(ref)
+    with monkeypatch.context() as m:
+        _torn_write(m)
+        with pytest.raises(Crash, match="_PLAN.json"):
+            catalog.compact(spark, ref, target_file_bytes=1 << 30)
+    assert spark.read.parquet(ref).count() == 500
+    res = catalog.compact(spark, ref, target_file_bytes=1 << 30)
+    assert res["files_after"] == 1 and res["leaves_compacted"] == 1
+    assert spark.read.parquet(ref).count() == 500
+    assert not (Path(ref) / "_compact_tmp").exists()
 
 
 def test_compact_refuses_bucketed_tables(spark, tmp_path):
@@ -261,7 +349,7 @@ def test_stale_stage_and_manifest_visibility(spark, tmp_path):
     ref = str(tmp_path / "t")
     spark.range(300).coalesce(1).write.parquet(ref)
     fp_clean = catalog.snapshot_id(spark, ref)
-    leaf = catalog._leaf_dirs(ref)[0]
+    leaf = _leaf_dirs(ref)[0]
     tmp = leaf / "_compact_tmp"
     # crash mid-staging: staged files, no _PLAN.json
     spark.read.parquet(str(leaf)).repartition(2).write.parquet(str(tmp))

@@ -385,9 +385,10 @@ def test_unreadable_runs_log_raises(spark, tmp_path):
 
 def test_append_to_corpus_path_needing_percent_encoding(spark, tmp_path):
     """A corpus whose path holds a space: Spark lists its files as
-    percent-encoded URIs (``sp%20ace``), the manifests hold plain paths.
-    The append must be read as one (it used to be refused as "not an
-    append") and equal a classic run."""
+    percent-encoded URIs (``sp%20ace``), the manifests hold Hadoop's
+    qualified paths.  The append must be read as one (it used to be
+    refused as "not an append") and equal a classic run, whether the
+    corpus is spelled as a plain path or as a ``file://`` URI."""
     full = ensure_corpus(tmp_path / "gen", 100)
     table = pq.read_table(full / "documents.parquet")
     corpus = tmp_path / "sp ace" / "corpus"
@@ -396,13 +397,25 @@ def test_append_to_corpus_path_needing_percent_encoding(spark, tmp_path):
     out = tmp_path / "inc"
     args = ["--input", str(corpus), "--output", str(out),
             "--rules", "numexp", "delquote", "ucsalias", "--incremental"]
+    # the same chain with the corpus spelled as a file:// URI
+    out_uri = tmp_path / "inc_uri"
+    uri_args = ["--input", "file://" + str(corpus), "--output", str(out_uri), *args[4:]]
     job.main(args, spark=spark)
+    job.main(uri_args, spark=spark)
     pq.write_table(table.slice(80, 20), corpus / "part 001.parquet")
     job.main(args, spark=spark)
+    job.main(uri_args, spark=spark)
     ref_out = tmp_path / "classic"
     job.main(["--input", str(corpus), "--output", str(ref_out),
               "--rules", "numexp", "delquote", "ucsalias"], spark=spark)
     assert vio_set(spark, out / "violations") == vio_set(spark, ref_out / "violations")
+    assert vio_set(spark, out_uri / "violations") == vio_set(spark, ref_out / "violations")
+
+    # both spellings pinned the same two snapshots
+    def pinned(o):
+        return sorted(r["snapshot"] for r in spark.read.parquet(str(o / "runs")).collect())
+
+    assert pinned(out_uri) == pinned(out) and len(set(pinned(out))) == 2
 
 
 def test_crash_after_dropping_a_rule_then_rerun_with_it(spark, tmp_path, monkeypatch):

@@ -4,12 +4,16 @@ incremental.py).
 One append over a covered chain makes a fixed set of parquet writes
 under its output dir: one violations epoch per rule (each its own job
 through the suite executor), the RI state, verdicts, metrics,
-component_timings and the runs row.  Each case copies one baseline
-output dir, kills the append right after its k-th write
-(``DataFrameWriter.parquet`` wrapped to raise once the write returns),
-then reruns with ``--resume`` at the same snapshot: the violations must
-equal a classic run's as a multiset (exceptAll both ways).  The count of
-writes is asserted, so a write added to the append cannot go uncovered.
+component_timings and the runs row.  A second append also makes a fixed
+set of deletes: the previous epoch of every rule it rewrites whole (RI
+and full steps) and, once committed, the RI state epoch it no longer
+folds from.  Each case copies one output dir, kills the append right
+after its k-th write (``DataFrameWriter.parquet`` wrapped to raise once
+the write returns) or its k-th delete (``gwv_spark.fs.delete`` wrapped
+the same way), then reruns with ``--resume`` at the same snapshot: the
+violations must equal a classic run's as a multiset (exceptAll both
+ways).  The counts of writes and deletes are asserted, so one added to
+the append cannot go uncovered.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
-from gwv_spark import job
+from gwv_spark import fs, job
 from gwv_spark.corpus import ensure_corpus
 
 # one rule per class: doc-local, RI (both), corpus-scoped
@@ -43,6 +47,14 @@ APPEND_WRITES = sorted([
     "runs",
 ])
 
+# the top-level output table of each delete the second append makes
+APPEND_DELETES = sorted([
+    "violations",  # delquote's previous epoch
+    "violations",  # delvar's previous epoch
+    "violations",  # ucsalias's previous epoch
+    "ri_state",  # the baseline's state epoch
+])
+
 
 class Crash(RuntimeError):
     pass
@@ -61,17 +73,21 @@ def _bag(spark, path):
     )
 
 
-def _chain(spark, root, rules):
-    """A corpus of a 120-doc baseline file plus one 30-doc append file,
-    an incremental output dir holding the baseline run of ``rules``
-    only, and the classic run's violations over the whole corpus."""
-    table = pq.read_table(ensure_corpus(root / "gen", 150) / "documents.parquet")
+def _chain(spark, root, rules, appends=1):
+    """A corpus of a 120-doc baseline file plus ``appends`` 30-doc
+    append files, an incremental output dir holding the runs of
+    ``rules`` over all but the last file (the baseline, then each append
+    but the last), and the classic run's violations over the whole
+    corpus."""
+    table = pq.read_table(ensure_corpus(root / "gen", 120 + 30 * appends) / "documents.parquet")
     corpus = root / "corpus"
     corpus.mkdir()
-    pq.write_table(table.slice(0, 120), corpus / "part-000.parquet")
+    parts = [table.slice(0, 120)] + [table.slice(120 + 30 * i, 30) for i in range(appends)]
     baseline = root / "baseline"
-    job.main(_args(corpus, baseline, rules=rules), spark=spark)
-    pq.write_table(table.slice(120, 30), corpus / "part-001.parquet")
+    for i, part in enumerate(parts):
+        pq.write_table(part, corpus / f"part-{i:03d}.parquet")
+        if i < appends:
+            job.main(_args(corpus, baseline, rules=rules), spark=spark)
     classic = root / "classic"
     job.main(["--input", str(corpus), "--output", str(classic), "--rules", *rules,
               "--n-buckets", "4"], spark=spark)
@@ -85,29 +101,46 @@ def chain(spark, tmp_path_factory):
     return _chain(spark, tmp_path_factory.mktemp("incremental_crash"), RULES)
 
 
-def _append(spark, monkeypatch, corpus, out, crash_at=None, rules=RULES):
+@pytest.fixture(scope="module")
+def delete_chain(spark, tmp_path_factory):
+    """Two appends: the second deletes an RI state epoch too."""
+    return _chain(spark, tmp_path_factory.mktemp("incremental_crash_delete"), RULES, appends=2)
+
+
+def _append(spark, monkeypatch, corpus, out, crash_at=None, rules=RULES, crash_on="write"):
     """Run one append on ``out``, raising :class:`Crash` right after its
-    ``crash_at``-th write under ``out``.  Returns the tables written, in
-    order.  Rule writes run on several threads at once, so each write
+    ``crash_at``-th write or delete (``crash_on``) under ``out``.
+    Returns the tables written and deleted, in order, keyed "write" and
+    "delete".  Rule writes run on several threads at once, so each op
     takes its number under a lock."""
-    real = DataFrameWriter.parquet
+    real_parquet = DataFrameWriter.parquet
+    real_delete = fs.delete
     prefix = f"{out}/"
-    written = []
+    done = {"write": [], "delete": []}
     lock = threading.Lock()
 
-    def parquet(self, path, *a, **kw):
-        real(self, path, *a, **kw)
-        if str(path).startswith(prefix):
+    def record(op, path):
+        # writes name plain paths, fs names qualified ones (file:/...)
+        if prefix in str(path):
             with lock:
-                written.append(str(path)[len(prefix):].split("/")[0])
-                k = len(written)
-            if k == crash_at:
-                raise Crash(f"after write {crash_at}: {path}")
+                done[op].append(str(path).split(prefix, 1)[1].split("/")[0])
+                k = len(done[op])
+            if op == crash_on and k == crash_at:
+                raise Crash(f"after {op} {crash_at}: {path}")
+
+    def parquet(self, path, *a, **kw):
+        real_parquet(self, path, *a, **kw)
+        record("write", path)
+
+    def delete(path):
+        real_delete(path)
+        record("delete", path)
 
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", parquet)
+        m.setattr(fs, "delete", delete)
         job.main(_args(corpus, out, rules=rules), spark=spark)
-    return written
+    return done
 
 
 def test_append_write_count(spark, monkeypatch, chain, tmp_path):
@@ -116,7 +149,7 @@ def test_append_write_count(spark, monkeypatch, chain, tmp_path):
     corpus, baseline, want = chain
     out = tmp_path / "out"
     shutil.copytree(baseline, out)
-    written = _append(spark, monkeypatch, corpus, out)
+    written = _append(spark, monkeypatch, corpus, out)["write"]
     assert sorted(written) == APPEND_WRITES, written
     assert _bag(spark, out / "violations") == want
 
@@ -162,4 +195,28 @@ def test_crash_in_concurrent_doc_local_step_then_resume(
     with pytest.raises(Crash, match="violations/rule_id="):
         _append(spark, monkeypatch, corpus, out, crash_at=1, rules=DOC_LOCAL_PAIR)
     job.main(_args(corpus, out, "--resume", rules=DOC_LOCAL_PAIR), spark=spark)
+    assert _bag(spark, out / "violations") == want
+
+
+def test_append_delete_count(spark, monkeypatch, delete_chain, tmp_path):
+    """An uncrashed second append makes exactly the deletes (and the
+    writes) the crash cases cover, and its result equals the classic
+    run."""
+    corpus, baseline, want = delete_chain
+    out = tmp_path / "out"
+    shutil.copytree(baseline, out)
+    done = _append(spark, monkeypatch, corpus, out)
+    assert sorted(done["delete"]) == APPEND_DELETES, done["delete"]
+    assert sorted(done["write"]) == APPEND_WRITES, done["write"]
+    assert _bag(spark, out / "violations") == want
+
+
+@pytest.mark.parametrize("k", range(1, len(APPEND_DELETES) + 1))
+def test_crash_after_delete_k_then_resume(spark, monkeypatch, delete_chain, tmp_path, k):
+    corpus, baseline, want = delete_chain
+    out = tmp_path / "out"
+    shutil.copytree(baseline, out)
+    with pytest.raises(Crash):
+        _append(spark, monkeypatch, corpus, out, crash_at=k, crash_on="delete")
+    job.main(_args(corpus, out, "--resume"), spark=spark)
     assert _bag(spark, out / "violations") == want
