@@ -81,7 +81,8 @@ def snapshot_id(spark: SparkSession, ref: str) -> str:
         # constant 'table:<ref>' key would let --resume mix state across
         # corpus versions).
         try:
-            return "tablefp:" + fingerprint_files(spark.table(ref).inputFiles())
+            uris = spark.table(ref).inputFiles()
+            return "tablefp:" + fingerprint_files(map(fs.from_uri, uris))
         except Exception as e:
             raise ValueError(
                 f"cannot derive a snapshot/fingerprint for table {ref!r}; "
@@ -186,6 +187,18 @@ def _leaf_files(leaf: str) -> list[fs.Status]:
     return [c for c in fs.children(leaf) if not c.is_dir and c.name.endswith(".parquet")]
 
 
+def _dirs(root: str) -> list[str]:
+    """``root`` and every visible directory under it."""
+    st = fs.status(root)
+    todo = [st.path] if st is not None and st.is_dir else []
+    out = []
+    while todo:
+        d = todo.pop()
+        out.append(d)
+        todo.extend(c.path for c in fs.children(d) if c.is_dir)
+    return out
+
+
 def _finish_swap(leaf: str) -> None:
     """Complete a compaction swap from its journal — idempotent, called
     both on the happy path and when re-entering after a crash."""
@@ -235,8 +248,7 @@ def compact(
     # swap, over every data file up front, so a mixed table is left
     # untouched rather than half-compacted.
     bucket_marker = re.compile(r"_\d{5}\.c\d{3}")
-    data = _visible_parquet_files(ref)
-    for st in data:
+    for st in _visible_parquet_files(ref):
         if bucket_marker.search(st.name):
             raise ValueError(
                 f"compact: {st.path.rsplit('/', 1)[0]} holds bucketed data files "
@@ -244,18 +256,22 @@ def compact(
                 f"bucket spec — rewrite it through its producer's bucketBy "
                 f"write instead"
             )
+    # first finish every journaled swap a crash interrupted.  Its leaf
+    # is found by its journal, not by its data files: a swap that
+    # crashed after deleting all the old files of a leaf left no visible
+    # data file there, only the staged ones under _compact_tmp
+    for leaf in _dirs(ref):
+        if fs.exists(f"{leaf}/_compact_tmp/_PLAN.json"):
+            _finish_swap(leaf)
     n_before = n_after = n_leaves = 0
     # the leaves: directories holding data files directly (a partitioned
     # table's partition dirs; the root for an unpartitioned one)
-    for leaf in sorted({st.path.rsplit("/", 1)[0] for st in data}):
+    for leaf in sorted({st.path.rsplit("/", 1)[0] for st in _visible_parquet_files(ref)}):
         tmp = f"{leaf}/_compact_tmp"
-        if fs.exists(f"{tmp}/_PLAN.json"):
-            _finish_swap(leaf)
-        else:
-            # staged-but-unjournaled leftovers from a crash mid-staging:
-            # the swap never started, so the originals are intact —
-            # discard the stage (a later `continue` must not leave it)
-            fs.delete(tmp)
+        # staged-but-unjournaled leftovers from a crash mid-staging: the
+        # swap never started, so the originals are intact — discard the
+        # stage (a later `continue` must not leave it)
+        fs.delete(tmp)
         files = _leaf_files(leaf)
         n_before += len(files)
         n_out = max(1, math.ceil(sum(st.length for st in files) / target_file_bytes))

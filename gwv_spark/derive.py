@@ -4,7 +4,8 @@ The reference computes category / is_hikanji once per record in
 ``ValidatorContext.__post_init__`` (validatorctx.py:24-30) and alias
 attributes lazily (dump.py:20-30).  Here they are plain Catalyst
 expressions materialized by :func:`prepare`, so Catalyst folds the regex
-literals and every rule shares one scan.
+literals and every rule shares one scan.  The expression builders take
+and return Spark SQL text (see :mod:`gwv_spark.parse`).
 
 Category semantics: ``categorize`` (helper.py:88-133) — an ordered,
 anchored alternation; ``user-owned`` wins if the name contains ``_``;
@@ -14,10 +15,11 @@ UCS names split into kanji/hikanji by codepoint range
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gwv_spark import parse
+from gwv_spark.parse import sql_in, sql_lit
 
 # Unicode ideograph ranges (helper.py:18-30), inclusive.
 TOGO_RANGES = [
@@ -48,74 +50,73 @@ RE_EXT = r"^irg(2015|2017|2021)-([0-9]{5})$"
 RE_BSH = r"^unstable-bsh-([0-9a-f]{4})$"
 
 
-def _in_ranges(cp: Column, ranges: list[tuple[int, int]]) -> Column:
-    cond = F.lit(False)
-    for lo, hi in ranges:
-        cond = cond | ((cp >= lo) & (cp <= hi))
-    return cond
+def _in_ranges(cp: str, ranges: list[tuple[int, int]]) -> str:
+    return "(" + " OR ".join(["false"] + [f"{cp} >= {lo} AND {cp} <= {hi}" for lo, hi in ranges]) + ")"
 
 
-def is_togo_kanji_cp(cp: Column) -> Column:
-    return _in_ranges(cp, TOGO_RANGES) | cp.isin(TOGO_IN_COMPAT)
+def is_togo_kanji_cp(cp: str) -> str:
+    return f"({_in_ranges(cp, TOGO_RANGES)} OR {sql_in(cp, TOGO_IN_COMPAT)})"
 
 
-def is_gokan_kanji_cp(cp: Column) -> Column:
-    return _in_ranges(cp, GOKAN_RANGES) & ~cp.isin(TOGO_IN_COMPAT)
+def is_gokan_kanji_cp(cp: str) -> str:
+    return f"({_in_ranges(cp, GOKAN_RANGES)} AND NOT {sql_in(cp, TOGO_IN_COMPAT)})"
 
 
-def category(name: Column) -> Column:
+def category(name: str) -> str:
     """Ordered classification identical to helper.py:88-133."""
-    ucs_hex = F.regexp_extract(name, RE_UCS, 1)
-    cp = F.conv(ucs_hex, 16, 10).cast("long")
-    ucs_cat = F.when(
-        is_togo_kanji_cp(cp) | is_gokan_kanji_cp(cp), F.lit("ucs-kanji")
-    ).otherwise(F.lit("ucs-hikanji"))
-    return (
-        F.when(name.contains("_"), F.lit("user-owned"))
-        .when(name.rlike(RE_IDS), F.lit("ids"))
-        .when(name.rlike(RE_UCS), ucs_cat)
-        .when(name.rlike(RE_CDP), F.lit("cdp"))
-        .when(name.rlike(RE_KOSEKI), F.lit("koseki"))
-        .when(name.rlike(RE_TOKI), F.lit("toki"))
-        .when(name.rlike(RE_EXT), F.lit("ext"))
-        .when(name.rlike(RE_BSH), F.lit("bsh"))
-        .otherwise(F.lit("other"))
+    cp = f"CAST(conv(regexp_extract({name}, {sql_lit(RE_UCS)}, 1), 16, 10) AS BIGINT)"
+    ucs_cat = (
+        f"CASE WHEN {is_togo_kanji_cp(cp)} OR {is_gokan_kanji_cp(cp)} "
+        "THEN 'ucs-kanji' ELSE 'ucs-hikanji' END"
     )
+    arms = [
+        ("'ids'", RE_IDS), (ucs_cat, RE_UCS), ("'cdp'", RE_CDP),
+        ("'koseki'", RE_KOSEKI), ("'toki'", RE_TOKI), ("'ext'", RE_EXT), ("'bsh'", RE_BSH),
+    ]
+    whens = " ".join(f"WHEN {name} RLIKE {sql_lit(pat)} THEN {val}" for val, pat in arms)
+    return f"CASE WHEN contains({name}, '_') THEN 'user-owned' {whens} ELSE 'other' END"
 
 
-def is_hikanji(name: Column, cat: Column) -> Column:
+def is_hikanji(name: str, cat: str) -> str:
     """helper.py:136-142: ucs-hikanji, or koseki number starting with 9."""
-    koseki_first = F.substring(F.regexp_extract(name, RE_KOSEKI, 1), 1, 1)
-    return F.when(cat == "ucs-hikanji", F.lit(True)).otherwise(
-        (cat == "koseki") & (koseki_first == "9")
+    koseki_first = f"substring(regexp_extract({name}, {sql_lit(RE_KOSEKI)}, 1), 1, 1)"
+    return (
+        f"CASE WHEN {cat} = 'ucs-hikanji' THEN true "
+        f"ELSE {cat} = 'koseki' AND {koseki_first} = '9' END"
     )
 
 
 def prepare(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans) → + gdata, n_spans, is_alias, entity_ref,
-    category, is_hikanji, has_transform.
+    """documents(doc_id, spans) → + gdata, n_spans, entity_ref, is_alias,
+    category, is_hikanji, has_transform, spans_d.
 
     These are exactly the per-record attributes the reference derives
     lazily (dump.py:20-30, validatorctx.py:24-30), hoisted to one pass.
+    One projection per dependency level: a column that later columns
+    read more than once (gdata, entity_ref, category) is computed once
+    in the projection below them.
+
+    ``spans_d`` holds the parsed KAGE int columns of EVERY span,
+    materialized once per doc (kagedata.py:65-80 parses each line once
+    into KageLine.data; this is that stored parse).  Whole-record rules
+    (illegal codes 7/8) fold over it instead of re-running the
+    ~10-column kageInt parse per query; exploded_spans reuses it
+    per-span.  On a real deployment this is a stored column of the
+    Iceberg spans table written at ingest.
     """
-    df = documents.withColumn("gdata", parse.spans_to_gdata(F.col("spans")))
-    df = df.withColumn("n_spans", F.size("spans"))
-    df = df.withColumn("entity_ref", parse.entity_ref(F.col("gdata")))
-    df = df.withColumn("is_alias", F.col("entity_ref").isNotNull())
-    df = df.withColumn("category", category(F.col("doc_id")))
-    df = df.withColumn("is_hikanji", is_hikanji(F.col("doc_id"), F.col("category")))
-    df = df.withColumn("has_transform", parse.has_transform(F.col("spans")))
-    # parsed KAGE int columns for EVERY span, materialized once per doc
-    # (kagedata.py:65-80 parses each line once into KageLine.data; this
-    # is that stored parse).  Whole-record rules (illegal codes 7/8) fold
-    # over this instead of re-running the ~10-column kageInt parse per
-    # query; exploded_spans reuses it per-span.  On a real deployment
-    # this is a stored column of the Iceberg spans table written at
-    # ingest.
-    df = df.withColumn(
-        "spans_d", F.transform(F.col("spans"), lambda s: parse.int_data(s["text"]))
+    df = documents.selectExpr(
+        "*", f"{parse.spans_to_gdata('spans')} AS gdata", "size(spans) AS n_spans"
     )
-    return df
+    df = df.selectExpr("*", f"{parse.entity_ref('gdata')} AS entity_ref")
+    df = df.selectExpr(
+        "*", "entity_ref IS NOT NULL AS is_alias", f"{category('doc_id')} AS category"
+    )
+    return df.selectExpr(
+        "*",
+        f"{is_hikanji('doc_id', 'category')} AS is_hikanji",
+        f"{parse.has_transform('spans')} AS has_transform",
+        f"transform(spans, s -> {parse.int_data('s.text')}) AS spans_d",
+    )
 
 
 def with_entity(prepared: DataFrame) -> DataFrame:
@@ -137,25 +138,21 @@ def with_entity(prepared: DataFrame) -> DataFrame:
     naive left join would shuffle every null-key row into one hot
     partition; instead only the alias rows join, and the non-alias rows
     bypass the shuffle entirely (union of the two cases)."""
-    aliases = prepared.where(F.col("entity_ref").isNotNull())
-    others = prepared.where(F.col("entity_ref").isNull())
-    targets = prepared.select(F.col("doc_id").alias("__tgt"))
+    aliases = prepared.where("entity_ref IS NOT NULL")
+    others = prepared.where("entity_ref IS NULL")
+    targets = prepared.selectExpr("doc_id AS __tgt")
     resolved = (
-        aliases.join(targets, F.col("entity_ref") == F.col("__tgt"), "left")
-        .withColumn("entity_exists", F.col("__tgt").isNotNull())
-        .withColumn(
-            "entity",
-            F.when(F.col("entity_exists"), F.col("entity_ref")).otherwise(
-                F.col("doc_id")
-            ),
+        aliases.join(targets, F.expr("entity_ref = __tgt"), "left")
+        .selectExpr(
+            "*",
+            "__tgt IS NOT NULL AS entity_exists",
+            "CASE WHEN __tgt IS NOT NULL THEN entity_ref ELSE doc_id END AS entity",
         )
         .drop("__tgt")
     )
-    passthrough = others.withColumn("entity_exists", F.lit(False)).withColumn(
-        "entity", F.col("doc_id")
-    )
-    return resolved.unionByName(passthrough).withColumn(
-        "raw_entity", F.coalesce(F.col("entity_ref"), F.col("doc_id"))
+    passthrough = others.selectExpr("*", "false AS entity_exists", "doc_id AS entity")
+    return resolved.unionByName(passthrough).selectExpr(
+        "*", "coalesce(entity_ref, doc_id) AS raw_entity"
     )
 
 
@@ -169,23 +166,15 @@ def exploded_spans(prepared: DataFrame) -> DataFrame:
     expression would re-run the per-column regex for every rule (~10×
     the work).  At ingest on a real deployment these land as stored
     columns of the Iceberg spans table."""
-    df = prepared.select(
-        "doc_id",
-        "category",
-        "is_hikanji",
-        "is_alias",
-        "entity_ref",
-        "has_transform",
-        "n_spans",
-        F.posexplode(F.arrays_zip("spans", "spans_d")).alias("pos", "z"),
-    )
-    return df.select(
-        "*",
-        F.col("z.spans.kind").alias("kind"),
-        F.col("z.spans.text").alias("text"),
-        F.col("z.spans.media_ref").alias("media_ref"),
-        F.col("z.spans.offset").alias("offset"),
-        F.col("z.spans_d").alias("d"),
-    ).drop("z", "pos").withColumn(
-        "part_full", parse.part_name_full(F.col("text"))
+    keep = ["doc_id", "category", "is_hikanji", "is_alias", "entity_ref", "has_transform", "n_spans"]
+    return prepared.selectExpr(
+        *keep, "posexplode(arrays_zip(spans, spans_d)) AS (pos, z)"
+    ).selectExpr(
+        *keep,
+        "z.spans.kind AS kind",
+        "z.spans.text AS text",
+        "z.spans.media_ref AS media_ref",
+        "z.spans.`offset` AS `offset`",
+        "z.spans_d AS d",
+        f"{parse.part_name_full('z.spans.text')} AS part_full",
     )

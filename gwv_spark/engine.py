@@ -176,9 +176,11 @@ def run_rules_concurrent(
         df.write.format("noop").mode("overwrite").save()
 
     sink = sink or _noop
-    # build (or fetch) every plan up front on the main thread: plan
-    # construction is py4j-chatty and GIL-bound, so interleaving it with
-    # the worker threads' action submissions just serializes both
+    # build (or fetch) every plan up front on the main thread: a build is
+    # serial driver work (a few hundred py4j round trips per rule, most
+    # of its time the JVM parsing and analysing each step — see
+    # tools/plan_calls.py), so interleaving it with the worker threads'
+    # action submissions just serializes both
     plans = {rid: ctx.plan(rid) for rid in ids}
 
     def _timed(rid: str) -> tuple[str, float]:

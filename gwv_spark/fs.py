@@ -26,16 +26,30 @@ class Status(NamedTuple):
         return self.path.rsplit("/", 1)[-1]
 
 
-def _resolve(path: str):
+def _context(what: str):
     sc = SparkContext._active_spark_context
     if sc is None:
-        raise RuntimeError(f"no active SparkContext to resolve {path!r} with")
+        raise RuntimeError(f"no active SparkContext to resolve {what!r} with")
+    return sc
+
+
+def _resolve(path: str):
+    sc = _context(path)
     p = sc._jvm.org.apache.hadoop.fs.Path(str(path))
     return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
 
 
 def _status(st) -> Status:
     return Status(st.getPath().toString(), st.getLen(), st.getModificationTime(), st.isDirectory())
+
+
+def from_uri(uri: str) -> str:
+    """The path named by a percent-encoded URI, such as the ones
+    ``DataFrame.inputFiles()`` returns (``file:///a/sp%20ace``), spelled
+    as this module spells paths (``file:/a/sp ace``).  A path string is
+    never decoded: ``%20`` may be part of a file's name."""
+    jvm = _context(uri)._jvm
+    return jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri)).toString()
 
 
 def status(path: str) -> Status | None:

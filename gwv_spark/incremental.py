@@ -123,25 +123,16 @@ def ri_probes(docs: DataFrame) -> DataFrame:
 
     ctx = RuleContext(
         spark=docs.sparkSession,
-        docs=docs.select("doc_id", derive.category(F.col("doc_id")).alias("category")),
-        spans=docs.select("doc_id", F.explode("spans").alias("s")).select(
-            "doc_id",
-            "s.kind",
-            "s.media_ref",
-            parse.part_name_full(F.col("s.text")).alias("part_full"),
+        docs=docs.selectExpr("doc_id", f"{derive.category('doc_id')} AS category"),
+        spans=docs.selectExpr("doc_id", "explode(spans) AS s").selectExpr(
+            "doc_id", "s.kind", "s.media_ref", f"{parse.part_name_full('s.text')} AS part_full"
         ),
     )
-    dq = quote_probe(ctx).select(
-        F.lit("delquote").alias("rule_id"),
-        "doc_id",
-        F.col("part_base").alias("key"),
-        "part_full",
+    dq = quote_probe(ctx).selectExpr(
+        "'delquote' AS rule_id", "doc_id", "part_base AS key", "part_full"
     )
-    dv = variant_probe(ctx).select(
-        F.lit("delvar").alias("rule_id"),
-        "doc_id",
-        F.col("base").alias("key"),
-        F.lit(None).cast("string").alias("part_full"),
+    dv = variant_probe(ctx).selectExpr(
+        "'delvar' AS rule_id", "doc_id", "base AS key", "CAST(NULL AS STRING) AS part_full"
     )
     return dq.unionByName(dv)
 
@@ -150,7 +141,7 @@ def ri_cores_full(docs: DataFrame) -> DataFrame:
     """Initial state: every probe whose key is absent from the corpus —
     the same corpus-wide anti join the batch rules run (this is the
     ONE full-cost RI evaluation; every subsequent append folds)."""
-    catalog = docs.select(F.col("doc_id").alias("key"))
+    catalog = docs.selectExpr("doc_id AS key")
     return ri_probes(docs).join(catalog, "key", "left_anti")
 
 
@@ -167,7 +158,7 @@ def ri_fold_step(
     the arrival resolved."""
     # broadcast build sides keep duplicate keys: a semi/anti join does
     # not care, and a distinct would cost its own shuffle stage
-    delta_keys = F.broadcast(docs_delta.select(F.col("doc_id").alias("key")))
+    delta_keys = F.broadcast(docs_delta.selectExpr("doc_id AS key"))
     # retraction: an arrived doc resolves every outstanding reference
     # to its id
     retracts = state_prev.join(delta_keys, "key", "left_semi")
@@ -183,13 +174,9 @@ def ri_fold_step(
     # quote_probe dedups (doc_id, part_full) corpus-wide; a doc row
     # arriving again must not double its quote violation.  delvar has
     # no such dedup (one probe per doc ROW), matching the full rule.
-    quoted = state_prev.where(F.col("rule_id") == "delquote").select(
-        "doc_id", "part_full"
-    )
-    dq = fresh.where(F.col("rule_id") == "delquote").join(
-        quoted, ["doc_id", "part_full"], "left_anti"
-    )
-    dv = fresh.where(F.col("rule_id") == "delvar")
+    quoted = state_prev.where("rule_id = 'delquote'").select("doc_id", "part_full")
+    dq = fresh.where("rule_id = 'delquote'").join(quoted, ["doc_id", "part_full"], "left_anti")
+    dv = fresh.where("rule_id = 'delvar'")
     adds = dq.select(*RI_STATE_COLS).unionByName(dv.select(*RI_STATE_COLS))
     return kept.select(*RI_STATE_COLS), adds, retracts.select(*RI_STATE_COLS)
 
@@ -212,12 +199,10 @@ def shape_ri_state(state: DataFrame) -> DataFrame:
     from gwv_spark.rules import delvar as dv_rule
 
     dq = dq_rule.shape_missing(
-        state.where(F.col("rule_id") == "delquote").select("doc_id", "part_full")
+        state.where("rule_id = 'delquote'").select("doc_id", "part_full")
     )
     dv = dv_rule.shape_missing(
-        state.where(F.col("rule_id") == "delvar").select(
-            "doc_id", F.col("key").alias("base")
-        )
+        state.where("rule_id = 'delvar'").selectExpr("doc_id", "key AS base")
     )
     return dq.unionByName(dv)
 

@@ -1,9 +1,12 @@
-"""Catalyst-native expression builders for the KAGE line grammar.
+"""Spark SQL expression builders for the KAGE line grammar.
 
 The reference parses every record in interpreted Python
 (kagedata.py:20-110 in /root/reference).  Here the same semantics are
-expressed as Spark Column expressions so the whole parse stays inside
-whole-stage codegen — no Python in the hot path.
+Catalyst expressions, so the whole parse stays inside whole-stage
+codegen — no Python in the hot path.  Every builder takes and returns
+Spark SQL text: a caller enters a whole expression with one
+``F.expr``/``selectExpr``, one JVM round trip where a Column tree would
+cost one per node (plus the delete of each dropped node's proxy).
 
 Semantics reproduced (cited against the reference):
 
@@ -21,8 +24,7 @@ Semantics reproduced (cited against the reference):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import math
 
 ALIAS_PREFIX = "99:0:0:0:0:200:200:"
 
@@ -31,124 +33,111 @@ ALIAS_PREFIX = "99:0:0:0:0:200:200:"
 _PY_INT_RE = r"^[+-]?[0-9](?:_?[0-9])*$"
 
 
-def kage_int(col: Column) -> Column:
-    """kageIntSuppressError as a Column: '' → 0, invalid → NULL (int)."""
-    t = F.trim(col)
+def sql_lit(v) -> str:
+    """A Python value as a Spark SQL literal of the same type.
+
+    Spark SQL unescapes backslash sequences in string literals, so a
+    regex such as ``\\b`` written into SQL text unquoted would silently
+    become ``b``; every string goes through here, which escapes each
+    backslash and quote.  Floats carry the ``D`` suffix: a bare ``0.5``
+    is a DECIMAL in Spark SQL."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{v!r}D"
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_in(x: str, values) -> str:
+    """``x IN (values)`` over literals; FALSE for no values."""
+    values = list(values)
+    return f"{x} IN ({', '.join(map(sql_lit, values))})" if values else "false"
+
+
+def kage_int(x: str) -> str:
+    """kageIntSuppressError: '' → 0, invalid → NULL (int)."""
+    t = f"trim({x})"
     return (
-        F.when(t == "", F.lit(0))
-        .when(t.rlike(_PY_INT_RE), F.regexp_replace(t, "_", "").cast("int"))
-        .otherwise(F.lit(None).cast("int"))
+        f"CASE WHEN {t} = '' THEN 0 WHEN {t} RLIKE {sql_lit(_PY_INT_RE)} "
+        f"THEN CAST(regexp_replace({t}, '_', '') AS INT) ELSE CAST(NULL AS INT) END"
     )
 
 
-def line_cols(text: Column) -> Column:
-    """Split one raw line into its ':'-separated string columns."""
-    return F.split(text, ":", -1)
-
-
-def col_at(cols: Column, i: int) -> Column:
-    """0-based, null-safe column access."""
-    return F.get(cols, i)
-
-
-def stroke_type(text: Column) -> Column:
-    return kage_int(col_at(line_cols(text), 0))
-
-
-def head_type(text: Column) -> Column:
-    return kage_int(col_at(line_cols(text), 1))
-
-
-def tail_type(text: Column) -> Column:
-    return kage_int(col_at(line_cols(text), 2))
-
-
-def int_data(text: Column) -> Column:
+def int_data(text: str) -> str:
     """All columns parsed with kageInt semantics → ARRAY<INT> (NULL slots
     for unparsable columns; column 7 of a 99-line is forced NULL, matching
     kagedata.py:70-76)."""
-    cols = line_cols(text)
-    parsed = F.transform(cols, lambda c: kage_int(c))
-    return F.when(
-        kage_int(col_at(cols, 0)) == 99,
-        F.transform(parsed, lambda c, i: F.when(i == 7, F.lit(None).cast("int")).otherwise(c)),
-    ).otherwise(parsed)
-
-
-def part_name_full(text: Column) -> Column:
-    """Column 7 of a 99-line (may include '@version'); NULL otherwise or
-    when the line has <8 columns (kagedata.py:77-78)."""
-    cols = line_cols(text)
-    return F.when(
-        (kage_int(col_at(cols, 0)) == 99) & (F.size(cols) >= 8), F.get(cols, 7)
-    ).otherwise(F.lit(None).cast("string"))
-
-
-def part_base(name: Column) -> Column:
-    """Strip an '@version' suffix from a part reference (delquote.py:26)."""
-    return F.get(F.split(name, "@", -1), 0)
-
-
-def span_kind(text: Column) -> Column:
-    """'part' | 'meta' | 'stroke' from stroke_type (FIXTURES.md §1)."""
-    st = stroke_type(text)
+    cols = f"split({text}, ':', -1)"
+    parsed = f"transform({cols}, c -> {kage_int('c')})"
     return (
-        F.when(st == 99, F.lit("part"))
-        .when(st == 0, F.lit("meta"))
-        .otherwise(F.lit("stroke"))
+        f"CASE WHEN {kage_int(f'get({cols}, 0)')} = 99 THEN transform({parsed}, "
+        "(c, i) -> CASE WHEN i = 7 THEN CAST(NULL AS INT) ELSE c END) "
+        f"ELSE {parsed} END"
     )
 
 
-def gdata_to_spans(gdata: Column) -> Column:
+def part_name_full(text: str) -> str:
+    """Column 7 of a 99-line (may include '@version'); NULL otherwise or
+    when the line has <8 columns (kagedata.py:77-78)."""
+    cols = f"split({text}, ':', -1)"
+    return (
+        f"CASE WHEN {kage_int(f'get({cols}, 0)')} = 99 AND size({cols}) >= 8 "
+        f"THEN get({cols}, 7) ELSE CAST(NULL AS STRING) END"
+    )
+
+
+def gdata_to_spans(gdata: str) -> str:
     """gdata string → ARRAY<STRUCT<kind, text, media_ref, offset>>.
 
     One span per '$'-separated line, in order (kagedata.py:45-49);
-    media_ref = part base name for kind='part' else NULL.
+    kind = 'part' | 'meta' | 'stroke' from the stroke type (FIXTURES.md
+    §1); media_ref = the part name before any '@version' for kind='part'
+    (delquote.py:26), else NULL.
     """
-    lines = F.split(gdata, r"\$", -1)
-    return F.transform(
-        lines,
-        lambda t, i: F.struct(
-            span_kind(t).alias("kind"),
-            t.alias("text"),
-            part_base(part_name_full(t)).alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
+    st = kage_int("get(split(t, ':', -1), 0)")
+    sep = sql_lit(r"\$")
+    return (
+        f"transform(split({gdata}, {sep}, -1), (t, i) -> named_struct("
+        f"'kind', CASE WHEN {st} = 99 THEN 'part' WHEN {st} = 0 THEN 'meta' ELSE 'stroke' END, "
+        "'text', t, "
+        f"'media_ref', get(split({part_name_full('t')}, '@', -1), 0), "
+        "'offset', CAST(i AS INT)))"
     )
 
 
-def spans_to_gdata(spans: Column) -> Column:
+def spans_to_gdata(spans: str) -> str:
     """Inverse of gdata_to_spans (exact: span.text keeps the raw line)."""
-    return F.array_join(F.transform(spans, lambda s: s["text"]), "$", null_replacement="")
+    return f"array_join(transform({spans}, s -> s.text), '$', '')"
 
 
-def entity_ref(gdata: Column) -> Column:
+def entity_ref(gdata: str) -> str:
     """Alias target name, NULL if the record is not an alias
     (get_entity_name, kagedata.py:9-17)."""
-    rest = F.substring(gdata, len(ALIAS_PREFIX) + 1, 1 << 30)
-    return F.when(
-        (~gdata.contains("$"))
-        & gdata.startswith(ALIAS_PREFIX)
-        & (~rest.contains(":")),
-        rest,
-    ).otherwise(F.lit(None).cast("string"))
+    rest = f"substring({gdata}, {len(ALIAS_PREFIX) + 1}, {1 << 30})"
+    return (
+        f"CASE WHEN NOT contains({gdata}, '$') AND startswith({gdata}, "
+        f"{sql_lit(ALIAS_PREFIX)}) AND NOT contains({rest}, ':') THEN {rest} "
+        "ELSE CAST(NULL AS STRING) END"
+    )
 
 
-def has_transform(spans: Column) -> Column:
+def has_transform(spans: str) -> str:
     """True iff any meta line 0:97/98/99:... is present (kagedata.py:51-57).
 
     The per-line predicate is coalesced to FALSE: an unparsable stroke
     type makes ``kage_int(...) == 0`` NULL, and under SQL three-valued
     logic a NULL element turns the whole ``exists`` NULL — which a
-    ``~has_transform`` gate then silently drops.  The reference's
+    ``NOT has_transform`` gate then silently drops.  The reference's
     ``None == 0`` is plain False (kagedata.py:51-57)."""
-    def _line_is_transform(s: Column) -> Column:
-        cols = line_cols(s["text"])
-        return F.coalesce(
-            (F.size(cols) >= 2)
-            & (kage_int(col_at(cols, 0)) == 0)
-            & kage_int(col_at(cols, 1)).isin(97, 98, 99),
-            F.lit(False),
-        )
-
-    return F.exists(spans, _line_is_transform)
+    cols = "split(s.text, ':', -1)"
+    return (
+        f"exists({spans}, s -> coalesce(size({cols}) >= 2 "
+        f"AND {kage_int(f'get({cols}, 0)')} = 0 "
+        f"AND {kage_int(f'get({cols}, 1)')} IN (97, 98, 99), false))"
+    )

@@ -24,8 +24,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from gwv_spark.parse import sql_lit
 
 VIOLATION_COLS = ["rule_id", "errcode", "doc_id", "detail", "sortkey"]
 
@@ -47,9 +48,9 @@ class RuleContext:
     ignore_error: bool = False
     # Prepared-plan cache: rule_id -> built violations DataFrame.  A
     # DataFrame is an immutable logical plan, so one build per context is
-    # sound; re-building per execution costs 0.2-0.6 s of py4j traffic
-    # PER RULE (measured: ids 0.6 s/build), which dominates the suite's
-    # fixed cost on repeated runs (long-running service / bench sustained).
+    # sound.  A build is a few hundred py4j round trips (tools/
+    # plan_calls.py), most of it the analysis of each projection; the
+    # cache saves that on repeated runs over one context.
     plan_cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def plan(self, rule_id: str) -> DataFrame:
@@ -80,39 +81,43 @@ def rule(rule_id: str):
     return deco
 
 
-def tag_s(c: Column) -> Column:
-    return F.concat(F.lit("S"), c)
+def tag_s(c: str) -> str:
+    return f"concat('S', {c})"
 
 
-def tag_f(c: Column) -> Column:
-    return F.concat(F.lit("F"), c.cast("double").cast("string"))
+def tag_f(c: str) -> str:
+    return f"concat('F', CAST(CAST({c} AS DOUBLE) AS STRING))"
 
 
-def tag_line(offset: Column, text: Column) -> Column:
-    return F.concat(F.lit("L"), offset.cast("string"), F.lit(":"), text)
+def tag_line(offset: str, text: str) -> str:
+    return f"concat('L', CAST({offset} AS STRING), ':', {text})"
 
 
-def default_sortkey(doc_id: Column, offset: Column | None = None) -> Column:
+def default_sortkey(doc_id: str, offset: str | None = None) -> str:
     if offset is None:
         return doc_id
-    return F.concat(doc_id, F.lit("#"), F.lpad(offset.cast("string"), 6, "0"))
+    return f"concat({doc_id}, '#', lpad(CAST({offset} AS STRING), 6, '0'))"
+
+
+EMPTY_DETAIL = "CAST(array() AS ARRAY<STRING>)"
 
 
 def shape(
     df: DataFrame,
     rule_id: str,
-    errcode: Column,
-    detail: Column,
-    sortkey: Column | None = None,
+    errcode: str,
+    detail: str,
+    sortkey: str | None = None,
 ) -> DataFrame:
-    """Project a rule's intermediate frame onto the violations schema."""
-    sk = sortkey if sortkey is not None else default_sortkey(F.col("doc_id"))
-    return df.select(
-        F.lit(rule_id).alias("rule_id"),
-        errcode.cast("string").alias("errcode"),
-        F.col("doc_id").cast("string").alias("doc_id"),
-        detail.cast("array<string>").alias("detail"),
-        sk.cast("string").alias("sortkey"),
+    """Project a rule's intermediate frame onto the violations schema.
+    The column arguments are Spark SQL text."""
+    sk = sortkey if sortkey is not None else default_sortkey("doc_id")
+    return df.selectExpr(
+        f"{sql_lit(rule_id)} AS rule_id",
+        f"CAST({errcode} AS STRING) AS errcode",
+        "CAST(doc_id AS STRING) AS doc_id",
+        f"CAST({detail} AS ARRAY<STRING>) AS detail",
+        f"CAST({sk} AS STRING) AS sortkey",
     )
 
 

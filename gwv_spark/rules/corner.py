@@ -37,6 +37,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from gwv_spark.geom import Line, parse_gdata
+from gwv_spark.parse import sql_lit
 from gwv_spark.rules import RuleContext, rule, shape
 
 # Sentinel codes.  _OK marks a legitimate connection (the reference's
@@ -564,14 +565,17 @@ def _make_corner_udf(ignore_error: bool):
     return _corner_udf
 
 
+# the rule's gates (corner.py:730-733), shared with boxhits
+_GATE = "(NOT is_alias) AND (category != 'user-owned') AND (NOT is_hikanji) AND (NOT has_transform)"
+
+
+def _design_flags() -> list:
+    """The G/T-design name flags the UDFs take."""
+    return [F.expr(f"doc_id RLIKE {sql_lit(p)}") for p in (RE_G_DESIGN, RE_T_DESIGN)]
+
+
 @rule("corner")
 def corner(ctx: RuleContext) -> DataFrame:
-    base = ctx.docs.where(
-        (~F.col("is_alias"))
-        & (F.col("category") != "user-owned")
-        & (~F.col("is_hikanji"))
-        & (~F.col("has_transform"))
-    )
     # Catalyst-side prefilter before the Arrow transfer: every corner
     # violation needs a (tate, yoko) connection, i.e. >= 2 segments.
     # Types 1/3/4 yield ONE segment each in setSegments
@@ -581,25 +585,18 @@ def corner(ctx: RuleContext) -> DataFrame:
     # None-guarded) no quarantine-able crash either — so skipping them
     # is exact.  Measured: excludes ~32% of the gated corpus (the
     # part-composition docs), saving their gdata parse in Python.
-    _st = lambda a: F.get(a, 0)  # noqa: E731
-    base = base.where(
-        F.exists(F.col("spans_d"), lambda a: _st(a).isin(2, 6, 7))
-        | (F.size(F.filter(F.col("spans_d"), lambda a: _st(a).isin(1, 3, 4))) >= 2)
+    base = ctx.docs.where(_GATE).where(
+        "exists(spans_d, a -> get(a, 0) IN (2, 6, 7)) "
+        "OR (size(filter(spans_d, a -> get(a, 0) IN (1, 3, 4))) >= 2)"
     )
+    hits = _make_corner_udf(ctx.ignore_error)(F.col("gdata"), *_design_flags())
     d = (
-        base.select(
-            "doc_id",
-            _make_corner_udf(ctx.ignore_error)(
-                F.col("gdata"),
-                F.col("doc_id").rlike(RE_G_DESIGN),
-                F.col("doc_id").rlike(RE_T_DESIGN),
-            ).alias("hits"),
-        )
-        .where(F.size("hits") > 0)
-        .select("doc_id", F.explode("hits").alias("h"))
-        .select("doc_id", F.col("h.errcode").alias("ec"), F.col("h.detail").alias("dt"))
+        base.select("doc_id", hits.alias("hits"))
+        .where("size(hits) > 0")
+        .selectExpr("doc_id", "explode(hits) AS h")
+        .selectExpr("doc_id", "h.errcode AS ec", "h.detail AS dt")
     )
-    return shape(d, "corner", F.col("ec"), F.col("dt"))
+    return shape(d, "corner", "ec", "dt")
 
 
 # ------------------------------------------------- box-hits sub-check
@@ -679,22 +676,10 @@ def _boxhits_udf(gdata: pd.Series, is_g: pd.Series, is_t: pd.Series) -> pd.Serie
 
 def boxhits(ctx: RuleContext) -> DataFrame:
     """doc_id, errcode, pos, tate_ref, yoko_ref — same gates as the rule."""
-    base = ctx.docs.where(
-        (~F.col("is_alias"))
-        & (F.col("category") != "user-owned")
-        & (~F.col("is_hikanji"))
-        & (~F.col("has_transform"))
-    )
     return (
-        base.select(
-            "doc_id",
-            _boxhits_udf(
-                F.col("gdata"),
-                F.col("doc_id").rlike(RE_G_DESIGN),
-                F.col("doc_id").rlike(RE_T_DESIGN),
-            ).alias("hits"),
-        )
-        .where(F.size("hits") > 0)
-        .select("doc_id", F.explode("hits").alias("h"))
-        .select("doc_id", "h.errcode", "h.pos", "h.tate_ref", "h.yoko_ref")
+        ctx.docs.where(_GATE)
+        .select("doc_id", _boxhits_udf(F.col("gdata"), *_design_flags()).alias("hits"))
+        .where("size(hits) > 0")
+        .selectExpr("doc_id", "explode(hits) AS h")
+        .selectExpr("doc_id", "h.errcode", "h.pos", "h.tate_ref", "h.yoko_ref")
     )

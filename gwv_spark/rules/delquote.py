@@ -15,7 +15,6 @@ side is pre-deduplicated, which also bounds the shuffle volume).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
@@ -25,20 +24,16 @@ def quote_probe(ctx: RuleContext) -> DataFrame:
     part references.  Shared with the retraction fold
     (incremental.ri_probes)."""
     return (
-        ctx.spans.where(F.col("kind") == "part")
-        .select(
-            "doc_id",
-            F.col("part_full"),  # shared parsed column (derive.exploded_spans)
-            F.col("media_ref").alias("part_base"),
-        )
-        .where(F.col("part_full").isNotNull())
+        ctx.spans.where("kind = 'part' AND part_full IS NOT NULL")
+        # part_full: shared parsed column (derive.exploded_spans)
+        .selectExpr("doc_id", "part_full", "media_ref AS part_base")
         .dropDuplicates(["doc_id", "part_full"])
     )
 
 
 def missing_quotes(ctx: RuleContext) -> DataFrame:
     """Flat RI core: (doc_id, part_full) of dangling part quotes."""
-    catalog = ctx.docs.select(F.col("doc_id").alias("part_base"))
+    catalog = ctx.docs.selectExpr("doc_id AS part_base")
     return quote_probe(ctx).join(catalog, "part_base", "left_anti").select(
         "doc_id", "part_full"
     )
@@ -51,9 +46,9 @@ def shape_missing(missing: DataFrame) -> DataFrame:
     return shape(
         missing,
         "delquote",
-        F.lit("0"),
-        F.array(tag_s(F.col("part_full"))),
-        F.concat(F.col("doc_id"), F.lit("#"), F.col("part_full")),
+        "'0'",
+        f"array({tag_s('part_full')})",
+        "concat(doc_id, '#', part_full)",
     )
 
 

@@ -10,8 +10,8 @@ LEFT ANTI join on the derived key — same RI shape as delquote but on a
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from gwv_spark.parse import sql_in, sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 from gwv_spark.rules.order import RE_REGIONS
 
@@ -22,28 +22,26 @@ _RE3 = r"^(u[0-9a-f]{4,5}|cdp[on]?-[0-9a-f]{4})-.+$"
 _SKIP_CATS = ["user-owned", "koseki", "toki", "ext", "bsh"]
 
 
-def derived_base(name):  # Column -> Column
+def derived_base(name: str) -> str:
     """The derivation base of a variant name (first matching pattern's
     group 1), NULL when no pattern matches (delvar.py:25-27)."""
-    m1 = F.regexp_extract(name, _RE1, 1)
-    m2 = F.regexp_extract(name, _RE2, 1)
-    m3 = F.regexp_extract(name, _RE3, 1)
-    return F.when(m1 != "", m1).when(m2 != "", m2).when(m3 != "", m3)
+    m1, m2, m3 = (f"regexp_extract({name}, {sql_lit(p)}, 1)" for p in (_RE1, _RE2, _RE3))
+    return f"(CASE WHEN {m1} != '' THEN {m1} WHEN {m2} != '' THEN {m2} WHEN {m3} != '' THEN {m3} END)"
 
 
 def variant_probe(ctx: RuleContext) -> DataFrame:
     """The RI probe side: (doc_id, base) derivation-base candidates.
     Shared with the retraction fold (incremental.ri_probes)."""
-    docs = ctx.docs.where(~F.col("category").isin(_SKIP_CATS))
-    return docs.select("doc_id", derived_base(F.col("doc_id")).alias("base")).where(
-        F.col("base").isNotNull()
+    docs = ctx.docs.where(f"NOT {sql_in('category', _SKIP_CATS)}")
+    return docs.selectExpr("doc_id", f"{derived_base('doc_id')} AS base").where(
+        "base IS NOT NULL"
     )
 
 
 def missing_bases(ctx: RuleContext) -> DataFrame:
     """Flat RI core: (doc_id, base) where the derivation base is absent
     from the corpus."""
-    catalog = ctx.docs.select(F.col("doc_id").alias("base"))
+    catalog = ctx.docs.selectExpr("doc_id AS base")
     return variant_probe(ctx).join(catalog, "base", "left_anti")
 
 
@@ -51,7 +49,7 @@ def shape_missing(missing: DataFrame) -> DataFrame:
     """Project the RI core (doc_id, base) onto the violations schema —
     shared by the shuffled rule and the retraction fold
     (incremental.shape_ri_state)."""
-    return shape(missing, "delvar", F.lit("0"), F.array(tag_s(F.col("base"))))
+    return shape(missing, "delvar", "'0'", f"array({tag_s('base')})")
 
 
 @rule("delvar")

@@ -20,24 +20,21 @@ from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
 @rule("donotuse")
 def donotuse(ctx: RuleContext) -> DataFrame:
-    quotes = (
-        ctx.spans.where((~F.col("is_alias")) & (F.col("kind") == "part"))
-        .select(
-            "doc_id",
-            "offset",
-            F.col("part_full"),  # shared parsed column (derive.exploded_spans)
-            F.col("media_ref").alias("part_base"),
-        )
-        .where(F.col("part_full").isNotNull())
+    quotes = ctx.spans.where(
+        "(NOT is_alias) AND (kind = 'part') AND part_full IS NOT NULL"
+    ).selectExpr(
+        # part_full: shared parsed column (derive.exploded_spans)
+        "doc_id", "`offset`", "part_full", "media_ref AS part_base"
     )
-    targets = ctx.docs.where(F.col("gdata").contains("do-not-use")).select(
-        F.col("doc_id").alias("part_base")
+    targets = ctx.docs.where("contains(gdata, 'do-not-use')").selectExpr(
+        "doc_id AS part_base"
     )
-    bad = quotes.join(targets, "part_base")
-    grouped = bad.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("offset"), F.col("part_full")))
-        ).alias("ordered")
+    grouped = (
+        quotes.join(targets, "part_base")
+        .groupBy("doc_id")
+        .agg(F.expr(
+            "array_sort(collect_list(named_struct('offset', `offset`, 'part_full', part_full)))"
+            " AS ordered"
+        ))
     )
-    detail = F.transform(F.col("ordered"), lambda s: tag_s(s["part_full"]))
-    return shape(grouped, "donotuse", F.lit("0"), detail)
+    return shape(grouped, "donotuse", "'0'", f"transform(ordered, s -> {tag_s('s.part_full')})")

@@ -187,11 +187,6 @@ def _make_dup_udf(ignore_error: bool):
 
 @rule("dup")
 def dup(ctx: RuleContext) -> DataFrame:
-    base = ctx.docs.where(
-        (~F.col("is_alias"))
-        & (F.col("category") != "user-owned")
-        & (~F.col("has_transform"))
-    )
     # Catalyst-side prefilter before the Arrow transfer: every dup code
     # is a PAIR within one bucket (dup.py:187-211).  Types 3/4/7 emit
     # two elements from one line (two bend segments / segment+curve),
@@ -200,19 +195,16 @@ def dup(ctx: RuleContext) -> DataFrame:
     # yield neither a violation nor a quarantine row (the element scan
     # skips malformed lines rather than raising — see _first_dup).
     # Measured: excludes ~27% of the gated corpus.
-    _st = lambda a: F.get(a, 0)  # noqa: E731
-    base = base.where(
-        F.exists(F.col("spans_d"), lambda a: _st(a).isin(3, 4, 7))
-        | (F.size(F.filter(F.col("spans_d"), lambda a: _st(a).isin(1, 2, 6, 9, 99))) >= 2)
+    base = ctx.docs.where(
+        "(NOT is_alias) AND (category != 'user-owned') AND (NOT has_transform)"
+    ).where(
+        "exists(spans_d, a -> get(a, 0) IN (3, 4, 7)) "
+        "OR (size(filter(spans_d, a -> get(a, 0) IN (1, 2, 6, 9, 99))) >= 2)"
     )
+    r = _make_dup_udf(ctx.ignore_error)(F.col("gdata"), F.col("is_hikanji"))
     d = (
-        base.select(
-            "doc_id",
-            _make_dup_udf(ctx.ignore_error)(
-                F.col("gdata"), F.col("is_hikanji")
-            ).alias("r"),
-        )
-        .where(F.col("r.errcode").isNotNull())
-        .select("doc_id", F.col("r.errcode").alias("ec"), F.col("r.detail").alias("dt"))
+        base.select("doc_id", r.alias("r"))
+        .where("r.errcode IS NOT NULL")
+        .selectExpr("doc_id", "r.errcode AS ec", "r.detail AS dt")
     )
-    return shape(d, "dup", F.col("ec"), F.col("dt"))
+    return shape(d, "dup", "ec", "dt")

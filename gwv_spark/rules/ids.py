@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gwv_spark import parse
+from gwv_spark.parse import sql_in, sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_line, tag_s
 from gwv_spark.rules.order import RE_REGIONS
 
@@ -33,7 +34,7 @@ _SURROUND = ("u2ff4", "u2ff5", "u2ff6", "u2ff7", "u2ff8", "u2ff9", "u2ffa", "u2f
 
 @rule("ids")
 def ids(ctx: RuleContext) -> DataFrame:
-    d0 = ctx.docs.where(F.col("category") == "ids").select(
+    d0 = ctx.docs.where("category = 'ids'").select(
         "doc_id", "entity", "is_alias", "spans", "spans_d"
     )
     # existence-checked entity spans (validatorctx.py:32-37): the
@@ -43,15 +44,11 @@ def ids(ctx: RuleContext) -> DataFrame:
     # minority of the ids category) fetch the target's spans via the
     # equi join; that branch's left side is tiny, so AQE broadcasts it
     # and the full-corpus right side never shuffles.
-    self_d = (
-        d0.where(F.col("entity") == F.col("doc_id"))
-        .withColumn("espans", F.col("spans"))
-        .withColumn("espans_d", F.col("spans_d"))
+    self_d = d0.where("entity = doc_id").selectExpr(
+        "doc_id", "entity", "is_alias", "spans AS espans", "spans_d AS espans_d"
     )
-    ent_spans = ctx.docs.select(
-        F.col("doc_id").alias("entity"),
-        F.col("spans").alias("__ent_spans"),
-        F.col("spans_d").alias("__ent_spans_d"),
+    ent_spans = ctx.docs.selectExpr(
+        "doc_id AS entity", "spans AS espans", "spans_d AS espans_d"
     )
     # explicit broadcast of the alias side: left to AQE, both SMJ inputs
     # materialize their shuffles before the runtime conversion decision,
@@ -59,15 +56,10 @@ def ids(ctx: RuleContext) -> DataFrame:
     # are a domain-bounded sliver (aliases OF ids expressions); if that
     # ever outgrows broadcast limits, drop the hint and this degrades to
     # the plain co-partitioned SMJ, still correct.
-    alias_d = (
-        ent_spans.join(
-            F.broadcast(d0.where(F.col("entity") != F.col("doc_id"))), "entity"
-        )
-        .withColumn("espans", F.col("__ent_spans"))
-        .withColumn("espans_d", F.col("__ent_spans_d"))
-        .drop("__ent_spans", "__ent_spans_d")
+    alias_d = ent_spans.join(
+        F.broadcast(d0.where("entity != doc_id").drop("spans", "spans_d")), "entity"
     )
-    d = self_d.unionByName(alias_d).drop("spans", "spans_d")
+    d = self_d.unionByName(alias_d)
 
     # First-span parse comes from the STORED per-span int arrays
     # (derive.prepare spans_d) materialized as ONE column.  Inlining
@@ -75,114 +67,87 @@ def ids(ctx: RuleContext) -> DataFrame:
     # expression tree into each of x1/y1/x2/y2/aspect/dx/dy — measured
     # ~1 s of per-execution optimizer time on this rule alone (the bulk
     # of ids' fixed cost in NOTES_r3), for a value the ingest layer
-    # already stores.
-    first_text = F.get(F.col("espans"), 0)["text"]
-    d = (
-        d.withColumn("ft", first_text)
-        .withColumn("fd0", F.get(F.col("espans_d"), 0))
-        .withColumn("fp", parse.part_name_full(F.col("ft")))
+    # already stores.  Each later column is a projection of its own, so
+    # the optimizer never copies a stored value's expression into its
+    # readers.
+    d = d.selectExpr(
+        "*",
+        "get(espans, 0).text AS ft",
+        "get(espans_d, 0) AS fd0",
+        f"{parse.part_name_full('get(espans, 0).text')} AS fp",
     )
-    st0 = F.get(F.col("fd0"), 0)  # stroke type = parsed column 0
-    d = d.where((st0 == 99) & (F.size("espans") > 1))
-    x1, y1 = F.get(F.col("fd0"), 3), F.get(F.col("fd0"), 4)
-    x2, y2 = F.get(F.col("fd0"), 5), F.get(F.col("fd0"), 6)
-    d = d.where(x1.isNotNull() & y1.isNotNull() & x2.isNotNull() & y2.isNotNull())
-    d = d.where(F.col("fp").isNotNull())  # reference crashes on 7-col 99 lines
-    aspect = F.when(y1 == y2, F.lit(float("inf"))).otherwise(
-        F.abs((x1 - x2).cast("double") / (y1 - y2))
+    x1, y1, x2, y2 = (f"get(fd0, {i})" for i in (3, 4, 5, 6))
+    # the reference crashes on 7-col 99 lines (fp NULL)
+    d = d.where(
+        f"(get(fd0, 0) = 99) AND (size(espans) > 1) AND {x1} IS NOT NULL AND {y1} IS NOT NULL "
+        f"AND {x2} IS NOT NULL AND {y2} IS NOT NULL AND fp IS NOT NULL"
     )
-    d = (
-        d.withColumn("aspect", aspect)
-        .withColumn("dx", (x2 - x1).cast("double"))
-        .withColumn("dy", (y2 - y1).cast("double"))
-        .withColumn("sname", F.split(F.col("doc_id"), "-", -1))
-        .withColumn("idc", F.col("sname")[0])
-        .withColumn("sn1", F.get(F.col("sname"), 1))
-        .withColumn("fbt", F.nullif(F.regexp_extract(F.col("fp"), _RE_VARS_LOOKAHEAD, 1), F.lit("")))
+    d = d.selectExpr(
+        "*",
+        f"CASE WHEN {y1} = {y2} THEN {sql_lit(float('inf'))} "
+        f"ELSE abs(CAST(({x1} - {x2}) AS DOUBLE) / ({y1} - {y2})) END AS aspect",
+        f"CAST(({x2} - {x1}) AS DOUBLE) AS dx",
+        f"CAST(({y2} - {y1}) AS DOUBLE) AS dy",
+        "split(doc_id, '-', -1) AS sname",
+        f"nullif(regexp_extract(fp, {sql_lit(_RE_VARS_LOOKAHEAD)}, 1), '') AS fbt",
+    ).selectExpr(
+        "*",
+        "sname[0] AS idc",
+        "get(sname, 1) AS sn1",
+        # first kanji token of the IDS name: one filter pass, stored
+        "get(filter(transform(sname, (t, i) -> named_struct('t', t, 'i', i)), "
+        f"s -> NOT (s.t RLIKE {sql_lit(_RE_IDC_FULL)})), 0) AS first_tok",
+    )
+    # ('cdp' merges with the next token)
+    d = d.selectExpr(
+        "*",
+        "CASE WHEN first_tok.t = 'cdp' THEN concat('cdp-', get(sname, first_tok.i + 1)) "
+        "ELSE first_tok.t END AS first_kanji",
+    )
+    # first entity span quoting first_kanji (ids.py:86-98), stored as
+    # one struct: its offset and text as separate columns would copy
+    # the whole filter-lambda tree (part_name_full per span)
+    fk = (
+        "get(filter(espans, s -> (s.kind = 'part') AND s.media_ref IS NOT NULL AND "
+        f"coalesce(startswith({parse.part_name_full('s.text')}, first_kanji), false)), 0)"
+    )
+    d = d.selectExpr("*", f"{fk} AS fk").selectExpr(
+        "*", "fk.`offset` AS fk_off", "fk.text AS fk_text"
     )
     is_complicated = (
-        F.col("sn1").isin(*_LR) & F.col("idc").isin(*_TB)
-    ) | (F.col("sn1").isin(*_TB) & F.col("idc").isin(*_LR))
-
-    # first kanji token of the IDS name ('cdp' merges with the next token)
-    toks = F.filter(
-        F.transform(
-            F.col("sname"), lambda t, i: F.struct(t.alias("t"), i.alias("i"))
-        ),
-        lambda s: ~s["t"].rlike(_RE_IDC_FULL),
+        f"(({sql_in('sn1', _LR)} AND {sql_in('idc', _TB)}) "
+        f"OR ({sql_in('sn1', _TB)} AND {sql_in('idc', _LR)}))"
     )
-    d = d.withColumn("first_tok", F.get(toks, 0))  # one filter pass, stored
-    first_tok = F.col("first_tok")
-    first_kanji = F.when(
-        first_tok["t"] == "cdp",
-        F.concat(F.lit("cdp-"), F.get(F.col("sname"), first_tok["i"] + 1)),
-    ).otherwise(first_tok["t"])
-    d = d.withColumn("first_kanji", first_kanji)
-
-    # first entity span quoting first_kanji (ids.py:86-98)
-    fk = F.get(
-        F.filter(
-            F.col("espans"),
-            lambda s: (s["kind"] == F.lit("part"))
-            & s["media_ref"].isNotNull()
-            & F.coalesce(
-                parse.part_name_full(s["text"]).startswith(F.col("first_kanji")),
-                F.lit(False),
-            ),
-        ),
-        0,
-    )
-    # one stored struct: fk["offset"]/fk["text"] as separate withColumns
-    # would copy the whole filter-lambda tree (part_name_full per span)
-    d = d.withColumn("fk", fk)
-    d = d.withColumn("fk_off", F.col("fk")["offset"]).withColumn(
-        "fk_text", F.col("fk")["text"]
-    )
-    fk_not_first = F.col("first_kanji").isNotNull() & F.col("fk_off").isNotNull() & (
-        F.col("fk_off") != 0
-    )
-
-    fbt = F.col("fbt")
+    fk_not_first = "(first_kanji IS NOT NULL AND fk_off IS NOT NULL AND (fk_off != 0))"
     lr_code = (
-        F.when(fbt.isin("03", "04", "09", "14", "24") & (F.col("dx") > 175.0), F.lit("1"))
-        .when(fbt == "02", F.lit("2"))
-        .when(
-            (~is_complicated) & (~F.coalesce(fbt.isin("01", "08"), F.lit(False))) & (F.col("aspect") > 1.8),
-            F.lit("6"),
-        )
-        .when(fk_not_first, F.lit("3"))
+        "CASE WHEN fbt IN ('03', '04', '09', '14', '24') AND (dx > 175.0D) THEN '1' "
+        "WHEN fbt = '02' THEN '2' "
+        f"WHEN (NOT {is_complicated}) AND (NOT coalesce(fbt IN ('01', '08'), false)) "
+        "AND (aspect > 1.8D) THEN '6' "
+        f"WHEN {fk_not_first} THEN '3' END"
     )
     tb_code = (
-        F.when(fbt.isin("01", "02", "08") & (F.col("dy") > 175.0), F.lit("10"))
-        .when(fbt.isin("04", "14", "24"), F.lit("12"))
-        .when(
-            (~is_complicated) & (~F.coalesce(fbt.isin("03", "09"), F.lit(False))) & (F.col("aspect") < 0.65),
-            F.lit("15"),
-        )
-        .when(fk_not_first, F.lit("13"))
+        "CASE WHEN fbt IN ('01', '02', '08') AND (dy > 175.0D) THEN '10' "
+        "WHEN fbt IN ('04', '14', '24') THEN '12' "
+        f"WHEN (NOT {is_complicated}) AND (NOT coalesce(fbt IN ('03', '09'), false)) "
+        "AND (aspect < 0.65D) THEN '15' "
+        f"WHEN {fk_not_first} THEN '13' END"
     )
-    surround_code = F.when(fbt.isin("02", "06", "07"), F.lit("22")).when(
-        fk_not_first, F.lit("23")
-    )
-    overlap_code = F.when(fk_not_first, F.lit("33"))
-
+    surround_code = f"CASE WHEN fbt IN ('02', '06', '07') THEN '22' WHEN {fk_not_first} THEN '23' END"
     errcode = (
-        F.when(F.col("idc").isin(*_LR), lr_code)
-        .when(F.col("idc").isin(*_TB), tb_code)
-        .when(F.col("idc").isin(*_SURROUND), surround_code)
-        .when(F.col("idc") == "u2ffb", overlap_code)
+        f"CASE WHEN {sql_in('idc', _LR)} THEN ({lr_code}) "
+        f"WHEN {sql_in('idc', _TB)} THEN ({tb_code}) "
+        f"WHEN {sql_in('idc', _SURROUND)} THEN ({surround_code}) "
+        f"WHEN idc = 'u2ffb' THEN (CASE WHEN {fk_not_first} THEN '33' END) "
         # 'u2ffe, u2fff' tuple typo in the reference: only u31ef passes
-        .when(F.col("idc") == "u31ef", F.lit(None))
-        .otherwise(F.lit("90"))
+        "WHEN idc = 'u31ef' THEN NULL ELSE '90' END"
     )
-    d = d.withColumn("errcode_", errcode).where(F.col("errcode_").isNotNull())
+    d = d.selectExpr("*", f"{errcode} AS errcode_").where("errcode_ IS NOT NULL")
     detail = (
-        F.when(F.col("errcode_").isin("1", "2", "10", "12", "22"), F.array(tag_s(F.col("fp"))))
-        .when(
-            F.col("errcode_").isin("3", "13", "23", "33"),
-            F.array(tag_line(F.col("fk_off"), F.col("fk_text"))),
-        )
-        .when(F.col("errcode_").isin("6", "15"), F.array(tag_line(F.lit(0), F.col("ft"))))
-        .otherwise(F.array(tag_s(F.col("idc"))))
+        f"CASE WHEN errcode_ IN ('1', '2', '10', '12', '22') THEN array({tag_s('fp')}) "
+        "WHEN errcode_ IN ('3', '13', '23', '33') THEN "
+        f"array({tag_line('fk_off', 'fk_text')}) "
+        f"WHEN errcode_ IN ('6', '15') THEN array({tag_line('0', 'ft')}) "
+        f"ELSE array({tag_s('idc')}) END"
     )
-    return shape(d, "ids", F.col("errcode_"), detail)
+    return shape(d, "ids", "errcode_", detail)

@@ -19,10 +19,10 @@ checks fold over the spans array without exploding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from gwv_spark.rules import RuleContext, rule, shape, tag_line, tag_s
+from gwv_spark.parse import sql_in
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape, tag_line, tag_s
 
 # kage-editor stroke-shape combinations (illegal.py:141-231)
 KEIJO_KUMIAWASE = [
@@ -49,159 +49,132 @@ _COMBO = [f"{a},{b},{c}" for a, b, c in KEIJO_KUMIAWASE]
 _COMBO_HIKANJI = _COMBO + [f"{a},{b},{c}" for a, b, c in HIKANJI_EXTRA]
 
 
-def _yoko(x0, y0, x1, y1) -> Column:
-    dx = x1 - x0
-    dy = y1 - y0
-    return ((y0 == y1) & (x0 != x1)) | ((-dx < dy) & (dy < dx))
+def _yoko(x0: str, y0: str, x1: str, y1: str) -> str:
+    dx, dy = f"({x1} - {x0})", f"({y1} - {y0})"
+    return f"({y0} = {y1} AND {x0} != {x1} OR -{dx} < {dy} AND {dy} < {dx})"
 
 
-def _expected_len(st: Column) -> Column:
-    return (
-        F.when(st == 1, 7)
-        .when(st.isin(2, 3, 4), 9)
-        .when(st.isin(6, 7), 11)
-        .when(st == 9, 7)
-    )
+# The stroke-line code reads the stroke, head and tail types with the
+# hikanji `% 100` applied, and the column count the type expects; each
+# is a column of its own, so the code below names each once.
+_STROKE_TYPES = [
+    f"CASE WHEN is_hikanji AND get(d, {i}) >= 0 THEN get(d, {i}) % 100 ELSE get(d, {i}) END AS {c}"
+    for i, c in enumerate(["st_eff", "s0", "s1"])
+]
+_EXPECTED_LEN = (
+    "CASE WHEN st_eff = 1 THEN 7 WHEN st_eff IN (2, 3, 4) THEN 9 "
+    "WHEN st_eff IN (6, 7) THEN 11 WHEN st_eff = 9 THEN 7 END AS exp_len"
+)
 
 
-def _line_errcode(is_hikanji: Column) -> Column:
-    d = F.col("d")
-    dn = F.size(d)
-    st = F.get(d, 0)
+def _line_errcode() -> str:
+    """The per-line code over the span's parsed ints ``d`` and the
+    columns of _STROKE_TYPES and _EXPECTED_LEN (SQL text)."""
+    dn, st, c1, c2 = "size(d)", "get(d, 0)", "get(d, 1)", "get(d, 2)"
 
     # ---- 99-line (illegal.py:244-248)
-    e99 = F.when(~dn.isin(8, 11), F.lit("4"))
+    e99 = f"CASE WHEN NOT {dn} IN (8, 11) THEN '4' END"
 
     # ---- 0-line (illegal.py:251-263)
-    pair12 = F.concat_ws(",", F.get(d, 1).cast("string"), F.get(d, 2).cast("string"))
-    exact_ok = ((dn == 4) & (pair12 == "0,0") & (F.get(d, 3) == 0)) | (
-        (dn == 4) & (pair12 == "-1,-1") & (F.get(d, 3) == -1)
+    pair12 = f"concat_ws(',', CAST({c1} AS STRING), CAST({c2} AS STRING))"
+    exact_ok = (
+        f"{dn} = 4 AND {pair12} = '0,0' AND get(d, 3) = 0 "
+        f"OR {dn} = 4 AND {pair12} = '-1,-1' AND get(d, 3) = -1"
     )
-    transform_form = F.get(d, 1).isNotNull() & F.get(d, 2).isNotNull() & pair12.isin(
-        "99,1", "99,2", "99,3", "98,0", "97,0"
-    )
-    e0 = F.when(exact_ok, F.lit(None).cast("string")).otherwise(
-        F.when(transform_form, F.when(dn != 7, F.lit("4")))
-        .when(~dn.isin(4, 7), F.lit("4"))
-        .when(pair12.isin("0,0", "-1,-1") & F.get(d, 1).isNotNull() & F.get(d, 2).isNotNull(), F.lit("5"))
-        .otherwise(F.lit("6"))
+    both = f"{c1} IS NOT NULL AND {c2} IS NOT NULL"
+    transform_form = f"{both} AND {sql_in(pair12, ['99,1', '99,2', '99,3', '98,0', '97,0'])}"
+    e0 = (
+        f"CASE WHEN {exact_ok} THEN CAST(NULL AS STRING) ELSE CASE "
+        f"WHEN {transform_form} THEN CASE WHEN {dn} != 7 THEN '4' END "
+        f"WHEN NOT {dn} IN (4, 7) THEN '4' "
+        f"WHEN {pair12} IN ('0,0', '-1,-1') AND {both} THEN '5' ELSE '6' END END"
     )
 
     # ---- stroke line (illegal.py:266-322)
-    st_eff = F.when(is_hikanji & (st >= 0), st % 100).otherwise(st)
-    exp = _expected_len(st_eff)
-    extras = F.slice(d, exp + 1, F.greatest(dn - exp, F.lit(0)))
-    extras_nonzero = F.exists(extras, lambda x: x.isNull() | (x != 0))
-    s0 = F.when(is_hikanji & (F.get(d, 1) >= 0), F.get(d, 1) % 100).otherwise(F.get(d, 1))
-    s1 = F.when(is_hikanji & (F.get(d, 2) >= 0), F.get(d, 2) % 100).otherwise(F.get(d, 2))
-    combo = F.concat_ws(",", st_eff.cast("string"), s0.cast("string"), s1.cast("string"))
-    combo_bad = F.when(is_hikanji, ~combo.isin(_COMBO_HIKANJI)).otherwise(
-        ~combo.isin(_COMBO)
+    extras = f"slice(d, exp_len + 1, greatest({dn} - exp_len, 0))"
+    combo = "concat_ws(',', CAST(st_eff AS STRING), CAST(s0 AS STRING), CAST(s1 AS STRING))"
+    combo_bad = (
+        f"CASE WHEN is_hikanji THEN NOT {sql_in(combo, _COMBO_HIKANJI)} "
+        f"ELSE NOT {sql_in(combo, _COMBO)} END"
     )
-
-    n_pairs = F.floor((dn - 3) / 2).cast("int")
-    pairs_ok = F.when(n_pairs <= 0, F.lit(True)).otherwise(
-        F.forall(
-            F.sequence(F.lit(0), F.greatest(n_pairs - 1, F.lit(0))),
-            lambda i: F.get(d, 3 + i * 2).isNotNull() & F.get(d, 4 + i * 2).isNotNull(),
-        )
+    n_pairs = f"CAST(floor(({dn} - 3) / 2) AS INT)"
+    pairs_ok = (
+        f"CASE WHEN {n_pairs} <= 0 THEN true ELSE forall(sequence(0, greatest({n_pairs} - 1, 0)), "
+        "i -> get(d, i * 2 + 3) IS NOT NULL AND get(d, i * 2 + 4) IS NOT NULL) END"
     )
-    x0, y0, x1, y1, x2 = F.get(d, 3), F.get(d, 4), F.get(d, 5), F.get(d, 6), F.get(d, 7)
-    geo = F.when(
-        pairs_ok,
-        F.when(
-            st_eff == 1,
-            F.when(
-                _yoko(x0, y0, x1, y1),
-                F.when(
-                    s0.isin(12, 22, 32) | s1.isin(32, 13, 23, 24, 313, 413),
-                    F.lit("10"),
-                ),
-            ).otherwise(F.when((s0 == 2) | (s1 == 2), F.lit("11"))),
-        )
-        .when(
-            st_eff == 3,
-            F.when(_yoko(x0, y0, x1, y1), F.lit("30")).when(
-                (s1 == 5) & (x1 == F.get(d, 7)), F.lit("31")
-            ),
-        )
-        .when(
-            st_eff == 4,
-            F.when(_yoko(x0, y0, x1, y1), F.lit("40")).when(
-                (s1 == 5) & (x1 >= F.get(d, 7)), F.lit("41")
-            ),
-        ),
+    x0, y0, x1, y1, x2 = (f"get(d, {i})" for i in range(3, 8))
+    yoko = _yoko(x0, y0, x1, y1)
+    geo = (
+        f"CASE WHEN {pairs_ok} THEN CASE "
+        f"WHEN st_eff = 1 THEN CASE WHEN {yoko} THEN CASE WHEN s0 IN (12, 22, 32) "
+        "OR s1 IN (32, 13, 23, 24, 313, 413) THEN '10' END "
+        "ELSE CASE WHEN s0 = 2 OR s1 = 2 THEN '11' END END "
+        f"WHEN st_eff = 3 THEN CASE WHEN {yoko} THEN '30' WHEN s1 = 5 AND {x1} = {x2} THEN '31' END "
+        f"WHEN st_eff = 4 THEN CASE WHEN {yoko} THEN '40' WHEN s1 = 5 AND {x1} >= {x2} THEN '41' END "
+        "END END"
     )
     estroke = (
-        F.when(st.isNull(), F.lit("0"))
-        .when(~st_eff.isin(1, 2, 3, 4, 6, 7, 9), F.lit("0"))
-        .when(dn < exp, F.lit("1"))
-        .when(dn > exp, F.when(extras_nonzero, F.lit("2")).otherwise(F.lit("3")))
-        .when(st_eff == 9, F.lit("9"))
-        .when(F.get(d, 1).isNull() | F.get(d, 2).isNull(), F.lit("6"))
-        .when(geo.isNotNull(), geo)
-        .when(combo_bad, F.lit("6"))
+        f"CASE WHEN {st} IS NULL THEN '0' "
+        "WHEN NOT st_eff IN (1, 2, 3, 4, 6, 7, 9) THEN '0' "
+        f"WHEN {dn} < exp_len THEN '1' "
+        f"WHEN {dn} > exp_len THEN CASE WHEN exists({extras}, x -> x IS NULL OR x != 0) "
+        "THEN '2' ELSE '3' END "
+        "WHEN st_eff = 9 THEN '9' "
+        f"WHEN {c1} IS NULL OR {c2} IS NULL THEN '6' "
+        f"WHEN {geo} IS NOT NULL THEN {geo} "
+        f"WHEN {combo_bad} THEN '6' END"
     )
+    return f"CASE WHEN {st} = 99 THEN {e99} WHEN {st} = 0 THEN {e0} ELSE {estroke} END"
 
-    return F.when(st == 99, e99).when(st == 0, e0).otherwise(estroke)
 
-
-def _span_alias_class(d: Column) -> Column:
+def _span_alias_class(dd: str) -> str:
     """'F' fail / 'P' pass / 'Q' no-effect 200x200 quote
     (is_alias_like, illegal.py:102-138) — over the shared parsed int
     array, no re-parse."""
-    dn = F.size(d)
-    st = F.get(d, 0)
-    coords_200 = (
-        (dn >= 7)
-        & (F.get(d, 3) == 0) & (F.get(d, 4) == 0) & (F.get(d, 5) == 200) & (F.get(d, 6) == 200)
-    )
-    sx, sy = F.get(d, 1), F.get(d, 2)
-    adj = sx > 100
-    sx_adj = F.when(adj, sx - 200).otherwise(sx)
-    sx2 = F.when(adj, F.get(d, 9)).otherwise(F.lit(0))
-    sy2 = F.when(adj, F.get(d, 10)).otherwise(F.lit(0))
+    dn, st, sx, sy = f"size({dd})", f"get({dd}, 0)", f"get({dd}, 1)", f"get({dd}, 2)"
+    g = {i: f"get({dd}, {i})" for i in (3, 4, 5, 6, 9, 10)}
+    coords_200 = f"{dn} >= 7 AND {g[3]} = 0 AND {g[4]} = 0 AND {g[5]} = 200 AND {g[6]} = 200"
+    adj = f"{sx} > 100"
+    sx_adj = f"CASE WHEN {adj} THEN {sx} - 200 ELSE {sx} END"
+    sx2 = f"CASE WHEN {adj} THEN {g[9]} ELSE 0 END"
+    sy2 = f"CASE WHEN {adj} THEN {g[10]} ELSE 0 END"
     stretch_ok = (
-        coords_200
-        & sx.isNotNull()
-        & sy.isNotNull()
-        & F.when(adj, (dn >= 11) & F.get(d, 9).isNotNull() & F.get(d, 10).isNotNull()).otherwise(F.lit(True))
-        & (((sx_adj == 0) & (sy == 0)) | ((sx_adj == sx2) & (sy == sy2)))
+        f"{coords_200} AND {sx} IS NOT NULL AND {sy} IS NOT NULL "
+        f"AND CASE WHEN {adj} THEN {dn} >= 11 AND {g[9]} IS NOT NULL AND {g[10]} IS NOT NULL "
+        "ELSE true END "
+        f"AND ({sx_adj} = 0 AND {sy} = 0 OR {sx_adj} = {sx2} AND {sy} = {sy2})"
     )
     return (
-        F.when(st.isNull() | (st < 0), F.lit("F"))
-        .when(
-            st == 0,
-            F.when((dn >= 3) & F.get(d, 1).isin(97, 98, 99), F.lit("F")).otherwise(F.lit("P")),
-        )
-        .when(st == 99, F.when(stretch_ok, F.lit("Q")).otherwise(F.lit("F")))
-        .when(st % 100 == 9, F.lit("P"))
-        .otherwise(F.lit("F"))
+        f"CASE WHEN {st} IS NULL OR {st} < 0 THEN 'F' "
+        f"WHEN {st} = 0 THEN CASE WHEN {dn} >= 3 AND {sx} IN (97, 98, 99) THEN 'F' ELSE 'P' END "
+        f"WHEN {st} = 99 THEN CASE WHEN {stretch_ok} THEN 'Q' ELSE 'F' END "
+        f"WHEN {st} % 100 = 9 THEN 'P' ELSE 'F' END"
     )
 
 
-def _span_blank_ok(d: Column) -> Column:
-    st = F.get(d, 0)
-    return ~(
-        st.isNull() | (st < 0) | (st == 99) | (st % 100).isin(1, 2, 3, 4, 6, 7)
-    )
+def _span_blank_ok(dd: str) -> str:
+    st = f"get({dd}, 0)"
+    return f"NOT ({st} IS NULL OR {st} < 0 OR {st} = 99 OR {st} % 100 IN (1, 2, 3, 4, 6, 7))"
 
 
 @rule("illegal")
 def illegal(ctx: RuleContext) -> DataFrame:
-    # ---- per-line codes
+    # ---- per-line codes ('d' = shared parsed int columns,
+    # derive.exploded_spans)
     sp = (
-        ctx.spans.where(F.col("category") != "user-owned")
-        .withColumn("errcode_", _line_errcode(F.col("is_hikanji")))
-        .where(F.col("errcode_").isNotNull())
-    )  # 'd' = shared parsed int columns (derive.exploded_spans)
-    prefix3 = F.array_join(F.slice(F.split(F.col("text"), ":", -1), 1, 3), ":")
+        ctx.spans.where("category != 'user-owned'")
+        .selectExpr("*", *_STROKE_TYPES)
+        .selectExpr("*", _EXPECTED_LEN)
+        .selectExpr("*", f"{_line_errcode()} AS errcode_")
+        .where("errcode_ IS NOT NULL")
+    )
+    prefix3 = "array_join(slice(split(text, ':', -1), 1, 3), ':')"
     line_v = shape(
         sp,
         "illegal",
-        F.col("errcode_"),
-        F.array(tag_s(prefix3), tag_line(F.col("offset"), F.col("text"))),
-        F.concat(prefix3, F.lit("#"), F.col("doc_id"), F.lit("#"), F.lpad(F.col("offset").cast("string"), 6, "0")),
+        "errcode_",
+        f"array({tag_s(prefix3)}, {tag_line('`offset`', 'text')})",
+        f"concat({prefix3}, '#', doc_id, '#', lpad(CAST(`offset` AS STRING), 6, '0'))",
     )
 
     # ---- whole-record codes: a narrow higher-order-function pass over
@@ -209,13 +182,14 @@ def illegal(ctx: RuleContext) -> DataFrame:
     # groupBy(doc_id) over exploded spans re-shuffled the whole corpus
     # just to regroup rows that were already co-located per document).
     #
-    # Expression-sharing note: a Column referenced N times is inlined N
-    # times (CollapseProject + predicate pushdown collapse intermediate
-    # Projects, and the optimizer does not CSE across HOF boundaries), so
-    # the earlier exists/filter/forall formulation re-ran the full
-    # int_data parse 3x per span and the class twice.  Here every shared
-    # value is bound ONCE as a lambda variable of a higher-order
-    # function, which is a structural guarantee of single evaluation:
+    # Expression-sharing note: an expression referenced N times is
+    # inlined N times (CollapseProject + predicate pushdown collapse
+    # intermediate Projects, and the optimizer does not CSE across HOF
+    # boundaries), so the earlier exists/filter/forall formulation
+    # re-ran the full int_data parse 3x per span and the class twice.
+    # Here every shared value is bound ONCE as a lambda variable of a
+    # higher-order function, which is a structural guarantee of single
+    # evaluation:
     #   parse   — the STORED per-span int arrays (docs.spans_d,
     #             derive.prepare) — zero parse work at rule time
     #   class   — struct fields of the flags transform (once per span)
@@ -224,45 +198,23 @@ def illegal(ctx: RuleContext) -> DataFrame:
     #             the fold result is a lambda variable, evaluated once
     # The two record codes come out of one explode — one pass per doc,
     # no .where branches for pushdown to duplicate into.
-    fl = F.transform(
-        F.col("spans_d"),
-        lambda dd: F.struct(
-            _span_alias_class(dd).alias("cls"), _span_blank_ok(dd).alias("bok")
-        ),
+    fl = (
+        "transform(spans_d, dd -> named_struct("
+        f"'cls', {_span_alias_class('dd')}, 'bok', {_span_blank_ok('dd')}))"
     )
-    folded = F.aggregate(
-        fl,
-        F.struct(
-            F.lit(False).alias("any_f"),
-            F.lit(0).alias("n_q"),
-            F.lit(True).alias("all_blank"),
-        ),
-        lambda a, f: F.struct(
-            (a["any_f"] | (f["cls"] == F.lit("F"))).alias("any_f"),
-            (a["n_q"] + (f["cls"] == F.lit("Q")).cast("int")).alias("n_q"),
-            (a["all_blank"] & f["bok"]).alias("all_blank"),
-        ),
+    folded = (
+        f"aggregate({fl}, named_struct('any_f', false, 'n_q', 0, 'all_blank', true), "
+        "(a, f) -> named_struct('any_f', a.any_f OR f.cls = 'F', "
+        "'n_q', a.n_q + CAST(f.cls = 'Q' AS INT), 'all_blank', a.all_blank AND f.bok))"
     )
-    exact_blank = (F.col("n_spans") == 1) & (
-        F.element_at(F.col("spans"), 1)["text"] == "0:-1:-1:-1"
+    exact_blank = "(n_spans = 1 AND element_at(spans, 1).text = '0:-1:-1:-1')"
+    codes = (
+        f"flatten(transform(array({folded}), t -> array_compact(array("  # let-bind the fold
+        "CASE WHEN NOT is_alias AND NOT t.any_f AND t.n_q = 1 THEN '7' END, "
+        f"CASE WHEN t.all_blank AND NOT {exact_blank} THEN '8' END))))"
     )
-    codes = F.flatten(
-        F.transform(
-            F.array(folded),  # let-bind the fold result
-            lambda t: F.array_compact(
-                F.array(
-                    F.when(
-                        (~F.col("is_alias")) & (~t["any_f"]) & (t["n_q"] == 1),
-                        F.lit("7"),
-                    ),
-                    F.when(t["all_blank"] & ~exact_blank, F.lit("8")),
-                )
-            ),
-        )
+    rec_v = ctx.docs.where("category != 'user-owned'").selectExpr(
+        "doc_id", f"explode({codes}) AS ec"
     )
-    rec_v = (
-        ctx.docs.where(F.col("category") != "user-owned")
-        .select("doc_id", F.explode(codes).alias("ec"))
-    )
-    record_v = shape(rec_v, "illegal", F.col("ec"), F.array().cast("array<string>"))
+    record_v = shape(rec_v, "illegal", "ec", EMPTY_DETAIL)
     return line_v.unionByName(record_v)

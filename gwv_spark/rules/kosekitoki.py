@@ -14,44 +14,38 @@ Codes: "0" NOT_ALIAS (no params), "1" NOT_ALIAS_OF_KOSEKI(entity),
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape, tag_s
 
 
 @rule("kosekitoki")
 def kosekitoki(ctx: RuleContext) -> DataFrame:
-    num = F.regexp_extract(F.col("doc_id"), r"^toki-([0-9]{8})$", 1)
+    num = "regexp_extract(doc_id, '^toki-([0-9]{8})$', 1)"
     toki = (
-        ctx.docs.where(F.col("category") == "toki")
-        .select("doc_id", "is_alias", "entity", num.alias("num"))
-        .where(F.col("num").startswith("00"))
-        .withColumn("koseki_name", F.concat(F.lit("koseki-"), F.expr("substring(num, 3)")))
+        ctx.docs.where("category = 'toki'")
+        .selectExpr("doc_id", "is_alias", "entity", f"{num} AS num")
+        .where("startswith(num, '00')")
+        .selectExpr("*", "concat('koseki-', substring(num, 3)) AS koseki_name")
     )
     # The probed key is always 'koseki-' + 6 digits (num is 8 digits
     # with a '00' prefix), so only doc_ids of exactly that shape can
     # match — a static, name-structure-guaranteed prefilter that bounds
     # this side at 10^6 rows REGARDLESS of corpus scale (vs shuffling
     # the whole corpus's (doc_id, raw_entity) projection).
-    koseki = ctx.docs.where(F.col("doc_id").rlike(r"^koseki-[0-9]{6}$")).select(
-        F.col("doc_id").alias("koseki_name"),
-        F.col("raw_entity").alias("koseki_raw_entity"),
+    koseki = ctx.docs.where("doc_id RLIKE '^koseki-[0-9]{6}$'").selectExpr(
+        "doc_id AS koseki_name", "raw_entity AS koseki_raw_entity"
     )
-    j = toki.join(koseki, "koseki_name", "left").withColumn(
-        "koseki_entity", F.coalesce(F.col("koseki_raw_entity"), F.col("koseki_name"))
+    bad = (
+        toki.join(koseki, "koseki_name", "left")
+        .selectExpr("*", "coalesce(koseki_raw_entity, koseki_name) AS koseki_entity")
+        .where("entity != koseki_entity")
     )
-    bad = j.where(F.col("entity") != F.col("koseki_entity"))
     errcode = (
-        F.when(~F.col("is_alias"), F.lit("0"))
-        .when(F.col("koseki_entity") == F.col("koseki_name"), F.lit("1"))
-        .otherwise(F.lit("2"))
+        "CASE WHEN NOT is_alias THEN '0' WHEN koseki_entity = koseki_name THEN '1' ELSE '2' END"
     )
     detail = (
-        F.when(~F.col("is_alias"), F.array().cast("array<string>"))
-        .when(
-            F.col("koseki_entity") == F.col("koseki_name"),
-            F.array(tag_s(F.col("entity"))),
-        )
-        .otherwise(F.array(tag_s(F.col("entity")), tag_s(F.col("koseki_entity"))))
+        f"CASE WHEN NOT is_alias THEN {EMPTY_DETAIL} "
+        f"WHEN koseki_entity = koseki_name THEN array({tag_s('entity')}) "
+        f"ELSE array({tag_s('entity')}, {tag_s('koseki_entity')}) END"
     )
     return shape(bad, "kosekitoki", errcode, detail)

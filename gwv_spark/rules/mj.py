@@ -19,11 +19,12 @@ Gate: category ∉ {user-owned, ids, cdp, ext, bsh}.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gwv_spark import derive
-from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.parse import sql_in, sql_lit
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape, tag_s
 from gwv_spark.session import local_frame
 
 F_JMJ, F_KOSEKI, F_JUKI, F_NYUKAN, F_X0213, F_X0212, F_UCS = 0, 1, 2, 3, 4, 5, 6
@@ -52,20 +53,23 @@ _CLASSIFIERS = [
 _RE_IDS_FULL = r"^(u2ff[0-9a-f]|u31ef)-.+$"
 
 
-def _field_key(name: Column) -> tuple[Column, Column]:
-    field = F.lit(None).cast("int")
-    key = F.lit(None).cast("string")
-    for f_id, pat, grp, prefix in reversed(_CLASSIFIERS):
-        extracted = name if grp == 0 else F.regexp_extract(name, pat, grp)
-        matched = name.rlike(pat)
+def _field_key(name: str) -> tuple[str, str]:
+    """(field, key) of a glyph name as SQL text: the first classifier
+    that matches, in reference order."""
+    fields, keys = [], []
+    for f_id, pat, grp, prefix in _CLASSIFIERS:
+        matched = f"({name} RLIKE {sql_lit(pat)})"
         if f_id == F_UCS:
-            matched = matched & ~name.rlike(_RE_IDS_FULL)
-        k = F.concat(F.lit(prefix), extracted) if prefix else extracted
-        field = F.when(matched, F.lit(f_id)).otherwise(field)
-        key = F.when(matched, k).otherwise(key)
-    # reference order: earlier classifiers win → build reversed, so the
-    # first matching pattern ends up outermost
-    return field, key
+            matched = f"({matched} AND NOT ({name} RLIKE {sql_lit(_RE_IDS_FULL)}))"
+        key = name if grp == 0 else f"regexp_extract({name}, {sql_lit(pat)}, {grp})"
+        if prefix:
+            key = f"concat({sql_lit(prefix)}, {key})"
+        fields.append(f"WHEN {matched} THEN {f_id}")
+        keys.append(f"WHEN {matched} THEN {key}")
+    return (
+        f"(CASE {' '.join(fields)} ELSE CAST(NULL AS INT) END)",
+        f"(CASE {' '.join(keys)} ELSE CAST(NULL AS STRING) END)",
+    )
 
 
 def _key2gw(field: int, key: str) -> str:
@@ -112,140 +116,105 @@ def mj(ctx: RuleContext) -> DataFrame:
         return empty_violations(ctx.spark)
 
     key2idx, idx2gw = _mj_dfs(ctx)
+    k2i = key2idx.selectExpr("field AS kfield", "key", "idx")
+    i2g = idx2gw.selectExpr("idx", "field AS gfield", "gw")
     # cross-reference: (kfield, key) × gfield → sorted glyph-name set
     xref = (
-        key2idx.join(idx2gw, "idx")
-        .where(key2idx["field"] != idx2gw["field"])
-        .groupBy(key2idx["field"].alias("kfield"), "key", idx2gw["field"].alias("gfield"))
-        .agg(F.sort_array(F.collect_set("gw")).alias("gws"))
+        k2i.join(i2g, "idx")
+        .where("kfield != gfield")
+        .groupBy("kfield", "key", "gfield")
+        .agg(F.expr("sort_array(collect_set(gw)) AS gws"))
     )
 
-    docs = ctx.docs.where(~F.col("category").isin(_SKIP_CATS)).select(
-        "doc_id", "entity_ref", "is_alias", "entity"
-    )
-    field, key = _field_key(F.col("doc_id"))
+    field, key = _field_key("doc_id")
     docs = (
-        docs.withColumn("field", field)
-        .withColumn("key", F.lower(key))
-        .where(F.col("field").isNotNull())
+        ctx.docs.where(f"NOT {sql_in('category', _SKIP_CATS)}")
+        .selectExpr("doc_id", "entity_ref", "is_alias", "entity", f"{field} AS field", f"lower({key}) AS key")
+        .where("field IS NOT NULL")
     )
     # does the key exist in the MJ table at all?
-    keyed = key2idx.select("field", "key").dropDuplicates().withColumn("has_idx", F.lit(True))
+    keyed = key2idx.selectExpr("field", "key", "true AS has_idx").dropDuplicates(["field", "key"])
     docs = docs.join(F.broadcast(keyed), ["field", "key"], "left")
 
-    undefined_mj = (
-        F.col("has_idx").isNull() & (F.col("field") == F_JMJ) & (F.col("key") < "090000")
-    )
-
     # ---------- entity branch (mj.py:238-260)
-    e_field, e_key = _field_key(F.col("entity_ref"))
-    docs = (
-        docs.withColumn("e_field", e_field)
-        .withColumn("e_key", F.lower(e_key))
-        .withColumn(
-            "check_entity",
-            F.col("entity_ref").isNotNull()
-            & (~F.col("doc_id").rlike(r"-itaiji-[0-9]{3}$"))
-            & F.col("e_field").isNotNull()
-            & (F.col("e_field") != F.col("field")),
-        )
+    e_field, e_key = _field_key("entity_ref")
+    docs = docs.selectExpr("*", f"{e_field} AS e_field", f"lower({e_key}) AS e_key").selectExpr(
+        "*",
+        "entity_ref IS NOT NULL AND (NOT (doc_id RLIKE '-itaiji-[0-9]{3}$')) "
+        "AND e_field IS NOT NULL AND (e_field != field) AS check_entity",
     )
-    ent_exp = xref.select(
-        F.col("kfield").alias("field"), F.col("key").alias("key"),
-        F.col("gfield").alias("e_field"), F.col("gws").alias("entity_expected"),
+    ent_exp = xref.selectExpr(
+        "kfield AS field", "key", "gfield AS e_field", "gws AS entity_expected"
     )
     docs = docs.join(F.broadcast(ent_exp), ["field", "key", "e_field"], "left")
-    exp_from_ent = xref.select(
-        F.col("kfield").alias("e_field"), F.col("key").alias("e_key"),
-        F.col("gfield").alias("field"), F.col("gws").alias("expected_from_entity"),
+    exp_from_ent = xref.selectExpr(
+        "kfield AS e_field", "key AS e_key", "gfield AS field", "gws AS expected_from_entity"
     )
     docs = docs.join(F.broadcast(exp_from_ent), ["e_field", "e_key", "field"], "left")
-    entity_base = F.when(
-        F.col("e_field") == F_UCS, F.get(F.split(F.col("entity_ref"), "-", -1), 0)
-    ).otherwise(F.col("entity_ref"))
-    own_base = F.when(
-        F.col("field") == F_UCS, F.get(F.split(F.col("doc_id"), "-", -1), 0)
-    ).otherwise(F.col("doc_id"))
+    entity_base = f"CASE WHEN e_field = {F_UCS} THEN get(split(entity_ref, '-', -1), 0) ELSE entity_ref END"
+    own_base = f"CASE WHEN field = {F_UCS} THEN get(split(doc_id, '-', -1), 0) ELSE doc_id END"
     wrong_entity = (
-        F.col("check_entity")
-        & F.col("entity_expected").isNotNull()
-        & (F.size("entity_expected") > 0)
-        & (~F.array_contains(F.col("entity_expected"), entity_base))
-        & F.col("expected_from_entity").isNotNull()
-        & (F.size("expected_from_entity") > 0)
-        & (~F.array_contains(F.col("expected_from_entity"), own_base))
+        "(check_entity AND entity_expected IS NOT NULL AND (size(entity_expected) > 0) "
+        f"AND (NOT array_contains(entity_expected, {entity_base})) "
+        "AND expected_from_entity IS NOT NULL AND (size(expected_from_entity) > 0) "
+        f"AND (NOT array_contains(expected_from_entity, {own_base})))"
     )
 
     # ---------- expected-UCS resolution (mj.py:262-269)
     raw_ucs = (
-        key2idx.join(idx2gw, "idx")
-        .where(idx2gw["field"] == F_UCS)
-        .select(key2idx["field"].alias("field"), "key", F.col("gw").alias("ucs"))
+        k2i.join(i2g.where(f"gfield = {F_UCS}"), "idx")
+        .selectExpr("kfield AS field", "key", "gw AS ucs")
         .dropDuplicates()
     )
-    cp = F.conv(F.regexp_extract(F.col("ucs"), r"^u([0-9a-f]{4,6})$", 1), 16, 10).cast("long")
-    togo = derive.is_togo_kanji_cp(cp) & (F.regexp_extract(F.col("ucs"), r"^u([0-9a-f]{4,6})$", 1) != "")
-    doc_related = ctx.docs.select(F.col("doc_id").alias("ucs")).join(
-        ctx.attrs.select(F.col("doc_id").alias("ucs"), F.col("related").alias("ucs_related")),
-        "ucs",
-        "left",
-    ).withColumn("ucs_related", F.coalesce(F.col("ucs_related"), F.lit("u3013")))
+    hex_ = "regexp_extract(ucs, '^u([0-9a-f]{4,6})$', 1)"
+    togo = f"{derive.is_togo_kanji_cp(f'CAST(conv({hex_}, 16, 10) AS BIGINT)')} AND ({hex_} != '')"
+    doc_related = ctx.docs.selectExpr("doc_id AS ucs").join(
+        ctx.attrs.selectExpr("doc_id AS ucs", "related AS __ucs_related"), "ucs", "left"
+    ).selectExpr("ucs", "coalesce(__ucs_related, 'u3013') AS ucs_related")
     resolved = (
-        raw_ucs.withColumn("is_togo", togo)
+        raw_ucs.selectExpr("*", f"{togo} AS is_togo")
         .join(doc_related, "ucs", "left")
-        .withColumn(
-            "resolved",
-            F.when(F.col("is_togo"), F.col("ucs")).otherwise(
-                F.coalesce(F.col("ucs_related"), F.lit("u3013"))
-            ),
+        .selectExpr(
+            "*",
+            "CASE WHEN is_togo THEN ucs ELSE coalesce(ucs_related, 'u3013') END AS resolved",
         )
-        .where(F.col("resolved") != "u3013")
+        .where("resolved != 'u3013'")
         .groupBy("field", "key")
-        .agg(F.sort_array(F.collect_set("resolved")).alias("ucs_expected"))
+        .agg(F.expr("sort_array(collect_set(resolved)) AS ucs_expected"))
     )
     docs = docs.join(F.broadcast(resolved), ["field", "key"], "left")
 
     # effective related: own, else the checked entity's (mj.py:272-274)
-    docs = docs.join(ctx.attrs.select("doc_id", "related"), "doc_id", "left").withColumn(
-        "related", F.coalesce(F.col("related"), F.lit("u3013"))
+    ent_rel = ctx.attrs.selectExpr("doc_id AS entity", "related AS __entity_related")
+    docs = (
+        docs.join(ctx.attrs.selectExpr("doc_id", "related AS __related"), "doc_id", "left")
+        .join(ent_rel, "entity", "left")
+        .selectExpr(
+            "*",
+            "coalesce(__related, 'u3013') AS related",
+            "coalesce(__entity_related, 'u3013') AS entity_related",
+        )
+        .selectExpr(
+            "*",
+            "CASE WHEN (related = 'u3013') AND is_alias THEN entity_related ELSE related END"
+            " AS eff_related",
+        )
     )
-    ent_rel = ctx.attrs.select(
-        F.col("doc_id").alias("entity"), F.col("related").alias("entity_related")
-    )
-    docs = docs.join(ent_rel, "entity", "left").withColumn(
-        "entity_related", F.coalesce(F.col("entity_related"), F.lit("u3013"))
-    )
-    eff_related = F.when(
-        (F.col("related") == "u3013") & F.col("is_alias"), F.col("entity_related")
-    ).otherwise(F.col("related"))
-    docs = docs.withColumn("eff_related", eff_related)
 
-    has_ucs_exp = F.col("ucs_expected").isNotNull() & (F.size("ucs_expected") > 0)
     errcode = (
-        F.when(undefined_mj, F.lit("3"))
-        .when(F.col("has_idx").isNull(), F.lit(None))
-        .when(wrong_entity, F.lit("0"))
-        .when(
-            has_ucs_exp,
-            F.when(F.col("eff_related") == "u3013", F.lit("2")).when(
-                ~F.array_contains(F.col("ucs_expected"), F.col("eff_related")), F.lit("1")
-            ),
-        )
+        f"CASE WHEN has_idx IS NULL AND (field = {F_JMJ}) AND (key < '090000') THEN '3' "
+        "WHEN has_idx IS NULL THEN NULL "
+        f"WHEN {wrong_entity} THEN '0' "
+        "WHEN ucs_expected IS NOT NULL AND (size(ucs_expected) > 0) THEN (CASE "
+        "WHEN eff_related = 'u3013' THEN '2' "
+        "WHEN NOT array_contains(ucs_expected, eff_related) THEN '1' END) END"
     )
-    d = docs.withColumn("errcode_", errcode).where(F.col("errcode_").isNotNull())
-    list_tag = lambda c: F.concat(F.lit("A"), F.array_join(c, "\x1f"))  # noqa: E731
+    d = docs.selectExpr("*", f"{errcode} AS errcode_").where("errcode_ IS NOT NULL")
+    list_tag = lambda c: f"concat('A', array_join({c}, {sql_lit(chr(31))}))"  # noqa: E731
     detail = (
-        F.when(F.col("errcode_") == "3", F.array().cast("array<string>"))
-        .when(
-            F.col("errcode_") == "0",
-            F.array(tag_s(F.col("entity_ref")), list_tag(F.col("entity_expected"))),
-        )
-        .when(
-            F.col("errcode_") == "2",
-            F.array(F.lit("N"), list_tag(F.col("ucs_expected"))),
-        )
-        .otherwise(
-            F.array(tag_s(F.col("eff_related")), list_tag(F.col("ucs_expected")))
-        )
+        f"CASE WHEN errcode_ = '3' THEN {EMPTY_DETAIL} "
+        f"WHEN errcode_ = '0' THEN array({tag_s('entity_ref')}, {list_tag('entity_expected')}) "
+        f"WHEN errcode_ = '2' THEN array('N', {list_tag('ucs_expected')}) "
+        f"ELSE array({tag_s('eff_related')}, {list_tag('ucs_expected')}) END"
     )
-    return shape(d, "mj", F.col("errcode_"), detail)
+    return shape(d, "mj", "errcode_", detail)

@@ -21,18 +21,12 @@ from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
 @rule("mustrenew")
 def mustrenew(ctx: RuleContext) -> DataFrame:
-    quotes = (
-        ctx.spans.where(
-            (~F.col("is_alias"))
-            & (F.col("category") != "user-owned")
-            & (F.col("kind") == "part")
-        )
-        .select(
-            "doc_id",
-            F.col("part_full"),  # shared parsed column (derive.exploded_spans)
-            F.col("media_ref").alias("part_base"),
-        )
-        .where(F.col("part_full").contains("@"))
+    quotes = ctx.spans.where(
+        "(NOT is_alias) AND (category != 'user-owned') AND (kind = 'part') "
+        "AND contains(part_full, '@')"
+    ).selectExpr(
+        # part_full: shared parsed column (derive.exploded_spans)
+        "doc_id", "part_full", "media_ref AS part_base"
     )
     # Only bases whose gdata contains '@' matter: a FALSE row and a
     # MISSING row both coalesce to is_old=False, so the left join's
@@ -40,12 +34,11 @@ def mustrenew(ctx: RuleContext) -> DataFrame:
     # sparse, so at any corpus scale the join is a broadcast (AQE, from
     # the measured size) instead of a full-corpus shuffle of
     # (doc_id, bool) — the quotes side then never shuffles for the join.
-    old_bases = ctx.docs.where(F.col("gdata").contains("@")).select(
-        F.col("doc_id").alias("part_base"),
-        F.lit(True).alias("base_is_old"),
+    old_bases = ctx.docs.where("contains(gdata, '@')").selectExpr(
+        "doc_id AS part_base", "true AS base_is_old"
     )
-    j = quotes.join(old_bases, "part_base", "left").withColumn(
-        "is_old", F.coalesce(F.col("base_is_old"), F.lit(False))
+    j = quotes.join(old_bases, "part_base", "left").selectExpr(
+        "*", "coalesce(base_is_old, false) AS is_old"
     )
     # EXPLICIT SALTING (north rule): part_full is the one genuinely
     # skewed aggregation key in the suite — a popular part is quoted by
@@ -56,21 +49,17 @@ def mustrenew(ctx: RuleContext) -> DataFrame:
     # the merge phase combines N_SALT small sets per part.  AQE's skew
     # handling covers joins but not aggregations, hence manual.
     n_salt = 16
-    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salt))
-    partial = j.groupBy("part_full", salt.alias("__salt")).agg(
-        F.max(F.col("is_old")).alias("is_old"),
-        F.collect_set(F.col("doc_id")).alias("qs"),
+    partial = j.groupBy("part_full", F.expr(f"pmod(xxhash64(doc_id), {n_salt}) AS __salt")).agg(
+        F.expr("max(is_old) AS is_old"), F.expr("collect_set(doc_id) AS qs")
     )
     grouped = partial.groupBy("part_full").agg(
-        F.max(F.col("is_old")).alias("is_old"),
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list(F.col("qs"))))
-        ).alias("quoters"),
+        F.expr("max(is_old) AS is_old"),
+        F.expr("sort_array(array_distinct(flatten(collect_list(qs)))) AS quoters"),
     )
     # reference rows are keyed by the part name, quoters as params
-    out = grouped.select(
-        F.col("part_full").alias("doc_id"),
-        F.when(F.col("is_old"), F.lit("@")).otherwise(F.lit("0")).alias("errcode_"),
-        F.transform(F.col("quoters"), lambda q: tag_s(q)).alias("detail_"),
+    out = grouped.selectExpr(
+        "part_full AS doc_id",
+        "CASE WHEN is_old THEN '@' ELSE '0' END AS errcode_",
+        f"transform(quoters, q -> {tag_s('q')}) AS detail_",
     )
-    return shape(out, "mustrenew", F.col("errcode_"), F.col("detail_"))
+    return shape(out, "mustrenew", "errcode_", "detail_")

@@ -17,10 +17,10 @@ at larger cardinality).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.parse import sql_in, sql_lit
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape, tag_s
 
 _RE_GL = r"^(j78|j83|j90|jsp|jx1-200[04]|jx2|k0|g0|c[0-9a-f])-([0-9a-f]{4})$"
 _RE_VALID_GL = r"^(2[1-9a-f]|[3-6][0-9a-f]|7[0-9a-e]){2}$"
@@ -37,13 +37,17 @@ _RE_UCS_TOKEN = r"\bu[23]?[0-9a-f]{4}\b"
 _REDUCTION_UNROLL = 16
 
 
-def _ruleset_match(name: Column, rs: dict) -> Column:
-    cond = F.lit(False)
+def _ruleset_match(name: str, rs: dict) -> str:
+    cond = ["false"]
     if rs["strings"]:
-        cond = cond | name.isin(sorted(rs["strings"]))
+        cond.append(sql_in(name, sorted(rs["strings"])))
     if rs["regex"]:
-        cond = cond | name.rlike("^(?:" + rs["regex"] + ")$")
-    return cond
+        cond.append(f"({name} RLIKE {sql_lit('^(?:' + rs['regex'] + ')$')})")
+    return "(" + " OR ".join(cond) + ")"
+
+
+def _replace(x: str, pattern: str, repl: str) -> str:
+    return f"regexp_replace({x}, {sql_lit(pattern)}, {sql_lit(repl)})"
 
 
 @rule("naming")
@@ -53,94 +57,76 @@ def naming(ctx: RuleContext) -> DataFrame:
     it = iter(groups.get("UCSで符号化されたCDP外字", []))
     cdp_dict = dict(zip(it, it))
 
-    docs = ctx.docs.where(F.col("category") != "user-owned").select("doc_id")
-    name0 = F.col("doc_id")
-    stripped_var = F.regexp_replace(name0, r"-(var|itaiji)-[0-9]{3}$", "")
-    is_var = stripped_var != name0
-    d = docs.withColumn("n1", stripped_var).withColumn("is_var", is_var)
-    stripped_henka = F.regexp_replace(F.col("n1"), r"-[0-9]{2}$", "")
-    d = d.withColumn("is_henka", stripped_henka != F.col("n1")).withColumn(
-        "name", stripped_henka
+    # strip the variant, then the henka suffix
+    d = ctx.docs.where("category != 'user-owned'").selectExpr(
+        "doc_id", f"{_replace('doc_id', r'-(var|itaiji)-[0-9]{3}$', '')} AS n1"
+    ).selectExpr(
+        "doc_id",
+        "n1 != doc_id AS is_var",
+        f"{_replace('n1', r'-[0-9]{2}$', '')} != n1 AS is_henka",
+        f"{_replace('n1', r'-[0-9]{2}$', '')} AS name",
     )
-    name = F.col("name")
 
     # --- prohibition checks ("2")
-    prohibited = _ruleset_match(name, rules_cfg["dont-create"])
-    gl4 = F.regexp_extract(name, _RE_GL, 2)
-    gl_bad = (gl4 != "") & (~gl4.rlike(_RE_VALID_GL))
-    cdp_nums = F.regexp_extract_all(name, F.lit(_RE_CDP), 2)
-    cdp_bad = (gl4 == "") & F.exists(cdp_nums, lambda n: ~n.rlike(_RE_VALID_CDP))
+    prohibited = _ruleset_match("name", rules_cfg["dont-create"])
+    gl4 = f"regexp_extract(name, {sql_lit(_RE_GL)}, 2)"
+    gl_bad = f"(({gl4} != '') AND (NOT ({gl4} RLIKE {sql_lit(_RE_VALID_GL)})))"
+    cdp_bad = (
+        f"(({gl4} = '') AND exists(regexp_extract_all(name, {sql_lit(_RE_CDP)}, 2), "
+        f"n -> NOT (n RLIKE {sql_lit(_RE_VALID_CDP)})))"
+    )
 
     # --- IDS branch
-    is_ids = name.rlike(_RE_IDS_HEAD)
-    reduced = F.regexp_replace(name, "^kumimoji-", "")
-    reduced = F.regexp_replace(reduced, _RE_IDC_1, "１")
-    reduced = F.regexp_replace(reduced, _RE_IDC_2, "２")
-    reduced = F.regexp_replace(reduced, _RE_IDC_3, "３")
-    reduced = F.regexp_replace(reduced, _RE_KANJI, "漢")
+    reduced = _replace("name", "^kumimoji-", "")
+    for pattern, repl in [(_RE_IDC_1, "１"), (_RE_IDC_2, "２"), (_RE_IDC_3, "３"), (_RE_KANJI, "漢")]:
+        reduced = _replace(reduced, pattern, repl)
     for _ in range(_REDUCTION_UNROLL):
-        reduced = F.regexp_replace(reduced, _RE_IDS_KANJI, "漢")
-    d = d.withColumn("reduced", reduced)
-    ids_invalid = F.col("reduced") != "漢"
+        reduced = _replace(reduced, _RE_IDS_KANJI, "漢")
 
     # encoded-CDP: first cdp occurrence that (after the cdpo/cdpn→cdp
     # fallback for unknown variants) appears in the dictionary
     if cdp_dict:
-        mapping = F.create_map(*[F.lit(x) for kv in cdp_dict.items() for x in kv])
+        mapping = "map(" + ", ".join(sql_lit(x) for kv in cdp_dict.items() for x in kv) + ")"
     else:
-        mapping = F.create_map().cast("map<string,string>")
-    cdp_fulls = F.regexp_extract_all(name, F.lit(_RE_CDP), 0)
-    adj = F.transform(
-        cdp_fulls,
-        lambda c: F.when(
-            c.rlike("^cdp[on]") & mapping[c].isNull(),
-            F.concat(F.lit("cdp-"), F.substring(c, -4, 4)),
-        ).otherwise(c),
+        mapping = "CAST(map() AS MAP<STRING, STRING>)"
+    adj = (
+        f"transform(regexp_extract_all(name, {sql_lit(_RE_CDP)}, 0), c -> CASE WHEN "
+        f"(c RLIKE '^cdp[on]') AND {mapping}[c] IS NULL THEN concat('cdp-', substring(c, -4, 4)) "
+        "ELSE c END)"
     )
-    first_encoded = F.get(F.filter(adj, lambda c: mapping[c].isNotNull()), 0)
-    d = d.withColumn("enc_cdp", first_encoded).withColumn(
-        "enc_ucs", mapping[F.col("enc_cdp")]
-    )
+    d = d.selectExpr(
+        "*",
+        f"{reduced} AS reduced",
+        f"get(filter({adj}, c -> {mapping}[c] IS NOT NULL), 0) AS enc_cdp",
+    ).selectExpr("*", f"{mapping}[enc_cdp] AS enc_ucs")
 
     # PUA / u3013 tokens inside the IDS name
-    ucs_tokens = F.regexp_extract_all(name, F.lit(_RE_UCS_TOKEN), 0)
-    bad_ucs = F.exists(
-        ucs_tokens,
-        lambda u: (u == "u3013") | ((u >= "ue000") & (u <= "uf8ff")),
+    bad_ucs = (
+        f"exists(regexp_extract_all(name, {sql_lit(_RE_UCS_TOKEN)}, 0), "
+        "u -> (u = 'u3013') OR ((u >= 'ue000') AND (u <= 'uf8ff')))"
     )
 
     # --- rule-set tiers
     tier_ok = (
-        _ruleset_match(name, rules_cfg["rule"])
-        | (~F.col("is_var") & _ruleset_match(name, rules_cfg["rule-novar"]))
-        | (~F.col("is_henka") & _ruleset_match(name, rules_cfg["rule-nohenka"]))
-        | (
-            ~F.col("is_var")
-            & ~F.col("is_henka")
-            & _ruleset_match(name, rules_cfg["rule-novar-nohenka"])
-        )
+        f"({_ruleset_match('name', rules_cfg['rule'])} "
+        f"OR ((NOT is_var) AND {_ruleset_match('name', rules_cfg['rule-novar'])}) "
+        f"OR ((NOT is_henka) AND {_ruleset_match('name', rules_cfg['rule-nohenka'])}) "
+        f"OR ((NOT is_var) AND (NOT is_henka) "
+        f"AND {_ruleset_match('name', rules_cfg['rule-novar-nohenka'])}))"
     )
-    deprecated = _ruleset_match(name, rules_cfg["deprecated-rule"])
+    deprecated = _ruleset_match("name", rules_cfg["deprecated-rule"])
 
     errcode = (
-        F.when(prohibited | gl_bad | cdp_bad, F.lit("2"))
-        .when(
-            is_ids,
-            F.when(ids_invalid, F.lit("1"))
-            .when(F.col("enc_cdp").isNotNull(), F.lit("3"))
-            .when(bad_ucs, F.lit("1")),
-        )
-        .when(tier_ok, F.lit(None).cast("string"))
-        .when(deprecated, F.lit("4"))
-        .otherwise(F.lit("0"))
+        f"CASE WHEN {prohibited} OR {gl_bad} OR {cdp_bad} THEN '2' "
+        f"WHEN name RLIKE {sql_lit(_RE_IDS_HEAD)} THEN (CASE WHEN reduced != '漢' THEN '1' "
+        f"WHEN enc_cdp IS NOT NULL THEN '3' WHEN {bad_ucs} THEN '1' END) "
+        f"WHEN {tier_ok} THEN CAST(NULL AS STRING) "
+        f"WHEN {deprecated} THEN '4' ELSE '0' END"
     )
-    d = d.withColumn("errcode_", errcode).where(F.col("errcode_").isNotNull())
+    d = d.selectExpr("*", f"{errcode} AS errcode_").where("errcode_ IS NOT NULL")
     detail = (
-        F.when(F.col("errcode_") == "1", F.array(tag_s(F.col("reduced"))))
-        .when(
-            F.col("errcode_") == "3",
-            F.array(tag_s(F.col("enc_cdp")), tag_s(F.col("enc_ucs"))),
-        )
-        .otherwise(F.array().cast("array<string>"))
+        f"CASE WHEN errcode_ = '1' THEN array({tag_s('reduced')}) "
+        f"WHEN errcode_ = '3' THEN array({tag_s('enc_cdp')}, {tag_s('enc_ucs')}) "
+        f"ELSE {EMPTY_DETAIL} END"
     )
-    return shape(d, "naming", F.col("errcode_"), detail)
+    return shape(d, "naming", "errcode_", detail)

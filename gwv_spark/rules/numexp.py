@@ -17,9 +17,8 @@ corpus — no shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from gwv_spark.parse import _PY_INT_RE
+from gwv_spark.parse import _PY_INT_RE, sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_line, default_sortkey
 
 _INVALID_CHAR_RE = "[^0-9a-z_:@-]"
@@ -35,37 +34,28 @@ _CANONICAL_LINE_RE = r"^(0|-?[1-9][0-9]*)(:(0|-?[1-9][0-9]*))*$"
 def classify(spans_df: DataFrame) -> DataFrame:
     """Flat per-line classification: (doc_id, offset, line_text, errcode)
     for offending lines only."""
-    spans_df = spans_df.where(~F.col("text").rlike(_CANONICAL_LINE_RE))
-    cols = F.split(F.col("text"), ":", -1)
-
+    cols = "split(text, ':', -1)"
     # Per-column violation class: 0 ok / 1 non-canonical / 2 not-an-int,
     # with the type-99 column-7 skip.  int() accepts whitespace padding,
     # but any whitespace was already caught by INVALID_CHAR at line level.
-    def col_class(c, j):
-        return (
-            F.when((j == 7) & (F.get(cols, 0) == "99"), F.lit(0))
-            .when(~c.rlike(_PY_INT_RE), F.lit(2))
-            .when(
-                F.regexp_replace(c, "_", "").cast("long").cast("string") != c,
-                F.lit(1),
-            )
-            .otherwise(F.lit(0))
-        )
-
-    classed = F.transform(cols, lambda c, j: F.struct(col_class(c, j).alias("c")))
-    first_bad = F.get(F.filter(classed, lambda s: s["c"] > 0), 0)["c"]
-
-    errcode = (
-        F.when(F.col("text") == "", F.lit("0"))
-        .when(F.col("text").rlike(_INVALID_CHAR_RE), F.lit("1"))
-        .when(first_bad == 2, F.lit("2"))
-        .when(first_bad == 1, F.lit("3"))
+    col_class = (
+        f"CASE WHEN (j = 7) AND (get({cols}, 0) = '99') THEN 0 "
+        f"WHEN NOT (c RLIKE {sql_lit(_PY_INT_RE)}) THEN 2 "
+        "WHEN CAST(CAST(regexp_replace(c, '_', '') AS BIGINT) AS STRING) != c THEN 1 "
+        "ELSE 0 END"
     )
-
+    first_bad = (
+        f"get(filter(transform({cols}, (c, j) -> named_struct('c', {col_class})), "
+        "s -> s.c > 0), 0).c"
+    )
+    errcode = (
+        f"CASE WHEN text = '' THEN '0' WHEN text RLIKE {sql_lit(_INVALID_CHAR_RE)} THEN '1' "
+        f"WHEN {first_bad} = 2 THEN '2' WHEN {first_bad} = 1 THEN '3' END"
+    )
     return (
-        spans_df.withColumn("errcode", errcode)
-        .where(F.col("errcode").isNotNull())
-        .select("doc_id", "offset", F.col("text").alias("line_text"), "errcode")
+        spans_df.where(f"NOT (text RLIKE {sql_lit(_CANONICAL_LINE_RE)})")
+        .selectExpr("doc_id", "`offset`", "text AS line_text", f"{errcode} AS errcode")
+        .where("errcode IS NOT NULL")
     )
 
 
@@ -75,7 +65,7 @@ def numexp(ctx: RuleContext) -> DataFrame:
     return shape(
         out,
         "numexp",
-        F.col("errcode"),
-        F.array(tag_line(F.col("offset"), F.col("line_text"))),
-        default_sortkey(F.col("doc_id"), F.col("offset")),
+        "errcode",
+        f"array({tag_line('`offset`', 'line_text')})",
+        default_sortkey("doc_id", "`offset`"),
     )

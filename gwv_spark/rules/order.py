@@ -13,58 +13,42 @@ coalesce(when...) chain — no explode, no shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from gwv_spark import parse
+from gwv_spark.parse import sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 
 RE_REGIONS = r"(?:[gtvh]v?|[mis]|k[pv]?|u[ks]?|j[asvn]?)"
 _RE_VARS = "-" + RE_REGIONS + r"?(\d{2})(?:-(?:var|itaiji)-\d{3})?(?:@|$)"
 
 
-def _henka(part_name):
-    return F.regexp_extract(part_name, _RE_VARS, 1)
+def _henka(part_name: str) -> str:
+    return f"regexp_extract({part_name}, {sql_lit(_RE_VARS)}, 1)"
 
 
 @rule("order")
 def order(ctx: RuleContext) -> DataFrame:
     docs = ctx.docs.where(
-        (~F.col("is_alias"))
-        & (F.col("category") != "user-owned")
-        & (~F.col("has_transform"))
-        & (F.col("n_spans") > 1)
+        "(NOT is_alias) AND (category != 'user-owned') AND (NOT has_transform) "
+        "AND (n_spans > 1)"
     )
-    first_text = F.get(F.col("spans"), 0)["text"]
-    last_text = F.element_at(F.col("spans"), -1)["text"]
-    d = docs.select(
+    d = docs.selectExpr(
         "doc_id",
-        parse.part_name_full(first_text).alias("first_part"),
-        parse.part_name_full(last_text).alias("last_part"),
-    ).select(
-        "doc_id",
-        "first_part",
-        "last_part",
-        _henka(F.col("first_part")).alias("fh"),
-        _henka(F.col("last_part")).alias("lh"),
+        f"{parse.part_name_full('get(spans, 0).text')} AS first_part",
+        f"{parse.part_name_full('element_at(spans, -1).text')} AS last_part",
+    ).selectExpr(
+        "doc_id", "first_part", "last_part",
+        f"{_henka('first_part')} AS fh", f"{_henka('last_part')} AS lh",
     )
-    first_code = (
-        F.when(F.col("fh") == "02", F.lit("2"))
-        .when(F.col("fh").isin("04", "14", "24"), F.lit("4"))
-        .when(F.col("fh") == "06", F.lit("6"))
-    )
+    first_code = "CASE WHEN fh = '02' THEN '2' WHEN fh IN ('04', '14', '24') THEN '4' WHEN fh = '06' THEN '6' END"
     last_code = (
-        F.when(F.col("lh") == "01", F.lit("11"))
-        .when(F.col("lh") == "03", F.lit("13"))
-        .when(F.col("lh").isin("05", "10", "11", "15"), F.lit("15"))
+        "CASE WHEN lh = '01' THEN '11' WHEN lh = '03' THEN '13' "
+        "WHEN lh IN ('05', '10', '11', '15') THEN '15' END"
     )
-    d = d.withColumn(
-        "errcode",
-        F.coalesce(
-            F.when(F.col("first_part").isNotNull(), first_code),
-            F.when(F.col("last_part").isNotNull(), last_code),
-        ),
-    ).where(F.col("errcode").isNotNull())
-    param = F.when(
-        F.col("errcode").isin("2", "4", "6"), F.col("first_part")
-    ).otherwise(F.col("last_part"))
-    return shape(d, "order", F.col("errcode"), F.array(tag_s(param)))
+    d = d.selectExpr(
+        "*",
+        f"coalesce(CASE WHEN first_part IS NOT NULL THEN {first_code} END, "
+        f"CASE WHEN last_part IS NOT NULL THEN {last_code} END) AS errcode",
+    ).where("errcode IS NOT NULL")
+    param = "CASE WHEN errcode IN ('2', '4', '6') THEN first_part ELSE last_part END"
+    return shape(d, "order", "errcode", f"array({tag_s(param)})")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from gwv_spark import derive
 from gwv_spark.derive import RE_UCS
+from gwv_spark.parse import sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_s
 from gwv_spark.session import local_frame
 
@@ -44,72 +45,57 @@ def related(ctx: RuleContext) -> DataFrame:
         return empty_violations(ctx.spark)
 
     docs = (
-        ctx.docs.where(F.col("category") == "ucs-kanji")
-        .join(ctx.attrs.select("doc_id", "related"), "doc_id", "left")
-        .withColumn("related", F.coalesce(F.col("related"), F.lit("u3013")))
-        .withColumn("exp0", F.concat(F.lit("u"), F.regexp_extract(F.col("doc_id"), RE_UCS, 1)))
+        ctx.docs.where("category = 'ucs-kanji'")
+        .join(ctx.attrs.selectExpr("doc_id", "related AS __related"), "doc_id", "left")
+        .selectExpr(
+            "*",
+            "coalesce(__related, 'u3013') AS related",
+            f"concat('u', regexp_extract(doc_id, {sql_lit(RE_UCS)}, 1)) AS exp0",
+        )
+        .selectExpr(
+            "*",
+            f"{derive.is_gokan_kanji_cp('CAST(conv(substring(exp0, 2), 16, 10) AS BIGINT)')} AS is_gokan",
+        )
     )
-    cp = F.conv(F.expr("substring(exp0, 2)"), 16, 10).cast("long")
-    docs = docs.withColumn("is_gokan", derive.is_gokan_kanji_cp(cp))
-    compat = _cjksrc_compat_df(ctx).select(
-        F.col("ucs").alias("exp0"), F.col("compat").alias("compat")
-    )
-    docs = docs.join(F.broadcast(compat), "exp0", "left")
+    compat = _cjksrc_compat_df(ctx).selectExpr("ucs AS exp0", "compat")
     # gokan without a compat mapping: rule skips the glyph entirely
-    docs = docs.where(~(F.col("is_gokan") & F.col("compat").isNull()))
-    expected = F.when(
-        F.col("is_gokan"),
-        F.concat(F.lit("u"), F.lower(F.expr("substring(compat, 3)"))),
-    ).otherwise(F.col("exp0"))
-    docs = docs.withColumn("expected", expected)
+    docs = (
+        docs.join(F.broadcast(compat), "exp0", "left")
+        .where("NOT (is_gokan AND compat IS NULL)")
+        .selectExpr(
+            "*",
+            "CASE WHEN is_gokan THEN concat('u', lower(substring(compat, 3))) ELSE exp0 END"
+            " AS expected",
+        )
+    )
 
     # entity attributes: existence is precomputed (derive.with_entity);
     # only the entity's related needs a lookup, against the slim attrs
     # table instead of the corpus
-    ent = ctx.attrs.select(
-        F.col("doc_id").alias("entity_ref"), F.col("related").alias("ent_related")
-    )
-    d = (
-        docs.join(ent, "entity_ref", "left")
-        .withColumn("ent_exists", F.col("entity_exists"))
-        .withColumn(
-            "ent_related",
-            F.when(
-                F.col("entity_exists"), F.coalesce(F.col("ent_related"), F.lit("u3013"))
-            ),
-        )
+    ent = ctx.attrs.selectExpr("doc_id AS entity_ref", "related AS __ent_related")
+    d = docs.join(ent, "entity_ref", "left").selectExpr(
+        "*",
+        "CASE WHEN entity_exists THEN coalesce(__ent_related, 'u3013') END AS ent_related",
     )
 
-    ent_hex = F.regexp_extract(F.col("entity_ref"), RE_UCS, 1)
-    ent_cat = derive.category(F.col("entity_ref"))
-    ent_togo_kanji = (ent_cat == "ucs-kanji") & derive.is_togo_kanji_cp(
-        F.conv(ent_hex, 16, 10).cast("long")
+    ent_cp = f"CAST(conv(regexp_extract(entity_ref, {sql_lit(RE_UCS)}, 1), 16, 10) AS BIGINT)"
+    ent_togo_kanji = (
+        f"{derive.category('entity_ref')} = 'ucs-kanji' AND {derive.is_togo_kanji_cp(ent_cp)}"
     )
-
-    code0 = ~F.col("related").isin("u3013") & (F.col("related") != F.col("expected"))
     errcode = (
-        F.when(code0, F.lit("0"))
-        .when(
-            F.col("entity_ref").isNotNull(),
-            F.when(ent_togo_kanji, F.lit(None))
-            .when(~F.coalesce(F.col("ent_exists"), F.lit(False)), F.lit("2"))
-            .when(F.col("ent_related") == "u3013", F.lit("11"))
-            .when(F.col("expected") != F.col("ent_related"), F.lit("10")),
-        )
-        .when(F.col("related") == "u3013", F.lit("1"))
+        "CASE WHEN NOT related IN ('u3013') AND related != expected THEN '0' "
+        f"WHEN entity_ref IS NOT NULL THEN CASE WHEN {ent_togo_kanji} THEN NULL "
+        "WHEN NOT coalesce(entity_exists, false) THEN '2' "
+        "WHEN ent_related = 'u3013' THEN '11' WHEN expected != ent_related THEN '10' END "
+        "WHEN related = 'u3013' THEN '1' END"
     )
-    d = d.withColumn("errcode_", errcode).where(F.col("errcode_").isNotNull())
+    d = d.selectExpr("*", f"{errcode} AS errcode_").where("errcode_ IS NOT NULL")
     detail = (
-        F.when(
-            F.col("errcode_") == "0",
-            F.array(tag_s(F.col("related")), tag_s(F.col("expected"))),
-        )
-        .when(F.col("errcode_") == "1", F.array(tag_s(F.col("expected"))))
-        .when(F.col("errcode_") == "2", F.array(tag_s(F.col("entity_ref"))))
-        .when(
-            F.col("errcode_") == "10",
-            F.array(tag_s(F.col("entity_ref")), tag_s(F.col("ent_related")), tag_s(F.col("expected"))),
-        )
-        .otherwise(F.array(tag_s(F.col("entity_ref")), tag_s(F.col("expected"))))
+        f"CASE WHEN errcode_ = '0' THEN array({tag_s('related')}, {tag_s('expected')}) "
+        f"WHEN errcode_ = '1' THEN array({tag_s('expected')}) "
+        f"WHEN errcode_ = '2' THEN array({tag_s('entity_ref')}) "
+        f"WHEN errcode_ = '10' THEN array({tag_s('entity_ref')}, {tag_s('ent_related')}, "
+        f"{tag_s('expected')}) "
+        f"ELSE array({tag_s('entity_ref')}, {tag_s('expected')}) END"
     )
-    return shape(d, "related", F.col("errcode_"), detail)
+    return shape(d, "related", "errcode_", detail)

@@ -18,121 +18,104 @@ Scale: narrow map over spans; no shuffle (the sort is report-time).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from gwv_spark.parse import sql_lit
 from gwv_spark.rules import RuleContext, rule, shape, tag_f, tag_line
 
 _PI = 3.141592653589793
 
 
-def _deg(c):
-    return c * F.lit(180.0) / F.lit(_PI)
+def _deg(c: str) -> str:
+    return f"{c} * 180.0D / {sql_lit(_PI)}"
+
+
+def _round1(c: str) -> str:
+    return f"bround({c}, 1)"
 
 
 def classify(ctx: RuleContext) -> DataFrame:
     """Flat per-line classification: (doc_id, offset, text, errcode_,
     angle) for offending lines."""
-    sp = ctx.spans.where(
-        (~F.col("is_alias")) & (F.col("category") != "user-owned")
-    )  # 'd' = shared parsed int columns (derive.exploded_spans)
-    d = F.col("d")
-    n_pairs = F.floor((F.size(d) - 3) / 2).cast("int")
+    # 'd' = shared parsed int columns (derive.exploded_spans)
+    n_pairs = "CAST(floor((size(d) - 3) / 2) AS INT)"
     # KageLine.coords is None iff any zipped (x, y) pair has a NULL
-    pair_ok = F.forall(
-        F.sequence(F.lit(0), n_pairs - 1),
-        lambda i: F.get(d, 3 + i * 2).isNotNull() & F.get(d, 4 + i * 2).isNotNull(),
+    pair_ok = (
+        f"forall(sequence(0, {n_pairs} - 1), "
+        "i -> get(d, i * 2 + 3) IS NOT NULL AND get(d, i * 2 + 4) IS NOT NULL)"
     )
-    sp = sp.where(F.get(d, 0).isin(1, 3, 4, 7)).where(n_pairs >= F.when(F.get(d, 0) == 1, 2).otherwise(3))
-    sp = sp.where(pair_ok)
-
-    x0, y0 = F.get(d, 3), F.get(d, 4)
-    x1, y1 = F.get(d, 5), F.get(d, 6)
-    x2, y2 = F.get(d, 7), F.get(d, 8)
+    sp = ctx.spans.where(
+        "NOT is_alias AND category != 'user-owned' AND get(d, 0) IN (1, 3, 4, 7) "
+        f"AND {n_pairs} >= CASE WHEN get(d, 0) = 1 THEN 2 ELSE 3 END AND {pair_ok}"
+    )
+    x0, y0, x1, y1, x2, y2 = (f"get(d, {i})" for i in range(3, 9))
 
     # stype 1
-    xdif = F.abs(x0 - x1)
-    ydif = F.abs(y0 - y1)
-    t1_vert = (xdif <= ydif) & (xdif != 0) & (xdif <= 3)
-    t1_hori = (xdif > ydif) & (ydif != 0) & (ydif <= 3)
-    t1_code = F.when(t1_vert, F.lit("11")).when(t1_hori, F.lit("10"))
-    t1_angle = F.when(t1_vert, F.bround(_deg(F.atan2(xdif, ydif)), 1)).when(
-        t1_hori, F.bround(_deg(F.atan2(ydif, xdif)), 1)
+    xdif, ydif = f"abs({x0} - {x1})", f"abs({y0} - {y1})"
+    t1_vert = f"{xdif} <= {ydif} AND {xdif} != 0 AND {xdif} <= 3"
+    t1_hori = f"{xdif} > {ydif} AND {ydif} != 0 AND {ydif} <= 3"
+    t1_code = f"CASE WHEN {t1_vert} THEN '11' WHEN {t1_hori} THEN '10' END"
+    t1_angle = (
+        f"CASE WHEN {t1_vert} THEN {_round1(_deg(f'atan2({xdif}, {ydif})'))} "
+        f"WHEN {t1_hori} THEN {_round1(_deg(f'atan2({ydif}, {xdif})'))} END"
     )
 
     # stype 3
-    xdif1 = F.abs(x0 - x1)
-    ydif1 = F.abs(y0 - y1)
-    xdif2 = F.abs(x1 - x2)
-    ydif2 = F.abs(y1 - y2)
-    t3_first = (xdif1 != 0) & (xdif1 <= 3)
-    t3_last = (ydif2 != 0) & (ydif2 <= 3)
-    t3_code = F.when(t3_first, F.lit("31")).when(t3_last, F.lit("30"))
-    t3_angle = F.when(t3_first, F.bround(_deg(F.atan2(xdif1, ydif1)), 1)).when(
-        t3_last, F.bround(_deg(F.atan2(ydif2, xdif2)), 1)
+    xdif2, ydif2 = f"abs({x1} - {x2})", f"abs({y1} - {y2})"
+    t3_first = f"{xdif} != 0 AND {xdif} <= 3"
+    t3_last = f"{ydif2} != 0 AND {ydif2} <= 3"
+    t3_code = f"CASE WHEN {t3_first} THEN '31' WHEN {t3_last} THEN '30' END"
+    t3_angle = (
+        f"CASE WHEN {t3_first} THEN {_round1(_deg(f'atan2({xdif}, {ydif})'))} "
+        f"WHEN {t3_last} THEN {_round1(_deg(f'atan2({ydif2}, {xdif2})'))} END"
     )
 
     # stype 4 (second half)
-    t4_cond = (ydif2 != 0) & (ydif2 <= 3)
-    t4_code = F.when(t4_cond, F.lit("40"))
-    t4_angle = F.when(t4_cond, F.bround(_deg(F.atan2(ydif2, xdif2)), 1))
+    t4_code = f"CASE WHEN {t3_last} THEN '40' END"
+    t4_angle = f"CASE WHEN {t3_last} THEN {_round1(_deg(f'atan2({ydif2}, {xdif2})'))} END"
 
     # stype 7
-    dx = x1 - x0
-    dy = y1 - y0
-    is_yoko = ((y0 == y1) & (x0 != x1)) | ((-dx < dy) & (dy < dx))
-    sdx1 = (x1 - x0).cast("double")
-    sdy1 = (y1 - y0).cast("double")
-    theta1 = F.when((sdx1 == 0) & (sdy1 == 0), F.lit(_PI / 2)).otherwise(
-        F.atan2(sdy1, sdx1)
+    dx, dy = f"({x1} - {x0})", f"({y1} - {y0})"
+    is_yoko = f"{y0} = {y1} AND {x0} != {x1} OR -{dx} < {dy} AND {dy} < {dx}"
+    sdx1, sdy1 = f"CAST({dx} AS DOUBLE)", f"CAST({dy} AS DOUBLE)"
+    theta1 = (
+        f"CASE WHEN {sdx1} = 0 AND {sdy1} = 0 THEN {sql_lit(_PI / 2)} "
+        f"ELSE atan2({sdy1}, {sdx1}) END"
     )
-    sdx2 = (x2 - x1).cast("double")
-    sdy2 = (y2 - y1).cast("double")
-    theta2 = F.atan2(sdy2, sdx2)
-    snapped = ((sdx1 == 0) & (sdx2 != 0)) | (F.abs(theta1 - theta2) * 60 > 3)
-    t7_skewed = (sdx1 != 0) & (sdx1 >= -3) & (sdx1 <= 3)
-    t7_code = (
-        F.when(is_yoko, F.lit("70"))
-        .when(snapped, F.lit("71"))
-        .when(t7_skewed, F.lit("72"))
-    )
+    sdx2, sdy2 = f"CAST({x2} - {x1} AS DOUBLE)", f"CAST({y2} - {y1} AS DOUBLE)"
+    theta2 = f"atan2({sdy2}, {sdx2})"
+    dtheta = f"abs({theta1} - {theta2})"
+    snapped = f"{sdx1} = 0 AND {sdx2} != 0 OR {dtheta} * 60 > 3"
+    t7_skewed = f"{sdx1} != 0 AND {sdx1} >= -3 AND {sdx1} <= 3"
+    t7_code = f"CASE WHEN {is_yoko} THEN '70' WHEN {snapped} THEN '71' WHEN {t7_skewed} THEN '72' END"
     t7_angle = (
-        F.when(is_yoko, F.lit(None).cast("double"))
-        .when(snapped, F.bround(_deg(F.abs(theta1 - theta2)), 1))
-        .when(t7_skewed, F.bround(F.abs(F.lit(90.0) - _deg(theta1)), 1))
+        f"CASE WHEN {is_yoko} THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {snapped} THEN {_round1(_deg(dtheta))} "
+        f"WHEN {t7_skewed} THEN {_round1(f'abs(90.0D - {_deg(theta1)})')} END"
     )
 
-    errcode = (
-        F.when(F.get(d, 0) == 1, t1_code)
-        .when(F.get(d, 0) == 3, t3_code)
-        .when(F.get(d, 0) == 4, t4_code)
-        .when(F.get(d, 0) == 7, t7_code)
-    )
-    angle = (
-        F.when(F.get(d, 0) == 1, t1_angle)
-        .when(F.get(d, 0) == 3, t3_angle)
-        .when(F.get(d, 0) == 4, t4_angle)
-        .when(F.get(d, 0) == 7, t7_angle)
-    )
-    return (
-        sp.withColumn("errcode_", errcode)
-        .withColumn("angle", angle)
-        .where(F.col("errcode_").isNotNull())
-    )
+    def by_type(arms: list[str]) -> str:
+        return "CASE " + " ".join(
+            f"WHEN get(d, 0) = {st} THEN {a}" for st, a in zip((1, 3, 4, 7), arms)
+        ) + " END"
+
+    return sp.selectExpr(
+        "*",
+        f"{by_type([t1_code, t3_code, t4_code, t7_code])} AS errcode_",
+        f"{by_type([t1_angle, t3_angle, t4_angle, t7_angle])} AS angle",
+    ).where("errcode_ IS NOT NULL")
 
 
 @rule("skew")
 def skew(ctx: RuleContext) -> DataFrame:
     out = classify(ctx)
-    detail = F.when(
-        F.col("angle").isNotNull(),
-        F.array(tag_line(F.col("offset"), F.col("text")), tag_f(F.col("angle"))),
-    ).otherwise(F.array(tag_line(F.col("offset"), F.col("text"))))
-    # angle-descending report order (stable by doc then line underneath)
-    sortkey = F.concat(
-        F.lpad((F.lit(10000.0) - F.coalesce(F.col("angle"), F.lit(0.0)) * 10).cast("int").cast("string"), 6, "0"),
-        F.lit("#"),
-        F.col("doc_id"),
-        F.lit("#"),
-        F.lpad(F.col("offset").cast("string"), 6, "0"),
+    line = tag_line("`offset`", "text")
+    detail = (
+        f"CASE WHEN angle IS NOT NULL THEN array({line}, {tag_f('angle')}) "
+        f"ELSE array({line}) END"
     )
-    return shape(out, "skew", F.col("errcode_"), detail, sortkey)
+    # angle-descending report order (stable by doc then line underneath)
+    sortkey = (
+        "concat(lpad(CAST(CAST(10000.0D - coalesce(angle, 0.0D) * 10 AS INT) AS STRING), 6, '0'), "
+        "'#', doc_id, '#', lpad(CAST(`offset` AS STRING), 6, '0'))"
+    )
+    return shape(out, "skew", "errcode_", detail, sortkey)

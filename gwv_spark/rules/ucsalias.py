@@ -14,10 +14,10 @@ Gate: is_alias AND category ∈ {ucs-kanji, ucs-hikanji}.  entity is the
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from gwv_spark.parse import sql_lit
 
 from gwv_spark.derive import RE_UCS
-from gwv_spark.rules import RuleContext, rule, shape, tag_s
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape, tag_s
 from gwv_spark.rules.order import RE_REGIONS
 
 _RE_TAIL_VAR_ITAIJI = r"^-(var|itaiji)-[0-9]{3}$"
@@ -28,59 +28,38 @@ _RE_IDS_PREFIX = r"^(u2ff[0-9a-f]|u31ef)-"
 
 @rule("ucsalias")
 def ucsalias(ctx: RuleContext) -> DataFrame:
+    nomark = f"concat('u', regexp_extract(doc_id, {sql_lit(RE_UCS)}, 1))"
     docs = ctx.docs.where(
-        F.col("is_alias") & F.col("category").isin("ucs-kanji", "ucs-hikanji")
-    ).select(
+        "is_alias AND category IN ('ucs-kanji', 'ucs-hikanji')"
+    ).selectExpr(
         "doc_id",
-        F.col("entity_ref").alias("entity"),
-        F.regexp_extract(F.col("doc_id"), RE_UCS, 1).alias("cp_hex"),
-    )
-    docs = docs.withColumn("nomark", F.concat(F.lit("u"), F.col("cp_hex"))).withColumn(
-        "tail", F.expr("substring(doc_id, length(nomark) + 1)")
+        "entity_ref AS entity",
+        f"{nomark} AS nomark",
+        f"substring(doc_id, length({nomark}) + 1) AS tail",
     )
     # nomark lookup: raw entity + existence (dump.get_entity_name)
-    nomark_side = ctx.docs.select(
-        F.col("doc_id").alias("nomark"),
-        F.col("raw_entity").alias("nomark_entity"),
-    )
+    nomark_side = ctx.docs.selectExpr("doc_id AS nomark", "raw_entity AS nomark_entity")
     d = docs.join(nomark_side, "nomark", "left")
 
-    tail_vi = F.regexp_extract(F.col("tail"), _RE_TAIL_VAR_ITAIJI, 1)
-    has_tail = F.col("tail") != ""
-    nomark_exists = F.col("nomark_entity").isNotNull()
-
-    # suffixed branch
+    tail_vi = f"regexp_extract(tail, {sql_lit(_RE_TAIL_VAR_ITAIJI)}, 1)"
     suffixed_code = (
-        F.when(
-            tail_vi != "",
-            F.when(
-                nomark_exists & (F.col("entity") == F.col("nomark_entity")),
-                F.when(tail_vi == "var", F.lit("10")).otherwise(F.lit("20")),
-            ),
-        )
-        .when(
-            F.col("tail").rlike(_RE_SOURCES_FULL),
-            F.when(F.col("entity") == F.col("nomark"), F.lit("1")),
-        )
+        f"CASE WHEN {tail_vi} != '' THEN (CASE WHEN nomark_entity IS NOT NULL "
+        f"AND entity = nomark_entity THEN (CASE WHEN {tail_vi} = 'var' THEN '10' ELSE '20' END) END) "
+        f"WHEN tail RLIKE {sql_lit(_RE_SOURCES_FULL)} THEN (CASE WHEN entity = nomark THEN '1' END) END"
     )
     # bare-uxxxx branch
-    entity_tail_vi = F.when(
-        F.col("entity").startswith(F.concat(F.col("nomark"), F.lit("-"))),
-        F.regexp_extract(
-            F.expr("substring(entity, length(nomark) + 1)"), _RE_TAIL_VAR_ITAIJI, 1
-        ),
-    ).otherwise(F.lit(""))
-    bare_code = F.when(
-        (~F.col("entity").rlike(_RE_UCS_PREFIX)) | F.col("entity").rlike(_RE_IDS_PREFIX),
-        F.when(F.col("entity") != "undefined", F.lit("0")),
-    ).when(
-        entity_tail_vi != "",
-        F.when(entity_tail_vi == "var", F.lit("11")).otherwise(F.lit("21")),
+    entity_tail_vi = (
+        "CASE WHEN startswith(entity, concat(nomark, '-')) THEN regexp_extract("
+        f"substring(entity, length(nomark) + 1), {sql_lit(_RE_TAIL_VAR_ITAIJI)}, 1) ELSE '' END"
     )
-    d = d.withColumn(
-        "errcode", F.when(has_tail, suffixed_code).otherwise(bare_code)
-    ).where(F.col("errcode").isNotNull())
-    detail = F.when(F.col("errcode") == "1", F.array().cast("array<string>")).otherwise(
-        F.array(tag_s(F.col("entity")))
+    bare_code = (
+        f"CASE WHEN (NOT (entity RLIKE {sql_lit(_RE_UCS_PREFIX)})) OR "
+        f"(entity RLIKE {sql_lit(_RE_IDS_PREFIX)}) THEN (CASE WHEN entity != 'undefined' THEN '0' END) "
+        f"WHEN ({entity_tail_vi}) != '' THEN "
+        f"(CASE WHEN ({entity_tail_vi}) = 'var' THEN '11' ELSE '21' END) END"
     )
-    return shape(d, "ucsalias", F.col("errcode"), detail)
+    d = d.selectExpr(
+        "*", f"CASE WHEN tail != '' THEN ({suffixed_code}) ELSE ({bare_code}) END AS errcode"
+    ).where("errcode IS NOT NULL")
+    detail = f"CASE WHEN errcode = '1' THEN {EMPTY_DETAIL} ELSE array({tag_s('entity')}) END"
+    return shape(d, "ucsalias", "errcode", detail)

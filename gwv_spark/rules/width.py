@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gwv_spark.rules import RuleContext, rule, shape
+from gwv_spark.parse import sql_in, sql_lit
+from gwv_spark.rules import EMPTY_DETAIL, RuleContext, rule, shape
 from gwv_spark.rules.order import RE_REGIONS
 
 _INF = float("inf")
@@ -57,16 +58,16 @@ _RE_HEN = "-" + RE_REGIONS + r"?01(-(var|itaiji)-|$)"
 _SKIP_CATS = ["ids", "ucs-kanji", "cdp", "koseki", "ext", "bsh"]
 
 
-def _is_halfwidth_name(c):
-    return c.endswith("-halfwidth") | c.rlike(_RE_HALFWIDTH_NAME)
+def _is_halfwidth_name(c: str) -> str:
+    return f"(endswith({c}, '-halfwidth') OR ({c} RLIKE {sql_lit(_RE_HALFWIDTH_NAME)}))"
 
 
-def _is_fullwidth_name(c):
-    return c.endswith("-fullwidth") | c.rlike(_RE_FULLWIDTH_NAME)
+def _is_fullwidth_name(c: str) -> str:
+    return f"(endswith({c}, '-fullwidth') OR ({c} RLIKE {sql_lit(_RE_FULLWIDTH_NAME)}))"
 
 
-def _dwidth(c, groups: dict) -> object:
-    """getDWidth (width.py:53-59) as a when-chain over literal sets."""
+def _dwidth(c: str, groups: dict) -> str:
+    """getDWidth (width.py:53-59) as a CASE over literal sets."""
     nonspacing = sorted(groups.get("NonSpacingGlyphs-Halfwidth", []))
     half = sorted(
         set(groups.get("HalfwidthGlyphs-BMP", []))
@@ -74,21 +75,24 @@ def _dwidth(c, groups: dict) -> object:
         | set(groups.get("HalfwidthGlyphs-nonUCS", []))
         | set(groups.get("HalfwidthGlyphs-sans", []))
     )
-    out = F.lit(2)
-    if half:
-        out = F.when(c.isin(half), F.lit(1)).otherwise(out)
-    if nonspacing:
-        out = F.when(c.isin(nonspacing), F.lit(0)).otherwise(out)
-    return out
+    arms = [f"WHEN {sql_in(c, vals)} THEN {w}" for w, vals in ((0, nonspacing), (1, half)) if vals]
+    return f"(CASE {' '.join(arms)} ELSE 2 END)" if arms else "2"
+
+
+def _buhin_edge(gn: str, xl: str, w: str, side: int) -> str:
+    """The part's placement edge from the BUHIN_WIDTHS table (side 0:
+    left, 1: right), NULL for a part not in the table."""
+    arms = " ".join(
+        f"WHEN {gn} = {sql_lit(part)} THEN {xl} + {w} * {sql_lit(edges[side])} / 200.0D"
+        for part, edges in BUHIN_WIDTHS.items()
+    )
+    return f"(CASE {arms} ELSE CAST(NULL AS DOUBLE) END)"
 
 
 @rule("width")
 def width(ctx: RuleContext) -> DataFrame:
     groups = ctx.dims.get("groups", {})
-
-    docs = ctx.docs.where(
-        (~F.col("category").isin(_SKIP_CATS)) & (~F.col("has_transform"))
-    ).select("doc_id", "spans")
+    gate = f"(NOT {sql_in('category', _SKIP_CATS)}) AND (NOT has_transform)"
 
     # ---- per-span effective-extent elements (line order preserved)
     # 'd' = shared parsed int columns (derive.exploded_spans).
@@ -97,81 +101,45 @@ def width(ctx: RuleContext) -> DataFrame:
     # gate is a pushed-down filter — joining spans against the gated doc
     # set here would shuffle the ENTIRE spans table just to re-derive
     # this predicate.
-    sp = ctx.spans.where(
-        (~F.col("category").isin(_SKIP_CATS)) & (~F.col("has_transform"))
-    )
-    d = F.col("d")
-    st = F.get(d, 0)
-    dn = F.size(d)
-    n_pairs = F.floor((dn - 3) / 2).cast("int")
-    pairs_ok = F.when(n_pairs <= 0, F.lit(False)).otherwise(
-        F.forall(
-            F.sequence(F.lit(0), F.greatest(n_pairs - 1, F.lit(0))),
-            lambda i: F.get(d, 3 + i * 2).isNotNull() & F.get(d, 4 + i * 2).isNotNull(),
-        )
+    st, dn = "get(d, 0)", "size(d)"
+    n_pairs = f"CAST(floor(({dn} - 3) / 2) AS INT)"
+    pair_idx = f"sequence(0, greatest({n_pairs} - 1, 0))"
+    pairs_ok = (
+        f"CASE WHEN {n_pairs} <= 0 THEN false ELSE forall({pair_idx}, "
+        "i -> get(d, i * 2 + 3) IS NOT NULL AND get(d, i * 2 + 4) IS NOT NULL) END"
     )
     # for 99-lines KageLine.coords uses only the two placement pairs
     pairs_ok_99 = (
-        (dn >= 7)
-        & F.get(d, 3).isNotNull() & F.get(d, 4).isNotNull()
-        & F.get(d, 5).isNotNull() & F.get(d, 6).isNotNull()
+        f"({dn} >= 7) AND get(d, 3) IS NOT NULL AND get(d, 4) IS NOT NULL "
+        "AND get(d, 5) IS NOT NULL AND get(d, 6) IS NOT NULL"
     )
     # only stroke_type == 0 lines are skipped outright (width.py:115);
     # unparsable stroke types still contribute coords like stroke lines
-    sp = sp.where(st.isNull() | (st != 0)).where(
-        F.when(st == 99, pairs_ok_99).otherwise(pairs_ok)
+    sp = ctx.spans.where(gate).where(
+        f"({st} IS NULL OR ({st} != 0)) "
+        f"AND CASE WHEN {st} = 99 THEN {pairs_ok_99} ELSE {pairs_ok} END"
     )
 
     # stroke lines: min/max over the x coordinates
-    xs = F.filter(
-        F.transform(F.sequence(F.lit(0), F.greatest(n_pairs - 1, F.lit(0))), lambda i: F.get(d, 3 + i * 2)),
-        lambda x: x.isNotNull(),
-    )
-    sxmin = F.array_min(xs).cast("double")
-    sxmax = F.array_max(xs).cast("double")
-
+    xs = f"filter(transform({pair_idx}, i -> get(d, i * 2 + 3)), x -> x IS NOT NULL)"
     # part lines: placement box + part class
-    xl = F.get(d, 3).cast("double")
-    xr = F.get(d, 5).cast("double")
-    w = xr - xl
-    gn = F.col("media_ref")
-    buhin_a = F.lit(None).cast("double")
-    buhin_b = F.lit(None).cast("double")
-    for part, (lo, hi) in BUHIN_WIDTHS.items():
-        buhin_a = F.when(gn == part, xl + w * F.lit(lo) / F.lit(200.0)).otherwise(buhin_a)
-        buhin_b = F.when(gn == part, xl + w * F.lit(hi) / F.lit(200.0)).otherwise(buhin_b)
-    dw = _dwidth(gn, groups)
-
-    sp = sp.withColumn(
-        "elem_pre",
-        F.when(
-            st == 99,
-            F.struct(
-                F.lit("P").alias("typ"),
-                buhin_a.alias("a"),
-                buhin_b.alias("b"),
-                xl.alias("xl"),
-                w.alias("w"),
-                dw.alias("dw"),
-                gn.alias("gn"),
-                F.col("offset").alias("off"),
-            ),
-        ).otherwise(
-            F.struct(
-                F.lit("S").alias("typ"),
-                sxmin.alias("a"),
-                sxmax.alias("b"),
-                F.lit(None).cast("double").alias("xl"),
-                F.lit(None).cast("double").alias("w"),
-                F.lit(None).cast("int").alias("dw"),
-                F.lit(None).cast("string").alias("gn"),
-                F.col("offset").alias("off"),
-            )
-        ),
+    xl = "CAST(get(d, 3) AS DOUBLE)"
+    w = f"(CAST(get(d, 5) AS DOUBLE) - {xl})"
+    elem_pre = (
+        f"CASE WHEN {st} = 99 THEN named_struct('typ', 'P', "
+        f"'a', {_buhin_edge('media_ref', xl, w, 0)}, 'b', {_buhin_edge('media_ref', xl, w, 1)}, "
+        f"'xl', {xl}, 'w', {w}, 'dw', {_dwidth('media_ref', groups)}, 'gn', media_ref, "
+        "'off', `offset`) "
+        f"ELSE named_struct('typ', 'S', 'a', CAST(array_min({xs}) AS DOUBLE), "
+        f"'b', CAST(array_max({xs}) AS DOUBLE), 'xl', CAST(NULL AS DOUBLE), "
+        "'w', CAST(NULL AS DOUBLE), 'dw', CAST(NULL AS INT), 'gn', CAST(NULL AS STRING), "
+        "'off', `offset`) END"
     )
     # parts with <8 columns have no part name — the reference crashes
     # there; we drop the line
-    sp = sp.where((F.col("elem_pre.typ") == "S") | F.col("media_ref").isNotNull())
+    sp = sp.selectExpr("*", f"{elem_pre} AS elem_pre").where(
+        "elem_pre.typ = 'S' OR media_ref IS NOT NULL"
+    )
 
     # '-halfwidth' sibling existence probe (width.py:136): the probed
     # key is media_ref + '-halfwidth', so only doc_ids ENDING in
@@ -181,88 +149,69 @@ def width(ctx: RuleContext) -> DataFrame:
     # wanted semantics), no shuffle, and the heavy per-span element
     # expressions are evaluated once instead of once per stroke/part
     # branch of a union.
-    probe = (
-        ctx.docs.where(F.col("doc_id").endswith("-halfwidth"))
-        .select(F.col("doc_id").alias("__hw"))
-        .withColumn("has_hw", F.lit(True))
+    probe = ctx.docs.where("endswith(doc_id, '-halfwidth')").selectExpr(
+        "doc_id AS __hw", "true AS has_hw"
     )
     sp = sp.join(
-        F.broadcast(probe),
-        F.concat(F.col("media_ref"), F.lit("-halfwidth")) == F.col("__hw"),
-        "left",
+        F.broadcast(probe), F.expr("concat(media_ref, '-halfwidth') = __hw"), "left"
     ).drop("__hw")
 
     # finalize per-span (a, b) where computable without running state
-    is_part = F.col("elem_pre.typ") == "P"
-    wide_quote = _is_fullwidth_name(F.col("elem_pre.gn")) | F.col("has_hw").isNotNull()
-    a2 = F.when(~is_part, F.col("elem_pre.a")).otherwise(
-        F.when(F.col("elem_pre.a").isNotNull(), F.col("elem_pre.a"))  # buhin table
-        .when(F.col("elem_pre.dw") == 0, F.lit(None))  # nonspacing: running state
-        .when(
-            (F.col("elem_pre.dw") == 2) & wide_quote,
-            F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.31,
+    is_part = "(elem_pre.typ = 'P')"
+    wide_quote = f"({_is_fullwidth_name('elem_pre.gn')} OR has_hw IS NOT NULL)"
+
+    def edge(field: str, wide: float, narrow: float, half: float) -> str:
+        e = "elem_pre"
+        return (
+            f"CASE WHEN NOT {is_part} THEN {e}.{field} ELSE (CASE "
+            f"WHEN {e}.{field} IS NOT NULL THEN {e}.{field} "  # buhin table
+            f"WHEN {e}.dw = 0 THEN NULL "  # nonspacing: running state
+            f"WHEN ({e}.dw = 2) AND {wide_quote} THEN {e}.xl + {e}.w * {sql_lit(wide)} "
+            f"WHEN {e}.dw = 2 THEN {e}.xl + {e}.w * {sql_lit(narrow)} "
+            f"ELSE {e}.xl + {e}.w * {sql_lit(half)} END) END"
         )
-        .when(F.col("elem_pre.dw") == 2, F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.06)
-        .otherwise(F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.06)
+
+    typ = (
+        f"CASE WHEN {is_part} AND (elem_pre.dw = 0) AND elem_pre.a IS NULL THEN 'N' ELSE 'V' END"
     )
-    b2 = F.when(~is_part, F.col("elem_pre.b")).otherwise(
-        F.when(F.col("elem_pre.b").isNotNull(), F.col("elem_pre.b"))
-        .when(F.col("elem_pre.dw") == 0, F.lit(None))
-        .when(
-            (F.col("elem_pre.dw") == 2) & wide_quote,
-            F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.69,
-        )
-        .when(F.col("elem_pre.dw") == 2, F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.94)
-        .otherwise(F.col("elem_pre.xl") + F.col("elem_pre.w") * 0.44)
-    )
-    typ = F.when(is_part & (F.col("elem_pre.dw") == 0) & F.col("elem_pre.a").isNull(), F.lit("N")).otherwise(F.lit("V"))
-    elems = sp.select(
+    elems = sp.selectExpr(
         "doc_id",
-        F.struct(
-            F.col("elem_pre.off").alias("off"),
-            typ.alias("typ"),
-            a2.alias("a"),
-            b2.alias("b"),
-        ).alias("elem"),
+        f"named_struct('off', elem_pre.off, 'typ', {typ}, 'a', {edge('a', 0.31, 0.06, 0.06)}, "
+        f"'b', {edge('b', 0.69, 0.94, 0.44)}) AS elem",
     )
-    folded = elems.groupBy("doc_id").agg(F.array_sort(F.collect_list("elem")).alias("arr"))
-    state0 = F.struct(F.lit(_INF).alias("mn"), F.lit(-_INF).alias("mx"))
-    fold = F.aggregate(
-        F.col("arr"),
-        state0,
-        lambda acc, e: F.struct(
-            F.when(e["typ"] == "N", F.least(acc["mn"], acc["mx"]))
-            .otherwise(F.least(acc["mn"], e["a"], e["b"]))
-            .alias("mn"),
-            F.when(e["typ"] == "N", F.greatest(acc["mx"], acc["mn"]))
-            .otherwise(F.greatest(acc["mx"], e["a"], e["b"]))
-            .alias("mx"),
-        ),
+    folded = elems.groupBy("doc_id").agg(F.expr("array_sort(collect_list(elem)) AS arr"))
+    inf = sql_lit(_INF)
+    fold = (
+        f"aggregate(arr, named_struct('mn', {inf}, 'mx', {sql_lit(-_INF)}), (acc, e) -> named_struct("
+        "'mn', CASE WHEN e.typ = 'N' THEN least(acc.mn, acc.mx) ELSE least(acc.mn, e.a, e.b) END, "
+        "'mx', CASE WHEN e.typ = 'N' THEN greatest(acc.mx, acc.mn) "
+        "ELSE greatest(acc.mx, e.a, e.b) END))"
     )
-    folded = folded.select("doc_id", fold.alias("mm"))
+    folded = folded.selectExpr("doc_id", f"{fold} AS mm")
 
     # gated doc set left-joined with the fold: a doc with ZERO surviving
     # spans still gets a verdict via the name-based overrides below.
     # Only doc_id crosses the shuffle (spans stays behind).
-    d2 = docs.select("doc_id").join(folded, "doc_id", "left")
-    name = F.col("doc_id")
-    min_x = (
-        F.when(_is_fullwidth_name(name), F.lit(0.0))
-        .when(_is_halfwidth_name(name), F.lit(0.0))
-        .when(name.rlike(_RE_HEN), F.lit(0.0))
-        .otherwise(F.coalesce(F.col("mm.mn"), F.lit(_INF)))
+    def by_name(full: str, half: str, hen: str, other: str) -> str:
+        return (
+            f"CASE WHEN {_is_fullwidth_name('doc_id')} THEN {full} "
+            f"WHEN {_is_halfwidth_name('doc_id')} THEN {half} "
+            f"WHEN doc_id RLIKE {sql_lit(_RE_HEN)} THEN {hen} ELSE {other} END"
+        )
+
+    gwidth = _dwidth("doc_id", groups)
+    d2 = (
+        ctx.docs.where(gate)
+        .select("doc_id")
+        .join(folded, "doc_id", "left")
+        .selectExpr(
+            "*",
+            f"{by_name('0.0D', '0.0D', '0.0D', f'coalesce(mm.mn, {inf})')} AS minx",
+            f"{by_name('200.0D', '100.0D', '200.0D', f'coalesce(mm.mx, {sql_lit(-_INF)})')} AS maxx",
+        )
+        .where(f"maxx != {sql_lit(-_INF)}")
+        # looks-halfwidth must equal (width class != 2)
+        .where(f"((maxx <= 110) AND (minx < 90)) != ({gwidth} != 2)")
+        .selectExpr("*", f"CAST({gwidth} AS STRING) AS errcode_")
     )
-    max_x = (
-        F.when(_is_fullwidth_name(name), F.lit(200.0))
-        .when(_is_halfwidth_name(name), F.lit(100.0))
-        .when(name.rlike(_RE_HEN), F.lit(200.0))
-        .otherwise(F.coalesce(F.col("mm.mx"), F.lit(-_INF)))
-    )
-    d2 = d2.withColumn("minx", min_x).withColumn("maxx", max_x).where(
-        F.col("maxx") != F.lit(-_INF)
-    )
-    gwidth = _dwidth(name, groups)
-    looks_half = (F.col("maxx") <= 110) & (F.col("minx") < 90)
-    bad = looks_half != (gwidth != 2)
-    d2 = d2.where(bad).withColumn("errcode_", gwidth.cast("string"))
-    return shape(d2, "width", F.col("errcode_"), F.array().cast("array<string>"))
+    return shape(d2, "width", "errcode_", EMPTY_DETAIL)

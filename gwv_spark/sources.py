@@ -52,7 +52,7 @@ def _finalize(
         F.max_by(F.struct("related", "gdata"), F.col("pos")).alias("v")
     )
     documents = latest.select(
-        "doc_id", parse.gdata_to_spans(F.col("v.gdata")).alias("spans")
+        "doc_id", F.expr(parse.gdata_to_spans("v.gdata")).alias("spans")
     )
     attrs = latest.select(
         "doc_id",

@@ -280,6 +280,44 @@ def test_compact_resumes_interrupted_swap(spark, tmp_path):
     assert res["files_after"] == 1
 
 
+def test_compact_finishes_swap_that_deleted_every_original(spark, tmp_path):
+    """A swap that crashed after deleting ALL the old files of a leaf
+    leaves it no visible data file; the rerun still finds the leaf by
+    its journal and restores every row."""
+    import json as _json
+
+    ref = str(tmp_path / "t")
+    spark.range(500).repartition(4).write.parquet(ref)
+    leaf = _leaf_dirs(ref)[0]
+    files = sorted(leaf.glob("*.parquet"))
+    assert len(files) == 4
+    tmp = leaf / "_compact_tmp"
+    spark.read.parquet(str(leaf)).repartition(1).write.parquet(str(tmp))
+    staged = sorted(tmp.glob("*.parquet"))
+    (tmp / "_PLAN.json").write_text(
+        _json.dumps({"old": [str(p) for p in files], "staged": [str(p) for p in staged]})
+    )
+    for f in files:
+        f.unlink()
+    catalog.compact(spark, ref, target_file_bytes=1 << 30)
+    assert spark.read.parquet(ref).count() == 500
+    assert not tmp.exists()
+
+
+def test_table_at_location_with_space_pins_one_snapshot(spark, tmp_path):
+    """inputFiles() returns percent-encoded URIs; the table branch of
+    snapshot_id decodes them, so a table stored under a path with a
+    space is fingerprinted, and the same id comes back each time."""
+    loc = tmp_path / "sp ace" / "t"
+    spark.range(100).repartition(2).write.option("path", str(loc)).saveAsTable("t_sp_ace")
+    try:
+        sid = catalog.snapshot_id(spark, "t_sp_ace")
+        assert sid.startswith("tablefp:")
+        assert catalog.snapshot_id(spark, "t_sp_ace") == sid
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_sp_ace")
+
+
 def test_torn_compaction_journal_is_redone(spark, tmp_path, monkeypatch):
     """A compaction that dies half-way through writing its swap journal
     leaves no torn ``_PLAN.json``: the originals are intact, and a rerun

@@ -34,7 +34,7 @@ TRICKY_GDATA = [
 
 def test_gdata_to_spans_matches_python_mirror(spark):
     df = spark.createDataFrame([(g,) for g in TRICKY_GDATA], "gdata STRING")
-    got = df.select(parse.gdata_to_spans(F.col("gdata")).alias("spans")).collect()
+    got = df.select(F.expr(parse.gdata_to_spans("gdata")).alias("spans")).collect()
     for g, row in zip(TRICKY_GDATA, got):
         expect = py_spans(g)
         actual = [s.asDict() for s in row["spans"]]
@@ -45,7 +45,7 @@ def test_spans_roundtrip(spark):
     df = spark.createDataFrame([(g,) for g in TRICKY_GDATA], "gdata STRING")
     rt = df.select(
         "gdata",
-        parse.spans_to_gdata(parse.gdata_to_spans(F.col("gdata"))).alias("rt"),
+        F.expr(parse.spans_to_gdata(parse.gdata_to_spans("gdata"))).alias("rt"),
     ).collect()
     for row in rt:
         assert row["rt"] == row["gdata"]
@@ -69,7 +69,7 @@ def test_kage_int_semantics(spark):
         "1__0": None,
     }
     df = spark.createDataFrame([(k,) for k in cases], "s STRING")
-    got = {r["s"]: r["v"] for r in df.select("s", parse.kage_int(F.col("s")).alias("v")).collect()}
+    got = {r["s"]: r["v"] for r in df.select("s", F.expr(parse.kage_int("s")).alias("v")).collect()}
     for k, want in cases.items():
         assert got[k] == want, f"kage_int({k!r}) = {got[k]}, want {want}"
 
@@ -86,7 +86,7 @@ def test_entity_ref_and_alias(spark):
     df = spark.createDataFrame([(k,) for k in cases], "gdata STRING")
     got = {
         r["gdata"]: r["e"]
-        for r in df.select("gdata", parse.entity_ref(F.col("gdata")).alias("e")).collect()
+        for r in df.select("gdata", F.expr(parse.entity_ref("gdata")).alias("e")).collect()
     }
     for k, want in cases.items():
         assert got[k] == want, f"entity_ref({k!r}) = {got[k]!r}, want {want!r}"
@@ -110,8 +110,8 @@ def test_category_matches_reference(spark, reference_gwv):
         r["doc_id"]: (r["cat"], r["hik"])
         for r in df.select(
             "doc_id",
-            derive.category(F.col("doc_id")).alias("cat"),
-            derive.is_hikanji(F.col("doc_id"), derive.category(F.col("doc_id"))).alias("hik"),
+            F.expr(derive.category("doc_id")).alias("cat"),
+            F.expr(derive.is_hikanji("doc_id", derive.category("doc_id"))).alias("hik"),
         ).collect()
     }
     from gwv.helper import is_hikanji as ref_is_hikanji

@@ -328,7 +328,7 @@ def _write_gdata_drop(spark, path, rows):
         "doc_id",
         F.lit(None).cast("string").alias("related"),
         F.lit(0.0).alias("ts"),
-        parse.gdata_to_spans(F.col("gdata")).alias("spans"),
+        F.expr(parse.gdata_to_spans("gdata")).alias("spans"),
     )
     df.coalesce(1).write.mode("overwrite").parquet(str(path))
     return df
