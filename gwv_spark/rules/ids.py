@@ -67,9 +67,7 @@ def ids(ctx: RuleContext) -> DataFrame:
     # expression tree into each of x1/y1/x2/y2/aspect/dx/dy — measured
     # ~1 s of per-execution optimizer time on this rule alone (the bulk
     # of ids' fixed cost in NOTES_r3), for a value the ingest layer
-    # already stores.  Each later column is a projection of its own, so
-    # the optimizer never copies a stored value's expression into its
-    # readers.
+    # already stores.
     d = d.selectExpr(
         "*",
         "get(espans, 0).text AS ft",
