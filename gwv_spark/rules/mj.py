@@ -55,7 +55,11 @@ _RE_IDS_FULL = r"^(u2ff[0-9a-f]|u31ef)-.+$"
 
 def _field_key(name: str) -> tuple[str, str]:
     """(field, key) of a glyph name as SQL text: the first classifier
-    that matches, in reference order."""
+    that matches, in reference order.  The key is already lower case
+    (every pattern matches lower-case letters only), like the MJ
+    table's keys (:func:`_mj_dfs` lowers them), so no Spark ``lower()``
+    runs: its first evaluation initialises ICU case mapping (~1.5 s of
+    one task thread per JVM)."""
     fields, keys = [], []
     for f_id, pat, grp, prefix in _CLASSIFIERS:
         matched = f"({name} RLIKE {sql_lit(pat)})"
@@ -129,7 +133,7 @@ def mj(ctx: RuleContext) -> DataFrame:
     field, key = _field_key("doc_id")
     docs = (
         ctx.docs.where(f"NOT {sql_in('category', _SKIP_CATS)}")
-        .selectExpr("doc_id", "entity_ref", "is_alias", "entity", f"{field} AS field", f"lower({key}) AS key")
+        .selectExpr("doc_id", "entity_ref", "is_alias", "entity", f"{field} AS field", f"{key} AS key")
         .where("field IS NOT NULL")
     )
     # does the key exist in the MJ table at all?
@@ -138,7 +142,7 @@ def mj(ctx: RuleContext) -> DataFrame:
 
     # ---------- entity branch (mj.py:238-260)
     e_field, e_key = _field_key("entity_ref")
-    docs = docs.selectExpr("*", f"{e_field} AS e_field", f"lower({e_key}) AS e_key").selectExpr(
+    docs = docs.selectExpr("*", f"{e_field} AS e_field", f"{e_key} AS e_key").selectExpr(
         "*",
         "entity_ref IS NOT NULL AND (NOT (doc_id RLIKE '-itaiji-[0-9]{3}$')) "
         "AND e_field IS NOT NULL AND (e_field != field) AS check_entity",

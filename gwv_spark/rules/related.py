@@ -29,12 +29,16 @@ from gwv_spark.session import local_frame
 
 
 def _cjksrc_compat_df(ctx: RuleContext):
+    """(ucs, compat_ucs): the glyph name of each kCompatibilityVariant
+    ('U+F900' → 'uf900'), lowered here in Python: a Spark ``lower()``
+    initialises ICU case mapping in the executor the first time it runs
+    (~1.5 s of one task thread per JVM)."""
     rows = [
-        (ucs, cols[11])
+        (ucs, "u" + cols[11][2:].lower())
         for ucs, cols in ctx.dims.get("cjksrc", {}).items()
         if cols[11] is not None
     ]
-    return local_frame(ctx.spark, rows or [("", "")], "ucs STRING, compat STRING")
+    return local_frame(ctx.spark, rows or [("", "")], "ucs STRING, compat_ucs STRING")
 
 
 @rule("related")
@@ -57,16 +61,12 @@ def related(ctx: RuleContext) -> DataFrame:
             f"{derive.is_gokan_kanji_cp('CAST(conv(substring(exp0, 2), 16, 10) AS BIGINT)')} AS is_gokan",
         )
     )
-    compat = _cjksrc_compat_df(ctx).selectExpr("ucs AS exp0", "compat")
+    compat = _cjksrc_compat_df(ctx).selectExpr("ucs AS exp0", "compat_ucs")
     # gokan without a compat mapping: rule skips the glyph entirely
     docs = (
         docs.join(F.broadcast(compat), "exp0", "left")
-        .where("NOT (is_gokan AND compat IS NULL)")
-        .selectExpr(
-            "*",
-            "CASE WHEN is_gokan THEN concat('u', lower(substring(compat, 3))) ELSE exp0 END"
-            " AS expected",
-        )
+        .where("NOT (is_gokan AND compat_ucs IS NULL)")
+        .selectExpr("*", "CASE WHEN is_gokan THEN compat_ucs ELSE exp0 END AS expected")
     )
 
     # entity attributes: existence is precomputed (derive.with_entity);
