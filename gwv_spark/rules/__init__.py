@@ -49,8 +49,8 @@ class RuleContext:
     # Prepared-plan cache: rule_id -> built violations DataFrame.  A
     # DataFrame is an immutable logical plan, so one build per context is
     # sound.  A build is a few hundred py4j round trips (tools/
-    # plan_calls.py), most of it the analysis of each projection; the
-    # cache saves that on repeated runs over one context.
+    # plan_calls.py) and 0.05-1 s of the JVM parsing and analysing each
+    # step; the cache saves that on repeated runs over one context.
     plan_cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def plan(self, rule_id: str) -> DataFrame:
