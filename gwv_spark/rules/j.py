@@ -3,7 +3,7 @@
 Setup (j.py:79-99) becomes two derived dimension DataFrames built from
 the jv.yaml config expanded through alias closures over the corpus:
   no_use(part → preferred replacement)   and   no_apply(part set),
-lazy plans broadcast at their use sites.
+lazy plans computed inside j's own job and broadcast to the part spans.
 Alias closure of a name = {name} ∪ {docs whose raw alias target is name}
 (dump.get_alias_of, dump.py:63-75).
 
@@ -54,15 +54,37 @@ def _cjksrc_df(ctx: RuleContext):
     return local_frame(ctx.spark, rows, ddl)
 
 
+def _in_no_apply(ctx: RuleContext) -> str | None:
+    """SQL text over a ctx.docs row, true exactly when its doc_id is in
+    no_apply (None when the config lists no no-apply part).  The seeds
+    are the docs whose name matches the config pattern, so a doc is in
+    their alias closure iff its own name matches or it is an alias
+    whose existing target's does (entity_exists, entity): membership
+    is read off the row, with no closure join."""
+    jv = ctx.dims.get("jv", {"no_use_part": {}, "no_apply": []})
+    if not jv["no_apply"]:
+        return None
+    no_apply_re = sql_lit(
+        "^(" + "|".join(jv["no_apply"]) + ")(-(" + RE_REGIONS
+        + r")([0-9]{2})?$|(-[0-9]{2})?(-var-[0-9]{3})?)$"
+    )
+    return f"doc_id RLIKE {no_apply_re} OR (entity_exists AND entity RLIKE {no_apply_re})"
+
+
 def _setup_dims(ctx: RuleContext) -> tuple[DataFrame, DataFrame]:
     """Setup-phase dims (j.py:79-99): no_use(banned → preferred use) and
     no_apply(na_part), the jv.yaml config seeds expanded through one
     alias-closure hop over the corpus.
 
-    They stay lazy plans: building the rule starts no Spark job.  They
-    are dimension-sized by construction (closure rows = config entries
-    + aliases pointing at them, ~10³ regardless of corpus scale), so
-    every use site broadcasts them."""
+    They stay lazy plans, so building the rule starts no Spark job;
+    they are computed inside each execution of j instead of once per
+    context.  They are dimension-sized by construction (closure rows =
+    config entries + aliases pointing at them, ~10³ regardless of
+    corpus scale) and each is used once, broadcast to the part spans.
+    The glyph-side no-apply lookup reads :func:`_in_no_apply` on the
+    probe rows rather than joining no_apply a second time: Spark does
+    not reuse an exchange whose source is a cached relation, so a
+    second join would compute no_apply twice."""
     jv = ctx.dims.get("jv", {"no_use_part": {}, "no_apply": []})
     # config position decides collisions: the reference builds this map
     # by dict comprehension (j.py:81-86), so the LAST config entry for a
@@ -79,21 +101,15 @@ def _setup_dims(ctx: RuleContext) -> tuple[DataFrame, DataFrame]:
         .groupBy(F.expr("part_m AS banned"))
         .agg(F.expr("max_by(`use`, idx) AS `use`"))
     )
-    if jv["no_apply"]:
-        no_apply_re = (
-            "^(" + "|".join(jv["no_apply"]) + ")(-(" + RE_REGIONS
-            + r")([0-9]{2})?$|(-[0-9]{2})?(-var-[0-9]{3})?)$"
-        )
-        na_seeds = ctx.docs.where(f"doc_id RLIKE {sql_lit(no_apply_re)}").selectExpr(
-            "doc_id AS part"
-        )
+    in_no_apply = _in_no_apply(ctx)
+    if in_no_apply:
+        no_apply = ctx.docs.where(in_no_apply).selectExpr("doc_id AS na_part").distinct()
     else:
-        na_seeds = local_frame(ctx.spark, [], "part STRING")
-    # genuinely empty frames when the config has no entries — an
-    # empty-string sentinel row would introduce a '' join key that a
-    # malformed kage line's empty media_ref could match, fabricating a
-    # violation the reference ('' not in config) never reports
-    no_apply = _alias_closure(ctx, na_seeds, "part").selectExpr("part_m AS na_part").distinct()
+        # genuinely empty when the config has no entries — an
+        # empty-string sentinel row would introduce a '' join key that a
+        # malformed kage line's empty media_ref could match, fabricating
+        # a violation the reference ('' not in config) never reports
+        no_apply = local_frame(ctx.spark, [], "na_part STRING")
     return no_use, no_apply
 
 
@@ -103,6 +119,7 @@ def j(ctx: RuleContext) -> DataFrame:
     source_sep = sorted(groups.get("原規格分離", []))
 
     no_use, no_apply = _setup_dims(ctx)
+    in_no_apply = _in_no_apply(ctx)
 
     # ---- per-glyph frame
     ucs_hex = f"regexp_extract(doc_id, {sql_lit(RE_UCS)}, 1)"
@@ -120,8 +137,8 @@ def j(ctx: RuleContext) -> DataFrame:
     # join (four full-corpus shuffle joins otherwise)
     # ONE scan of the cached docs emits every probe row (round 1 unioned
     # three full scans — same cache read 3×): each doc contributes its
-    # nomark row plus, when its name ends in -j / -ja, the existence row
-    # for the stripped name.  The no-apply rows are a tiny fourth input.
+    # nomark row (with its own no-apply membership) plus, when its name
+    # ends in -j / -ja, the existence row for the stripped name.
     def _row(ucs, ne, hj, hja, na):
         return (
             f"named_struct('ucs', {ucs}, 'nomark_entity', {ne}, 'has_j', {hj}, "
@@ -129,8 +146,9 @@ def j(ctx: RuleContext) -> DataFrame:
         )
 
     null_s, null_b = "CAST(NULL AS STRING)", "CAST(NULL AS BOOLEAN)"
+    na = f"CASE WHEN {in_no_apply} THEN true END" if in_no_apply else null_b
     probe_rows = (
-        f"array({_row('doc_id', 'raw_entity', null_b, null_b, null_b)}, "
+        f"array({_row('doc_id', 'raw_entity', null_b, null_b, na)}, "
         "CASE WHEN endswith(doc_id, '-j') THEN "
         f"{_row('substring(doc_id, 1, length(doc_id) - 2)', null_s, 'true', null_b, null_b)} END, "
         "CASE WHEN endswith(doc_id, '-ja') THEN "
@@ -145,14 +163,8 @@ def j(ctx: RuleContext) -> DataFrame:
         .selectExpr("p.*")
         .where("ucs RLIKE '^u[0-9a-f]{4,6}$'")
     )
-    nap = no_apply.selectExpr(
-        "na_part AS ucs", f"{null_s} AS nomark_entity", f"{null_b} AS has_j",
-        f"{null_b} AS has_ja", "true AS ucs_no_apply",
-    )
-    probe = (
-        nm.unionByName(nap)
-        .groupBy("ucs")
-        .agg(*(F.expr(f"max({c}) AS {c}") for c in ("nomark_entity", "has_j", "has_ja", "ucs_no_apply")))
+    probe = nm.groupBy("ucs").agg(
+        *(F.expr(f"max({c}) AS {c}") for c in ("nomark_entity", "has_j", "has_ja", "ucs_no_apply"))
     )
     docs = docs.join(probe, "ucs", "left")
 
@@ -200,7 +212,7 @@ def j(ctx: RuleContext) -> DataFrame:
     gokan = derive.is_gokan_kanji_cp("CAST(conv(substring(ucs, 2), 16, 10) AS BIGINT)")
     no_source = "CASE WHEN is_henka THEN '41' ELSE '40' END"
     region_src = (
-        "CASE " + " ".join(f"WHEN region = '{r}' THEN src{i}" for r, i in sorted(_REGION2COL.items()))
+        "CASE " + " ".join(f"WHEN region = {sql_lit(r)} THEN src{i}" for r, i in sorted(_REGION2COL.items()))
         + " END"
     )
 

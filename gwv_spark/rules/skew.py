@@ -6,7 +6,7 @@ Gates: not alias, not user-owned.  Per line, by stroke type:
   4: second half 0<|Δy|≤3 → "40"
   7: first segment yoko → "70"; snapped (xΔ₁=0≠xΔ₂ or |θ₁-θ₂|·60>3) →
      "71"; 0<|Δx₁|≤3 → "72"
-Angle params use Python round() = banker's rounding → F.bround.
+Angle params use Python round() = banker's rounding → SQL bround.
 Lines whose parsed coords contain NULLs are skipped (KageLine.coords →
 None, kagedata.py:100-110).  Native after explode: atan2/degrees are
 JVM-side; report order within an errcode is angle-descending
@@ -27,10 +27,6 @@ _PI = 3.141592653589793
 
 def _deg(c: str) -> str:
     return f"{c} * 180.0D / {sql_lit(_PI)}"
-
-
-def _round1(c: str) -> str:
-    return f"bround({c}, 1)"
 
 
 def classify(ctx: RuleContext) -> DataFrame:
@@ -55,8 +51,8 @@ def classify(ctx: RuleContext) -> DataFrame:
     t1_hori = f"{xdif} > {ydif} AND {ydif} != 0 AND {ydif} <= 3"
     t1_code = f"CASE WHEN {t1_vert} THEN '11' WHEN {t1_hori} THEN '10' END"
     t1_angle = (
-        f"CASE WHEN {t1_vert} THEN {_round1(_deg(f'atan2({xdif}, {ydif})'))} "
-        f"WHEN {t1_hori} THEN {_round1(_deg(f'atan2({ydif}, {xdif})'))} END"
+        f"CASE WHEN {t1_vert} THEN bround({_deg(f'atan2({xdif}, {ydif})')}, 1) "
+        f"WHEN {t1_hori} THEN bround({_deg(f'atan2({ydif}, {xdif})')}, 1) END"
     )
 
     # stype 3
@@ -65,13 +61,13 @@ def classify(ctx: RuleContext) -> DataFrame:
     t3_last = f"{ydif2} != 0 AND {ydif2} <= 3"
     t3_code = f"CASE WHEN {t3_first} THEN '31' WHEN {t3_last} THEN '30' END"
     t3_angle = (
-        f"CASE WHEN {t3_first} THEN {_round1(_deg(f'atan2({xdif}, {ydif})'))} "
-        f"WHEN {t3_last} THEN {_round1(_deg(f'atan2({ydif2}, {xdif2})'))} END"
+        f"CASE WHEN {t3_first} THEN bround({_deg(f'atan2({xdif}, {ydif})')}, 1) "
+        f"WHEN {t3_last} THEN bround({_deg(f'atan2({ydif2}, {xdif2})')}, 1) END"
     )
 
     # stype 4 (second half)
     t4_code = f"CASE WHEN {t3_last} THEN '40' END"
-    t4_angle = f"CASE WHEN {t3_last} THEN {_round1(_deg(f'atan2({ydif2}, {xdif2})'))} END"
+    t4_angle = f"CASE WHEN {t3_last} THEN bround({_deg(f'atan2({ydif2}, {xdif2})')}, 1) END"
 
     # stype 7
     dx, dy = f"({x1} - {x0})", f"({y1} - {y0})"
@@ -89,8 +85,8 @@ def classify(ctx: RuleContext) -> DataFrame:
     t7_code = f"CASE WHEN {is_yoko} THEN '70' WHEN {snapped} THEN '71' WHEN {t7_skewed} THEN '72' END"
     t7_angle = (
         f"CASE WHEN {is_yoko} THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {snapped} THEN {_round1(_deg(dtheta))} "
-        f"WHEN {t7_skewed} THEN {_round1(f'abs(90.0D - {_deg(theta1)})')} END"
+        f"WHEN {snapped} THEN bround({_deg(dtheta)}, 1) "
+        f"WHEN {t7_skewed} THEN bround(abs(90.0D - {_deg(theta1)}), 1) END"
     )
 
     def by_type(arms: list[str]) -> str:

@@ -8,7 +8,9 @@ becomes a backspace, ``\\d`` becomes ``d``, ``\\$`` becomes ``$``, and a
 - width, naming and j run over dims whose group, part and rule-set
   names hold ``'`` and ``\\``; their rows must equal the Column-API build
   of the same rules (tests/column_api_rules.py), and the planted names
-  must produce the rows they should.
+  must produce the rows they should.  j reads no_apply's alias closure
+  off each doc row, where the Column-API build joins the seeds with the
+  aliases: the planted u34xx glyphs check that both agree.
 - the ``\\b`` (naming), ``\\d`` (order) and ``\\$`` (parse) patterns match
   as they do through the Column API, where an unquoted literal would
   not."""
@@ -35,6 +37,17 @@ PLANTED = [
     ("irg2015-00001", "99:0:0:0:0:200:200:ban'd"),
     ("irg2015-00002", "1:0:0:20:100:180:100$99:0:0:0:0:200:200:ban\\d"),
     ("irg2015-00003", "99:0:0:0:0:100:200:x'y$99:0:0:100:0:200:200:ban'd"),
+    # nomark glyphs quoting a banned part; u3404 and u3407 are aliases.
+    # In no_apply's closure: the seed u3402, and u3404, an alias of the
+    # seed x'z.  Not in it: u3407, an alias of w'z.
+    ("u3402", "99:0:0:0:0:100:200:ban'd$99:0:0:100:0:200:200:ban'd"),
+    ("x'z", "99:0:0:0:0:100:200:ban'd$99:0:0:100:0:200:200:ban'd"),
+    ("u3404", "99:0:0:0:0:200:200:x'z"),
+    ("u3406", "99:0:0:0:0:100:200:ban'd$99:0:0:100:0:200:200:ban'd"),
+    ("w'z", "99:0:0:0:0:100:200:ban'd$99:0:0:100:0:200:200:ban'd"),
+    ("u3407", "99:0:0:0:0:200:200:w'z"),
+    ("u3408", "99:0:0:0:0:100:200:u3404$99:0:0:100:0:200:200:ban'd"),
+    ("u3409", "99:0:0:0:0:100:200:u3407$99:0:0:100:0:200:200:ban'd"),
 ]
 
 
@@ -55,7 +68,7 @@ def _dims():
         **dims,
         "groups": groups,
         "naming_rules": rules,
-        "jv": {"no_use_part": {"use'd": ["ban'd", "ban\\d"]}, "no_apply": ["x'y"]},
+        "jv": {"no_use_part": {"use'd": ["ban'd", "ban\\d"]}, "no_apply": ["x'y", "u3402", "x'z"]},
     }
 
 
@@ -101,11 +114,16 @@ def test_rows_equal_column_api_build(ctx, rule_id):
         "j": {
             ("2", "irg2015-00001", ("Sban'd", "Suse'd"), "irg2015-00001"),
             ("2", "irg2015-00002", ("Sban\\d", "Suse'd"), "irg2015-00002"),
-        },
+        }
+        | {("2", g, ("Sban'd", "Suse'd"), g) for g in ("u3406", "u3407", "u3409")},
     }[rule_id]
     assert planted <= rows, planted - rows
-    # names a rule set accepts; a banned part next to a no-apply one
-    absent = {"naming": {"it's", "back\\slash", "foo12"}, "j": {"irg2015-00003"}}
+    # names a rule set accepts; a banned part next to a no-apply one; a
+    # glyph in no_apply's closure, or quoting a part in it
+    absent = {
+        "naming": {"it's", "back\\slash", "foo12"},
+        "j": {"irg2015-00003", "u3402", "u3404", "u3408"},
+    }
     assert not {r[1] for r in rows} & absent.get(rule_id, set())
 
 
